@@ -1076,9 +1076,9 @@ object DataQueries {
     "q261_ivf_from_index" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
       val centroids = Similarity.seedCentroids(e, "vec_id", "embedding", 8)
-      // fixed scratch path, overwritten per invocation — repeated bench
-      // reps must not accumulate index copies in /tmp
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_idx_q261"
+      // one scratch dir per JVM, overwritten per invocation — repeated
+      // bench reps must not accumulate index copies
+      val idxDir = graft.sources.SyntheticFixtures.freshDir("q261_ivf_idx")
       Similarity.ivfIndex(e, "vec_id", "embedding", centroids)
         .write.mode("overwrite").partitionBy("cell").parquet(idxDir)
       Similarity.ivfTopKFromIndex(s.read.parquet(idxDir),

@@ -691,25 +691,36 @@ object SyntheticFixtures {
     o.toByteArray
   }
 
-  /** Delete-and-recreate a fixture subdir: sink round-trip queries need a
-    * deterministic destination state on every run (a stale bucket from a
-    * prior run would turn `uploaded` into `skipped_same_content`). */
-  def freshDir(subdir: String): String = {
-    val dir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_fixtures", subdir)
+  /** Root of every fixture, sink and streaming-checkpoint dir this JVM
+    * makes: `${java.io.tmpdir}/graft_fixtures-<unique>`, created on first
+    * use and deleted when the JVM exits. Two JVMs on one host (two Verify
+    * or Bench runs, a test run beside either) never share a dir. */
+  private lazy val root: java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fixtures-")
+    sys.addShutdownHook(scala.util.Try(deleteTree(dir)))
+    dir
+  }
+
+  private def deleteTree(dir: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(dir)) {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir)
         .sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.foreach(p => java.nio.file.Files.delete(p))
     }
+
+  /** Delete-and-recreate a fixture subdir: sink round-trip queries need a
+    * deterministic destination state on every run (a stale bucket from a
+    * prior run would turn `uploaded` into `skipped_same_content`). */
+  def freshDir(subdir: String): String = {
+    val dir = root.resolve(subdir)
+    deleteTree(dir)
     java.nio.file.Files.createDirectories(dir)
     dir.toString
   }
 
   def materialize(subdir: String, fileName: String, bytes: Array[Byte]): String = {
-    val dir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_fixtures", subdir)
+    val dir = root.resolve(subdir)
     java.nio.file.Files.createDirectories(dir)
     java.nio.file.Files.write(dir.resolve(fileName), bytes)
     dir.toString

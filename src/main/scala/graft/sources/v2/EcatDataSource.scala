@@ -2,21 +2,20 @@ package graft.sources.v2
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.EcatReader
 
@@ -79,61 +78,41 @@ private[v2] class EcatScanBuilder(options: CaseInsensitiveStringMap)
   private var required: StructType = EcatDataSource.schema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  override def build(): Scan = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val confMap = conf.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    new EcatScan(options, required, confMap)
-  }
+  override def build(): Scan = new EcatScan(options, required)
 }
 
 private[v2] class EcatScan(
     options: CaseInsensitiveStringMap,
-    required: StructType,
-    confMap: Map[String, String]) extends Scan with Batch {
+    required: StructType) extends ListedFileScan(options, "*.v") {
 
   override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String =
     s"ecat path=${options.get("path")} columns=" +
       required.fieldNames.mkString(",")
 
-  override def planInputPartitions(): Array[InputPartition] =
-    FileListing.list(options, "*.v", confMap)
-      .map(p => p: InputPartition).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    EcatReaderFactory(required, confMap)
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : MicroBatchStream =
-    new SeenFileLogStream(options, "*.v", confMap, checkpointLocation,
-      EcatReaderFactory(required, confMap))
+  override protected def readerFactory(
+      conf: Broadcast[SerializableConfiguration]): PartitionReaderFactory =
+    EcatReaderFactory(required, conf)
 }
 
 private[v2] case class EcatReaderFactory(
-    required: StructType, confMap: Map[String, String])
+    required: StructType, conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new EcatPartitionReader(p.asInstanceOf[ListedFile], required, confMap)
+    new EcatPartitionReader(p.asInstanceOf[ListedFile], required,
+      conf.value.value)
 }
 
 private[v2] class EcatPartitionReader(
     part: ListedFile, required: StructType,
-    confMap: Map[String, String]) extends PartitionReader[InternalRow] {
+    conf: Configuration) extends PartitionReader[InternalRow] {
 
   private var done = false
   private var current: InternalRow = _
 
-  private def header(): Option[EcatReader.EcatMainHeader] = {
-    if (part.length < 512) return None
-    val path = new Path(part.path)
-    val fs = path.getFileSystem(FileListing.conf(confMap))
-    val buf = new Array[Byte](512)
-    val in = fs.open(path)
-    try in.readFully(0, buf) finally in.close()
-    EcatReader.parseMainHeader(buf)
-  }
+  private def header(): Option[EcatReader.EcatMainHeader] =
+    if (part.length < 512) None
+    else EcatReader.parseMainHeader(part.readBytes(conf, 512))
 
   override def next(): Boolean = {
     if (done) return false

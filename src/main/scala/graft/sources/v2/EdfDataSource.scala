@@ -2,23 +2,20 @@ package graft.sources.v2
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.EdfReader
 
@@ -106,49 +103,34 @@ private[v2] class EdfScanBuilder(options: CaseInsensitiveStringMap)
   }
   override def pushedFilters(): Array[Filter] = Array.empty
 
-  override def build(): Scan = {
-    // ship the session's Hadoop conf so executors resolve the same
-    // filesystems (object stores, kerberized HDFS) as the driver listing
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val confMap = conf.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    new EdfScan(options, required, channelKeep, confMap)
-  }
+  override def build(): Scan = new EdfScan(options, required, channelKeep)
 }
 
 private[v2] class EdfScan(
     options: CaseInsensitiveStringMap,
     required: StructType,
-    channelKeep: Option[Set[String]],
-    confMap: Map[String, String]) extends Scan with Batch {
+    channelKeep: Option[Set[String]])
+    extends ListedFileScan(options, "*.edf") {
 
   override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String =
     s"edf path=${options.get("path")} columns=" +
       required.fieldNames.mkString(",") +
       channelKeep.fold("")(k => s" channelKeep=${k.mkString(",")}")
 
-  override def planInputPartitions(): Array[InputPartition] =
-    FileListing.list(options, "*.edf", confMap)
-      .map(p => p: InputPartition).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    EdfReaderFactory(required, channelKeep, confMap)
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : MicroBatchStream =
-    new SeenFileLogStream(options, "*.edf", confMap, checkpointLocation,
-      EdfReaderFactory(required, channelKeep, confMap))
+  override protected def readerFactory(
+      conf: Broadcast[SerializableConfiguration]): PartitionReaderFactory =
+    EdfReaderFactory(required, channelKeep, conf)
 }
 
 private[v2] case class EdfReaderFactory(
     required: StructType,
     channelKeep: Option[Set[String]],
-    confMap: Map[String, String]) extends PartitionReaderFactory {
+    conf: Broadcast[SerializableConfiguration])
+    extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new EdfPartitionReader(
-      p.asInstanceOf[ListedFile], required, channelKeep, confMap)
+      p.asInstanceOf[ListedFile], required, channelKeep, conf.value.value)
 }
 
 /** Per-file reader. All parsing is delegated to [[EdfReader]] so the
@@ -158,21 +140,10 @@ private[v2] class EdfPartitionReader(
     part: ListedFile,
     required: StructType,
     channelKeep: Option[Set[String]],
-    confMap: Map[String, String]) extends PartitionReader[InternalRow] {
+    conf: Configuration) extends PartitionReader[InternalRow] {
 
   private var iter: Iterator[InternalRow] = _
   private var current: InternalRow = _
-
-  private def fsBytes(length: Long): Array[Byte] = {
-    val conf = new Configuration()
-    confMap.foreach { case (k, v) => conf.set(k, v) }
-    val path = new Path(part.path)
-    val fs = path.getFileSystem(conf)
-    val buf = new Array[Byte](length.toInt)
-    val in = fs.open(path)
-    try in.readFully(0, buf) finally in.close()
-    buf
-  }
 
   /** (label, rate, n_samples, values-or-null). Header-only when `values`
     * is pruned away: reads 256 bytes, then the ns×256 signal block —
@@ -181,15 +152,11 @@ private[v2] class EdfPartitionReader(
     if (part.length < 256 || part.length > Int.MaxValue - 8) return Seq.empty
     val needValues = required.fieldNames.contains("values")
     if (needValues) {
-      EdfReader.signalTraces(fsBytes(part.length))
+      EdfReader.signalTraces(part.readBytes(conf, part.length.toInt))
         .map { case (l, r, v) => (l, r, v.length.toLong, v) }
     } else {
       val header = try {
-        val conf = new Configuration()
-        confMap.foreach { case (k, v) => conf.set(k, v) }
-        val path = new Path(part.path)
-        val fs = path.getFileSystem(conf)
-        val in = fs.open(path)
+        val in = part.open(conf)
         try {
           val head = new Array[Byte](256)
           in.readFully(0, head)

@@ -5,6 +5,7 @@ import java.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
@@ -13,6 +14,7 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** Transactional object-store publish as a DataSource V2 write:
   * `df.select(dest_name, content).write.format("objectstore")
@@ -66,14 +68,10 @@ private[v2] class ObjectStoreTable(options: CaseInsensitiveStringMap)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val bucket = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("objectstore sink requires a path"))
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    import scala.jdk.CollectionConverters._
-    val confMap = conf.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
-          new ObjectStoreBatchWrite(bucket, info.queryId(), confMap)
+          new ObjectStoreBatchWrite(bucket, info.queryId())
       }
     }
   }
@@ -84,23 +82,23 @@ private[v2] case class StagedObject(
 private[v2] case class ObjectStoreCommitMessage(objects: Seq[StagedObject])
     extends WriterCommitMessage
 
-private[v2] class ObjectStoreBatchWrite(
-    bucket: String, writeId: String, confMap: Map[String, String])
+/** The session's Hadoop conf is taken once per write: the driver-side
+  * job commit/abort resolve one FileSystem from it, and the writers get
+  * it as one broadcast [[SerializableConfiguration]]. */
+private[v2] class ObjectStoreBatchWrite(bucket: String, writeId: String)
     extends BatchWrite {
 
-  private def conf: Configuration = {
-    val c = new Configuration()
-    confMap.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
+  private val session = SparkSession.active
+  private val conf = session.sessionState.newHadoopConf()
+  private lazy val fs = new Path(bucket).getFileSystem(conf)
   private def stagingRoot = new Path(bucket, s".staging-$writeId")
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
-    ObjectStoreWriterFactory(bucket, writeId, confMap)
+    ObjectStoreWriterFactory(bucket, writeId,
+      session.sparkContext.broadcast(new SerializableConfiguration(conf)))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(bucket).getFileSystem(conf)
     fs.setWriteChecksum(false) // no local-FS .crc sidecars in the bucket
     val committed = messages.collect {
       case m: ObjectStoreCommitMessage => m.objects
@@ -124,29 +122,24 @@ private[v2] class ObjectStoreBatchWrite(
     fs.delete(stagingRoot, true) // sweeps losing task attempts too
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(bucket).getFileSystem(conf)
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
     fs.delete(stagingRoot, true) // nothing was published
-  }
 }
 
 private[v2] case class ObjectStoreWriterFactory(
-    bucket: String, writeId: String, confMap: Map[String, String])
+    bucket: String, writeId: String,
+    conf: Broadcast[SerializableConfiguration])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
-    new ObjectStoreDataWriter(bucket, writeId, partitionId, taskId, confMap)
+    new ObjectStoreDataWriter(bucket, writeId, partitionId, taskId,
+      conf.value.value)
 }
 
 private[v2] class ObjectStoreDataWriter(
     bucket: String, writeId: String, partitionId: Int, taskId: Long,
-    confMap: Map[String, String]) extends DataWriter[InternalRow] {
+    conf: Configuration) extends DataWriter[InternalRow] {
 
-  private val conf = {
-    val c = new Configuration()
-    confMap.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
   // attempt-scoped staging dir: a speculative twin never collides
   private val taskDir =
     new Path(new Path(bucket, s".staging-$writeId"), s"$partitionId-$taskId")

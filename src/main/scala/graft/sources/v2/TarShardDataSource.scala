@@ -2,21 +2,20 @@ package graft.sources.v2
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.TarArchive
 
@@ -86,51 +85,35 @@ private[v2] class TarShardScanBuilder(options: CaseInsensitiveStringMap)
   private var required: StructType = TarShardDataSource.schema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  override def build(): Scan = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val confMap = conf.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    new TarShardScan(options, required, confMap)
-  }
+  override def build(): Scan = new TarShardScan(options, required)
 }
 
 private[v2] class TarShardScan(
     options: CaseInsensitiveStringMap,
-    required: StructType,
-    confMap: Map[String, String]) extends Scan with Batch {
-
-  private val glob = "*.{tar,tar.gz,tgz}"
+    required: StructType)
+    extends ListedFileScan(options, "*.{tar,tar.gz,tgz}") {
 
   override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String =
     s"tarshard path=${options.get("path")} columns=" +
       required.fieldNames.mkString(",")
 
-  override def planInputPartitions(): Array[InputPartition] =
-    FileListing.list(options, glob, confMap)
-      .map(p => p: InputPartition).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    TarShardReaderFactory(required, confMap)
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : MicroBatchStream =
-    new SeenFileLogStream(options, glob, confMap, checkpointLocation,
-      TarShardReaderFactory(required, confMap))
+  override protected def readerFactory(
+      conf: Broadcast[SerializableConfiguration]): PartitionReaderFactory =
+    TarShardReaderFactory(required, conf)
 }
 
 private[v2] case class TarShardReaderFactory(
-    required: StructType, confMap: Map[String, String])
+    required: StructType, conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new TarShardPartitionReader(p.asInstanceOf[ListedFile], required,
-      confMap)
+      conf.value.value)
 }
 
 private[v2] class TarShardPartitionReader(
     part: ListedFile, required: StructType,
-    confMap: Map[String, String]) extends PartitionReader[InternalRow] {
+    conf: Configuration) extends PartitionReader[InternalRow] {
 
   private val needContent = required.fieldNames.contains("content")
   private var it: Iterator[(String, Long, Array[Byte])] = _
@@ -139,8 +122,6 @@ private[v2] class TarShardPartitionReader(
   /** (member_path, size, payload-or-null) for every regular-file
     * member; payloads only materialize when the projection asks. */
   private def members(): Iterator[(String, Long, Array[Byte])] = {
-    val path = new Path(part.path)
-    val fs = path.getFileSystem(FileListing.conf(confMap))
     // a >2 GB shard would silently truncate length.toInt negative and
     // kill the stage with NegativeArraySizeException — fail descriptive
     // instead (WebDataset convention keeps shards ~100 MB-1 GB)
@@ -148,9 +129,7 @@ private[v2] class TarShardPartitionReader(
       s"tarshard member ${part.path} is ${part.length} bytes; shards " +
         "over 2 GiB are not supported by the in-memory walker — " +
         "re-shard the archive (WebDataset convention is <= 1 GiB/shard)")
-    val buf = new Array[Byte](part.length.toInt)
-    val in = fs.open(path)
-    try in.readFully(0, buf) finally in.close()
+    val buf = part.readBytes(conf, part.length.toInt)
     val tar = if (TarArchive.isGzip(buf)) TarArchive.gunzip(buf) else buf
     TarArchive.listEntries(tar).iterator
       .filter(_.typeflag == '0')

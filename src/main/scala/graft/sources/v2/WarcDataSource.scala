@@ -2,21 +2,20 @@ package graft.sources.v2
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.{TarArchive, WarcIO}
 
@@ -78,38 +77,22 @@ private[v2] class WarcScanBuilder(options: CaseInsensitiveStringMap)
   private var required: StructType = WarcDataSource.schema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  override def build(): Scan = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val confMap = conf.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    new WarcScan(options, required, confMap)
-  }
+  override def build(): Scan = new WarcScan(options, required)
 }
 
 private[v2] class WarcScan(
     options: CaseInsensitiveStringMap,
-    required: StructType,
-    confMap: Map[String, String]) extends Scan with Batch {
-
-  private val glob = "*.{warc,warc.gz}"
+    required: StructType)
+    extends ListedFileScan(options, "*.{warc,warc.gz}") {
 
   override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String =
     s"warc path=${options.get("path")} columns=" +
       required.fieldNames.mkString(",")
 
-  override def planInputPartitions(): Array[InputPartition] =
-    FileListing.list(options, glob, confMap)
-      .map(p => p: InputPartition).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    WarcReaderFactory(required, confMap, maxRecordBytes)
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : MicroBatchStream =
-    new SeenFileLogStream(options, glob, confMap, checkpointLocation,
-      WarcReaderFactory(required, confMap, maxRecordBytes))
+  override protected def readerFactory(
+      conf: Broadcast[SerializableConfiguration]): PartitionReaderFactory =
+    WarcReaderFactory(required, conf, maxRecordBytes)
 
   private def maxRecordBytes: Long =
     Option(options.get("maxRecordBytes")).map(_.toLong)
@@ -117,17 +100,17 @@ private[v2] class WarcScan(
 }
 
 private[v2] case class WarcReaderFactory(
-    required: StructType, confMap: Map[String, String],
+    required: StructType, conf: Broadcast[SerializableConfiguration],
     maxRecordBytes: Long)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new WarcPartitionReader(p.asInstanceOf[ListedFile], required, confMap,
-      maxRecordBytes)
+    new WarcPartitionReader(p.asInstanceOf[ListedFile], required,
+      conf.value.value, maxRecordBytes)
 }
 
 private[v2] class WarcPartitionReader(
     part: ListedFile, required: StructType,
-    confMap: Map[String, String], maxRecordBytes: Long)
+    conf: Configuration, maxRecordBytes: Long)
     extends PartitionReader[InternalRow] {
 
   private val needHttp = required.fieldNames
@@ -146,9 +129,7 @@ private[v2] class WarcPartitionReader(
     * per-record `maxRecordBytes` bound (option, default 1 GiB) is the
     * decompression-bomb guard. */
   private def records(): Iterator[WarcIO.Record] = {
-    val path = new Path(part.path)
-    val fs = path.getFileSystem(FileListing.conf(confMap))
-    val buffered = new java.io.BufferedInputStream(fs.open(path), 1 << 16)
+    val buffered = new java.io.BufferedInputStream(part.open(conf), 1 << 16)
     buffered.mark(2)
     val magic = new Array[Byte](2)
     val got = buffered.read(magic)
