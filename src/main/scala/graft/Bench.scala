@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * `SPARK_GRAFT_SF_DIR` and prints the full per-query JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`
@@ -25,56 +23,24 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core on the machine: the driver harness does not set
-    // SPARK_GRAFT_CPUS, and a 4-thread default silently benched round 1 at
-    // local[4] on a 32-core box
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // same session posture as Verify: the full extension surface
-      // (SQL functions, TopKPerGroup strategy, RankFilterToTopK) is
-      // what gets benchmarked, exactly as a cluster sets
-      // spark.sql.extensions
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val telemetry = new ShuffleTelemetry
-    telemetry.install(spark.sparkContext)
+    val spark = GraftSession.local()
+    val profile = new QueryProfile(spark)
 
-    /** (seconds, shuffle write MB, shuffle read MB); −1 s on failure. */
-    def runOnce(name: String): (Double, Double, Double) = {
-      // inter-query hygiene: drop cached state and collected garbage from
-      // the previous query so timings measure the plan, not heap churn
-      spark.catalog.clearCache()
-      System.gc()
-      val (r0, w0) = telemetry.now()
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-      } catch {
-        case e: Throwable =>
+    /** (seconds, shuffle write MB); −1 s on failure. */
+    def runOnce(name: String): (Double, Double) = {
+      val r = profile.run(name, sfDir)
+      r.error match {
+        case Some(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          return (-1.0, 0.0, 0.0)
+          (-1.0, 0.0)
+        case None =>
+          val wMb = r.counts.shuffleWriteMb
+          System.err.println(f"[bench] $name: ${r.seconds}%.3f s, shuffle w $wMb%.2f MB")
+          (r.seconds, wMb)
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (r1, w1) = telemetry.settled()
-      val (rMb, wMb) = ((r1 - r0) / 1048576.0, (w1 - w0) / 1048576.0)
-      System.err.println(f"[bench] $name: $dt%.3f s, shuffle w $wMb%.2f MB")
-      (dt, wMb, rMb)
     }
 
-    // warmup: touch all inputs + exercise shuffle/codegen paths untimed
-    try {
-      spark.range(1 << 20).selectExpr("sum(id)").collect()
-      SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    QueryProfile.warmup(spark)
 
     // optional local-only focus filter (comma-separated names); the driver
     // harness never sets it, so its runs always time the full set
@@ -83,7 +49,7 @@ object Bench {
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(2).max(1)
     // min across reps: a failed rep is (-1, ...) and must not win the min,
     // so keep it only when every rep failed
-    def runBest(name: String): (Double, Double, Double) = {
+    def runBest(name: String): (Double, Double) = {
       val runs = (1 to reps).map(_ => runOnce(name))
       val ok = runs.filter(_._1 >= 0)
       if (ok.isEmpty) runs.head else ok.minBy(_._1)
@@ -91,7 +57,7 @@ object Bench {
     val full = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
       .map(n => n -> runBest(n))
-    val results = full.map { case (n, (sec, _, _)) => n -> sec }
+    val results = full.map { case (n, (sec, _)) => n -> sec }
     // The driver captures only the LAST 2000 chars of stdout, and the
     // sbt harness appends its own "[success] Total time..." trailer
     // inside that window. A single line carrying every per-query value
@@ -123,7 +89,7 @@ object Bench {
       k -> "q(\\d+)".r.findFirstMatchIn(k).map("q" + _.group(1)).getOrElse(k)
     }.toMap
     val shufMb = full
-      .map { case (k, (_, wMb, _)) => s""""${shortName(k)}":${fmt(wMb)}""" }
+      .map { case (k, (_, wMb)) => s""""${shortName(k)}":${fmt(wMb)}""" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val totalShufMb = full.map(_._2._2).sum

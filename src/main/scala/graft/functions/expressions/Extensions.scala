@@ -7,10 +7,11 @@ import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType}
 
 /** One-stop SQL surface for the engine's custom Catalyst pieces.
   *
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` — or
+  * [[GraftExtensions]] — applied by `graft.GraftSession.local`, or set as
   * `spark.sql.extensions=graft.functions.expressions.GraftExtensions` on a
   * cluster — injects every codegen'd expression as a SQL function plus the
-  * [[graft.plans.TopKPerGroupStrategy]] planner rule, so `spark.sql(...)`
+  * [[graft.plans.TopKPerGroupStrategy]] planner rule and the
+  * [[graft.plans.RankFilterToTopK]] optimizer rule, so `spark.sql(...)`
   * users get the same operators as the Column API. For an already-running
   * session (extensions are builder-time only), [[GraftFunctionRegistry
   * .registerTemp]] installs the same functions on the live registry.

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -15,10 +14,18 @@ import org.apache.spark.sql.types.IntegerType
   * instead of the full table. The un-rewritten plan SORTS every group in
   * its entirety just to keep k rows; after the rewrite the heap bounds the
   * shuffle at k rows per (partition, group) and the Window only ranks the
-  * ≤ k survivors per group. The Filter and Window stay in place — output
-  * columns, the rank values 1..k, and every downstream reference are
-  * unchanged; the plan under them just never materializes more than k rows
-  * per group.
+  * ≤ k survivors per group. The Window stays in place — output columns,
+  * the rank values 1..k, and every downstream reference are unchanged; the
+  * plan under it just never materializes more than k rows per group. (If
+  * nothing downstream reads the rank, column pruning drops the Window.)
+  *
+  * The Filter is dropped: over at most k rows per group, `rn ≤ k` holds
+  * for every row. Dropping it also keeps Spark's InferWindowGroupLimit,
+  * whose batch runs after the operator-optimization batch that
+  * `injectOptimizerRule` places this rule in, from matching the rewritten
+  * plan: it needs a rank Filter over the Window, and would otherwise add
+  * a WindowGroupLimit above the heap node that sorts and limits the
+  * already-bounded groups a second time.
   *
   * Soundness: the rows with `row_number ≤ k` are exactly "the first k rows
   * of the group under the order" — precisely [[TopKPerGroupNode]]'s
@@ -61,35 +68,12 @@ object RankFilterToTopK extends Rule[LogicalPlan] {
     case f @ Filter(cond, w @ Window(
           Seq(al @ Alias(WindowExpression(RowNumber(), _), _)),
           part, order, child, _))
-        if part.nonEmpty && order.nonEmpty &&
-          !child.isInstanceOf[TopKPerGroupNode] =>
+        if part.nonEmpty && order.nonEmpty =>
       limitFrom(cond, al.exprId) match {
         case Some(k) if k >= 1 =>
-          // Spark's own InferWindowGroupLimit (main optimizer batch, i.e.
-          // BEFORE extraOptimizations) may already have inserted a
-          // WindowGroupLimit under this exact Window — inferred from the
-          // very rank filter matched here. Strip it: the heap node
-          // subsumes its bounding, and keeping both would add a redundant
-          // partial pass whose exec sorts the raw partition locally — the
-          // sort this rewrite exists to avoid.
-          val base = child match {
-            case org.apache.spark.sql.catalyst.plans.logical
-              .WindowGroupLimit(_, _, _, _, grandchild) => grandchild
-            case other => other
-          }
-          f.copy(child = w.withNewChildren(
-            Seq(TopKPerGroupNode(part, order, k, distinct = false, base))))
+          w.withNewChildren(
+            Seq(TopKPerGroupNode(part, order, k, distinct = false, child)))
         case _ => f
       }
-  }
-
-  /** Idempotently register this rule AND the strategy that plans the node
-    * it introduces on `spark` (the `spark.experimental` twin of the
-    * [[graft.functions.expressions.GraftExtensions]] injection). */
-  def register(spark: SparkSession): Unit = {
-    TopKPerGroup.register(spark)
-    if (!spark.experimental.extraOptimizations.contains(RankFilterToTopK))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RankFilterToTopK
   }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
@@ -22,9 +22,11 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * sorted. The correctness identity: the true per-group top-k is contained
   * in the union of per-partition top-k's.
   *
-  * Registered as a [[SparkStrategy]] (the documented extension point —
-  * `spark.experimental.extraStrategies` / `SparkSessionExtensions
-  * .injectPlannerStrategy`); `EnsureRequirements` injects the hash exchange
+  * Planned by [[TopKPerGroupStrategy]], which
+  * [[graft.functions.expressions.GraftExtensions]] injects
+  * (`SparkSessionExtensions.injectPlannerStrategy`), so the session must be
+  * built with those extensions, as `graft.GraftSession.local` does.
+  * `EnsureRequirements` injects the hash exchange
   * from the final node's `requiredChildDistribution`, so AQE still plans
   * and coalesces the shuffle like any built-in aggregate.
   *
@@ -53,7 +55,6 @@ object TopKPerGroup {
       k: Int, distinct: Boolean): DataFrame = {
     require(k > 0, "k must be positive")
     val spark = df.sparkSession
-    register(spark)
     val groupExprs = group.map(GraftColumnBridge.eagerExpression)
     val orderExprs = order.map(GraftColumnBridge.eagerExpression).map {
       case so: SortOrder => so
@@ -64,14 +65,8 @@ object TopKPerGroup {
         GraftColumnBridge.logicalPlan(df)))
   }
 
-  /** Idempotently register the planning strategy on this session. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
-
   /** SQLMetric name of the partial pass's cap-triggered drain counter —
-    * [[graft.ShuffleTelemetry]] matches task accumulators by this name. */
+    * [[graft.QueryProfile]] matches task accumulators by this name. */
   val DrainMetricName = "cap-triggered partial drains"
 
   /** Session conf key bounding the partial pass's per-partition group-state

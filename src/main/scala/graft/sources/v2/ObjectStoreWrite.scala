@@ -3,7 +3,7 @@ package graft.sources.v2
 import java.util
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
@@ -82,24 +82,39 @@ private[v2] case class StagedObject(
 private[v2] case class ObjectStoreCommitMessage(objects: Seq[StagedObject])
     extends WriterCommitMessage
 
+/** A FileSystem for `path` that the caller alone owns and must close, with
+  * local-FS `.crc` sidecars off so none land in the bucket. It is not
+  * Hadoop's JVM-wide cached instance (`Path.getFileSystem`): turning the
+  * flag off on that one would drop the checksum of every later `file:`
+  * write in the JVM. */
+private[v2] object ObjectStoreFs {
+  def open(path: Path, conf: Configuration): FileSystem = {
+    val fs = FileSystem.newInstance(path.toUri, conf)
+    fs.setWriteChecksum(false)
+    fs
+  }
+}
+
 /** The session's Hadoop conf is taken once per write: the driver-side
-  * job commit/abort resolve one FileSystem from it, and the writers get
+  * job commit/abort open their FileSystem from it, and the writers get
   * it as one broadcast [[SerializableConfiguration]]. */
 private[v2] class ObjectStoreBatchWrite(bucket: String, writeId: String)
     extends BatchWrite {
 
   private val session = SparkSession.active
   private val conf = session.sessionState.newHadoopConf()
-  private lazy val fs = new Path(bucket).getFileSystem(conf)
   private def stagingRoot = new Path(bucket, s".staging-$writeId")
+  private def withFs(body: FileSystem => Unit): Unit = {
+    val fs = ObjectStoreFs.open(new Path(bucket), conf)
+    try body(fs) finally fs.close()
+  }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
     ObjectStoreWriterFactory(bucket, writeId,
       session.sparkContext.broadcast(new SerializableConfiguration(conf)))
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    fs.setWriteChecksum(false) // no local-FS .crc sidecars in the bucket
+  override def commit(messages: Array[WriterCommitMessage]): Unit = withFs { fs =>
     val committed = messages.collect {
       case m: ObjectStoreCommitMessage => m.objects
     }.flatten.toSeq
@@ -123,7 +138,7 @@ private[v2] class ObjectStoreBatchWrite(bucket: String, writeId: String)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    fs.delete(stagingRoot, true) // nothing was published
+    withFs(_.delete(stagingRoot, true)) // nothing was published
 }
 
 private[v2] case class ObjectStoreWriterFactory(
@@ -143,11 +158,7 @@ private[v2] class ObjectStoreDataWriter(
   // attempt-scoped staging dir: a speculative twin never collides
   private val taskDir =
     new Path(new Path(bucket, s".staging-$writeId"), s"$partitionId-$taskId")
-  private val fs = {
-    val f = taskDir.getFileSystem(conf)
-    f.setWriteChecksum(false) // no local-FS .crc sidecars in the bucket
-    f
-  }
+  private val fs = ObjectStoreFs.open(taskDir, conf)
   private var staged = List.empty[StagedObject]
 
   override def write(row: InternalRow): Unit = {
@@ -167,5 +178,5 @@ private[v2] class ObjectStoreDataWriter(
     ObjectStoreCommitMessage(staged.reverse)
 
   override def abort(): Unit = fs.delete(taskDir, true)
-  override def close(): Unit = ()
+  override def close(): Unit = fs.close()
 }

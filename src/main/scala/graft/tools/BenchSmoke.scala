@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{GraftSession, QueryProfile, SparkEntry}
 
 /** Per-query bench regression smoke: runs every registered query once
   * (after the same warmup as [[graft.Bench]]) and compares against the
@@ -65,37 +63,14 @@ object BenchSmoke {
     val shuffleBaselinePath =
       java.nio.file.Paths.get("tools/bench_shuffle_baseline.json")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    try {
-      spark.range(1 << 20).selectExpr("sum(id)").collect()
-      SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
-
-    val telemetry = new graft.ShuffleTelemetry
-    telemetry.install(spark.sparkContext)
+    val spark = GraftSession.local()
+    val profile = new QueryProfile(spark)
+    QueryProfile.warmup(spark)
     /** (seconds, shuffle write MB). */
     def runFull(name: String): (Double, Double) = {
-      spark.catalog.clearCache()
-      System.gc()
-      val (_, w0) = telemetry.now()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (_, w1) = telemetry.settled()
-      (dt, (w1 - w0) / 1048576.0)
+      val r = profile.run(name, sfDir)
+      r.error.foreach(e => throw e)
+      (r.seconds, r.counts.shuffleWriteMb)
     }
     def runOnce(name: String): Double = runFull(name)._1
     val measured = SparkEntry.queries.keys.toSeq.sorted

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.{GraftSession, QueryProfile}
 
 /** Scale rehearsal for the iterative graph family: synthetic power-law-ish
   * link graph (each of `n` pages emits 1-8 outlinks to xxhash-scattered
@@ -22,17 +23,8 @@ object GraphScale {
     val nEdges = if (args.length > 0) args(0).toLong else 5000000L
     val iters = if (args.length > 1) args(1).toInt else 3
     val hubIn = if (args.length > 2) args(2).toLong else 0L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val telemetry = new graft.ShuffleTelemetry
-    telemetry.install(spark.sparkContext)
+    val spark = GraftSession.local()
+    val profile = new QueryProfile(spark)
 
     // ~nEdges edges over ~nEdges/4 nodes; 10% of edges point at node 0
     // (the mega-hub), targets otherwise xxhash-scattered
@@ -50,7 +42,7 @@ object GraphScale {
       .localCheckpoint(true)
     println(s"[graph-scale] edges=${edges.count()} nodes~$nNodes " +
       s"hubIn=$hubIn iters=$iters")
-    val (r0, w0) = telemetry.now()
+    val c0 = profile.now()
     val t0 = System.nanoTime()
     val ranks = graft.operators.GraphRank.pageRank(
       edges, "src", "dst", iters)
@@ -58,21 +50,21 @@ object GraphScale {
       .collect().map(r => s"${r.getLong(0)}:${r.getLong(1)}").mkString(" ")
     val n = ranks.count()
     val dt = (System.nanoTime() - t0) / 1e9
-    val (r1, w1) = telemetry.now()
+    val c = profile.now() - c0
     println(f"[graph-scale] pageRank($iters): $dt%.2f s  nodes=$n  " +
-      f"shuffleW=${(w1 - w0) / 1e6}%.1f MB  shuffleR=${(r1 - r0) / 1e6}%.1f MB  top3=$top")
+      f"shuffleW=${c.shuffleWriteBytes / 1e6}%.1f MB  shuffleR=${c.shuffleReadBytes / 1e6}%.1f MB  top3=$top")
     if (hubIn > 0) {
       // the HITS normalize overflowed at raw·10⁶ past ~9.2e12 — one
       // round over the same hub graph exercises the DECIMAL path
-      val (hr0, hw0) = telemetry.now()
+      val h0 = profile.now()
       val th0 = System.nanoTime()
       val h = graft.operators.GraphRank.hits(edges, "src", "dst", 1)
       val hubRow = h.where(col("id") === 0L)
         .collect().map(r => s"hub=${r.getLong(1)}/${r.getLong(2)}").head
       val dth = (System.nanoTime() - th0) / 1e9
-      val (hr1, hw1) = telemetry.now()
+      val hw = (profile.now() - h0).shuffleWriteBytes
       println(f"[graph-scale] hits(1): $dth%.2f s  $hubRow  " +
-        f"shuffleW=${(hw1 - hw0) / 1e6}%.1f MB")
+        f"shuffleW=${hw / 1e6}%.1f MB")
     }
     spark.stop()
   }

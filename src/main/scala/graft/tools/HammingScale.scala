@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.{GraftSession, QueryProfile}
 
 /** Scale rehearsal of the perceptual-hash dedup path (the VERDICT_r09
   * item: the multimodal q-rows are 3-7-row pinned fixtures; this is the
@@ -25,17 +26,8 @@ object HammingScale {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 1000000L
     val degPct = if (args.length > 1) args(1).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val telemetry = new graft.ShuffleTelemetry
-    telemetry.install(spark.sparkContext)
+    val spark = GraftSession.local()
+    val profile = new QueryProfile(spark)
 
     // deterministic population: id-keyed xxhash64 prints; every 20th row
     // tweaks the previous row's print by flipping (id mod 3)+1 bits;
@@ -53,13 +45,13 @@ object HammingScale {
 
     def timed(tag: String)(body: => Long): Unit = {
       spark.catalog.clearCache(); System.gc()
-      val (r0, w0) = telemetry.now()
+      val c0 = profile.now()
       val t0 = System.nanoTime()
       val rows = body
       val dt = (System.nanoTime() - t0) / 1e9
-      val (r1, w1) = telemetry.now()
+      val c = profile.now() - c0
       println(f"[hamming-scale] $tag%-28s ${dt}%7.2f s  rows=$rows%10d  " +
-        f"shuffleW=${(w1 - w0) / 1e6}%8.1f MB  shuffleR=${(r1 - r0) / 1e6}%8.1f MB")
+        f"shuffleW=${c.shuffleWriteBytes / 1e6}%8.1f MB  shuffleR=${c.shuffleReadBytes / 1e6}%8.1f MB")
     }
 
     timed("neardup_pairs_full") {

@@ -2,8 +2,9 @@ package graft.tools
 
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Scale rehearsal for the WARC record-streaming walk: synthesize a
   * CommonCrawl-shaped segment whose INFLATED size is far above the old
@@ -65,16 +66,9 @@ object WarcScale {
       f"${written / 1048576.0}%.0f MB gz (~${gib}%.1f GiB inflated) " +
       f"in $tW%.1f s")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the point of the rehearsal: a heap SMALLER than the inflated
-      // segment — the old whole-file reader dies here by construction
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    // the point of the rehearsal: a heap SMALLER than the inflated
+    // segment — the old whole-file reader dies here by construction
     println(s"[warcscale] driver heap max = " +
       f"${Runtime.getRuntime.maxMemory / 1048576.0}%.0f MB")
 

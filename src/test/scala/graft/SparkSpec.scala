@@ -3,25 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one per JVM; sbt forks one JVM
-  * for the whole Test run, so `getOrCreate` dedups across suites). */
+/** Shared local SparkSession for all suites, in the engine's own posture
+  * ([[GraftSession]]) at 4 cores. One per JVM: sbt forks one JVM for the
+  * whole Test run, so `getOrCreate` dedups across suites. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSpec.session
+  lazy val spark: SparkSession = GraftSession.local(4)
   lazy val sf0001 = "/root/testdata/sf0.001"
   lazy val sf001 = "/root/testdata/sf0.01"
-}
-
-object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

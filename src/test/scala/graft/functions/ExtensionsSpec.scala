@@ -36,7 +36,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("SQL minhash_sig matches the Column-API signature") {
-    GraftFunctionRegistry.registerTemp(spark)
     import org.apache.spark.sql.functions._
     val params = TextFunctions.minhashParams(16, 7L)
     val df = spark.createDataFrame(Seq(Tuple1("the quick brown fox jumps over the lazy dog today"))).toDF("text")
@@ -53,7 +52,6 @@ class ExtensionsSpec extends SparkSpec {
     val e = new org.apache.spark.sql.SparkSessionExtensions
     (new GraftExtensions).apply(e) // builder-time injection is well-formed
     // non-literal arg where a literal is required -> clear error
-    GraftFunctionRegistry.registerTemp(spark)
     val err = intercept[Exception] {
       spark.sql("SELECT shingle_hashes('a b c', cast(rand()*3 AS INT))").collect()
     }
@@ -62,7 +60,6 @@ class ExtensionsSpec extends SparkSpec {
 
   test("SQL-surface guards: arity errors, bigint-literal range check, " +
       "simhash64 registered") {
-    GraftFunctionRegistry.registerTemp(spark)
     val missing = intercept[Exception] {
       spark.sql("SELECT shingle_hashes('a b c')").collect()
     }

@@ -37,7 +37,6 @@ class RepetitionStatsSpec extends SparkSpec {
   }
 
   test("SQL surface exposes repetition_stats") {
-    graft.functions.expressions.GraftFunctionRegistry.registerTemp(spark)
     val r = spark.sql(
       "SELECT s.* FROM (SELECT repetition_stats('a b a') AS s)").first()
     assert(r.getAs[Long]("n_tokens") == 3L)

@@ -91,4 +91,51 @@ class MultimodalAssemblySpec extends SparkSpec {
       .select("id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(1L, 3L))
   }
+
+  test("streaming assembly skips the refresh for a wave with no new " +
+      "near-dup pairs: fewer jobs than a merging wave, same manifest") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    def gradient(f: Int => Int): Seq[Seq[Int]] =
+      (0 until 8).map(_ => (0 until 18).map { x =>
+        val v = f(x); (v << 16) | (v << 8) | v
+      })
+    val asc = gradient(identity)
+    val tweak = asc.updated(0, asc(0).updated(0, 0x050505))
+    val waves = Seq(
+      // two distinct photos: nothing to merge
+      Seq((1L, "000001", "s0", SyntheticFixtures.bmpBytes(asc),
+          Option("ascending gradient")),
+        (2L, "000002", "s0", SyntheticFixtures.bmpBytes(
+          SyntheticFixtures.richRaster(18, 8, 2)), Option("textured photo"))),
+      // another distinct photo: no new pair, the refresh is skipped
+      Seq((8L, "000008", "s1", SyntheticFixtures.bmpBytes(
+          SyntheticFixtures.richRaster(18, 8, 5)),
+        Option("another distinct photo"))),
+      // a 1-bit tweak of id 1: merges into 1's component, full refresh
+      Seq((3L, "000003", "s1", SyntheticFixtures.bmpBytes(tweak),
+        Option("tweaked copy"))))
+    val root =
+      java.nio.file.Files.createTempDirectory("graft_skipwave").toString
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String, String, Array[Byte], Option[String])]
+    val q = graft.streaming.EventStream.assembleMultimodalIncremental(
+      mem.toDF().toDF("id", "sample_id", "shard_name", "content",
+        "caption"),
+      root, s"$root/ckpt", minWidth = 10)
+    val profile = new graft.QueryProfile(spark)
+    val jobs = try waves.map { w =>
+      val before = profile.settled().jobs
+      mem.addData(w)
+      q.processAllAvailable()
+      profile.settled().jobs - before
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(profile)
+    }
+    assert(jobs(1) > 0 && jobs(1) < jobs(2), s"jobs per wave: $jobs")
+    val kept = spark.read.parquet(s"$root/manifest")
+      .select("id").collect().map(_.getLong(0)).toSet
+    assert(kept == Set(1L, 2L, 8L))
+  }
 }

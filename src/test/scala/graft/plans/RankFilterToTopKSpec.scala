@@ -4,19 +4,11 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** [[RankFilterToTopK]] — the window-rank-filter → bounded-heap rewrite.
-  * Registered on an ISOLATED newSession() so the shared suite session's
-  * plans stay untouched. */
+/** [[RankFilterToTopK]] — the window-rank-filter → bounded-heap rewrite,
+  * as the shared suite session ([[graft.GraftSession]]) injects it. */
 class RankFilterToTopKSpec extends SparkSpec {
 
-  // separate session: experimental rules/strategies are per-SessionState
-  private lazy val s = {
-    val s2 = spark.newSession()
-    RankFilterToTopK.register(s2)
-    s2
-  }
-
-  private def orders = s.read.parquet(s"$sf0001/orders.parquet")
+  private def orders = spark.read.parquet(s"$sf0001/orders.parquet")
     .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
 
   private def ranked(k: Int) = {
@@ -34,14 +26,14 @@ class RankFilterToTopKSpec extends SparkSpec {
   }
 
   test("rewritten output == un-rewritten output (total order), rank intact") {
-    val expected = {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      spark.read.parquet(s"$sf0001/orders.parquet")
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    }
+    // the un-rewritten semantics, in plain Scala: rank each customer's
+    // orders by (price desc, orderkey asc), keep ranks 1..3
+    val expected = orders.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .groupBy(_._1).values
+      .flatMap(_.sortBy(o => (-o._3, o._2)).take(3).zipWithIndex
+        .map { case ((c, o, _), i) => (c, o, i + 1) })
+      .toSet
     val got = ranked(3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     assert(got == expected)
@@ -88,20 +80,22 @@ class RankFilterToTopKSpec extends SparkSpec {
     assert(!conj.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
   }
 
-  test("shared session is unaffected (no global rewrite leak)") {
+  test("shared session: heap in the executed plan, no WindowGroupLimit") {
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
     val df = spark.read.parquet(s"$sf0001/orders.parquet")
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
     df.collect()
-    assert(!df.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("TopKPerGroup"), plan)
+    assert(!plan.contains("WindowGroupLimit"), plan)
   }
 
   test("Spark's InferWindowGroupLimit node is stripped, not doubled") {
-    // the main optimizer's InferWindowGroupLimit runs BEFORE
-    // extraOptimizations and inserts a WindowGroupLimit under the same
-    // Window this rule matches; keeping both would re-sort every raw
-    // partition locally under the heap node
+    // the main optimizer's InferWindowGroupLimit runs AFTER the batch
+    // injected optimizer rules run in, and would insert a
+    // WindowGroupLimit under the Window this rule rewrote; keeping both
+    // would sort and limit the heap's output a second time
     val df = ranked(2)
     df.collect()
     val optimized = df.queryExecution.optimizedPlan.toString

@@ -29,4 +29,13 @@ class CoreQueriesSpec extends SparkSpec {
   test("flagship entry returns rows on sf0.001") {
     assert(graft.SparkEntry.entry(spark).count() > 0)
   }
+
+  test("every registered query has an oracle twin and vice versa") {
+    // the bench harness looks each query's oracle up by its key
+    val (qs, os) = (graft.SparkEntry.queries.keySet,
+      graft.SparkEntry.oracleSql.keySet)
+    assert(qs.nonEmpty)
+    assert(qs == os, s"no oracle: ${(qs -- os).toSeq.sorted}; " +
+      s"no query: ${(os -- qs).toSeq.sorted}")
+  }
 }

@@ -1,6 +1,9 @@
 package graft.sources.v2
 
+import java.net.URI
 import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 import graft.SparkSpec
 import graft.sources.SyntheticFixtures
@@ -59,5 +62,18 @@ class ObjectStoreWriteSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(bucket,
       ObjectStoreWriteSource.ManifestName)))
     assert(!Files.exists(Paths.get(bucket).getParent.resolve("escape.txt")))
+  }
+
+  test("a write leaves the JVM's cached file: FileSystem writing .crc " +
+      "sidecars") {
+    push(SyntheticFixtures.freshDir("osw_crc_bucket"),
+      Seq("x.bin" -> Array[Byte](1)))
+    val dir = SyntheticFixtures.freshDir("osw_crc_after")
+    val fs = FileSystem.get(new URI("file:///"),
+      spark.sessionState.newHadoopConf())
+    val out = fs.create(new Path(s"file://$dir/after.txt"), true)
+    try out.write("after".getBytes("UTF-8")) finally out.close()
+    assert(Files.exists(Paths.get(dir, ".after.txt.crc")),
+      Files.list(Paths.get(dir)).toArray.mkString(", "))
   }
 }
