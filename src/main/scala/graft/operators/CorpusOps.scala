@@ -1189,26 +1189,23 @@ object CorpusOps {
     * next to the corpus); the global total is a 1-row broadcast; top-k is
     * TakeOrdered, never a full sort. Output: (w1, w2, n12, lift). */
   def collocationTopK(docs: DataFrame, textCol: String, minCount: Long,
-      k: Int): DataFrame = {
-    val counts = bigramPairs(docs, textCol).groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("n12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val left = counts.groupBy(col("w1")).agg(sum(col("n12")).as("__n1"))
-    val right = counts.groupBy(col("w2")).agg(sum(col("n12")).as("__n2"))
-    val total = counts.agg(sum(col("n12")).as("__nbg"))
-    val out = counts.filter(col("n12") >= minCount)
-      .join(left, Seq("w1")).join(right, Seq("w2"))
-      .crossJoin(broadcast(total))
-      .withColumn("lift", round(
-        col("n12").cast("double") * col("__nbg") / col("__n1") / col("__n2"),
-        6))
-      .select(col("w1"), col("w2"), col("n12"), col("lift"))
-      .orderBy(col("lift").desc, col("w1").asc, col("w2").asc)
-      .limit(k)
-      .localCheckpoint(true)
-    counts.unpersist()
-    out
-  }
+      k: Int): DataFrame =
+    graft.Materialize.scoped { pin =>
+      val counts = pin(bigramPairs(docs, textCol).groupBy(col("w1"), col("w2"))
+        .agg(count(lit(1)).as("n12")))
+      val left = counts.groupBy(col("w1")).agg(sum(col("n12")).as("__n1"))
+      val right = counts.groupBy(col("w2")).agg(sum(col("n12")).as("__n2"))
+      val total = counts.agg(sum(col("n12")).as("__nbg"))
+      counts.filter(col("n12") >= minCount)
+        .join(left, Seq("w1")).join(right, Seq("w2"))
+        .crossJoin(broadcast(total))
+        .withColumn("lift", round(
+          col("n12").cast("double") * col("__nbg") / col("__n1") / col("__n2"),
+          6))
+        .select(col("w1"), col("w2"), col("n12"), col("lift"))
+        .orderBy(col("lift").desc, col("w1").asc, col("w2").asc)
+        .limit(k)
+    }
 
   /** Within-group percentile rank (integer ppm) of a value column — the
     * per-source score-calibration step before a single global threshold is

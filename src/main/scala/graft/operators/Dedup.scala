@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.functions.TextFunctions._
 
 /** Deduplication operators for large-scale text pipelines (BASELINE.json
@@ -113,69 +114,64 @@ object Dedup {
       maxBucketSize: Int = 1000
   ): DataFrame = {
     val params = minhashParams(bands * rowsPerBand)
-    // persisted: the shingle+signature subtree feeds four consumers (band
-    // explode, the size-prune, both sides of the verification join) —
-    // without persistence Spark recomputes the per-shingle hashing each time.
-    // The handle is unpersisted below once the (small) pair result is
-    // materialized, so repeated library calls don't leak cached blocks.
-    val docs = df.select(
-      col(idCol).as("id"),
-      shingleHashes60(col(textCol), n).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig", minhashSignature(col("sh"), params))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the (pair-sized, small) result is what the scope materializes
+    Materialize.scoped { pin =>
+      // pinned: the shingle+signature subtree feeds four consumers (band
+      // explode, the size-prune, both sides of the verification join) —
+      // without it Spark recomputes the per-shingle hashing each time
+      val docs = pin(df.select(
+        col(idCol).as("id"),
+        shingleHashes60(col(textCol), n).as("sh"))
+        .filter(size(col("sh")) > 0)
+        .withColumn("sig", minhashSignature(col("sh"), params)))
 
-    val banded = docs.select(
-      col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        i => slice(col("sig"), i * rowsPerBand + 1, lit(rowsPerBand)))))
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_sig")
+      val banded = docs.select(
+        col("id"),
+        posexplode(transform(sequence(lit(0), lit(bands - 1)),
+          i => slice(col("sig"), i * rowsPerBand + 1, lit(rowsPerBand)))))
+        .withColumnRenamed("pos", "band_idx")
+        .withColumnRenamed("col", "band_sig")
 
-    // count-first shed (see shedOvercapBuckets): the size guard must
-    // bound the AGGREGATION BUFFER, not just downstream fan-out — a
-    // boilerplate signature at corpus scale would otherwise concentrate
-    // the population in one collect_list before the filter ever runs
-    val buckets = shedOvercapBuckets(banded,
-        Seq("band_idx", "band_sig"), 2L, maxBucketSize.toLong)
-      .groupBy(col("band_idx"), col("band_sig"))
-      .agg(collect_list(col("id")).as("ids"))
+      // count-first shed (see shedOvercapBuckets): the size guard must
+      // bound the AGGREGATION BUFFER, not just downstream fan-out — a
+      // boilerplate signature at corpus scale would otherwise concentrate
+      // the population in one collect_list before the filter ever runs
+      val buckets = shedOvercapBuckets(banded,
+          Seq("band_idx", "band_sig"), 2L, maxBucketSize.toLong)
+        .groupBy(col("band_idx"), col("band_sig"))
+        .agg(collect_list(col("id")).as("ids"))
 
-    val candidates = buckets
-      .select(explode(col("ids")).as("id_1"), col("ids"))
-      .select(col("id_1"), explode(col("ids")).as("id_2"))
-      .filter(col("id_1") < col("id_2"))
-      .distinct()
+      val candidates = buckets
+        .select(explode(col("ids")).as("id_1"), col("ids"))
+        .select(col("id_1"), explode(col("ids")).as("id_2"))
+        .filter(col("id_1") < col("id_2"))
+        .distinct()
 
-    // size prune BEFORE the shingle arrays move: jaccard <= min/max sizes,
-    // so a pair whose size ratio is already below threshold never joins the
-    // (wide) array columns — only a 2-int-column projection shuffles here.
-    val sizes = docs.select(col("id"), size(col("sh")).as("n"))
-    val pruned = candidates
-      .join(sizes.select(col("id").as("id_1"), col("n").as("n_1")), "id_1")
-      .join(sizes.select(col("id").as("id_2"), col("n").as("n_2")), "id_2")
-      .filter(least(col("n_1"), col("n_2")).cast("double") >=
-        lit(threshold) * greatest(col("n_1"), col("n_2")))
-      .select(col("id_1"), col("id_2"))
+      // size prune BEFORE the shingle arrays move: jaccard <= min/max sizes,
+      // so a pair whose size ratio is already below threshold never joins the
+      // (wide) array columns — only a 2-int-column projection shuffles here.
+      val sizes = docs.select(col("id"), size(col("sh")).as("n"))
+      val pruned = candidates
+        .join(sizes.select(col("id").as("id_1"), col("n").as("n_1")), "id_1")
+        .join(sizes.select(col("id").as("id_2"), col("n").as("n_2")), "id_2")
+        .filter(least(col("n_1"), col("n_2")).cast("double") >=
+          lit(threshold) * greatest(col("n_1"), col("n_2")))
+        .select(col("id_1"), col("id_2"))
 
-    val sh1 = docs.select(col("id").as("id_1"), col("sh").as("sh_1"))
-    val sh2 = docs.select(col("id").as("id_2"), col("sh").as("sh_2"))
-    val pairs = pruned
-      .join(sh1, "id_1").join(sh2, "id_2")
-      .withColumn("inter", size(array_intersect(col("sh_1"), col("sh_2"))).cast("double"))
-      // |A∪B| = |A|+|B|-|A∩B| for distinct arrays: skips materializing the
-      // union array (the second-most-expensive op of the verify stage)
-      .withColumn("uni",
-        (size(col("sh_1")) + size(col("sh_2"))).cast("double") - col("inter"))
-      .filter(col("uni") > 0)
-      .withColumn("jaccard", round(col("inter") / col("uni"), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_1"), col("id_2"), col("jaccard"))
-    // materialize the (pair-sized, small) result, then release the cached
-    // shingle blocks — callers get a plan with no live cache dependency
-    val out = pairs.localCheckpoint(true)
-    docs.unpersist()
-    out
+      val sh1 = docs.select(col("id").as("id_1"), col("sh").as("sh_1"))
+      val sh2 = docs.select(col("id").as("id_2"), col("sh").as("sh_2"))
+      pruned
+        .join(sh1, "id_1").join(sh2, "id_2")
+        .withColumn("inter", size(array_intersect(col("sh_1"), col("sh_2"))).cast("double"))
+        // |A∪B| = |A|+|B|-|A∩B| for distinct arrays: skips materializing the
+        // union array (the second-most-expensive op of the verify stage)
+        .withColumn("uni",
+          (size(col("sh_1")) + size(col("sh_2"))).cast("double") - col("inter"))
+        .filter(col("uni") > 0)
+        .withColumn("jaccard", round(col("inter") / col("uni"), 6))
+        .filter(col("jaccard") >= threshold)
+        .select(col("id_1"), col("id_2"), col("jaccard"))
+    }
   }
 
   /** Incremental cross-batch near-dup matching: flag documents of a NEW
@@ -252,43 +248,40 @@ object Dedup {
       .withColumnRenamed("pos", "band_idx")
       .withColumnRenamed("col", "band_sig")
 
-    val idx = indexArt.select(col("id"), col("sh"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bat = batchArt.select(col("id"), col("sh"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the production artifact: index buckets keyed by (band, signature) —
-    // capped count-first (shedOvercapBuckets), so one boilerplate
-    // signature can neither quadratic-blow the probe NOR concentrate the
-    // index in a single collect_list buffer before the cap applies
-    val idxBuckets = shedOvercapBuckets(bandRows(idx),
-        Seq("band_idx", "band_sig"), 1L, maxBucketSize.toLong)
-      .groupBy(col("band_idx"), col("band_sig"))
-      .agg(collect_list(col("id")).as("ids"))
-    val candidates = bandRows(bat)
-      .join(idxBuckets, Seq("band_idx", "band_sig"))
-      .select(col("id").as("batch_id"), explode(col("ids")).as("index_id"))
-      .distinct()
+    Materialize.scoped { pin =>
+      val idx = pin(indexArt.select(col("id"), col("sh"), col("sig")))
+      val bat = pin(batchArt.select(col("id"), col("sh"), col("sig")))
+      // the production artifact: index buckets keyed by (band, signature) —
+      // capped count-first (shedOvercapBuckets), so one boilerplate
+      // signature can neither quadratic-blow the probe NOR concentrate the
+      // index in a single collect_list buffer before the cap applies
+      val idxBuckets = shedOvercapBuckets(bandRows(idx),
+          Seq("band_idx", "band_sig"), 1L, maxBucketSize.toLong)
+        .groupBy(col("band_idx"), col("band_sig"))
+        .agg(collect_list(col("id")).as("ids"))
+      val candidates = bandRows(bat)
+        .join(idxBuckets, Seq("band_idx", "band_sig"))
+        .select(col("id").as("batch_id"), explode(col("ids")).as("index_id"))
+        .distinct()
 
-    // size prune, then exact verify — only flagged candidates carry arrays
-    val bSizes = bat.select(col("id").as("batch_id"), size(col("sh")).as("n_b"))
-    val iSizes = idx.select(col("id").as("index_id"), size(col("sh")).as("n_i"))
-    val pruned = candidates.join(bSizes, "batch_id").join(iSizes, "index_id")
-      .filter(least(col("n_b"), col("n_i")).cast("double") >=
-        lit(threshold) * greatest(col("n_b"), col("n_i")))
-      .select(col("batch_id"), col("index_id"))
-    val matches = pruned
-      .join(bat.select(col("id").as("batch_id"), col("sh").as("sh_b")), "batch_id")
-      .join(idx.select(col("id").as("index_id"), col("sh").as("sh_i")), "index_id")
-      .withColumn("inter", size(array_intersect(col("sh_b"), col("sh_i"))).cast("double"))
-      .withColumn("uni",
-        (size(col("sh_b")) + size(col("sh_i"))).cast("double") - col("inter"))
-      .filter(col("uni") > 0)
-      .withColumn("jaccard", round(col("inter") / col("uni"), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("batch_id"), col("index_id"), col("jaccard"))
-    val out = matches.localCheckpoint(true)
-    idx.unpersist(); bat.unpersist()
-    out
+      // size prune, then exact verify — only flagged candidates carry arrays
+      val bSizes = bat.select(col("id").as("batch_id"), size(col("sh")).as("n_b"))
+      val iSizes = idx.select(col("id").as("index_id"), size(col("sh")).as("n_i"))
+      val pruned = candidates.join(bSizes, "batch_id").join(iSizes, "index_id")
+        .filter(least(col("n_b"), col("n_i")).cast("double") >=
+          lit(threshold) * greatest(col("n_b"), col("n_i")))
+        .select(col("batch_id"), col("index_id"))
+      pruned
+        .join(bat.select(col("id").as("batch_id"), col("sh").as("sh_b")), "batch_id")
+        .join(idx.select(col("id").as("index_id"), col("sh").as("sh_i")), "index_id")
+        .withColumn("inter", size(array_intersect(col("sh_b"), col("sh_i"))).cast("double"))
+        .withColumn("uni",
+          (size(col("sh_b")) + size(col("sh_i"))).cast("double") - col("inter"))
+        .filter(col("uni") > 0)
+        .withColumn("jaccard", round(col("inter") / col("uni"), 6))
+        .filter(col("jaccard") >= threshold)
+        .select(col("batch_id"), col("index_id"), col("jaccard"))
+    }
   }
 
   /** Audit surface for [[incrementalLshMatches]]'s `maxBucketSize` shed:
@@ -326,51 +319,49 @@ object Dedup {
       n: Int, bands: Int, rowsPerBand: Int
   ): DataFrame = {
     val params = minhashParams(bands * rowsPerBand)
-    val docs = df.select(
-      col(idCol).as("id"),
-      shingleHashes60(col(textCol), n).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig", minhashSignature(col("sh"), params))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = docs.select(
-      col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        i => slice(col("sig"), i * rowsPerBand + 1, lit(rowsPerBand)))))
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_sig")
-    // calibration is deliberately UNCAPPED (it measures every colliding
-    // pair the config would surface), but the >=2 gate still goes
-    // count-first so singleton buckets never buffer
-    val candidates = shedOvercapBuckets(banded,
-        Seq("band_idx", "band_sig"), 2L, Long.MaxValue)
-      .groupBy(col("band_idx"), col("band_sig"))
-      .agg(collect_list(col("id")).as("ids"))
-      .select(col("ids"))
-      .select(explode(col("ids")).as("id_1"), col("ids"))
-      .select(col("id_1"), explode(col("ids")).as("id_2"))
-      .filter(col("id_1") < col("id_2"))
-      .distinct()
-    val both = candidates
-      .join(docs.select(col("id").as("id_1"), col("sh").as("sh_1"),
-        col("sig").as("sig_1")), "id_1")
-      .join(docs.select(col("id").as("id_2"), col("sh").as("sh_2"),
-        col("sig").as("sig_2")), "id_2")
-    val agree = aggregate(
-      zip_with(col("sig_1"), col("sig_2"), (x, y) => (x === y).cast("long")),
-      lit(0L), (acc, x) => acc + x)
-    val out = both
-      .withColumn("__agree", agree)
-      .withColumn("est_ppm",
-        expr(s"(1000000 * __agree) div ${bands * rowsPerBand}"))
-      .withColumn("inter", size(array_intersect(col("sh_1"), col("sh_2"))).cast("double"))
-      .withColumn("uni",
-        (size(col("sh_1")) + size(col("sh_2"))).cast("double") - col("inter"))
-      .filter(col("uni") > 0)
-      .withColumn("jaccard", round(col("inter") / col("uni"), 6))
-      .select(col("id_1"), col("id_2"), col("est_ppm"), col("jaccard"))
-      .localCheckpoint(true)
-    docs.unpersist()
-    out
+    Materialize.scoped { pin =>
+      val docs = pin(df.select(
+        col(idCol).as("id"),
+        shingleHashes60(col(textCol), n).as("sh"))
+        .filter(size(col("sh")) > 0)
+        .withColumn("sig", minhashSignature(col("sh"), params)))
+      val banded = docs.select(
+        col("id"),
+        posexplode(transform(sequence(lit(0), lit(bands - 1)),
+          i => slice(col("sig"), i * rowsPerBand + 1, lit(rowsPerBand)))))
+        .withColumnRenamed("pos", "band_idx")
+        .withColumnRenamed("col", "band_sig")
+      // calibration is deliberately UNCAPPED (it measures every colliding
+      // pair the config would surface), but the >=2 gate still goes
+      // count-first so singleton buckets never buffer
+      val candidates = shedOvercapBuckets(banded,
+          Seq("band_idx", "band_sig"), 2L, Long.MaxValue)
+        .groupBy(col("band_idx"), col("band_sig"))
+        .agg(collect_list(col("id")).as("ids"))
+        .select(col("ids"))
+        .select(explode(col("ids")).as("id_1"), col("ids"))
+        .select(col("id_1"), explode(col("ids")).as("id_2"))
+        .filter(col("id_1") < col("id_2"))
+        .distinct()
+      val both = candidates
+        .join(docs.select(col("id").as("id_1"), col("sh").as("sh_1"),
+          col("sig").as("sig_1")), "id_1")
+        .join(docs.select(col("id").as("id_2"), col("sh").as("sh_2"),
+          col("sig").as("sig_2")), "id_2")
+      val agree = aggregate(
+        zip_with(col("sig_1"), col("sig_2"), (x, y) => (x === y).cast("long")),
+        lit(0L), (acc, x) => acc + x)
+      both
+        .withColumn("__agree", agree)
+        .withColumn("est_ppm",
+          expr(s"(1000000 * __agree) div ${bands * rowsPerBand}"))
+        .withColumn("inter", size(array_intersect(col("sh_1"), col("sh_2"))).cast("double"))
+        .withColumn("uni",
+          (size(col("sh_1")) + size(col("sh_2"))).cast("double") - col("inter"))
+        .filter(col("uni") > 0)
+        .withColumn("jaccard", round(col("inter") / col("uni"), 6))
+        .select(col("id_1"), col("id_2"), col("est_ppm"), col("jaccard"))
+    }
   }
 
   /** Near-duplicate CLUSTERS from pairwise matches: connected components

@@ -98,17 +98,12 @@ object MincInsertion {
       tarchiveSeries: DataFrame, psc: DataFrame, sessions: DataFrame,
       candidates: DataFrame, scanners: DataFrame, files: DataFrame,
       candErrors: DataFrame, protocols: DataFrame,
-      excludedProtocols: Seq[String] = Nil,
-      eagerCheckpoint: Boolean = true): DataFrame = {
-    // multi-consumer ladder midpoints materialize ONCE (batch-sized);
-    // plan-shape specs pass eagerCheckpoint=false to inspect the full
-    // unfused logical plan (checkpoints truncate lineage).
+      excludedProtocols: Seq[String] = Nil): DataFrame = {
+    // multi-consumer ladder midpoints materialize ONCE (batch-sized).
     // LAZY (r13): the dedicated checkpoint job per midpoint is gone —
     // the first consumer (an ordinal zipWithIndex, a broadcast build, or
     // the query's final action, all full scans) materializes and caches
     // the truncated RDD within its own job
-    def ckpt(df: DataFrame): DataFrame =
-      if (eagerCheckpoint) df.localCheckpoint(false) else df
 
     // ---- 1. input resolution --------------------------------------
     val upDict = uploads.select(col("UploadID").as("upload_id"),
@@ -198,14 +193,13 @@ object MincInsertion {
       psc,
       sessions.select(col("CandidateID"), col("CenterID"),
         col("Visit_label")),
-      candidates.select(col("ID"), col("PSCID")),
-      eagerCheckpoint)
+      candidates.select(col("ID"), col("PSCID")))
     val scanned = TarchiveValidation.resolveScanner(
       centered.withColumn("manufacturer", col("__man"))
         .withColumn("model", col("__mod"))
         .withColumn("serial", col("__ser"))
         .withColumn("software", col("__sw")),
-      scanners, eagerCheckpoint)
+      scanners)
       .withColumn("minc_id", col("upload_id"))
       .withColumn("upload_id", col("__uid_save"))
 
@@ -244,8 +238,9 @@ object MincInsertion {
     // whole ladder tail): materialize the join ladder ONCE. Scale-safe —
     // this is the insert BATCH (bounded by what one ingest run carries),
     // never the catalog side of the joins.
-    val withSess = ckpt(reasoned
-      .join(sessKeys, Seq("CandID", "visit_label"), "left"))
+    val withSess = reasoned
+      .join(sessKeys, Seq("CandID", "visit_label"), "left")
+      .localCheckpoint(false)
     val newSessKeys = withSess
       .filter(col("__sess_id").isNull && col("__cand_reason").isNull)
       .select(col("CandID"), col("visit_label")).distinct()
@@ -346,7 +341,7 @@ object MincInsertion {
       .orderBy(col("minc_id"))
     // two consumers (newIds and the final join): one materialization of
     // the ladder tail — batch-sized, same rationale as withSess above
-    val statused = ckpt(preStatus
+    val statused = preStatus
       .withColumn("__first_md5",
         first(when(eligible, col("minc_id")), ignoreNulls = true)
           .over(firstOfHash))
@@ -357,7 +352,8 @@ object MincInsertion {
             .when(col("acq_protocol_id").isNull, lit("unknown_protocol"))
             .when(col("acq_protocol").isin(excludedProtocols: _*),
               lit("excluded_protocol"))
-            .otherwise(lit("registered")))))
+            .otherwise(lit("registered"))))
+      .localCheckpoint(false)
 
     // ---- registration ids + output shape --------------------------
     val maxFile = files.agg(coalesce(max(col("FileID")), lit(0L))

@@ -78,15 +78,11 @@ object NonMincRegistration {
   def register(cands: DataFrame, uploads: DataFrame, scanners: DataFrame,
       scanTypes: DataFrame, fileTypes: DataFrame, candidates: DataFrame,
       visitWindows: DataFrame, sessions: DataFrame,
-      files: DataFrame, eagerCheckpoint: Boolean = true): DataFrame = {
-    // multi-consumer ladder midpoints materialize ONCE (batch-sized);
-    // plan-shape specs pass eagerCheckpoint=false to inspect the full
-    // unfused logical plan (checkpoints truncate lineage).
+      files: DataFrame): DataFrame = {
+    // multi-consumer ladder midpoints materialize ONCE (batch-sized).
     // LAZY (r13): no dedicated checkpoint job — the first consumer (a
     // broadcast build or the final action, both full scans) materializes
     // and caches the truncated RDD within its own job
-    def ckpt(df: DataFrame): DataFrame =
-      if (eagerCheckpoint) df.localCheckpoint(false) else df
 
     // last matching ImagingFileTypes row wins (File.pm:278-282 overwrites
     // $fileType on every match as it loops the table)
@@ -147,7 +143,7 @@ object NonMincRegistration {
     val batchDupW = Window.partitionBy(col("md5hash"))
       .orderBy(col("file_path"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val statused = ckpt(checked
+    val statused = checked
       .join(dupCatalog, Seq("md5hash"), "left")
       .withColumn("__pre_md5", preMd5)
       .withColumn("__ok_rank", sum(when(col("__pre_md5") &&
@@ -167,7 +163,8 @@ object NonMincRegistration {
           // ladder via `withSession`): one materialization of the check
           // ladder — batch-sized (the files being registered), never the
           // catalog side of its joins
-          .otherwise("registered")))
+          .otherwise("registered"))
+      .localCheckpoint(false)
 
     // get-or-create sessions for EVERY row that reaches the session stage
     // (the reference creates the visit before the md5 guard); max ids ride
@@ -192,8 +189,9 @@ object NonMincRegistration {
         col("__existing").isNull.as("__session_new"))
 
     // two consumers (`ok` and `rejected` split): materialize once
-    val withSession = ckpt(statused
-      .join(sessResolved, Seq("CandID", "VisitLabel"), "left"))
+    val withSession = statused
+      .join(sessResolved, Seq("CandID", "VisitLabel"), "left")
+      .localCheckpoint(false)
 
     val maxFile = files
       .agg(coalesce(max(col("FileID")), lit(0L)).cast("long").as("__maxf"))

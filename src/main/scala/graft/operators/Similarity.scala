@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.Materialize
+
 /** Approximate/exact nearest-neighbor search over an embedding column
   * (`Array[Float]`).
   *
@@ -22,25 +24,6 @@ import org.apache.spark.sql.expressions.Window
   * left-to-right.
   */
 object Similarity {
-
-  /** Eager lineage-truncating materialization whose storage level is
-    * SIZE-AWARE: at or above `serMinRows` corpus rows the artifact
-    * stages at MEMORY_AND_DISK_SER — serialized blocks hold ONE byte
-    * array per block instead of one object per row, which is what
-    * keeps full-suite sf1 runs from GC-scattering around the same
-    * shuffle fingerprint (docs/SCALE.md, round-11 note) — while a
-    * small artifact keeps the default deserialized level, where the
-    * per-access deserialization of a tiny table costs more than the
-    * heap it saves (the round-11 sf0.1 regression on the miner
-    * family). Callers already hold the corpus row count (they size
-    * the banding geometry with it), so the choice costs no extra
-    * job. */
-  private[graft] val serMinRows: Long = 10000L
-  private[graft] def stageSer(df: DataFrame, rows: Long): DataFrame =
-    if (rows >= serMinRows)
-      df.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    else df.localCheckpoint(true)
 
   /** Dot product of two double arrays (left-to-right summation). Evaluated
     * by the codegen'd allocation-free
@@ -126,13 +109,8 @@ object Similarity {
     val scored = c.join(broadcast(a), col("__nl") =!= col("__ql"))
       .withColumn("cosine", round(cosine(col("q_vec"), col("c_vec")), 6))
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
-    val top = graft.plans.TopKPerGroup(scored, Seq(col("query_id")),
-      Seq(col("cosine").desc, col("neighbor_id").asc), k)
-    // rank assignment runs AFTER the heap prune — the window sees at most
-    // k rows per anchor
-    top.withColumn("rank",
-      row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)))
+    ranked(graft.plans.TopKPerGroup(scored, Seq(col("query_id")),
+      Seq(col("cosine").desc, col("neighbor_id").asc), k))
   }
 
   /** Corpus-wide hard-negative mining — every row is its own anchor — via
@@ -160,43 +138,28 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String, labelCol: String,
       k: Int, dim: Int, bands: Int = 32, bitsPerBand: Int = 2,
       seed: Long = 42L, maxBucketSize: Int = 20000
-  ): DataFrame = {
-    val (plan, caches) = hardNegativesAnnPlan(corpus, idCol, vecCol, labelCol,
-      k, dim, bands, bitsPerBand, seed, maxBucketSize)
-    // materialize the (≤ k rows per anchor) result, then release the
-    // cached vectors/signatures so repeated calls don't leak storage blocks
-    val out = plan.localCheckpoint(true)
-    caches.foreach(_.unpersist())
-    out
-  }
+  ): DataFrame =
+    Materialize.scoped { pin =>
+      // norm computed ONCE per vector — the per-pair verify is then a
+      // single dot product, and dot/(nrm_a·nrm_b) is the identical double
+      // the pairwise dot/(√(a·a)·√(b·b)) form yields (same expressions,
+      // same order), so rounding matches the exact path bit-for-bit
+      val v = pin(corpus.select(col(idCol).as("id"), col(labelCol).as("lbl"),
+          asDouble(col(vecCol)).as("v"))
+        .withColumn("nrm", norm(col("v"))))
+      val scored = annLabelScored(v, pin, sameLabel = false, dim,
+        bands, bitsPerBand, seed, maxBucketSize)
+      // the (≤ k rows per anchor) result is what the scope materializes
+      ranked(graft.plans.TopKPerGroup(scored, Seq(col("query_id")),
+        Seq(col("cosine").desc, col("neighbor_id").asc), k))
+    }
 
-  /** The un-checkpointed [[hardNegativesAnn]] plan plus the cached frames
-    * backing it — exposed so plan-shape specs can assert the join
-    * topology (no corpus broadcast, no nested loop) before the eager
-    * checkpoint collapses it to an RDD scan. Callers must `unpersist()`
-    * the returned cached frames when done. */
-  def hardNegativesAnnPlan(
-      corpus: DataFrame, idCol: String, vecCol: String, labelCol: String,
-      k: Int, dim: Int, bands: Int = 32, bitsPerBand: Int = 2,
-      seed: Long = 42L, maxBucketSize: Int = 20000
-  ): (DataFrame, Seq[DataFrame]) = {
-    // norm computed ONCE per vector — the per-pair verify is then a single
-    // dot product, and dot/(nrm_a·nrm_b) is the identical double the
-    // pairwise dot/(√(a·a)·√(b·b)) form yields (same expressions, same
-    // order), so rounding matches the exact path bit-for-bit
-    val v = corpus.select(col(idCol).as("id"), col(labelCol).as("lbl"),
-        asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", norm(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (scored, s) = annLabelScored(v, sameLabel = false, dim,
-      bands, bitsPerBand, seed, maxBucketSize)
-    val top = graft.plans.TopKPerGroup(scored, Seq(col("query_id")),
-      Seq(col("cosine").desc, col("neighbor_id").asc), k)
-    val out = top.withColumn("rank",
+  /** Rank 1..k per anchor over a heap-pruned top-k frame: the window sees
+    * at most k rows per anchor. */
+  private def ranked(top: DataFrame): DataFrame =
+    top.withColumn("rank",
       row_number().over(Window.partitionBy(col("query_id"))
         .orderBy(col("cosine").desc, col("neighbor_id").asc)))
-    (out, Seq(v, s))
-  }
 
   /** The first-collision-band column: given the two rows' PACKED band
     * signatures, the lowest band index where they collide — a pair
@@ -262,24 +225,22 @@ object Similarity {
     * same-label-non-self (`sameLabel=true`) pair sharing at least one
     * (band, sig) bucket, exactly deduplicated locally via the
     * packed-signature [[firstCollisionBand]] rule and exact-verified
-    * IN the bucket join. Input `v` is the cached (id, lbl, v, nrm)
-    * frame; returns the scored frame plus the cached signature frame
-    * the caller must unpersist. */
+    * IN the bucket join. Input `v` is the pinned (id, lbl, v, nrm)
+    * frame; the signature frame is pinned to the same scope. */
   private[operators] def annLabelScored(
-      v: DataFrame, sameLabel: Boolean, dim: Int, bands: Int,
-      bitsPerBand: Int, seed: Long, maxBucketSize: Int
-  ): (DataFrame, DataFrame) = {
-    val s = bandSigFrame(v, dim, bands, bitsPerBand, seed)
-    (annLabelScoredFromSigs(s, sameLabel, bands, bitsPerBand,
-      maxBucketSize), s)
-  }
+      v: DataFrame, pin: Materialize.Pin, sameLabel: Boolean, dim: Int,
+      bands: Int, bitsPerBand: Int, seed: Long, maxBucketSize: Int
+  ): DataFrame =
+    annLabelScoredFromSigs(bandSigFrame(v, pin, dim, bands, bitsPerBand,
+      seed), sameLabel, bands, bitsPerBand, maxBucketSize)
 
-  /** The cached (id, lbl, v, nrm, fullsig, band, sig) frame behind
+  /** The pinned (id, lbl, v, nrm, fullsig, band, sig) frame behind
     * [[annLabelScored]] — label-mode-independent, so one frame per
     * (geometry, seed) serves BOTH the same-label and cross-label passes
     * of triplet mining when their geometries coincide. */
   private[operators] def bandSigFrame(
-      v: DataFrame, dim: Int, bands: Int, bitsPerBand: Int, seed: Long
+      v: DataFrame, pin: Materialize.Pin, dim: Int, bands: Int,
+      bitsPerBand: Int, seed: Long
   ): DataFrame = {
     require(bands * bitsPerBand <= 64,
       "packed-signature dedup needs bands*bitsPerBand <= 64")
@@ -306,21 +267,21 @@ object Similarity {
       else col("v")
     val nrmCol = if (fetchVerify(v)) when(col("band") === 0, col("nrm"))
       else col("nrm")
-    v.select(col("id"), col("lbl"), col("v"), col("nrm"), sigArr.as("sigs"))
+    // n×bands rows CARRYING the vector and its norm — the exact verify
+    // runs INSIDE the bucket join (see annLabelScoredFromSigs), so the
+    // shuffled/cached volume is n×bands vector rows, never candidate
+    // pairs × vectors. Pinning holds the (heavy-codegen) signature stage
+    // to ONE evaluation — it feeds both the bucket-size agg and the pair
+    // join (and, in triplet mining, both label modes)
+    pin(v.select(col("id"), col("lbl"), col("v"), col("nrm"),
+        sigArr.as("sigs"))
       .select(col("id"), col("lbl"), col("v"), col("nrm"),
         packed.as("fullsig"),
         posexplode(col("sigs")).as(Seq("band", "sig")))
       .select(col("id"), col("lbl"), vCol.as("v"), nrmCol.as("nrm"),
         col("fullsig"), col("band"), col("sig"))
       .repartition(v.sparkSession.sessionState.conf.numShufflePartitions,
-        col("band"), col("sig"))
-      // n×bands rows CARRYING the vector and its norm — the exact verify
-      // runs INSIDE the bucket join (see annLabelScoredFromSigs), so the
-      // shuffled/cached volume is n×bands vector rows, never candidate
-      // pairs × vectors. Caching pins the (heavy-codegen) signature stage
-      // to ONE evaluation — it feeds both the bucket-size agg and the
-      // pair join (and, in triplet mining, both label modes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("band"), col("sig")))
   }
 
   /** Candidate generation + INLINE exact-cosine verify over a prebuilt
@@ -506,16 +467,16 @@ object Similarity {
 
   /** Incremental fused twin of two [[annIncrementalScored]] calls over the
     * same (index artifact, batch artifact) pair: the batch-involved tagged
-    * scored frame plus the cached batch band rows the caller must
-    * unpersist. The index side is pruned to the (band, sig) buckets
-    * the batch touches — a superset of the labeled touched set the
+    * scored frame, its batch band rows pinned to the caller's scope. The
+    * index side is pruned to the (band, sig) buckets the batch
+    * touches — a superset of the labeled touched set the
     * separate positive pass prunes to, and the extra rows provably change
     * neither mode's pair set (a pos pair needs a batch side of its own
     * label in the bucket, which makes its labeled bucket touched). */
   private[operators] def annIncrementalScoredBoth(
-      indexArt: DataFrame, batchArt: DataFrame,
+      indexArt: DataFrame, batchArt: DataFrame, pin: Materialize.Pin,
       bands: Int, bitsPerBand: Int, maxBucketSize: Int
-  ): (DataFrame, DataFrame) = {
+  ): DataFrame = {
     val spark = batchArt.sparkSession
     val fetch = fetchVerify(batchArt)
     // under "fetch" verify the band rows are NARROW (no vector at all —
@@ -530,10 +491,9 @@ object Similarity {
       else
         art.select(col("id"), col("lbl"), col("fullsig"), col("v"),
           col("nrm"), posexplode(col("sigs")).as(Seq("band", "sig")))
-    val bRows = vBandRows(batchArt)
+    val bRows = pin(vBandRows(batchArt)
       .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("band"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("band"), col("sig")))
     val touched = bRows.select(col("band"), col("sig")).distinct()
     val iRows = vBandRows(indexArt)
       .join(touched, Seq("band", "sig"), "left_semi")
@@ -543,8 +503,8 @@ object Similarity {
       if (fetch) Some(indexArt.select(col("id"), col("v"), col("nrm"))
         .unionByName(batchArt.select(col("id"), col("v"), col("nrm"))))
       else None
-    (fusedBothModesFromRows(allRows, bands, bitsPerBand,
-      maxBucketSize, requireBatchSide = true, fetchVecs = vecs), bRows)
+    fusedBothModesFromRows(allRows, bands, bitsPerBand,
+      maxBucketSize, requireBatchSide = true, fetchVecs = vecs)
   }
 
   /** Contrastive TRIPLET assembly: for every anchor, its hardest positive
@@ -584,11 +544,11 @@ object Similarity {
     assembleTriplets(pos, neg)
   }
 
-  /** The TAGGED top-1 side plan behind triplet mining over a cached
+  /** The TAGGED top-1 side plan behind triplet mining over a pinned
     * (id, lbl, v, nrm) frame: one row per (anchor, side) — `__same` true
-    * for the hardest positive, false for the hardest negative — plus the
-    * cached band-signature frames behind it. ONE distinct bounded heap
-    * keyed (query_id, __same) serves both sides: grouping by the tag is
+    * for the hardest positive, false for the hardest negative — with its
+    * band-signature frames pinned to the same scope. ONE distinct bounded
+    * heap keyed (query_id, __same) serves both sides: grouping by the tag is
     * exactly a per-side heap, and feeding both modes through a single
     * consumer is what lets the fused bucket join below execute ONCE
     * (split-then-heap would duplicate the join subtree into each side's
@@ -599,17 +559,17 @@ object Similarity {
     * differing geometries fall back to per-mode joins, still heaped
     * together. */
   private def tripletSidePlans(
-      v: DataFrame, dim: Int, bands: Int, bitsPerBand: Int,
-      seeds: Seq[Long], maxBucketSize: Int, posBands: Int,
-      posBitsPerBand: Int
-  ): (DataFrame, Seq[DataFrame]) = {
+      v: DataFrame, pin: Materialize.Pin, dim: Int, bands: Int,
+      bitsPerBand: Int, seeds: Seq[Long], maxBucketSize: Int,
+      posBands: Int, posBitsPerBand: Int
+  ): DataFrame = {
     val (pBnd, pBits) = (if (posBands > 0) posBands else bands,
       if (posBitsPerBand > 0) posBitsPerBand else bitsPerBand)
     val sigCache =
-      scala.collection.mutable.LinkedHashMap.empty[(Int, Int, Long), DataFrame]
+      scala.collection.mutable.Map.empty[(Int, Int, Long), DataFrame]
     def sigs(bnd: Int, bits: Int, sd: Long): DataFrame =
       sigCache.getOrElseUpdate((bnd, bits, sd),
-        bandSigFrame(v, dim, bnd, bits, sd))
+        bandSigFrame(v, pin, dim, bnd, bits, sd))
     val tagged =
       if (pBnd == bands && pBits == bitsPerBand)
         seeds.map(sd => annLabelScoredBothFromSigs(
@@ -624,7 +584,7 @@ object Similarity {
             .reduce(_ unionByName _)
             .withColumn("__same", lit(sameLabel))
         }.reduce(_ unionByName _)
-    (taggedHeap1(tagged), sigCache.values.toSeq)
+    taggedHeap1(tagged)
   }
 
   /** The distinct bounded heap over a tagged scored frame: top-1 per
@@ -692,20 +652,19 @@ object Similarity {
   /** The from-index twin of [[bandSigFrame]]: the (band, sig)-keyed
     * signature frame derived from a persisted [[annIndex]] artifact — no
     * corpus re-scan and no re-hash, just the map-side explode (vector
-    * and norm carried for the in-join verify) re-keyed and cached. */
-  private def artSigFrame(art: DataFrame): DataFrame = {
+    * and norm carried for the in-join verify) re-keyed and pinned. */
+  private def artSigFrame(art: DataFrame, pin: Materialize.Pin): DataFrame = {
     // same band-0-only vector carry as bandSigFrame under "fetch" verify
     val vCol = if (fetchVerify(art)) when(col("band") === 0, col("v"))
       else col("v")
     val nrmCol = if (fetchVerify(art)) when(col("band") === 0, col("nrm"))
       else col("nrm")
-    art.select(col("id"), col("lbl"), col("v"), col("nrm"), col("fullsig"),
-        posexplode(col("sigs")).as(Seq("band", "sig")))
+    pin(art.select(col("id"), col("lbl"), col("v"), col("nrm"),
+        col("fullsig"), posexplode(col("sigs")).as(Seq("band", "sig")))
       .select(col("id"), col("lbl"), vCol.as("v"), nrmCol.as("nrm"),
         col("fullsig"), col("band"), col("sig"))
       .repartition(art.sparkSession.sessionState.conf.numShufflePartitions,
-        col("band"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("band"), col("sig")))
   }
 
   /** One-shot [[hardNegativesAnn]] FROM a persisted [[annIndex]] artifact:
@@ -717,20 +676,14 @@ object Similarity {
   def hardNegativesAnnFromIndex(
       indexArt: DataFrame, k: Int, bands: Int = 32, bitsPerBand: Int = 2,
       maxBucketSize: Int = 20000
-  ): DataFrame = {
-    val s = artSigFrame(indexArt)
-    val scored = annLabelScoredFromSigs(s, sameLabel = false,
-      bands, bitsPerBand, maxBucketSize)
-    val top = graft.plans.TopKPerGroup(scored,
-      Seq(col("query_id")),
-      Seq(col("cosine").desc, col("neighbor_id").asc), k)
-    val out = top.withColumn("rank",
-      row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .localCheckpoint(true)
-    s.unpersist()
-    out
-  }
+  ): DataFrame =
+    Materialize.scoped { pin =>
+      val scored = annLabelScoredFromSigs(artSigFrame(indexArt, pin),
+        sameLabel = false, bands, bitsPerBand, maxBucketSize)
+      ranked(graft.plans.TopKPerGroup(scored,
+        Seq(col("query_id")),
+        Seq(col("cosine").desc, col("neighbor_id").asc), k))
+    }
 
   /** [[tripletMiningSides]] FROM persisted per-seed [[annIndex]]
     * artifacts — `negIndexes` built with the negative geometry,
@@ -747,32 +700,33 @@ object Similarity {
       "one annIndex artifact per seed per geometry")
     val (pBnd, pBits) = (if (posBands > 0) posBands else bands,
       if (posBitsPerBand > 0) posBitsPerBand else bitsPerBand)
-    val negSigs = negIndexes.map(artSigFrame)
-    val sharedSigs =
-      posIndexes.zip(negIndexes).forall { case (p, n) => p eq n }
-    val posSigs = if (sharedSigs) negSigs else posIndexes.map(artSigFrame)
-    val tagged =
-      if (sharedSigs && pBnd == bands && pBits == bitsPerBand)
-        // coinciding geometries over shared artifacts: one bucket join per
-        // seed serves both label modes
-        negSigs.map(s => annLabelScoredBothFromSigs(s,
-            bands, bitsPerBand, maxBucketSize))
-          .reduce(_ unionByName _)
-      else
-        Seq((posSigs, true, pBnd, pBits),
-            (negSigs, false, bands, bitsPerBand)).map {
-          case (sigs, sameLabel, bnd, bits) =>
-            sigs.map(s => annLabelScoredFromSigs(s, sameLabel,
-                bnd, bits, maxBucketSize))
-              .reduce(_ unionByName _)
-              .withColumn("__same", lit(sameLabel))
-        }.reduce(_ unionByName _)
     // ONE heap for both sides (grouping by the tag IS a per-side heap) and
     // ONE materialization — heaping or checkpointing the sides separately
     // would duplicate the bucket-join subtree into each side's plan
-    val both = taggedHeap1(tagged).localCheckpoint(true)
-    (negSigs ++ posSigs).distinct.foreach(_.unpersist())
-    splitTagged(both)
+    splitTagged(Materialize.scoped { pin =>
+      val negSigs = negIndexes.map(artSigFrame(_, pin))
+      val sharedSigs =
+        posIndexes.zip(negIndexes).forall { case (p, n) => p eq n }
+      val posSigs =
+        if (sharedSigs) negSigs else posIndexes.map(artSigFrame(_, pin))
+      val tagged =
+        if (sharedSigs && pBnd == bands && pBits == bitsPerBand)
+          // coinciding geometries over shared artifacts: one bucket join
+          // per seed serves both label modes
+          negSigs.map(s => annLabelScoredBothFromSigs(s,
+              bands, bitsPerBand, maxBucketSize))
+            .reduce(_ unionByName _)
+        else
+          Seq((posSigs, true, pBnd, pBits),
+              (negSigs, false, bands, bitsPerBand)).map {
+            case (sigs, sameLabel, bnd, bits) =>
+              sigs.map(s => annLabelScoredFromSigs(s, sameLabel,
+                  bnd, bits, maxBucketSize))
+                .reduce(_ unionByName _)
+                .withColumn("__same", lit(sameLabel))
+          }.reduce(_ unionByName _)
+      taggedHeap1(tagged)
+    })
   }
 
   /** Candidate pairs INVOLVING the batch (batch-batch, batch-index,
@@ -785,9 +739,9 @@ object Similarity {
     * buckets; pairs already mined into the prior result are never
     * retroactively shed. */
   private[operators] def annIncrementalScored(
-      indexArt: DataFrame, batchArt: DataFrame, sameLabel: Boolean,
-      bands: Int, bitsPerBand: Int, maxBucketSize: Int
-  ): (DataFrame, DataFrame) = {
+      indexArt: DataFrame, batchArt: DataFrame, pin: Materialize.Pin,
+      sameLabel: Boolean, bands: Int, bitsPerBand: Int, maxBucketSize: Int
+  ): DataFrame = {
     val spark = batchArt.sparkSession
     def keyed(rows: DataFrame): DataFrame =
       if (sameLabel) rows.withColumn("__lbl", col("lbl")) else rows
@@ -812,10 +766,9 @@ object Similarity {
       else
         art.select(col("id"), col("lbl"), col("fullsig"), col("v"),
           col("nrm"), posexplode(col("sigs")).as(Seq("band", "sig")))
-    val bRows = keyed(vBandRows(batchArt))
+    val bRows = pin(keyed(vBandRows(batchArt))
       .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("band"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("band"), col("sig")))
     // touched buckets: the batch's distinct bucket keys — batch-sized,
     // so the index prune is a semi-join AQE will usually broadcast
     val touched = bRows.select(keyCols.map(col): _*).distinct()
@@ -850,38 +803,34 @@ object Similarity {
       .filter(labelPred)
       .filter(col("band") ===
         firstCollisionBand(col("__qf"), col("__nf"), bands, bitsPerBand))
-    val scored =
-      if (fetch)
-        scoreFetched(matched.select(col("query_id"), col("neighbor_id")),
-          indexArt.select(col("id"), col("v"), col("nrm"))
-            .unionByName(batchArt.select(col("id"), col("v"), col("nrm"))))
-      else matched
-        .withColumn("cosine",
-          round(nanSafe(dot(col("__qv"), col("__nv")) / (col("__qn") * col("__nn"))), 6))
-        .select(col("query_id"), col("neighbor_id"), col("cosine"))
-    (scored, bRows)
+    if (fetch)
+      scoreFetched(matched.select(col("query_id"), col("neighbor_id")),
+        indexArt.select(col("id"), col("v"), col("nrm"))
+          .unionByName(batchArt.select(col("id"), col("v"), col("nrm"))))
+    else matched
+      .withColumn("cosine",
+        round(nanSafe(dot(col("__qv"), col("__nv")) / (col("__qn") * col("__nn"))), 6))
+      .select(col("query_id"), col("neighbor_id"), col("cosine"))
   }
 
-  /** Generic incremental banded-LSH top-k merge: new-batch-involved
-    * candidates are exact-verified and merged with the PRIOR per-anchor
-    * top-k under the distinct bounded heap. Exactness of the merge: a
-    * pair in the accumulated one-shot top-k is either index-index (then
-    * it survives the index-only top-k — more candidates only displace —
-    * so it is in `prior`) or batch-involved (then the same banding
-    * generates it here). */
+  /** Incremental banded-LSH hard-negative top-k merge: new-batch-involved
+    * cross-label candidates are exact-verified and merged with the PRIOR
+    * per-anchor top-k under the distinct bounded heap, then ranked.
+    * Exactness of the merge: a pair in the accumulated one-shot top-k is
+    * either index-index (then it survives the index-only top-k — more
+    * candidates only displace — so it is in `prior`) or batch-involved
+    * (then the same banding generates it here). */
   private def annTopKIncremental(
       indexArt: DataFrame, prior: DataFrame, batchArt: DataFrame,
-      sameLabel: Boolean, k: Int, bands: Int, bitsPerBand: Int,
+      pin: Materialize.Pin, k: Int, bands: Int, bitsPerBand: Int,
       maxBucketSize: Int
-  ): (DataFrame, Seq[DataFrame]) = {
-    val (scored, bRows) = annIncrementalScored(indexArt, batchArt,
-      sameLabel, bands, bitsPerBand, maxBucketSize)
-    val merged = scored
+  ): DataFrame = {
+    val merged = annIncrementalScored(indexArt, batchArt, pin,
+        sameLabel = false, bands, bitsPerBand, maxBucketSize)
       .unionByName(prior.select(col("query_id"), col("neighbor_id"),
         col("cosine")))
-    (graft.plans.TopKPerGroup.distinct(merged, Seq(col("query_id")),
-      Seq(col("cosine").desc, col("neighbor_id").asc), k),
-      Seq(bRows))
+    ranked(graft.plans.TopKPerGroup.distinct(merged, Seq(col("query_id")),
+      Seq(col("cosine").desc, col("neighbor_id").asc), k))
   }
 
   /** Incremental [[hardNegativesAnn]]: fold a NEW BATCH of vectors into a
@@ -896,15 +845,13 @@ object Similarity {
       idCol: String, vecCol: String, labelCol: String,
       k: Int, dim: Int, bands: Int = 32, bitsPerBand: Int = 2,
       seed: Long = 42L, maxBucketSize: Int = 20000
-  ): DataFrame = {
-    val batchArt = annIndex(batch, idCol, vecCol, labelCol, dim, bands,
-        bitsPerBand, seed)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = hardNegativesAnnIncrementalFromArt(indexArt, priorTopK,
-      batchArt, k, bands, bitsPerBand, maxBucketSize)
-    batchArt.unpersist()
-    out
-  }
+  ): DataFrame =
+    Materialize.scoped { pin =>
+      val batchArt = pin(annIndex(batch, idCol, vecCol, labelCol, dim,
+        bands, bitsPerBand, seed))
+      annTopKIncremental(indexArt, priorTopK, batchArt, pin, k, bands,
+        bitsPerBand, maxBucketSize)
+    }
 
   /** [[hardNegativesAnnIncremental]] with the batch's [[annIndex]]
     * artifact PREBUILT by the caller — a streaming fold that also writes
@@ -914,16 +861,11 @@ object Similarity {
       indexArt: DataFrame, priorTopK: DataFrame, batchArt: DataFrame,
       k: Int, bands: Int = 32, bitsPerBand: Int = 2,
       maxBucketSize: Int = 20000
-  ): DataFrame = {
-    val (top, caches) = annTopKIncremental(indexArt, priorTopK, batchArt,
-      sameLabel = false, k, bands, bitsPerBand, maxBucketSize)
-    val out = top.withColumn("rank",
-      row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .localCheckpoint(true)
-    caches.foreach(_.unpersist())
-    out
-  }
+  ): DataFrame =
+    Materialize.scoped { pin =>
+      annTopKIncremental(indexArt, priorTopK, batchArt, pin, k, bands,
+        bitsPerBand, maxBucketSize)
+    }
 
   /** The per-anchor top-1 positive/negative frames behind
     * [[tripletMining]] — exposed (eagerly materialized) so callers can
@@ -937,16 +879,14 @@ object Similarity {
       posBands: Int = 0, posBitsPerBand: Int = 0
   ): (DataFrame, DataFrame) = {
     require(seeds.nonEmpty, "need at least one banding seed")
-    val v = corpus.select(col(idCol).as("id"), col(labelCol).as("lbl"),
-        asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", norm(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (tagged, sigCaches) = tripletSidePlans(v, dim, bands, bitsPerBand,
-      seeds, maxBucketSize, posBands, posBitsPerBand)
     // one heap + one materialization for both sides
-    val both = tagged.localCheckpoint(true)
-    (v +: sigCaches).foreach(_.unpersist())
-    splitTagged(both)
+    splitTagged(Materialize.scoped { pin =>
+      val v = pin(corpus.select(col(idCol).as("id"), col(labelCol).as("lbl"),
+          asDouble(col(vecCol)).as("v"))
+        .withColumn("nrm", norm(col("v"))))
+      tripletSidePlans(v, pin, dim, bands, bitsPerBand, seeds,
+        maxBucketSize, posBands, posBitsPerBand)
+    })
   }
 
   /** Assemble (anchor, positive, negative, margin) triplets from the two
@@ -983,56 +923,48 @@ object Similarity {
       "one annIndex artifact per seed per geometry")
     val (pBnd, pBits) = (if (posBands > 0) posBands else bands,
       if (posBitsPerBand > 0) posBitsPerBand else bitsPerBand)
-    // Batch band-signature artifacts are per (seed, geometry); when the
-    // positive geometry coincides with the negative one (the gate config)
-    // the two sides share ONE artifact set instead of hashing the batch
-    // twice.
-    val negBatchArts = seeds.map(sd =>
-      annIndex(batch, idCol, vecCol, labelCol, dim, bands, bitsPerBand, sd)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val posBatchArts =
-      if (pBnd == bands && pBits == bitsPerBand) negBatchArts
-      else seeds.map(sd =>
-        annIndex(batch, idCol, vecCol, labelCol, dim, pBnd, pBits, sd)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val taggedPrior = priorPos
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
       .withColumn("__same", lit(true))
       .unionByName(priorNeg
         .select(col("query_id"), col("neighbor_id"), col("cosine"))
         .withColumn("__same", lit(false)))
-    val (tagged, genCaches) =
-      if (pBnd == bands && pBits == bitsPerBand) {
-        // coinciding geometries: one batch-involved bucket join per seed
-        // serves both label modes (fusedBothModesFromRows proof)
-        val gens = negIndexes.zip(negBatchArts).map { case (ix, ba) =>
-          annIncrementalScoredBoth(ix, ba, bands, bitsPerBand,
-            maxBucketSize)
-        }
-        (gens.map(_._1).reduce(_ unionByName _), gens.map(_._2))
-      } else {
-        val gens = Seq((posIndexes, posBatchArts, true, pBnd, pBits),
-            (negIndexes, negBatchArts, false, bands, bitsPerBand)).map {
-          case (idxs, batchArts, sameLabel, bnd, bits) =>
-            val g = idxs.zip(batchArts).map { case (ix, ba) =>
-              annIncrementalScored(ix, ba, sameLabel, bnd, bits,
-                maxBucketSize)
-            }
-            (g.map(_._1).reduce(_ unionByName _)
-              .withColumn("__same", lit(sameLabel)), g.map(_._2))
-        }
-        (gens.map(_._1).reduce(_ unionByName _), gens.flatMap(_._2))
-      }
     // merge with the prior sides under ONE heap, materialize ONCE, then
     // assemble — per-side heaps/checkpoints would duplicate or serialize
     // the generation subtrees
-    val both = taggedHeap1(tagged.unionByName(taggedPrior))
-      .localCheckpoint(true)
-    val (pos, neg) = splitTagged(both)
-    val out = assembleTriplets(pos, neg)
-    (negBatchArts ++ posBatchArts ++ genCaches).distinct
-      .foreach(_.unpersist())
-    out
+    val (pos, neg) = splitTagged(Materialize.scoped { pin =>
+      // Batch band-signature artifacts are per (seed, geometry); when the
+      // positive geometry coincides with the negative one (the gate
+      // config) the two sides share ONE artifact set instead of hashing
+      // the batch twice.
+      val negBatchArts = seeds.map(sd => pin(
+        annIndex(batch, idCol, vecCol, labelCol, dim, bands, bitsPerBand,
+          sd)))
+      val posBatchArts =
+        if (pBnd == bands && pBits == bitsPerBand) negBatchArts
+        else seeds.map(sd => pin(
+          annIndex(batch, idCol, vecCol, labelCol, dim, pBnd, pBits, sd)))
+      val tagged =
+        if (pBnd == bands && pBits == bitsPerBand)
+          // coinciding geometries: one batch-involved bucket join per seed
+          // serves both label modes (fusedBothModesFromRows proof)
+          negIndexes.zip(negBatchArts).map { case (ix, ba) =>
+            annIncrementalScoredBoth(ix, ba, pin, bands, bitsPerBand,
+              maxBucketSize)
+          }.reduce(_ unionByName _)
+        else
+          Seq((posIndexes, posBatchArts, true, pBnd, pBits),
+              (negIndexes, negBatchArts, false, bands, bitsPerBand)).map {
+            case (idxs, batchArts, sameLabel, bnd, bits) =>
+              idxs.zip(batchArts).map { case (ix, ba) =>
+                annIncrementalScored(ix, ba, pin, sameLabel, bnd, bits,
+                  maxBucketSize)
+              }.reduce(_ unionByName _)
+                .withColumn("__same", lit(sameLabel))
+          }.reduce(_ unionByName _)
+      taggedHeap1(tagged.unionByName(taggedPrior))
+    })
+    assembleTriplets(pos, neg)
   }
 
   /** Per-DIMENSION embedding health audit: n, exact integer-scaled
@@ -1425,78 +1357,73 @@ object Similarity {
     // (block, band, sig) group, so the widened join adds no exchange.
     val blockKey = blockCol.map(_ => "__blk").toSeq
     val blockSel = blockCol.map(c => col(c).as("__blk")).toSeq
-    // normalize ONCE per vector: signatures are scale-invariant (sign of
-    // dot is unchanged by positive scaling... but the FP boundary cases are
-    // not, so the oracle twin must normalize identically), and the verify
-    // stage becomes a single dot per pair instead of dot + two norms
-    val v = df.select(blockSel :+ col(idCol).as("id") :+
-        normalize(asDouble(col(vecCol))).as("v"): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // all band signatures in ONE fused pass over the cached vectors (a
-    // union of per-band selects re-scans v `bands` times; posexplode of
-    // the signature array is one scan and the identical (band, sig) rows)
-    val sigArr = rpSignatureBands(col("v"), bands, bitsPerBand, d, seed)
-    // candidate generation mirrors the hardNegatives machinery: bucket
-    // equi-join on (band, sig) with explicit fan-out partitioning, and —
-    // when the whole signature packs into one long — the
-    // first-collision-band integer filter replaces the `.distinct()`
-    // re-shuffle of bands×-duplicated pairs (fallback to distinct() for
-    // over-wide configurations)
-    val packedFits = bands * bitsPerBand <= 64
-    val blkC = blockKey.map(col)
-    val s0 = v.select(blkC :+ col("id") :+ sigArr.as("sigs"): _*)
-    val s = (if (packedFits) {
-      val packed = (0 until bands).map(b =>
-        shiftleft(element_at(col("sigs"), b + 1), b * bitsPerBand))
-        .reduce(_ bitwiseOR _)
-      s0.select(blkC :+ col("id") :+ packed.as("fullsig") :+
-        posexplode(col("sigs")).as(Seq("band", "sig")): _*)
-    } else
-      s0.select(blkC :+ col("id") :+ lit(0L).as("fullsig") :+
-        posexplode(col("sigs")).as(Seq("band", "sig")): _*))
-      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-        col("band"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bucketKey = blockKey ++ Seq("band", "sig")
-    // bucket cap as a WINDOW count: the (band, sig) partitioning above
-    // co-locates every bucket key, so the annotation is one partition-
-    // local sort instead of an agg + join-back (identical populations)
-    val sOk = s.withColumn("__bsz",
-        count(lit(1)).over(Window.partitionBy(bucketKey.map(col): _*)))
-      .filter(col("__bsz").between(2, maxBucketSize))
-    val a = sOk.select(blkC ++ Seq(col("band"), col("sig"),
-      col("id").as("id_1"), col("fullsig").as("__f1")): _*)
-    val b = sOk.select(blkC ++ Seq(col("band"), col("sig"),
-      col("id").as("id_2"), col("fullsig").as("__f2")): _*)
-    val joined = a.join(b, bucketKey).filter(col("id_1") < col("id_2"))
-    // Cap-pressure semantics of the two dedup forms DIFFER, deliberately:
-    // the packed filter keeps a pair only at its globally-first collision
-    // band, so a pair whose first shared bucket was cap-shed is dropped
-    // even if a later shared bucket survived; the distinct() fallback
-    // keeps any pair with at least one surviving bucket. The packed rule
-    // sheds exactly the pairs whose first collision lands in a hot
-    // (boilerplate-blob) bucket — the population the cap exists to shed —
-    // and buys the no-exchange dedup; recovering the fallback's rule
-    // would need a pair-keyed exchange (min surviving band), the cost the
-    // packed form exists to avoid. At the gate no bucket reaches the cap
-    // (spec-pinned), so the two forms are machine-checked equal there.
-    val candidates = if (packedFits) {
-      joined.filter(col("band") ===
-          firstCollisionBand(col("__f1"), col("__f2"), bands, bitsPerBand))
-        .select(col("id_1"), col("id_2"))
-    } else joined.select(col("id_1"), col("id_2")).distinct()
-    val pairs = candidates
-      .join(v.select(col("id").as("id_1"), col("v").as("v_1")), "id_1")
-      .join(v.select(col("id").as("id_2"), col("v").as("v_2")), "id_2")
-      .withColumn("cosine", round(nanSafe(dot(col("v_1"), col("v_2"))), 6))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_1"), col("id_2"), col("cosine"))
-    // materialize the (small) pair set, then release the cached vectors so
-    // repeated library calls don't leak storage blocks
-    val out = pairs.localCheckpoint(true)
-    v.unpersist()
-    s.unpersist()
-    out
+    // the (small) pair set is what the scope materializes
+    Materialize.scoped { pin =>
+      // normalize ONCE per vector: signatures are scale-invariant (sign of
+      // dot is unchanged by positive scaling... but the FP boundary cases are
+      // not, so the oracle twin must normalize identically), and the verify
+      // stage becomes a single dot per pair instead of dot + two norms
+      val v = pin(df.select(blockSel :+ col(idCol).as("id") :+
+          normalize(asDouble(col(vecCol))).as("v"): _*))
+      // all band signatures in ONE fused pass over the cached vectors (a
+      // union of per-band selects re-scans v `bands` times; posexplode of
+      // the signature array is one scan and the identical (band, sig) rows)
+      val sigArr = rpSignatureBands(col("v"), bands, bitsPerBand, d, seed)
+      // candidate generation mirrors the hardNegatives machinery: bucket
+      // equi-join on (band, sig) with explicit fan-out partitioning, and —
+      // when the whole signature packs into one long — the
+      // first-collision-band integer filter replaces the `.distinct()`
+      // re-shuffle of bands×-duplicated pairs (fallback to distinct() for
+      // over-wide configurations)
+      val packedFits = bands * bitsPerBand <= 64
+      val blkC = blockKey.map(col)
+      val s0 = v.select(blkC :+ col("id") :+ sigArr.as("sigs"): _*)
+      val s = pin((if (packedFits) {
+        val packed = (0 until bands).map(b =>
+          shiftleft(element_at(col("sigs"), b + 1), b * bitsPerBand))
+          .reduce(_ bitwiseOR _)
+        s0.select(blkC :+ col("id") :+ packed.as("fullsig") :+
+          posexplode(col("sigs")).as(Seq("band", "sig")): _*)
+      } else
+        s0.select(blkC :+ col("id") :+ lit(0L).as("fullsig") :+
+          posexplode(col("sigs")).as(Seq("band", "sig")): _*))
+        .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+          col("band"), col("sig")))
+      val bucketKey = blockKey ++ Seq("band", "sig")
+      // bucket cap as a WINDOW count: the (band, sig) partitioning above
+      // co-locates every bucket key, so the annotation is one partition-
+      // local sort instead of an agg + join-back (identical populations)
+      val sOk = s.withColumn("__bsz",
+          count(lit(1)).over(Window.partitionBy(bucketKey.map(col): _*)))
+        .filter(col("__bsz").between(2, maxBucketSize))
+      val a = sOk.select(blkC ++ Seq(col("band"), col("sig"),
+        col("id").as("id_1"), col("fullsig").as("__f1")): _*)
+      val b = sOk.select(blkC ++ Seq(col("band"), col("sig"),
+        col("id").as("id_2"), col("fullsig").as("__f2")): _*)
+      val joined = a.join(b, bucketKey).filter(col("id_1") < col("id_2"))
+      // Cap-pressure semantics of the two dedup forms DIFFER, deliberately:
+      // the packed filter keeps a pair only at its globally-first collision
+      // band, so a pair whose first shared bucket was cap-shed is dropped
+      // even if a later shared bucket survived; the distinct() fallback
+      // keeps any pair with at least one surviving bucket. The packed rule
+      // sheds exactly the pairs whose first collision lands in a hot
+      // (boilerplate-blob) bucket — the population the cap exists to shed —
+      // and buys the no-exchange dedup; recovering the fallback's rule
+      // would need a pair-keyed exchange (min surviving band), the cost the
+      // packed form exists to avoid. At the gate no bucket reaches the cap
+      // (spec-pinned), so the two forms are machine-checked equal there.
+      val candidates = if (packedFits) {
+        joined.filter(col("band") ===
+            firstCollisionBand(col("__f1"), col("__f2"), bands, bitsPerBand))
+          .select(col("id_1"), col("id_2"))
+      } else joined.select(col("id_1"), col("id_2")).distinct()
+      candidates
+        .join(v.select(col("id").as("id_1"), col("v").as("v_1")), "id_1")
+        .join(v.select(col("id").as("id_2"), col("v").as("v_2")), "id_2")
+        .withColumn("cosine", round(nanSafe(dot(col("v_1"), col("v_2"))), 6))
+        .filter(col("cosine") >= threshold)
+        .select(col("id_1"), col("id_2"), col("cosine"))
+    }
   }
 
   /** Cluster-bounded semantic dedup (the SemDeDup shape — Abbas et al.
@@ -1897,15 +1824,18 @@ object Similarity {
       .isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"kCenterSelect needs a numeric id column; '$idCol' is " +
         corpus.schema(idCol).dataType.simpleString)
-    val pts = corpus
-      .select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seed = pts.orderBy(col("id").asc).limit(1).localCheckpoint(true)
+    // the points are read twice (seed, first distance state); every later
+    // round reads only the checkpointed state, so the pin ends there
+    var seed: DataFrame = null
+    var state = Materialize.scoped { pin =>
+      val pts = pin(corpus.select(col(idCol).cast("long").as("id"),
+        asDouble(col(vecCol)).as("v")))
+      seed = pts.orderBy(col("id").asc).limit(1).localCheckpoint(true)
+      pts.crossJoin(broadcast(seed.select(col("v").as("cv"))))
+        .select(col("id"), col("v"), sqDistMicro(col("v"), col("cv")).as("md"))
+    }
     var centers = seed.select(lit(0).as("sel_order"), col("id").as("vec_id"),
       lit(0L).as("dist_micro"))
-    var state = pts.crossJoin(broadcast(seed.select(col("v").as("cv"))))
-      .select(col("id"), col("v"), sqDistMicro(col("v"), col("cv")).as("md"))
-      .localCheckpoint(true)
     var r = 1
     var exhausted = false
     while (r < k && !exhausted) {
@@ -1928,7 +1858,6 @@ object Similarity {
         r += 1
       }
     }
-    pts.unpersist()
     centers
   }
 }

@@ -46,33 +46,30 @@ object SkewJoin {
     * (integer cross-multiplied, no FP), and the heaviest key's ppm share.
     * This is the pre-join measurement that decides between a plain
     * shuffle join, [[saltedInnerJoin]], and trusting AQE's skew split. */
-  def audit(df: DataFrame, keys: Seq[String]): DataFrame = {
-    // persist (not localCheckpoint): the per-key frame can be billions of
-    // rows on the audited side, and checkpoint blocks are only freed by
-    // RDD GC — persist lets the explicit unpersist below release them
-    // deterministically once the 1-row audit materializes
-    val perKey = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tot = perKey.agg(count(lit(1)).as("n_keys"),
-      sum(col("c")).as("n_rows"), max(col("c")).as("max_key_rows"))
-    // DECIMAL(38,0) cross-multiply: c·n_keys reaches 1e10·1e9 on the
-    // 100 TB side this audit exists for — a Long wrap would classify
-    // extreme skew as NOT skewed (and 1e6·max_key_rows can wrap too)
-    val hot = perKey
-      .crossJoin(broadcast(tot.select(col("n_keys").as("__nk"),
-        col("n_rows").as("__nr"))))
-      .filter(expr("CAST(c AS DECIMAL(38,0)) * __nk > " +
-        "2 * CAST(__nr AS DECIMAL(38,0))"))
-      .agg(count(lit(1)).as("n_hot_keys"))
-    val out = tot.crossJoin(broadcast(hot))
-      .withColumn("top_share_ppm",
-        expr("(CAST(1000000 AS DECIMAL(38,0)) * max_key_rows) div n_rows"))
-      .select(col("n_keys"), col("n_rows"), col("max_key_rows"),
-        col("n_hot_keys"), col("top_share_ppm"))
-      .localCheckpoint(true) // 1 row; release the per-key frame's blocks
-    perKey.unpersist()
-    out
-  }
+  def audit(df: DataFrame, keys: Seq[String]): DataFrame =
+    // pinned (not checkpointed): the per-key frame can be billions of rows
+    // on the audited side, and checkpoint blocks are only freed by RDD GC
+    // — a pin is released deterministically once the 1-row audit is cut
+    graft.Materialize.scoped { pin =>
+      val perKey = pin(df.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("c")))
+      val tot = perKey.agg(count(lit(1)).as("n_keys"),
+        sum(col("c")).as("n_rows"), max(col("c")).as("max_key_rows"))
+      // DECIMAL(38,0) cross-multiply: c·n_keys reaches 1e10·1e9 on the
+      // 100 TB side this audit exists for — a Long wrap would classify
+      // extreme skew as NOT skewed (and 1e6·max_key_rows can wrap too)
+      val hot = perKey
+        .crossJoin(broadcast(tot.select(col("n_keys").as("__nk"),
+          col("n_rows").as("__nr"))))
+        .filter(expr("CAST(c AS DECIMAL(38,0)) * __nk > " +
+          "2 * CAST(__nr AS DECIMAL(38,0))"))
+        .agg(count(lit(1)).as("n_hot_keys"))
+      tot.crossJoin(broadcast(hot))
+        .withColumn("top_share_ppm",
+          expr("(CAST(1000000 AS DECIMAL(38,0)) * max_key_rows) div n_rows"))
+        .select(col("n_keys"), col("n_rows"), col("max_key_rows"),
+          col("n_hot_keys"), col("top_share_ppm"))
+    }
 
   /** Skew-adaptive inner join: [[audit]] the skewed side once (a 1-row
     * STATISTICS read, not a data collect), then either join plainly (no

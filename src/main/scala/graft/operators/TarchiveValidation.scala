@@ -69,17 +69,14 @@ object TarchiveValidation {
     * @return decoded + (center_id, mri_alias) — 0/"UNKN" when unresolved
     */
   def resolveCenter(decoded0: DataFrame, psc: DataFrame, sessions: DataFrame,
-                    candidates: DataFrame,
-                    eagerCheckpoint: Boolean = true): DataFrame = {
+                    candidates: DataFrame): DataFrame = {
     // `decoded` is consumed twice (aliasMatch probe + the main join) and
     // callers hand it the tail of their join ladder: materialize once.
     // Batch-sized (the uploads being processed), never catalog-sized.
-    // Plan-shape specs pass eagerCheckpoint=false to see the full plan.
     // LAZY (r13): the aliasMatch broadcast build (a full scan) is the
     // first consumer — it materializes and caches the truncated RDD in
     // its own job instead of a dedicated checkpoint job paying first
-    val decoded =
-      if (eagerCheckpoint) decoded0.localCheckpoint(false) else decoded0
+    val decoded = decoded0.localCheckpoint(false)
     // session-first: PSCID + Visit_label → CenterID, lowest CenterID pinned
     val sessionCenter = sessions
       .join(candidates.select(col("ID").as("__cid"), col("PSCID")),
@@ -123,8 +120,7 @@ object TarchiveValidation {
     * @return uploads + (scanner_id, scanner_is_new); new ids are
     *         max(existing)+ordinal over the distinct new tuples
     */
-  def resolveScanner(uploads: DataFrame, scanners: DataFrame,
-                     eagerCheckpoint: Boolean = true): DataFrame = {
+  def resolveScanner(uploads: DataFrame, scanners: DataFrame): DataFrame = {
     // exact 4-tuple match (findScannerID), lowest ID pinned
     val exact = scanners.groupBy(
       col("Manufacturer").as("x_man"), col("Model").as("x_mod"),
@@ -137,15 +133,14 @@ object TarchiveValidation {
     // two consumers (newTuples + the final join) on the callers' ladder
     // tail: materialize once (batch-sized, as in resolveCenter); LAZY —
     // newTuples' distinct/ordinal is a full scan and materializes it
-    val probed0 = uploads
+    val probed = uploads
       .join(broadcast(exact),
         col("manufacturer") <=> col("x_man") && col("model") <=> col("x_mod") &&
           col("serial") <=> col("x_ser") && col("software") <=> col("x_sw"),
         "left")
       .join(broadcast(bySerial), col("serial") === col("s_ser"), "left")
       .withColumn("__existing", coalesce(col("x_id"), col("s_id")))
-    val probed =
-      if (eagerCheckpoint) probed0.localCheckpoint(false) else probed0
+      .localCheckpoint(false)
     // distinct unmatched tuples → deterministic new ids above max(ID).
     // All-null tuples (uploads whose archive row was never found) are not
     // scanners — no id is minted for them

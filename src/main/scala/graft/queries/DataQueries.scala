@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 
@@ -747,7 +748,7 @@ object DataQueries {
       val n = e.count()
       val bits = Similarity.autoBitsPerBand(n, minBits = 2)
       val bands = math.min(32, 64 / bits)
-      val art = Similarity.stageSer(
+      val art = Materialize.sized(
         Similarity.annIndex(e, "vec_id", "embedding", "label",
           dim = 64, bands = bands, bitsPerBand = bits), n)
       Similarity.hardNegativesAnnFromIndex(art, k = 3,
@@ -774,13 +775,13 @@ object DataQueries {
       val posBands = math.min(32, 64 / posBits)
       // per-seed artifacts MATERIALIZED once; prior sides and the fold
       // both mine from them (no index re-scan, no re-hash)
-      val negIdx = seeds.map(sd => Similarity.stageSer(
+      val negIdx = seeds.map(sd => Materialize.sized(
         Similarity.annIndex(index, "vec_id",
           "embedding", "label", dim = 64, bands = bands,
           bitsPerBand = bits, seed = sd), stats.getLong(0)))
       val posIdx =
         if (posBands == bands && posBits == bits) negIdx
-        else seeds.map(sd => Similarity.stageSer(
+        else seeds.map(sd => Materialize.sized(
           Similarity.annIndex(index, "vec_id",
             "embedding", "label", dim = 64, bands = posBands,
             bitsPerBand = posBits, seed = sd), stats.getLong(0)))
@@ -854,7 +855,7 @@ object DataQueries {
       val n = e.count()
       val bits = Similarity.autoBitsPerBand(n, minBits = 2)
       val bands = math.min(32, 64 / bits)
-      val art = Similarity.stageSer(
+      val art = Materialize.sized(
         Similarity.annIndex(e, "vec_id", "embedding", "label",
           dim = 64, bands = bands, bitsPerBand = bits), n)
       val pruned = Similarity.annIndexRemove(art,

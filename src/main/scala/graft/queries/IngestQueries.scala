@@ -1410,8 +1410,9 @@ object IngestQueries {
       Files.write(Paths.get(bucket, "b.txt"), "beta".getBytes("UTF-8"))
       Files.createDirectories(Paths.get(bucket, "sub"))
       Files.write(Paths.get(bucket, "sub", "c.txt"), "DIVERGED".getBytes("UTF-8"))
-      val manifest = ObjectStore.uploadDir(s, src, bucket).persist()
-      manifest.count() // executing the manifest IS the upload
+      // executing the manifest IS the upload: cut it eagerly, once (see
+      // ObjectStore.pushAndSwap)
+      val manifest = ObjectStore.uploadDir(s, src, bucket).localCheckpoint(true)
       val catalog = manifest.select(col("local_path").as("path"))
       val swapped = ObjectStore.swapPaths(catalog, "path", manifest)
         .select(col("path"),

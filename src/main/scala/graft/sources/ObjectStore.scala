@@ -109,8 +109,11 @@ object ObjectStore {
       localDir: String, bucketUrl: String, force: Boolean = false,
       deleteLocal: Boolean = false): DataFrame = {
     import spark.implicits._
-    val manifest = uploadDir(spark, localDir, bucketUrl, force).persist()
-    manifest.count() // executing the manifest IS the upload — force it once
+    // executing the manifest IS the upload: cut it eagerly, once. A cut,
+    // not a cache: a lost block fails the query instead of re-running the
+    // upload, which would report every file as skipped_same_content
+    val manifest = uploadDir(spark, localDir, bucketUrl, force)
+      .localCheckpoint(true)
     val conf = new SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     val pushed = manifest.filter(col("action") =!= SkippedExists)

@@ -821,11 +821,11 @@ object EventStream {
           val sPath = new org.apache.hadoop.fs.Path(s"$outDir/staged")
           if (sPath.getFileSystem(conf).exists(sPath)) {
             // ONE read of everything staged (incl. this batch), shared
-            // by the probe and — when it fires — the full refresh; lazy
-            // cache, try/finally so a failed write cannot leak it in a
-            // long-running streaming JVM
-            val stagedAll = spark.read.parquet(s"$outDir/staged").persist()
-            try {
+            // by the probe and — when it fires — the full refresh; pinned,
+            // so a failed write cannot leak it in a long-running
+            // streaming JVM
+            graft.Materialize.run { pin =>
+              val stagedAll = pin(spark.read.parquet(s"$outDir/staged"))
               // does this batch CHANGE the global near-dup pair set?
               // (no gated docs cannot; otherwise probe the staged
               // metadata's band keys — re-derived map-side, bit-identical
@@ -863,13 +863,10 @@ object EventStream {
                   .clusterKeys(gated, "id", dupPairs)
                   .groupBy(col("cluster_key")).agg(min(col("id")).as("id"))
                   .select(col("id"))
-                val kept = gated.join(keep, Seq("id"), "left_semi")
-                  .persist()
-                try {
-                  kept.select(manifestCols: _*)
-                    .write.mode("overwrite").parquet(s"$outDir/manifest")
-                  writeAttrition(kept.agg(count(lit(1)).as("n_kept")))
-                } finally kept.unpersist()
+                val kept = pin(gated.join(keep, Seq("id"), "left_semi"))
+                kept.select(manifestCols: _*)
+                  .write.mode("overwrite").parquet(s"$outDir/manifest")
+                writeAttrition(kept.agg(count(lit(1)).as("n_kept")))
               } else {
                 // SKIP the global refresh: the pair set is unchanged, so
                 // every prior component and its canonical stand, and each
@@ -911,7 +908,7 @@ object EventStream {
                   writeAttrition(nKept)
                 }
               }
-            } finally stagedAll.unpersist()
+            }
           } else
             // arrivals happened but NOTHING staged yet (every image so
             // far junk/unpaired): the attrition artifact must still

@@ -120,15 +120,16 @@ class MincInsertionSpec extends SparkSpec {
 
   test("plan shape: no broadcast hint on catalog-derived join sides") {
     import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-    // eagerCheckpoint=false: the fused plan's checkpoints truncate
-    // lineage, hiding the upstream joins this spec pins
-    val df = MincInsertion.insertPlan(
+    // the ladder's checkpoints truncate lineage: read the joins they hide
+    // from the plans of the cuts themselves
+    val (df, cuts) = withCuts(MincInsertion.insertPlan(
       mincs(Seq(mincRow(1L, Some(70L), md5 = "p1"))), uploads, tarchives,
       noSeries, psc, sessions, candidates, scanners, noFiles, noErrors,
-      protocols, eagerCheckpoint = false)
-    val hintedCols = df.queryExecution.analyzed.collect {
+      protocols))
+    assert(cuts.nonEmpty)
+    val hintedCols = (df.queryExecution +: cuts).flatMap(_.analyzed.collect {
       case h: ResolvedHint => h.child.output.map(_.name)
-    }.flatten.toSet
+    }).flatten.toSet
     // catalog-derived sets (files md5, uploads, tarchives, series guard,
     // candidates, cand errors, sessions, minted sessions) must be plain
     // joins so AQE can fall back to shuffle strategies at 100×; their

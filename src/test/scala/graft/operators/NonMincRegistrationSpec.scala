@@ -102,17 +102,18 @@ class NonMincRegistrationSpec extends SparkSpec {
   test("plan shape: no broadcast hint on catalog-derived join sides") {
     import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
     import spark.implicits._
-    // eagerCheckpoint=false: the fused plan's checkpoints truncate
-    // lineage, hiding the upstream joins this spec pins
+    // the ladder's checkpoints truncate lineage: read the joins they hide
+    // from the plans of the cuts themselves
     val (u, sc, st, ft, c, w, se, f) = dicts
-    val df = NonMincRegistration.register(
+    val (df, cuts) = withCuts(NonMincRegistration.register(
       Seq(cand("a.nii", md5 = "n1")).toDF("file_path", "upload_id",
         "patient_name", "output_type", "scan_type", "date_acquired",
         "scanner_id", "coordinate_space", "metadata", "md5hash"),
-      u, sc, st, ft, c, w, se, f, eagerCheckpoint = false)
-    val hintedCols = df.queryExecution.analyzed.collect {
+      u, sc, st, ft, c, w, se, f))
+    assert(cuts.nonEmpty)
+    val hintedCols = (df.queryExecution +: cuts).flatMap(_.analyzed.collect {
       case h: ResolvedHint => h.child.output.map(_.name)
-    }.flatten.toSet
+    }).flatten.toSet
     // uploads / candidates / session keys / files-md5 grow with the
     // catalog: no forced broadcast, AQE picks the join strategy
     Seq("__up_ok", "__pscids", "__dup_cat", "__session_id").foreach(m =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Materialize, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -193,8 +193,8 @@ class SimilaritySpec extends SparkSpec {
         k = 3, anchors = emb)
       .collect().map(r => (r.getLong(0), r.getInt(3)) ->
         ((r.getLong(1), r.getDouble(2)))).toMap
-    val ann = Similarity.hardNegativesAnn(emb, "vec_id", "embedding", "label",
-      k = 3, dim = 64)
+    val (ann, cuts) = withCuts(Similarity.hardNegativesAnn(emb, "vec_id",
+      "embedding", "label", k = 3, dim = 64))
     // LSH candidate generation recovered every exact top-3 neighbor at the
     // wide-band setting — identical (neighbor, cosine, rank) per anchor
     val got = ann.collect().map(r => (r.getLong(0), r.getInt(3)) ->
@@ -202,10 +202,8 @@ class SimilaritySpec extends SparkSpec {
     assert(got == exact)
     // the plan is bucketed equi-joins only: no broadcast nested loop over
     // the corpus, no cartesian product (the all-pairs scale-killer shape)
-    val (planned, caches) = Similarity.hardNegativesAnnPlan(
-      emb, "vec_id", "embedding", "label", k = 3, dim = 64)
-    val plan = planned.queryExecution.executedPlan.toString
-    caches.foreach(_.unpersist())
+    assert(cuts.nonEmpty)
+    val plan = cuts.map(_.executedPlan.toString).mkString("\n")
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
     assert(!plan.contains("CartesianProduct"), plan.take(2000))
   }
@@ -410,38 +408,39 @@ class SimilaritySpec extends SparkSpec {
 
   test("fused both-modes scored == separate per-mode scored, with caps " +
       "forcing both join-group regimes") {
-    val v = emb.select(col("vec_id").as("id"), col("label").as("lbl"),
-        col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.norm(col("v")))
-      .persist()
-    // 4 bands × 3 bits over 500 vectors → buckets average ~62 rows, label
-    // blocks ~6: cap 80 leaves some buckets under the TOTAL cap and some
-    // over it with every label block under — both regimes of the fused
-    // group key are live (asserted below, so the spec can't rot silently)
     val (bands, bits) = (4, 3)
-    val s = Similarity.bandSigFrame(v, dim = 64, bands, bits, seed = 7L)
-    val sizes = s.groupBy(col("band"), col("sig"))
-      .agg(count(lit(1)).as("b"),
-        max(col("lbl")).as("ignore")) // keep shape simple
-      .select(col("b")).collect().map(_.getLong(0))
-    assert(sizes.exists(_ <= 80) && sizes.exists(_ > 80),
-      s"cap 80 must split the bucket population: ${sizes.sorted.toSeq}")
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    for (cap <- Seq(80, 20000)) {
-      val fused = Similarity.annLabelScoredBothFromSigs(s, bands, bits, cap)
-        .persist()
-      val posSep = key(Similarity.annLabelScoredFromSigs(s,
-        sameLabel = true, bands, bits, cap))
-      val negSep = key(Similarity.annLabelScoredFromSigs(s,
-        sameLabel = false, bands, bits, cap))
-      assert(key(fused.filter(col("__same")).drop("__same")) == posSep,
-        s"pos mode diverges at cap=$cap")
-      assert(key(fused.filter(!col("__same")).drop("__same")) == negSep,
-        s"neg mode diverges at cap=$cap")
-      fused.unpersist()
+    Materialize.run { pin =>
+      val v = pin(emb.select(col("vec_id").as("id"), col("label").as("lbl"),
+          col("embedding").cast("array<double>").as("v"))
+        .withColumn("nrm", Similarity.norm(col("v"))))
+      // 4 bands × 3 bits over 500 vectors → buckets average ~62 rows,
+      // label blocks ~6: cap 80 leaves some buckets under the TOTAL cap
+      // and some over it with every label block under — both regimes of
+      // the fused group key are live (asserted below, so the spec can't
+      // rot silently)
+      val s = Similarity.bandSigFrame(v, pin, dim = 64, bands, bits,
+        seed = 7L)
+      val sizes = s.groupBy(col("band"), col("sig"))
+        .agg(count(lit(1)).as("b"),
+          max(col("lbl")).as("ignore")) // keep shape simple
+        .select(col("b")).collect().map(_.getLong(0))
+      assert(sizes.exists(_ <= 80) && sizes.exists(_ > 80),
+        s"cap 80 must split the bucket population: ${sizes.sorted.toSeq}")
+      for (cap <- Seq(80, 20000)) {
+        val fused = pin(Similarity.annLabelScoredBothFromSigs(s, bands, bits,
+          cap))
+        val posSep = key(Similarity.annLabelScoredFromSigs(s,
+          sameLabel = true, bands, bits, cap))
+        val negSep = key(Similarity.annLabelScoredFromSigs(s,
+          sameLabel = false, bands, bits, cap))
+        assert(key(fused.filter(col("__same")).drop("__same")) == posSep,
+          s"pos mode diverges at cap=$cap")
+        assert(key(fused.filter(!col("__same")).drop("__same")) == negSep,
+          s"neg mode diverges at cap=$cap")
+      }
     }
-    s.unpersist(); v.unpersist()
     // the incremental twin under the same mixed-cap regime: window-count
     // populations over the pruned union must match the separate paths'
     // agg-over-touched-buckets populations in both cap regimes
@@ -449,23 +448,22 @@ class SimilaritySpec extends SparkSpec {
     val batch = emb.filter(col("vec_id") >= 350)
     val ia = Similarity.annIndex(index, "vec_id", "embedding", "label",
       dim = 64, bands, bits, seed = 7L).localCheckpoint(true)
-    val ba = Similarity.annIndex(batch, "vec_id", "embedding", "label",
-      dim = 64, bands, bits, seed = 7L).persist()
-    for (cap <- Seq(80, 20000)) {
-      val (tagged, bRows) =
-        Similarity.annIncrementalScoredBoth(ia, ba, bands, bits, cap)
-      val t = tagged.persist()
-      val (posSep, c1) = Similarity.annIncrementalScored(ia, ba,
-        sameLabel = true, bands, bits, cap)
-      val (negSep, c2) = Similarity.annIncrementalScored(ia, ba,
-        sameLabel = false, bands, bits, cap)
-      assert(key(t.filter(col("__same")).drop("__same")) == key(posSep),
-        s"incremental pos mode diverges at cap=$cap")
-      assert(key(t.filter(!col("__same")).drop("__same")) == key(negSep),
-        s"incremental neg mode diverges at cap=$cap")
-      Seq(t, bRows, c1, c2).foreach(_.unpersist())
+    Materialize.run { pin =>
+      val ba = pin(Similarity.annIndex(batch, "vec_id", "embedding", "label",
+        dim = 64, bands, bits, seed = 7L))
+      for (cap <- Seq(80, 20000)) {
+        val t = pin(
+          Similarity.annIncrementalScoredBoth(ia, ba, pin, bands, bits, cap))
+        val posSep = Similarity.annIncrementalScored(ia, ba, pin,
+          sameLabel = true, bands, bits, cap)
+        val negSep = Similarity.annIncrementalScored(ia, ba, pin,
+          sameLabel = false, bands, bits, cap)
+        assert(key(t.filter(col("__same")).drop("__same")) == key(posSep),
+          s"incremental pos mode diverges at cap=$cap")
+        assert(key(t.filter(!col("__same")).drop("__same")) == key(negSep),
+          s"incremental neg mode diverges at cap=$cap")
+      }
     }
-    ba.unpersist()
   }
 
   test("ivfTopKFromIndex over a written cell-partitioned artifact == " +

@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SourceScan
 
 /** Source-scan guard: connectors take the session's Hadoop conf
   * (`sessionState.newHadoopConf()` on the driver, a broadcast
@@ -14,18 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class HadoopConfGuardSpec extends AnyFunSuite {
 
   test("no default-constructed Hadoop Configuration under graft/sources") {
-    val root = Paths.get("src/main/scala/graft/sources")
-    assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val files = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.nonEmpty)
-    val banned = Seq("new Configuration(",
-      "new org.apache.hadoop.conf.Configuration(")
-    val hits = files.flatMap { f: Path =>
-      Files.readAllLines(f).asScala.zipWithIndex.collect {
-        case (line, i) if banned.exists(line.contains) => s"$f:${i + 1}: ${line.trim}"
-      }
-    }
+    val hits = SourceScan.hits(Seq("src/main/scala/graft/sources"),
+      Seq("new Configuration(", "new org.apache.hadoop.conf.Configuration("),
+      Set.empty)
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -81,6 +81,19 @@ class ObjectStoreSpec extends SparkSpec {
     assert(new String(Files.readAllBytes(Paths.get(bucket, "a.txt"))) == "v1")
   }
 
+  test("pushAndSwap leaves no cached manifest behind") {
+    import spark.implicits._
+    val src = tmpDir("src5"); val bucket = tmpDir("bucket5")
+    val local = write(src, "a.txt", "v1")
+    spark.catalog.clearCache()
+    val out = ObjectStore.pushAndSwap(spark,
+        Seq((1L, local)).toDF("file_id", "file_path"), "file_path",
+        src, s"file:$bucket")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(out(1L) == s"file:$bucket/a.txt")
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("pushAndSwap: catalog paths swapped, locals deleted after upload") {
     import spark.implicits._
     val src = tmpDir("src3"); val bucket = tmpDir("bucket3")
