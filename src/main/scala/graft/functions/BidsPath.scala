@@ -46,15 +46,6 @@ object BidsPath {
     concat(concat_ws("_", (parts :+ effectiveSuffix): _*), ext)
   }
 
-  /** Relative BIDS path: assembly_bids/sub-X/ses-Y/<subfolder>/<filename>
-    * (`nifti_insertion_pipeline.py:462`). */
-  def bidsRelativePath(entities: Column, subfolder: Column, filename: Column): Column =
-    concat_ws("/",
-      lit("assembly_bids"),
-      concat(lit("sub-"), element_at(entities, "sub")),
-      concat(lit("ses-"), element_at(entities, "ses")),
-      subfolder, filename)
-
   /** `\.nii(\.gz)?$` extension extraction (`imaging.py:1199-1201`). */
   def niftiExt(path: Column): Column =
     regexp_extract(path, "(\\.nii(\\.gz)?)$", 1)

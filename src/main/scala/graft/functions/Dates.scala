@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** Date parsing helpers (SURVEY.md §2.8 date family).
   *
   * Reference patterns: DICOM `YYYYMMDD` (`DCMSUM.pm` date handling),
-  * multi-field / multi-format DoB fallback
-  * (`python/loris_bids_utils/.../participants.py:38-51` tries
-  * `date_of_birth`, `birth_date`, `dob` columns and several formats),
+  * multi-format date fallback
+  * (`python/loris_bids_utils/.../participants.py:38-51` tries several
+  * formats),
   * ISO acq_time (`scans.py:17-33`).
   */
 object Dates {
@@ -18,18 +18,6 @@ object Dates {
     * failing under ANSI. */
   def multiFormatDate(c: Column, formats: Seq[String]): Column =
     coalesce(formats.map(f => try_to_timestamp(c, lit(f)).cast("date")): _*)
-
-  /** The reference's DoB formats. */
-  val dobFormats: Seq[String] =
-    Seq("yyyy-MM-dd", "yyyyMMdd", "dd/MM/yyyy", "yyyy/MM/dd")
-
-  /** Multi-COLUMN fallback: first column that PARSES wins (participants.py
-    * `date_of_birth|birth_date|dob`). Coalescing per-column parses — not
-    * parsing the coalesced raw value — so a non-null but unparseable first
-    * column (e.g. date_of_birth='unknown') falls through to the next column
-    * like the reference does. */
-  def dobFallback(cols: Seq[Column], formats: Seq[String] = dobFormats): Column =
-    coalesce(cols.map(c => multiFormatDate(c, formats)): _*)
 
   /** DICOM `YYYYMMDD` date. */
   def dicomDate(c: Column): Column = try_to_timestamp(c, lit("yyyyMMdd")).cast("date")

@@ -73,10 +73,6 @@ object Predicates {
       .when(upper(c).isin("N", "NO", "FALSE", "0"), lit(false))
       .otherwise(lit(null).cast("boolean"))
 
-  /** Epoch-int stored timestamps exposed as datetime
-    * (`python/lib/db/decorators/int_datetime.py`). */
-  def epochToTs(c: Column): Column = timestamp_seconds(c)
-
   /** Exact cross-engine decimal sum: values known integral at `decimals`
     * places are scaled to integers, summed exactly (order-independent in
     * IEEE double for |sum| < 2^53), then rescaled. Used to make double
@@ -109,9 +105,4 @@ object Predicates {
       (a, x) => a + (x - mean) * (x - mean)) / n
     round(lit(10.0) * log10(mean * mean / var_), 4)
   }
-
-  /** Age-at-scan in rounded decimal years
-    * (`python/loris_dicom_importer/.../summary_write.py:147-163`). */
-  def ageYears(scanDate: Column, dob: Column): Column =
-    round(months_between(scanDate, dob) / 12.0, 2)
 }

@@ -25,8 +25,9 @@ import org.apache.spark.sql.expressions.Window
   *  - age at scan (`summary_write.py:147-163`): raw component differences,
   *    `years + months/12 + days/365`, rounded to 2 decimals.
   *
-  * Scale posture: everything is per-study (`study_uid`) groupBy — at 100 TB
-  * with millions of studies the job parallelizes by study key with one
+  * Scale posture: `tarchive` groups per archive (`archive_path`) and the
+  * series and file tables per study (`study_uid`) — at 100 TB with
+  * millions of archives each job parallelizes by its key with one
   * shuffle; series IDs are assigned per-study (partitioned window), never
   * through a global unpartitioned window.
   */
@@ -43,19 +44,26 @@ object DicomSummary {
   private def isDicomScan: Column =
     col("is_dicom") && col("modality").isin("MR", "PT")
 
-  /** A3: every archive must contain exactly one StudyUID
-    * (`DCMSUM.pm:869-896` `confirm_single_study`), folded into the plan:
-    * a broadcast 1-row distinct-count whose guard predicate raises at
-    * execution time when violated. No driver-side action — the assertion
-    * rides whichever job consumes the result, instead of costing one
-    * extra job per summarize call. */
+  /** A3 (`DCMSUM.pm:869-896` `confirm_single_study`) as a row predicate:
+    * true when `nStudies` is 1, otherwise raises at execution time. */
+  private def singleStudy(nStudies: Column): Column =
+    when(nStudies === 1, lit(true))
+      .otherwise(raise_error(concat(
+        lit("Expected exactly one distinct study_uid, found "),
+        nStudies)).cast("boolean"))
+
+  /** A3 over a whole input that is one archive's files: a broadcast 1-row
+    * distinct-count whose [[singleStudy]] predicate raises at execution
+    * time when violated. It runs no driver-side action, but it is not
+    * free: the broadcast side evaluates `files` a second time, with its
+    * own decode and the two exchanges of the distinct count (in q79 it
+    * cost three jobs and a second archive decode). [[tarchive]] asserts
+    * A3 inside its own aggregation instead; only callers without one use
+    * this. */
   def withSingleStudyGuard(files: DataFrame): DataFrame = {
     val n = files.agg(countDistinct(col("study_uid")).as("__n_studies"))
     files.crossJoin(broadcast(n))
-      .filter(when(col("__n_studies") === 1, lit(true))
-        .otherwise(raise_error(concat(
-          lit("Expected exactly one distinct study_uid, found "),
-          col("__n_studies"))).cast("boolean")))
+      .filter(singleStudy(col("__n_studies")))
       .drop("__n_studies")
   }
 
@@ -135,8 +143,13 @@ object DicomSummary {
     floor((n * 100L + 2190L) / lit(4380.0)).cast("double") / 100.0
   }
 
-  /** `tarchive`: one summary row per study — counts (A2), first-valid-DICOM
-    * header fields (fill_header), age at scan. */
+  /** `tarchive`: one summary row per archive (`archive_path`) — counts
+    * (A2), first-valid-DICOM header fields (fill_header), age at scan.
+    * `DicomArchiveID` is the archive's study uid; the same aggregation
+    * asserts A3 (exactly one distinct non-null `study_uid` per archive),
+    * so non-DICOM members need no study key and the input is read once.
+    * The distinct counts are `size(collect_set(..))`, which needs no
+    * distinct-aggregate rewrite and no second exchange. */
   def tarchive(filesDf: DataFrame): DataFrame = {
     // canonical sort key for "first valid DICOM row"
     val sortKey = struct(
@@ -150,20 +163,22 @@ object DicomSummary {
       col("scanner_model"), col("scanner_serial"), col("scanner_software"),
       col("institution"))
     filesDf
-      .groupBy(col("study_uid"))
+      .groupBy(col("archive_path"))
       .agg(
+        collect_set(col("study_uid")).as("__uids"),
         count(lit(1)).cast("int").as("TotalFileCount"),
         count(when(isDicomScan, 1)).cast("int").as("DicomFileCount"),
         count(when(!isDicomScan, 1)).cast("int").as("NonDicomFileCount"),
-        countDistinct(
-          when(isDicomScan, struct(seriesKey.map(col): _*))).cast("int")
+        size(collect_set(
+          when(isDicomScan, struct(seriesKey.map(col): _*))))
           .as("AcquisitionCount"),
         min_by(headerStruct, when(isDicomScan, sortKey)).as("hdr"),
         md5(concat_ws(",", sort_array(collect_list(when(isDicomScan, col("md5"))))))
           .as("md5sumDicomOnly")
       )
+      .filter(singleStudy(size(col("__uids"))))
       .select(
-        col("study_uid").as("DicomArchiveID"),
+        col("__uids")(0).as("DicomArchiveID"),
         col("hdr.patient_name").as("PatientName"),
         col("hdr.patient_id").as("PatientID"),
         col("hdr.patient_dob").as("PatientDoB"),

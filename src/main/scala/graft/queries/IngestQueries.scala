@@ -63,9 +63,7 @@ object IngestQueries {
         .filter(!col("is_dir"))
         .select(col("member_path"), col("nested_in"),
           col("member_path").as("path"), col("content"))
-      DicomSource.extractHeaders(files.select(col("path"), col("content")))
-        .join(files.select(col("member_path"), col("nested_in"),
-          col("path").as("file_path")), Seq("file_path"))
+      DicomSource.extractHeaders(files)
         .select(col("member_path"), col("nested_in"), col("is_dicom"),
           col("study_uid"), col("series_number"), col("instance_number"),
           col("patient_id"), col("echo_time"), col("modality"))
@@ -231,23 +229,18 @@ object IngestQueries {
     },
 
     // A2/A3/P7 end to end: the dicomTar.pl study summarization — archive
-    // members → real header parse → single-study assertion (A3, throws on
-    // violation) → tarchive summary row with file counts (A2) where the
-    // modality gate (P7) splits Dicom vs NonDicom members
+    // members → real header parse → one tarchive summary row per archive
+    // with file counts (A2) where the modality gate (P7) splits Dicom vs
+    // NonDicom members, asserting a single study (A3, throws on violation)
+    // in the same aggregation
     "q79_dicom_summary" -> { (s, _) =>
       val dir = SyntheticFixtures.materialize(
         "q79", "upload.tar", SyntheticFixtures.studyArchiveBytes())
       val members = TarGzSource.members(s, dir, glob = "*.tar").toDF()
         .filter(!col("is_dir"))
-        .select(col("member_path").as("path"), col("content"))
-      val headers = graft.operators.DicomSummary.withSingleStudyGuard(
-        DicomSource.extractHeaders(members))
-      // every archive member belongs to the (asserted single) study: fill
-      // the non-DICOM rows' study key from the broadcast 1-row study uid
-      val su = headers.agg(min(col("study_uid")).as("archive_uid"))
-      val all = headers.crossJoin(broadcast(su))
-        .withColumn("study_uid",
-          coalesce(col("study_uid"), col("archive_uid")))
+        .select(col("archive_path"), col("member_path").as("path"),
+          col("content"))
+      val all = DicomSource.extractHeaders(members)
         // DCMSUM field names -> the §1.3 tarchive column contract
         .withColumnRenamed("manufacturer", "scanner_manufacturer")
         .withColumnRenamed("software_version", "scanner_software")

@@ -85,16 +85,21 @@ object DicomSource {
     * double with the reference's `nearest(0.01)` rounding on TE/TR/TI/slice
     * thickness (`DCMSUM.pm:806-809`), dates kept as raw `YYYYMMDD` strings
     * for [[graft.functions.Dates.dicomDate]]. Non-DICOM files keep their
-    * scan row with null headers (the reference's `$fileIsDicom` branch). */
+    * scan row with null headers (the reference's `$fileIsDicom` branch).
+    * Input columns other than `path` and `content` pass through first, so
+    * callers keep member keys without joining them back from a second
+    * scan; they must not share a name with the header columns. */
   def extractHeaders(df: DataFrame): DataFrame = {
     val nearest01 = (c: Column) =>
       graft.functions.Predicates.nearest(0.01, c.cast("double"))
-    df.select(
+    val carried = df.columns.toSeq.filterNot(Set("path", "content"))
+      .map(c => col(s"`$c`"))
+    df.select(carried ++ Seq(
         col("path").as("file_path"),
         md5(col("content")).as("md5"),
         isDicomMagic(col("content")).as("is_dicom"),
-        dicomTags(col("content")).as("h"))
-      .select(
+        dicomTags(col("content")).as("h")): _*)
+      .select(carried ++ Seq(
         col("file_path"), col("md5"), col("is_dicom"),
         col("h")("study_uid").as("study_uid"),
         col("h")("series_number").cast("int").as("series_number"),
@@ -118,7 +123,7 @@ object DicomSource {
         col("h")("manufacturer").as("manufacturer"),
         col("h")("scanner_serial").as("scanner_serial"),
         col("h")("series_uid").as("series_uid"),
-        col("h")("modality").as("modality"))
+        col("h")("modality").as("modality")): _*)
   }
 
   /** `get_dicom_info.pl` field-selection table
@@ -214,18 +219,14 @@ object DicomSource {
     * (the `dicom_files` fixture shape): DICOM `YYYYMMDD` strings become
     * dates, scanner fields take the tarchive-facing names. Completes the
     * dir-scan → header-parse → study-summary vertical on REAL headers. */
-  def toSummaryInput(headers: DataFrame): DataFrame = {
-    // non-DICOM strays carry no study_uid; they belong to the archive of
-    // their DIRECTORY (the reference's per-study-dir "other files" list,
-    // summary_get.py:57-58) — a dir-partitioned window, never global
-    val dirCol = regexp_replace(col("file_path"), "/[^/]+$", "")
+  def toSummaryInput(headers: DataFrame): DataFrame =
+    // the archive of a scanned file is its DIRECTORY (the reference's
+    // per-study-dir summary, "other files" included: summary_get.py:57-58)
     headers
-      .withColumn("study_uid", coalesce(col("study_uid"),
-        max(col("study_uid")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(dirCol))))
+      .withColumn("archive_path",
+        regexp_replace(col("file_path"), "/[^/]+$", ""))
       .withColumn("study_date", graft.functions.Dates.dicomDate(col("study_date")))
       .withColumn("patient_dob", graft.functions.Dates.dicomDate(col("patient_dob")))
       .withColumnRenamed("manufacturer", "scanner_manufacturer")
       .withColumnRenamed("software_version", "scanner_software")
-  }
 }

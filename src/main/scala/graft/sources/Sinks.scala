@@ -121,10 +121,6 @@ object Sinks {
       .mode("overwrite")
       .parquet(outDir)
 
-  /** S13 manifest: single JSON manifest row (index.json analog). */
-  def writeManifest(manifest: DataFrame, outDir: String): Unit =
-    manifest.coalesce(1).write.mode("overwrite").json(s"$outDir/index")
-
   /** Small-file compaction: rewrite a parquet directory into
     * ~`targetBytes`-sized files. Incremental sinks (chunk writers,
     * streaming upserts, per-batch appends) accrete thousands of small

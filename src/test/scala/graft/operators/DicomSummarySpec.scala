@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types._
 import java.sql.Date
 
@@ -12,6 +13,7 @@ import java.sql.Date
 class DicomSummarySpec extends SparkSpec {
 
   private val schema = StructType(Seq(
+    StructField("archive_path", StringType, nullable = false),
     StructField("study_uid", StringType, nullable = false),
     StructField("series_number", IntegerType),
     StructField("echo_number", IntegerType),
@@ -44,7 +46,8 @@ class DicomSummarySpec extends SparkSpec {
       series: Integer, echo: Integer, inst: Integer, path: String,
       te: java.lang.Double, seriesUid: String, desc: String, seq: String,
       isDicom: Boolean = true, modality: String = "MR"): Row =
-    Row("1.2.3.study", series, echo, inst, path, 2300.0, te, null,
+    Row("a/upload.tar", "1.2.3.study", series, echo, inst, path, 2300.0,
+      te, null,
       Date.valueOf("2024-03-15"), "DCC001_123456_V1", Date.valueOf("1990-06-20"),
       "PID1", desc, "F", "Prisma", "VE11", "MNI", seq, 1.0, "ROW", s"md5-$path",
       isDicom, "Siemens", "SN123", seriesUid, modality)
@@ -90,6 +93,7 @@ class DicomSummarySpec extends SparkSpec {
     val t = DicomSummary.tarchive(fixture).collect()
     assert(t.length == 1)
     val r = t.head
+    assert(r.getAs[String]("DicomArchiveID") == "1.2.3.study")
     assert(r.getAs[Int]("TotalFileCount") == 9)
     assert(r.getAs[Int]("DicomFileCount") == 8)
     assert(r.getAs[Int]("NonDicomFileCount") == 1)
@@ -127,14 +131,35 @@ class DicomSummarySpec extends SparkSpec {
     assert(e.getMessage.contains("found 2"))
   }
 
-  test("single-study guard adds no extra Spark job") {
+  test("building the guarded plan runs no job") {
     val sc = spark.sparkContext
     val before = sc.statusTracker.getJobIdsForGroup(null).length
-    val guarded = DicomSummary.withSingleStudyGuard(fixture)
-    // building the plan runs nothing; one count = jobs for one action only
-    val planJobs = sc.statusTracker.getJobIdsForGroup(null).length
-    assert(planJobs == before)
-    guarded.count()
+    DicomSummary.withSingleStudyGuard(fixture)
+    assert(sc.statusTracker.getJobIdsForGroup(null).length == before)
+  }
+
+  test("tarchive raises in its aggregation on a two-study archive") {
+    val twoStudies = fixture.union(
+      fixture.limit(1).withColumn("study_uid", lit("9.9.9.other")))
+    val e = intercept[Exception](DicomSummary.tarchive(twoStudies).collect())
+    assert(e.getMessage.contains("USER_RAISED_EXCEPTION"))
+    assert(e.getMessage.contains("found 2"))
+  }
+
+  test("tarchive of an empty input is empty and does not raise") {
+    assert(DicomSummary.tarchive(fixture.filter(lit(false))).count() == 0)
+  }
+
+  test("tarchive gives one row per archive, each with its own study uid") {
+    // the second archive's non-DICOM member carries no study uid, as a
+    // real header parse leaves it: it still counts toward its archive
+    val second = fixture
+      .withColumn("archive_path", lit("b/upload.tar"))
+      .withColumn("study_uid", when(col("is_dicom"), lit("4.5.6.study")))
+    val rows = DicomSummary.tarchive(fixture.union(second))
+      .select("DicomArchiveID", "TotalFileCount", "AcquisitionCount")
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSet
+    assert(rows == Set(("1.2.3.study", 9, 4), ("4.5.6.study", 9, 4)))
   }
 
   test("compareSummaries: missing_left / missing_right / field_diff / " +
