@@ -166,36 +166,6 @@ object Catalog {
     winners.unionByName(fallback)
   }
 
-  /** J11+W3 as-of interval assignment (the IntendedFor pass,
-    * `python/lib/imaging.py:851-892,1112-1148`): for each right-side row,
-    * find the left-side anchor with the greatest time <= its time within the
-    * same group — i.e. anchors claim the interval [t, next_t). Returns
-    * `right` columns + the anchor's `anchorIdCol`.
-    *
-    * Scale posture: the anchor side gets a `lead` window (one shuffle on
-    * groupCols) and the join is an equi-join on groupCols with a range
-    * residual — Spark executes it as a hash join on the group key, never a
-    * cartesian. */
-  def asOfAssign(
-      anchors: DataFrame,
-      right: DataFrame,
-      groupCols: Seq[String],
-      anchorTime: String,
-      rightTime: String,
-      anchorIdCol: String
-  ): DataFrame = {
-    val w = Window.partitionBy(groupCols.map(col): _*).orderBy(col(anchorTime))
-    val a = anchors
-      .withColumn("__next_t", lead(col(anchorTime), 1).over(w))
-      .select((groupCols :+ anchorTime :+ "__next_t" :+ anchorIdCol).map(c =>
-        col(c).as(s"__a_$c")): _*)
-    val joinCond = groupCols.map(g => col(g) === col(s"__a_$g")).reduce(_ && _) &&
-      col(rightTime) >= col(s"__a_$anchorTime") &&
-      (col(s"__a___next_t").isNull || col(rightTime) < col(s"__a___next_t"))
-    right.join(a, joinCond, "left")
-      .select(right.columns.map(col) :+ col(s"__a_$anchorIdCol").as(anchorIdCol): _*)
-  }
-
   /** The `updateMRI_Upload.pl` vertical
     * (`dicom-archive/updateMRI_Upload.pl:227-271`): for a batch of upload
     * requests (an archive path + a decompressed source location each),

@@ -52,20 +52,16 @@ object DicomSummary {
         lit("Expected exactly one distinct study_uid, found "),
         nStudies)).cast("boolean"))
 
-  /** A3 over a whole input that is one archive's files: a broadcast 1-row
-    * distinct-count whose [[singleStudy]] predicate raises at execution
-    * time when violated. It runs no driver-side action, but it is not
-    * free: the broadcast side evaluates `files` a second time, with its
-    * own decode and the two exchanges of the distinct count (in q79 it
-    * cost three jobs and a second archive decode). [[tarchive]] asserts
-    * A3 inside its own aggregation instead; only callers without one use
-    * this. */
-  def withSingleStudyGuard(files: DataFrame): DataFrame = {
-    val n = files.agg(countDistinct(col("study_uid")).as("__n_studies"))
-    files.crossJoin(broadcast(n))
+  /** A3 per archive for callers without their own aggregation: each row
+    * passes the [[singleStudy]] predicate over the distinct non-null
+    * `study_uid`s of its `archive_path`, taken over a window, so `files`
+    * is read once and the check raises at execution time. [[tarchive]]
+    * asserts A3 inside its per-archive aggregation instead. */
+  def withSingleStudyGuard(files: DataFrame): DataFrame =
+    files.withColumn("__n_studies", size(collect_set(col("study_uid"))
+        .over(Window.partitionBy(col("archive_path")))))
       .filter(singleStudy(col("__n_studies")))
       .drop("__n_studies")
-  }
 
   /** `tarchive_series`: one row per acquisition with NumberOfFiles,
     * TarchiveSeriesID assigned per-study by the canonical series sort

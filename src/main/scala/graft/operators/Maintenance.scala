@@ -659,38 +659,31 @@ object Maintenance {
     * the unpredictable `tempdir` — carried as the `<tmp>` placeholder.
     *
     * @param members [[graft.sources.TarGzSource]] member rows
-    *                (archive_path, nested_in, member_path, is_dir)
-    * @param headers DICOM probe of the member contents (file_path,
-    *                study_uid) — `DicomSource.extractHeaders` output,
-    *                probed with `file_path = <archive_path>::<member_path>`
-    *                so identical member names across archives don't
-    *                cross-join
+    *                (archive_path, nested_in, member_path, is_dir) run
+    *                through [[graft.sources.DicomSource.extractHeaders]],
+    *                which adds the StudyUID probe (study_uid)
     */
-  def dcmconvPlan(members: DataFrame, headers: DataFrame, binDir: String,
+  def dcmconvPlan(members: DataFrame, binDir: String,
       database: Boolean, profile: Option[String]): DataFrame = {
-    val inner = members
-      .filter(col("nested_in").isNull && !col("is_dir") &&
-        col("member_path").rlike("\\.tar\\.gz$"))
-      .groupBy(col("archive_path"))
-      .agg(count(lit(1)).as("n_inner"),
-        min(col("member_path")).as("__inner_tar"))
-    val probed = members
-      .filter(col("nested_in").isNotNull && !col("is_dir"))
-      .withColumn("__probe_key",
-        concat(col("archive_path"), lit("::"), col("member_path")))
-      .join(headers.select(col("file_path").as("__probe_key"),
-        col("study_uid")), Seq("__probe_key"), "left")
-      .groupBy(col("archive_path"),
-        col("nested_in").as("__inner_tar"))
-      .agg(count(lit(1)).as("n_files"),
-        count(when(col("study_uid").isNotNull &&
-          col("study_uid") =!= "", lit(1))).as("n_dicom_converted"))
+    val isInnerTar = col("nested_in").isNull && !col("is_dir") &&
+      col("member_path").rlike("\\.tar\\.gz$")
+    // one aggregation per archive: the inner-tar gate, and a
+    // (bundle, has StudyUID) pair per nested file for the chosen bundle
+    val inBundle = filter(col("__probed"),
+      p => p("nested_in") === col("__inner_tar"))
     val tarDirOf = regexp_extract(col("archive_path"), "^(.*)/[^/]+$", 1)
-    members.select(col("archive_path")).distinct()
-      .join(inner, Seq("archive_path"), "left")
-      .join(probed, Seq("archive_path", "__inner_tar"), "left")
+    members
+      .groupBy(col("archive_path"))
+      .agg(count(when(isInnerTar, lit(1))).as("n_inner"),
+        min(when(isInnerTar, col("member_path"))).as("__inner_tar"),
+        collect_list(when(col("nested_in").isNotNull && !col("is_dir"),
+          struct(col("nested_in"), (col("study_uid").isNotNull &&
+            col("study_uid") =!= "").as("has_uid")))).as("__probed"))
+      .withColumn("n_files", size(inBundle).cast("long"))
+      .withColumn("n_dicom_converted",
+        size(filter(inBundle, p => p("has_uid"))).cast("long"))
       .withColumn("status",
-        when(coalesce(col("n_inner"), lit(0L)) === 0, "no_inner_tar")
+        when(col("n_inner") === 0, "no_inner_tar")
           .when(col("n_inner") > 1, "multiple_inner_tars")
           .otherwise("rebuilt"))
       .select(
@@ -698,14 +691,11 @@ object Maintenance {
         when(col("status") === "rebuilt",
           regexp_replace(element_at(split(col("__inner_tar"), "/"), -1),
             "\\.tar\\.gz$", "")).as("dcm_dir"),
-        when(col("status") === "rebuilt",
-          coalesce(col("n_files"), lit(0L))).as("n_files"),
-        when(col("status") === "rebuilt",
-          coalesce(col("n_dicom_converted"), lit(0L)))
+        when(col("status") === "rebuilt", col("n_files")).as("n_files"),
+        when(col("status") === "rebuilt", col("n_dicom_converted"))
           .as("n_dicom_converted"),
         when(col("status") === "rebuilt",
-          coalesce(col("n_files"), lit(0L)) -
-            coalesce(col("n_dicom_converted"), lit(0L)))
+          col("n_files") - col("n_dicom_converted"))
           .as("n_non_dicom_skipped"),
         when(col("status") === "rebuilt", concat(
           lit(s"$binDir/dicom-archive/dicomTar.pl <tmp>/"),

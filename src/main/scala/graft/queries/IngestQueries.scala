@@ -31,7 +31,8 @@ object IngestQueries {
         "q90", "upload.tar", SyntheticFixtures.studyArchiveBytes())
       val members = TarGzSource.members(s, dir, glob = "*.tar").toDF()
         .filter(!col("is_dir"))
-        .select(col("member_path").as("path"), col("content"))
+        .select(col("archive_path"), col("member_path").as("path"),
+          col("content"))
       val headers = DicomSummary.withSingleStudyGuard(
         DicomSource.extractHeaders(members).filter(col("is_dicom")))
       val acq = headers

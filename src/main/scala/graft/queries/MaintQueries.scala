@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.Maintenance
@@ -449,7 +450,7 @@ object MaintQueries {
     },
 
     // addSeriesAndFileRecords.pl: archive → DCMSUM collapse → tarchive
-    // binding (DicomArchiveID + ArchiveLocation LIKE %basename) →
+    // lookup (DicomArchiveID + ArchiveLocation LIKE %basename) →
     // re-insertable tarchive_series records (echo splits the series, the
     // q79/q90 collapse)
     "q144_series_records" -> { (s, _) =>
@@ -492,12 +493,10 @@ object MaintQueries {
       // two inner .tar.gz bundles
       put("bad2.tar", TarSink.tarBytes(Seq(
         "s1.tar.gz" -> innerGood, "s2.tar.gz" -> innerGood)))
-      val members = TarGzSource.members(s, dir, glob = "*.tar").toDF()
-      val headers = DicomSource.extractHeaders(members
-        .filter(col("nested_in").isNotNull && !col("is_dir"))
-        .select(concat(col("archive_path"), lit("::"),
-          col("member_path")).as("path"), col("content")))
-      Maintenance.dcmconvPlan(members, headers, binDir = "/opt/mri",
+      val members = DicomSource.extractHeaders(
+        TarGzSource.members(s, dir, glob = "*.tar").toDF()
+          .withColumn("path", col("member_path")))
+      Maintenance.dcmconvPlan(members, binDir = "/opt/mri",
         database = true, profile = Some("prod"))
         // the fixture lives in a temp dir: basename the archive and
         // neutralize the target dir so the pinned oracle is
@@ -740,28 +739,25 @@ object MaintQueries {
     val outer = TarSink.tarBytes(Seq(
       "upload/notes.txt" -> "operator log".getBytes("US-ASCII"),
       "upload/study.tar.gz" -> TarSink.gzipBytes(inner)))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "DCM_q144.tar"), outer)
-    val members = TarGzSource.members(s, dir, glob = "*.tar").toDF()
-      .filter(col("nested_in").isNotNull && !col("is_dir"))
-      .select(col("member_path").as("path"), col("content"))
-    val headers = DicomSource.extractHeaders(members)
-    val tarchive = Seq(
+    val archiveName = "DCM_q144.tar"
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, archiveName), outer)
+    val headers = DicomSource.extractHeaders(
+      TarGzSource.members(s, dir, glob = "*.tar").toDF()
+        .filter(col("nested_in").isNotNull && !col("is_dir"))
+        .select(col("archive_path"), col("member_path").as("path"),
+          col("content")))
+    // the reference's tarchive lookup: DicomArchiveID=? AND ArchiveLocation
+    // LIKE %basename (`addSeriesAndFileRecords.pl:100-116`)
+    val tarchive = broadcast(Seq(
       (77L, "1.2.3.9144", "2024/DCM_q144.tar"),
       (78L, "1.2.3.9999", "2024/DCM_other.tar"))
-      .toDF("TarchiveID", "DicomArchiveID", "ArchiveLocation")
-    // the reference's binding: DicomArchiveID=? AND ArchiveLocation
-    // LIKE %basename (`addSeriesAndFileRecords.pl:100-116`) — one
-    // broadcast row per archive, derived from the study UID
-    val binding = broadcast(
-      headers.filter(col("is_dicom"))
-        .agg(min(col("study_uid")).as("__uid"))
-        .join(tarchive, col("DicomArchiveID") === col("__uid") &&
-          col("ArchiveLocation").endsWith("DCM_q144.tar"))
-        .select(col("TarchiveID")))
+      .toDF("TarchiveID", "DicomArchiveID", "ArchiveLocation"))
+    def bound(uid: Column): Column =
+      col("DicomArchiveID") === uid &&
+        col("ArchiveLocation").endsWith(archiveName)
     val seriesDf = graft.operators.DicomSummary.series(
         headers.filter(col("is_dicom")))
-      .crossJoin(binding)
+      .join(tarchive, bound(col("study_uid")))
       .select(col("TarchiveID").as("tarchive_id"),
         col("SeriesNumber").as("series_number"),
         col("SeriesDescription").as("series_description"),
@@ -773,8 +769,12 @@ object MaintQueries {
         col("PhaseEncoding").as("phase_encoding"),
         col("NumberOfFiles").as("number_of_files"),
         col("SeriesUID").as("series_uid"))
+    // every member of an archive, non-DICOM ones too, takes the
+    // archive's study uid
     val filesDf = headers
-      .crossJoin(binding)
+      .withColumn("__uid", min(when(col("is_dicom"), col("study_uid")))
+        .over(Window.partitionBy(col("archive_path"))))
+      .join(tarchive, bound(col("__uid")))
       .select(col("TarchiveID").as("tarchive_id"),
         when(col("is_dicom"), col("series_number")).as("series_number"),
         when(col("is_dicom"), col("instance_number")).as("file_number"),

@@ -143,19 +143,4 @@ object Sinks {
       else df.repartition(parts)
     sized.write.mode("overwrite").parquet(outDir)
   }
-
-  /** Bucketed catalog table: pre-shuffles ONCE at write time so every
-    * later equi-join/aggregation on `keys` is exchange-free — the
-    * co-location strategy for repeatedly-joined 100 TB fact tables
-    * (files ⋈ parameter_file on FileID, session ⋈ candidate on
-    * CandidateID). Sorted within buckets so sort-merge joins skip their
-    * sort too. BucketedJoinSpec proves the Exchange elimination. */
-  def writeBucketed(df: DataFrame, table: String, buckets: Int,
-      keys: Seq[String]): Unit =
-    df.write
-      .mode("overwrite")
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
 }

@@ -3,7 +3,7 @@ package graft.sources
 import java.io.ByteArrayInputStream
 import java.util.zip.GZIPInputStream
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** S12 tar/gzip archive source (SURVEY.md §2.1): the distributed form of the
   * reference's nested-archive extraction (`python/lib/imaging.py:1150-1174`
@@ -277,19 +277,5 @@ object TarGzSource {
     DicomSource.scanDir(spark, dir, glob)
       .select("path", "content").as[(String, Array[Byte])]
       .flatMap { case (p, c) => expandArchive(p, c, extractNested) }
-  }
-
-  /** members → the DICOM vertical: nested-aware file rows feeding
-    * [[DicomSource.extractHeaders]] (path column renamed to the member
-    * path so downstream grouping is per-study-dir, like the reference's
-    * extracted tree). */
-  def asFileScan(members: Dataset[ArchiveMember]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    members.toDF()
-      .filter(!col("is_dir"))
-      .select(
-        concat_ws("!", col("archive_path"),
-          coalesce(col("nested_in"), lit("")), col("member_path")).as("path"),
-        col("content"))
   }
 }

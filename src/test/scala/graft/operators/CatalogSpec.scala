@@ -59,21 +59,6 @@ class CatalogSpec extends SparkSpec {
     assert(out == Map("a.nii" -> 3, "b.nii" -> 4, "c.nii" -> 1))
   }
 
-  test("asOfAssign: anchors claim [t, next_t) intervals per group") {
-    import spark.implicits._
-    val anchors = Seq((1, 10L, "A"), (1, 50L, "B"), (2, 5L, "C"))
-      .toDF("grp", "t", "anchor_id")
-    val right = Seq((1, 9L, "r0"), (1, 10L, "r1"), (1, 49L, "r2"),
-      (1, 50L, "r3"), (2, 100L, "r4"), (3, 1L, "r5"))
-      .toDF("grp", "rt", "rid")
-    val out = Catalog.asOfAssign(anchors, right, Seq("grp"), "t", "rt", "anchor_id")
-      .collect().map(r => r.getAs[String]("rid") -> Option(r.getAs[String]("anchor_id")))
-      .toMap
-    assert(out == Map(
-      "r0" -> None, "r1" -> Some("A"), "r2" -> Some("A"),
-      "r3" -> Some("B"), "r4" -> Some("C"), "r5" -> None))
-  }
-
   test("latestPerGroup picks ORDER BY DESC LIMIT 1 per key") {
     import spark.implicits._
     val df = Seq((1, 3L, "x"), (1, 7L, "y"), (2, 1L, "z")).toDF("k", "id", "v")

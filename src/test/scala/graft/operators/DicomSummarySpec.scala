@@ -131,6 +131,20 @@ class DicomSummarySpec extends SparkSpec {
     assert(e.getMessage.contains("found 2"))
   }
 
+  test("single-study guard checks each archive on its own") {
+    val second = fixture
+      .withColumn("archive_path", lit("b/upload.tar"))
+      .withColumn("study_uid", lit("4.5.6.study"))
+    val both = fixture.union(second)
+    assert(DicomSummary.withSingleStudyGuard(both).count() == both.count())
+    // one of the archives holding two studies still fails the whole input
+    val e = intercept[Exception] {
+      DicomSummary.withSingleStudyGuard(both.union(
+        fixture.limit(1).withColumn("study_uid", lit("9.9.9.other")))).count()
+    }
+    assert(e.getMessage.contains("found 2"))
+  }
+
   test("building the guarded plan runs no job") {
     val sc = spark.sparkContext
     val before = sc.statusTracker.getJobIdsForGroup(null).length

@@ -180,4 +180,33 @@ class MaintenanceSpec extends SparkSpec {
     val r = Maintenance.prodToConfig(both, cs, cfg).collect()(0)
     assert(r.getAs[String]("new_value") === "qsub-val")
   }
+
+  test("dcmconvPlan counts each archive's own bundle when member paths repeat") {
+    import graft.sources.{DicomSource, SyntheticFixtures, TarGzSource, TarSink}
+    val dir = java.nio.file.Files.createTempDirectory("dcmconv").toFile
+    dir.deleteOnExit()
+    val dcm = SyntheticFixtures.dicomBytes(Seq(
+      SyntheticFixtures.dicomElem(0x0020, 0x000D, "UI", "1.2.5")))
+    // both archives hold study.tar.gz/study/x.dcm; only a's is DICOM
+    def upload(name: String, x: Array[Byte]): Unit = java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir.toString, name),
+      TarSink.tarBytes(Seq("study.tar.gz" -> TarSink.gzipBytes(
+        TarSink.tarBytes(Seq("study/x.dcm" -> x,
+          "study/notes.txt" -> "n".getBytes("US-ASCII")))))))
+    upload("a.tar", dcm)
+    upload("b.tar", "not a dicom".getBytes("US-ASCII"))
+    val members = DicomSource.extractHeaders(
+      TarGzSource.members(spark, dir.toString, glob = "*.tar").toDF()
+        .withColumn("path", col("member_path")))
+    val out = Maintenance.dcmconvPlan(members, binDir = "/b",
+        database = false, profile = None)
+      .select(element_at(split(col("archive_path"), "/"), -1), col("status"),
+        col("dcm_dir"), col("n_files"), col("n_dicom_converted"),
+        col("n_non_dicom_skipped"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getLong(3), r.getLong(4), r.getLong(5))).toSet
+    assert(out === Set(
+      ("a.tar", "rebuilt", "study", 2L, 1L, 1L),
+      ("b.tar", "rebuilt", "study", 2L, 0L, 2L)))
+  }
 }
