@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
   * mainstream video container whose structure (headers + frame index)
   * parses with no compression library. Codec payloads stay opaque — the
   * 100 TB video pipeline's heavy decode is exactly the pluggable
-  * per-partition codec boundary [[Multimodal.PayloadDecoder]] models —
+  * per-partition codec boundary [[Multimodal.RowDecoder]] models —
   * but everything a training-data pipeline filters and samples ON is in
   * the container: stream geometry (width/height/fps/frame count, handler
   * fourcc), per-stream headers, and the `idx1` frame index that makes

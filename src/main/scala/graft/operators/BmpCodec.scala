@@ -73,17 +73,6 @@ object BmpCodec {
     Some(BmpImage(width, height, bpp, topDown, px))
   }
 
-  /** [[Multimodal.PayloadDecoder]] backed by the real codec: plugs into
-    * [[Multimodal.decodePartitioned]] unchanged (magic, dimensions, single
-    * frame; (null-ish zeros) when the payload is not a decodable BMP). */
-  object BmpDecoder extends Multimodal.PayloadDecoder {
-    def decode(bytes: Array[Byte]): (String, Int, Int, Int) =
-      BmpCodec.decode(bytes) match {
-        case Some(img) => ("BM", img.width, img.height, 1)
-        case None => ("", 0, 0, 0)
-      }
-  }
-
   val statsSchema: StructType = StructType(Seq(
     StructField("magic", StringType),
     StructField("width", IntegerType),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Electrophysiology time-series chunking (SURVEY.md §2.9 T1-T4), the batch
@@ -61,7 +62,7 @@ object EphysChunker {
         max(col("value")).as("chunk_max"))
       .withColumn("is_last",
         col("chunk_index") === max(col("chunk_index"))
-          .over(org.apache.spark.sql.expressions.Window.partitionBy(col("channel"))))
+          .over(Window.partitionBy(col("channel"))))
       .withColumn("valid_samples",
         when(col("is_last"), col("n_samples")).otherwise(lit(chunkSize)))
 
@@ -113,31 +114,28 @@ object EphysChunker {
       .groupBy(col("channel"), col("sample_index"))
       .agg(avg(col("value")).as("value"))
 
-  /** T3: per-channel min/max plus the widened global series range. */
-  def channelRanges(samples: DataFrame): DataFrame = {
-    val per = samples.groupBy(col("channel"))
+  /** T3: per-channel min/max, one row per channel. The series range over
+    * all channels is taken once, by [[mergeManifest]]. */
+  def channelRanges(samples: DataFrame): DataFrame =
+    samples.groupBy(col("channel"))
       .agg(min(col("value")).as("channel_min"), max(col("value")).as("channel_max"))
-    // global range via a broadcast 1-row agg, not an empty-partition Window
-    // (which would collapse the per-channel rows to a single partition)
-    val global = per.agg(min(col("channel_min")).as("series_min"),
-      max(col("channel_max")).as("series_max"))
-    per.crossJoin(broadcast(global))
-  }
 
   /** T4 manifest merge: channel metadata unioned by `index` with new-side
-    * precedence, seriesRange widened (least/greatest). Both sides:
-    * (index, metadata..., series_min, series_max). */
+    * precedence, plus the series range (`series_min`, `series_max`) widened
+    * over the channel ranges of both sides, shadowed old rows included.
+    * Both sides: (index, metadata..., channel_min, channel_max), as from
+    * [[channelRanges]]. One pass over the flagged union: an old row
+    * survives where no new row shares its `index`. The range window spans
+    * all rows in one partition, which is safe because manifests hold one
+    * row per channel, never the samples. */
   def mergeManifest(oldManifest: DataFrame, newManifest: DataFrame): DataFrame = {
-    val keep = oldManifest.join(newManifest.select("index"), Seq("index"), "left_anti")
-    val merged = newManifest.unionByName(keep)
-    val oldRange = oldManifest.select(
-      min(col("series_min")).as("o_min"), max(col("series_max")).as("o_max"))
-    val newRange = newManifest.select(
-      min(col("series_min")).as("n_min"), max(col("series_max")).as("n_max"))
-    merged
-      .crossJoin(broadcast(oldRange)).crossJoin(broadcast(newRange))
-      .withColumn("series_min", least(col("o_min"), col("n_min")))
-      .withColumn("series_max", greatest(col("o_max"), col("n_max")))
-      .drop("o_min", "o_max", "n_min", "n_max")
+    val all = Window.partitionBy()
+    newManifest.withColumn("is_new", lit(1))
+      .unionByName(oldManifest.withColumn("is_new", lit(0)))
+      .withColumn("series_min", min(col("channel_min")).over(all))
+      .withColumn("series_max", max(col("channel_max")).over(all))
+      .withColumn("shadowed", max(col("is_new")).over(Window.partitionBy(col("index"))))
+      .filter(col("is_new") === 1 || col("shadowed") === 0)
+      .drop("is_new", "shadowed")
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
   * harness — the format the bulk of a web-scale image corpus actually
   * arrives in, beside the already-decoded legs ([[BmpCodec]] raster,
   * [[PngCodec]] full inflate). Entropy-coded payloads stay opaque (the
-  * pluggable [[Multimodal.PayloadDecoder]] boundary pays the IDCT);
+  * pluggable [[Multimodal.RowDecoder]] boundary pays the IDCT);
   * everything an image training pipeline FILTERS on precedes the first
   * SOS scan: frame geometry + bit precision + component count from
   * SOF0/1/2 (and whether the stream is progressive — SOF2 — which

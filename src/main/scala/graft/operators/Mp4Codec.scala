@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
   * video-container leg beside [[AviCodec]]: where AVI covers the RIFF
   * lineage, ISO-BMFF (`ftyp`/`moov`/`mdat` boxes) is the container the
   * modern video corpus actually arrives in (.mp4/.m4a/.mov). Codec
-  * payloads stay opaque (the pluggable [[Multimodal.PayloadDecoder]]
+  * payloads stay opaque (the pluggable [[Multimodal.RowDecoder]]
   * boundary); everything a training-data pipeline filters and samples ON
   * is in `moov`: brand, movie/track durations on exact integer
   * timescales, track geometry (16.16 fixed-point `tkhd` width/height),

@@ -7,25 +7,15 @@ import org.apache.spark.sql.types._
 /** Multimodal-column plumbing: image/audio/video payloads ride as opaque
   * `binary` columns with typed metadata structs.
   *
-  * Two decoders exist behind the per-partition lifecycle harness: the
-  * deterministic STUB (`decodeImageMetaStub` — fake metadata from byte
-  * length, kept for formats whose codecs this container lacks) and the
-  * REAL pure-JVM [[BmpCodec]] (24/32-bit BMP, exercised end-to-end under
-  * the q104 oracle gate). The harness itself — schema, batch shape,
-  * partition-parallel application, open/decode/close lifecycle with
-  * task-completion cleanup — is production code either way; a
-  * JNI/FFmpeg/ImageIO decoder drops into [[PayloadDecoder]]/[[RowDecoder]]
-  * without touching callers.
+  * `decodeImageMetaStub` is a deterministic Column STUB (fake metadata
+  * from byte length, kept for formats whose codecs this container lacks).
+  * Real pure-JVM codecs ([[BmpCodec]], [[PngCodec]], [[WavCodec]], …) run
+  * behind one per-partition lifecycle harness, [[decodeRowsPartitioned]]
+  * — schema, batch shape, partition-parallel application, open/decode/
+  * close lifecycle with task-completion cleanup; a JNI/FFmpeg/ImageIO
+  * decoder drops into [[RowDecoder]] without touching callers.
   */
 object Multimodal {
-
-  val imageMetaType: StructType = StructType(Seq(
-    StructField("byte_size", LongType),
-    StructField("magic", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_frames", IntegerType)
-  ))
 
   /** STUB decoder: deterministic metadata from byte length and the first
     * byte. A real implementation decodes headers (PNG/JPEG/WAV…) inside
@@ -46,48 +36,18 @@ object Multimodal {
   def withImageMeta(df: DataFrame, binCol: String): DataFrame =
     df.withColumn("image_meta", decodeImageMetaStub(col(binCol)))
 
-  /** Frame-sampling plan for video-ish payloads: one row per sampled frame
-    * index (every `stride`-th frame). The explode is the real distributed
-    * shape; the per-frame decode is the same stub boundary. */
-  def sampleFrames(df: DataFrame, binCol: String, stride: Int): DataFrame = {
-    require(stride > 0, "sampleFrames needs stride > 0")
-    withImageMeta(df, binCol)
-      .withColumn("frame_idx",
-        explode(sequence(lit(0), col("image_meta.n_frames") - 1, lit(stride))))
-  }
-
   /** Pluggable per-partition codec: `open()` once per partition (codec
     * contexts, model weights), `decode` per payload, `close()` at partition
-    * end. The production swap point — a JNI/FFmpeg/ImageIO decoder drops in
-    * without touching the dataflow.
+    * end. The decoder declares its own output schema (codec-specific
+    * stats, embeddings, …). The production swap point — a
+    * JNI/FFmpeg/ImageIO decoder drops in without touching the dataflow.
     *
     * IMPLEMENT AS A CLASS, NOT A SCALA `object`, when open/close manage
     * real resources: task closures deserialize per task (own instance),
     * but a Scala object's readResolve returns the JVM SINGLETON — two
     * concurrent tasks on one executor would share it, and one task's
     * completion close() would free the codec context mid-decode of the
-    * other. (The no-op-lifecycle [[StubDecoder]] is exempt.) */
-  trait PayloadDecoder extends Serializable {
-    def open(): Unit = ()
-    def close(): Unit = ()
-    /** (magic, width, height, n_frames) for a payload. */
-    def decode(bytes: Array[Byte]): (String, Int, Int, Int)
-  }
-
-  /** Deterministic stand-in matching [[decodeImageMetaStub]] bit-for-bit
-    * (spec-pinned) — the container ships no codecs. */
-  object StubDecoder extends PayloadDecoder {
-    def decode(bytes: Array[Byte]): (String, Int, Int, Int) = {
-      val size = bytes.length.toLong
-      val magic = if (bytes.isEmpty) "" else f"${bytes(0) & 0xFF}%02X"
-      ((magic, (size % 640 + 1).toInt, (size % 480 + 1).toInt,
-        (size % 24 + 1).toInt))
-    }
-  }
-
-  /** [[PayloadDecoder]] generalized to an arbitrary typed output: the same
-    * per-partition open/decode/close lifecycle, but the decoder declares
-    * its own output schema (codec-specific stats, embeddings, …). */
+    * other. (The stateless decoders in this package are exempt.) */
   trait RowDecoder extends Serializable {
     def open(): Unit = ()
     def close(): Unit = ()
@@ -96,9 +56,12 @@ object Multimodal {
     def decode(bytes: Array[Byte]): Seq[Any]
   }
 
-  /** [[decodePartitioned]] for a [[RowDecoder]]: appends the decoder's
-    * fields to each input row — ONE decoder instance per partition,
-    * streaming iterator, nothing shuffles. */
+  /** The production decode harness — the batched `mapPartitions` shape
+    * `mapInPandas` maps to on the JVM: appends the [[RowDecoder]]'s fields
+    * to each input row, ONE decoder instance per partition (open/close
+    * lifecycle), streaming iterator (no partition materialization). At
+    * 100 TB the input arrives partition-parallel from the binaryFile scan
+    * and nothing shuffles. */
   def decodeRowsPartitioned(df: DataFrame, binCol: String,
       decoder: RowDecoder): DataFrame = {
     val outSchema = StructType(df.schema.fields ++ decoder.schema.fields)
@@ -160,36 +123,4 @@ object Multimodal {
       }
       def next(): T = it.next()
     }
-
-  /** The production decode harness — the batched `mapPartitions` shape the
-    * prompt's `mapInPandas` maps to on the JVM: ONE decoder instance per
-    * partition (open/close lifecycle), streaming iterator (no partition
-    * materialization), typed output schema appended to the input row. At
-    * 100 TB the input arrives partition-parallel from the binaryFile scan
-    * and nothing shuffles. */
-  def decodePartitioned(df: DataFrame, binCol: String,
-      decoder: PayloadDecoder = StubDecoder): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("image_meta", imageMetaType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      decoder.open()
-      val close = closeOnce(decoder.close _)
-      Option(org.apache.spark.TaskContext.get())
-        .foreach(_.addTaskCompletionListener[Unit](_ => close()))
-      val wrapped = it.map { row =>
-        val bytes = row.getAs[Array[Byte]](binIdx)
-        // null payload -> null meta struct (the SQL stub twin yields null
-        // fields on null input), never bytes.length on null
-        val meta = if (bytes == null) null
-        else {
-          val (magic, w, h, f) = decoder.decode(bytes)
-          org.apache.spark.sql.Row(bytes.length.toLong, magic, w, h, f)
-        }
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ meta)
-      }
-      exhaustionFallback(wrapped, close)
-    }(enc)
-  }
 }

@@ -127,17 +127,24 @@ object ProtocolMatcher {
     *                  columns CenterID, ScannerID, ProjectID, CohortID,
     *                  Visit_label (all nullable)
     * @param protocols `mri_protocol ⋈ mri_protocol_group_target` rows
-    * @return scans + (`MriScanTypeID` nullable int, `MriProtocolGroupID`
+    * @return one row per distinct scan row with a non-null `scan_id`: its
+    *         scan columns, carried through the per-scan aggregation rather
+    *         than joined back (a join back would plan the scan input
+    *         twice), + (`MriScanTypeID` nullable int, `MriProtocolGroupID`
     *         nullable int, `protocol_status` in {identified, unknown,
     *         ambiguous, ambiguous_group, no_group})
     */
   def identify(scans: DataFrame, protocols: DataFrame): DataFrame = {
     val prot = protocols.select(protocolCols.map(c => col(c).as(s"p_$c")): _*)
-    val joined = scans.join(broadcast(prot), eligibility, "left")
+    val carried = scans.columns.filterNot(_ == "scan_id")
+    val joined = scans.filter(col("scan_id").isNotNull)
+      .join(broadcast(prot), eligibility, "left")
       .withColumn("m_type", when(paramMatch, p("MriScanTypeID")))
 
-    val perScan = joined
-      .groupBy(col("scan_id"))
+    // grouping by the scan columns too keeps every distinct scan row of a
+    // shared scan_id, and each joined copy of a row lands in its group
+    joined
+      .groupBy((col("scan_id") +: carried.map(col)): _*)
       .agg(
         countDistinct(p("MriProtocolGroupID")).as("n_groups"),
         min(p("MriProtocolGroupID")).as("g_id"),
@@ -151,15 +158,11 @@ object ProtocolMatcher {
           .when(size(col("m_types")) > 1, "ambiguous")
           .otherwise("identified")
       )
-      .select(
-        col("scan_id"),
+      .select((col("scan_id") +: carried.map(col)) :+
         when(col("protocol_status") === "identified", element_at(col("m_types"), 1))
-          .as("MriScanTypeID"),
-        when(col("n_groups") === 1, col("g_id")).as("MriProtocolGroupID"),
-        col("protocol_status")
-      )
-
-    scans.join(perScan, Seq("scan_id"), "inner")
+          .as("MriScanTypeID") :+
+        when(col("n_groups") === 1, col("g_id")).as("MriProtocolGroupID") :+
+        col("protocol_status"): _*)
   }
 
   /** Extra QC checks (`python/lib/imaging.py:706-809`).

@@ -76,7 +76,7 @@ object IngestQueries {
       val dir = SyntheticFixtures.materialize(
         "q62", "r1.edf", SyntheticFixtures.recordingBytes())
       EphysChunker.chunkStats(
-        EdfReader.asLongFormat(EdfReader.channels(s, dir)), chunkSize = 4)
+        EphysSource.channelArraysToLong(EdfReader.channels(s, dir)), chunkSize = 4)
     },
 
     // q62's pipeline through the DataSource V2 connector instead of the
@@ -114,8 +114,8 @@ object IngestQueries {
       s.table("q119_sink")
     },
 
-    // S14 BrainVision end to end: vhdr header parse → broadcast pair with
-    // the .eeg payload → INT_16 decode with per-channel resolution →
+    // S14 BrainVision end to end: vhdr header parse → its .eeg payload read
+    // as a sibling → INT_16 decode with per-channel resolution →
     // chunker (eeg/main.py:249 registers the vhdr/vmrk/eeg triple)
     "q75_brainvision_ingest" -> { (s, _) =>
       val (vhdr, eeg, vmrk) = SyntheticFixtures.brainVisionBytes()
@@ -123,7 +123,7 @@ object IngestQueries {
       SyntheticFixtures.materialize("q75", "rec1.eeg", eeg)
       SyntheticFixtures.materialize("q75", "rec1.vmrk", vmrk)
       EphysChunker.chunkStats(
-        BrainVisionReader.asLongFormat(BrainVisionReader.channels(s, dir)),
+        EphysSource.channelArraysToLong(BrainVisionReader.channels(s, dir)),
         chunkSize = 4)
     },
 
@@ -136,7 +136,7 @@ object IngestQueries {
       val dir = SyntheticFixtures.materialize("q101", "rec1.res4", res4)
       SyntheticFixtures.materialize("q101", "rec1.meg4", meg4)
       EphysChunker.chunkStats(
-        CtfReader.asLongFormat(CtfReader.channels(s, dir)), chunkSize = 4)
+        EphysSource.channelArraysToLong(CtfReader.channels(s, dir)), chunkSize = 4)
     },
 
     // S14 EEGLAB end to end: .set MAT v6 walk (EEG struct → data matrix,
@@ -146,7 +146,7 @@ object IngestQueries {
       val (set, _) = SyntheticFixtures.eeglabRecordingBytes()
       val dir = SyntheticFixtures.materialize("q102", "rec1.set", set)
       EphysChunker.chunkStats(
-        EeglabReader.asLongFormat(EeglabReader.channels(s, dir)), chunkSize = 4)
+        EphysSource.channelArraysToLong(EeglabReader.channels(s, dir)), chunkSize = 4)
     },
 
     // S5/S6/U4/P8 end to end: TSV ingest with 'n/a'/''→NULL, union-of-keys
@@ -193,7 +193,7 @@ object IngestQueries {
     "q78_chunk_sink" -> { (s, _) =>
       val dir = SyntheticFixtures.materialize(
         "q78", "r1.edf", SyntheticFixtures.recordingBytes())
-      val long0 = EdfReader.asLongFormat(EdfReader.channels(s, dir))
+      val long0 = EphysSource.channelArraysToLong(EdfReader.channels(s, dir))
       val ds = EphysChunker.downsampleAvg(long0, 4)
       val chunks = EphysChunker.chunkArrays(long0, 4)
         .withColumn("downsampling", lit(0))
@@ -1437,7 +1437,7 @@ object IngestQueries {
       val bytes = try in.readAllBytes() finally in.close()
       val dir = SyntheticFixtures.materialize("q113", "rec1.set", bytes)
       EphysChunker.chunkStats(
-        EeglabReader.asLongFormat(EeglabReader.channels(s, dir)), chunkSize = 4)
+        EphysSource.channelArraysToLong(EeglabReader.channels(s, dir)), chunkSize = 4)
     },
 
     // Ingest scan audits end to end (ADVICE r3): parse failures surface as

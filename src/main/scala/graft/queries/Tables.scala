@@ -30,7 +30,7 @@ object Tables {
     val df = table(s, dir, name)
     val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
     val small = scala.util.Try {
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
       fs.getContentSummary(p).getLength < OneSplitBytes
     }.getOrElse(false)
     if (small) df.repartition(s.sparkContext.defaultParallelism) else df

@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** S14 EEG raw reader, BrainVision (SURVEY.md §2.1): the second
   * codec-free ephys format after [[EdfReader]] — the reference's BIDS EEG
@@ -19,10 +18,10 @@ import org.apache.spark.sql.functions._
   * All three are published-spec byte/text layouts (Brain Products
   * "BrainVision Core Data Format 1.0"), so the parse is row-local plain
   * Scala, hardened to None/empty on malformed input like the DICOM/EDF/tar
-  * walkers. Distribution shape: headers are parsed from a `binaryFile`
-  * scan; the header→payload pairing is an equi-join on the sibling path
-  * (headers are tiny — the join broadcasts them); sample decode happens
-  * partition-parallel on the payload side. */
+  * walkers. Distribution shape: the `binaryFile` scan reads only the
+  * `.vhdr` headers; each task reads the `.eeg` its header names through
+  * [[EphysSource.channels]]'s sibling reader and decodes it
+  * partition-parallel, with no join and no second scan. */
 object BrainVisionReader {
 
   final case class ChannelInfo(name: String, resolution: Double)
@@ -157,43 +156,16 @@ object BrainVisionReader {
     out.toSeq
   }
 
-  final case class BvChannel(
-      file_path: String,
-      channel: String,
-      sampling_rate_hz: Double,
-      n_samples: Long,
-      values: Array[Double])
-
-  private def siblingPath(vhdrPath: String, fileName: String): String = {
-    val slash = vhdrPath.lastIndexOf('/')
-    if (slash < 0) fileName else vhdrPath.substring(0, slash + 1) + fileName
-  }
-
-  /** Distributed scan: every `.vhdr` under `dir` is parsed, paired with its
-    * `.eeg` payload by sibling path (broadcast equi-join — headers are
-    * bytes, payloads are the bulk), and decoded partition-parallel into one
-    * row per channel, ready for [[EphysSource.channelArraysToLong]] →
-    * [[graft.operators.EphysChunker]]. */
-  def channels(spark: SparkSession, dir: String): Dataset[BvChannel] = {
-    import spark.implicits._
-    val vhdrs = DicomSource.scanDir(spark, dir, "*.vhdr")
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (p, c) =>
-        val text = new String(c, UTF_8)
-        parseVhdr(text).map(h => (siblingPath(p, h.dataFile), text))
-      }.toDF("data_path", "vhdr_text")
-    val payloads = DicomSource.scanDir(spark, dir, "*.eeg")
-      .select(col("path").as("data_path"), col("content"))
-    payloads.join(broadcast(vhdrs), "data_path")
-      .select(col("data_path"), col("vhdr_text"), col("content"))
-      .as[(String, String, Array[Byte])]
-      .flatMap { case (p, text, bytes) =>
-        parseVhdr(text).toSeq.flatMap(h =>
-          signalTraces(h, bytes).map { case (name, rate, vals) =>
-            BvChannel(p, name, rate, vals.length.toLong, vals)
-          })
-      }
-  }
+  /** Distributed scan: every `.vhdr` under `dir` is parsed and its
+    * `DataFile` payload read task-locally as a sibling (as
+    * [[CtfReader]] reads `.meg4`), then decoded into one
+    * [[EphysSource.Channel]] row per channel; `file_path` names the
+    * `.vhdr`. */
+  def channels(spark: SparkSession, dir: String): Dataset[EphysSource.Channel] =
+    EphysSource.channels(spark, dir, "*.vhdr") { (_, bytes, sibling) =>
+      parseVhdr(new String(bytes, UTF_8)).toSeq.flatMap(h =>
+        sibling(h.dataFile).toSeq.flatMap(signalTraces(h, _)))
+    }
 
   /** Distributed marker scan: one row per `.vmrk` marker. */
   def markers(spark: SparkSession, dir: String): DataFrame = {
@@ -208,8 +180,4 @@ object BrainVisionReader {
       .toDF("file_path", "marker_index", "marker_type", "description",
         "position_sample", "points", "channel")
   }
-
-  /** channels → the chunker's long input (channel, sample_index, value). */
-  def asLongFormat(channels: Dataset[BvChannel]): DataFrame =
-    EphysSource.channelArraysToLong(channels.toDF())
 }

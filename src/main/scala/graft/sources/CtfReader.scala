@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.US_ASCII
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** S14 MEG raw reader, CTF `.ds` (SURVEY.md §2.1): the reference ingests
   * CTF datasets through MNE in
@@ -201,46 +201,27 @@ object CtfReader {
     }
   }
 
-  final case class CtfChannel(
-      file_path: String,
-      channel: String,
-      sampling_rate_hz: Double,
-      n_samples: Long,
-      values: Array[Double])
-
   /** Distributed scan: every `.res4` under `dir` (typically inside `.ds`
     * dataset directories) parsed partition-parallel; each task streams its
-    * sibling `.meg4` from the same filesystem. One row per channel, ready
-    * for [[EphysSource.channelArraysToLong]] →
-    * [[graft.operators.EphysChunker]]. */
+    * sibling `.meg4` and continuation files. One [[EphysSource.Channel]]
+    * row per channel. */
   def channels(spark: SparkSession, dir: String,
-      glob: String = "*.res4"): Dataset[CtfChannel] = {
-    import spark.implicits._
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    DicomSource.scanDir(spark, dir, glob)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (p, res4Bytes) =>
-        parseRes4(res4Bytes).toSeq.flatMap { h =>
-          val res4Path = DicomSource.pathOf(p)
-          val stem = res4Path.getName.replaceAll("\\.res4$", "")
-          def sibling(name: String) = new org.apache.hadoop.fs.Path(
-            res4Path.getParent, name)
-          // the primary .meg4 plus CTF's 2 GB continuation files
-          // (.1_meg4, .2_meg4, …) in order, stopping at the first gap;
-          // the iterator stays LAZY so tracesMulti holds one raw file at
-          // a time
-          val images = Iterator.from(0)
-            .map(i => if (i == 0) s"$stem.meg4" else s"$stem.$i" + "_meg4")
-            .map(n => DicomSource.readSiblingBytes(conf.value, sibling(n)))
-            .takeWhile(_.isDefined)
-            .flatten
-          tracesMulti(h, images).map { case (name, rate, vals) =>
-            CtfChannel(p, name, rate, vals.length.toLong, vals)
-          }
-        }
+      glob: String = "*.res4"): Dataset[EphysSource.Channel] =
+    EphysSource.channels(spark, dir, glob) { (res4Path, res4Bytes, sibling) =>
+      parseRes4(res4Bytes).toSeq.flatMap { h =>
+        val stem = res4Path.getName.replaceAll("\\.res4$", "")
+        // the primary .meg4 plus CTF's 2 GB continuation files
+        // (.1_meg4, .2_meg4, …) in order, stopping at the first gap;
+        // the iterator stays LAZY so tracesMulti holds one raw file at
+        // a time
+        val images = Iterator.from(0)
+          .map(i => if (i == 0) s"$stem.meg4" else s"$stem.$i" + "_meg4")
+          .map(sibling)
+          .takeWhile(_.isDefined)
+          .flatten
+        tracesMulti(h, images)
       }
-  }
+    }
 
   final case class CtfScanAudit(
       file_path: String,
@@ -261,7 +242,7 @@ object CtfReader {
       glob: String = "*.res4"): Dataset[CtfScanAudit] = {
     import spark.implicits._
     val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+      spark.sessionState.newHadoopConf())
     DicomSource.scanDir(spark, dir, glob)
       .select("path", "content").as[(String, Array[Byte])]
       .map { case (p, res4Bytes) =>
@@ -282,8 +263,4 @@ object CtfReader {
         }
       }
   }
-
-  /** channels → the chunker's long input (channel, sample_index, value). */
-  def asLongFormat(channels: Dataset[CtfChannel]): DataFrame =
-    EphysSource.channelArraysToLong(channels.toDF())
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.US_ASCII
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** S14 EEG raw reader, EDF/EDF+ (SURVEY.md §2.1): replaces the round-1
   * "codecs out of scope" boundary for the one ephys format that needs no
@@ -158,29 +158,9 @@ object EdfReader {
     }
   }
 
-  final case class EdfChannel(
-      file_path: String,
-      channel: String,
-      sampling_rate_hz: Double,
-      n_samples: Long,
-      values: Array[Double])
-
   /** Distributed scan: every `.edf` under `dir` parsed partition-parallel
-    * into one row per channel, ready for
-    * [[EphysSource.channelArraysToLong]] → [[graft.operators.EphysChunker]].
-    * Same codec-boundary shape as [[DicomSource]]/[[TarGzSource]]. */
-  def channels(spark: SparkSession, dir: String, glob: String = "*.edf"): Dataset[EdfChannel] = {
-    import spark.implicits._
-    DicomSource.scanDir(spark, dir, glob)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (p, c) =>
-        signalTraces(c).map { case (label, rate, vals) =>
-          EdfChannel(p, label, rate, vals.length.toLong, vals)
-        }
-      }
-  }
-
-  /** channels → the chunker's long input (channel, sample_index, value). */
-  def asLongFormat(channels: Dataset[EdfChannel]): DataFrame =
-    EphysSource.channelArraysToLong(channels.toDF())
+    * into one [[EphysSource.Channel]] row per channel. */
+  def channels(spark: SparkSession, dir: String,
+      glob: String = "*.edf"): Dataset[EphysSource.Channel] =
+    EphysSource.channels(spark, dir, glob)((_, bytes, _) => signalTraces(bytes))
 }

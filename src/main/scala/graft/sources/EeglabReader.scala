@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets.US_ASCII
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** S14 EEG raw reader, EEGLAB `.set` (SURVEY.md §2.1): the reference loads
   * these through MNE in
@@ -412,43 +412,28 @@ object EeglabReader {
     toTraces(nChan, flat)
   }
 
-  final case class EeglabChannel(
-      file_path: String,
-      channel: String,
-      sampling_rate_hz: Double,
-      n_samples: Long,
-      values: Array[Double])
-
   /** Distributed scan: every `.set` under `dir` parsed partition-parallel;
-    * a `data`-as-filename recording streams its `.fdt` task-locally (same
-    * sibling pattern as [[CtfReader.channels]]). One row per channel,
-    * ready for [[EphysSource.channelArraysToLong]] →
-    * [[graft.operators.EphysChunker]]. */
+    * a `data`-as-filename recording reads its `.fdt` task-locally (same
+    * sibling pattern as [[CtfReader.channels]]). One
+    * [[EphysSource.Channel]] row per channel. */
   def channels(spark: SparkSession, dir: String,
-      glob: String = "*.set"): Dataset[EeglabChannel] = {
-    import spark.implicits._
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    DicomSource.scanDir(spark, dir, glob)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (p, bytes) =>
-        parseSet(bytes).toSeq.flatMap { rec =>
-          val traces = rec.fdtFile match {
-            case None => rec.data
-            case Some(fdtName) =>
-              val setPath = DicomSource.pathOf(p)
-              val fdtPath = new org.apache.hadoop.fs.Path(
-                setPath.getParent, new org.apache.hadoop.fs.Path(fdtName).getName)
-              DicomSource.readSiblingBytes(conf.value, fdtPath)
-                .map(fdtTraces(rec.channelNames.length, _))
-                .getOrElse(IndexedSeq.empty)
-          }
-          rec.channelNames.zip(traces).map { case (name, vals) =>
-            EeglabChannel(p, name, rec.sampleRateHz, vals.length.toLong, vals)
-          }
+      glob: String = "*.set"): Dataset[EphysSource.Channel] =
+    EphysSource.channels(spark, dir, glob) { (_, bytes, sibling) =>
+      parseSet(bytes).toSeq.flatMap { rec =>
+        val traces = rec.fdtFile match {
+          case None => rec.data
+          case Some(fdtName) =>
+            // EEG.data may carry the writer's directory; the .fdt sits
+            // beside the .set
+            sibling(fdtName.substring(fdtName.lastIndexOf('/') + 1))
+              .map(fdtTraces(rec.channelNames.length, _))
+              .getOrElse(IndexedSeq.empty)
+        }
+        rec.channelNames.zip(traces).map { case (name, vals) =>
+          (name, rec.sampleRateHz, vals)
         }
       }
-  }
+    }
 
   /** MATLAB v7.3 detection: a v7.3 `.set` is an HDF5 file — the header
     * text starts `MATLAB 7.3` and the HDF5 signature sits at offset 512
@@ -494,8 +479,4 @@ object EeglabReader {
         }
       }
   }
-
-  /** channels → the chunker's long input (channel, sample_index, value). */
-  def asLongFormat(channels: Dataset[EeglabChannel]): DataFrame =
-    EphysSource.channelArraysToLong(channels.toDF())
 }

@@ -76,7 +76,7 @@ object ObjectStore {
       force: Boolean = false): DataFrame = {
     import spark.implicits._
     val conf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+      spark.sessionState.newHadoopConf())
     val base = bucketUrl.stripSuffix("/")
     // decoded filesystem path of the scan root — binaryFile paths are
     // percent-encoded URI strings, not raw paths
@@ -115,7 +115,7 @@ object ObjectStore {
     val manifest = uploadDir(spark, localDir, bucketUrl, force)
       .localCheckpoint(true)
     val conf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+      spark.sessionState.newHadoopConf())
     val pushed = manifest.filter(col("action") =!= SkippedExists)
     if (deleteLocal) {
       pushed.select(col("local_path")).as[String]

@@ -134,7 +134,7 @@ object Sinks {
   def compactParquet(spark: org.apache.spark.sql.SparkSession, dir: String,
       outDir: String, targetBytes: Long = 128L << 20): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val bytes = fs.getContentSummary(p).getLength
     val parts = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
     val df = spark.read.parquet(dir)

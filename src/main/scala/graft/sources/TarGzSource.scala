@@ -14,8 +14,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * Round 1 scoped this driver-side; this makes it a real partition-parallel
   * operator instead: `binaryFile` scans archives in parallel, each archive
   * is walked row-locally (a genuine per-file codec boundary, same category
-  * as [[DicomSource]]/[[Multimodal.decodePartitioned]]), and members come
-  * back as ordinary rows ready for the DICOM/BIDS verticals. Nothing
+  * as [[DicomSource]]/[[graft.operators.Multimodal.decodeRowsPartitioned]]),
+  * and members come back as ordinary rows ready for the DICOM/BIDS
+  * verticals. Nothing
   * shuffles; at 100 TB the cost is exactly one pass over the archive bytes.
   *
   * Zero dependencies by design: gzip is `java.util.zip.GZIPInputStream`

@@ -22,8 +22,9 @@ import graft.sources.EdfReader
 /** DataSource V2 front door for the S14 EDF reader:
   * `spark.read.format("edf").load(dir)` (registered via
   * `META-INF/services`, or by fully-qualified class name). One row per
-  * non-annotation channel, same schema as [[EdfReader.EdfChannel]], so it
-  * drops into the existing `channelArraysToLong` → `EphysChunker` path.
+  * non-annotation channel, same schema as
+  * [[graft.sources.EphysSource.Channel]], so it drops into the existing
+  * `channelArraysToLong` → `EphysChunker` path.
   *
   * Why a connector and not just the `binaryFile`-based [[EdfReader.channels]]:
   * the V2 scan surfaces the two scan-time optimizations Catalyst can only

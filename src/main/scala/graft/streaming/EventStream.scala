@@ -433,7 +433,7 @@ object EventStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         val spark = batch.sparkSession
-        val conf = spark.sparkContext.hadoopConfiguration
+        val conf = spark.sessionState.newHadoopConf()
         val priorIds = priorPartIds(indexDir, "batch_id=", id, conf)
         // the batch is shingled+hashed ONCE: the checkpointed artifact
         // feeds both the probe and the index append
@@ -486,7 +486,7 @@ object EventStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         val spark = batch.sparkSession
-        val conf = spark.sparkContext.hadoopConfiguration
+        val conf = spark.sessionState.newHadoopConf()
         val priorIds = priorPartIds(indexDir, "batch_id=", id, conf)
         val batIdx = graft.operators.Dedup
           .hammingIndex(batch.toDF(), idCol, hashCol, bands)
@@ -551,7 +551,7 @@ object EventStream {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         val spark = batch.sparkSession
         import graft.operators.Similarity
-        val conf = spark.sparkContext.hadoopConfiguration
+        val conf = spark.sessionState.newHadoopConf()
         val idxPrior = priorPartIds(indexDir, "batch_id=", id, conf)
         // the batch is hashed ONCE: the checkpointed artifact feeds the
         // mining fold and the index append
@@ -674,7 +674,7 @@ object EventStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         val spark = batch.sparkSession
-        val conf = spark.sparkContext.hadoopConfiguration
+        val conf = spark.sessionState.newHadoopConf()
         // fresh-checkpoint guard (the sibling sinks' discipline): a later
         // staged batch id than the current one means a restarted stream
         // with reset batch ids is about to overwrite accumulated batches
@@ -749,7 +749,7 @@ object EventStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         val spark = batch.sparkSession
-        val conf = spark.sparkContext.hadoopConfiguration
+        val conf = spark.sessionState.newHadoopConf()
         val priorIds = priorPartIds(s"$outDir/staged", "batch_id=", id,
           conf)
         if (!batch.isEmpty) {

@@ -16,7 +16,12 @@ package graft
   * q144, q145 and q153 read their upload once too (a per-archive window
   * for the single-study check and the tarchive binding, one aggregation
   * for the dcmconv plan): q90 went from 10 jobs to 9, q144 from 5 to 3,
-  * q145 from 4 to 3 and q153 from 7 to 2.
+  * q145 from 4 to 3 and q153 from 7 to 2. `ProtocolMatcher.identify`
+  * groups by the scan columns instead of joining them back: q90 went
+  * from 9 jobs to 4, q17 from 7 to 6 and q38 from 9 to 8. The ephys
+  * readers read their payload siblings task-locally and the chunk
+  * manifest takes its ranges over windows instead of broadcast
+  * cross-joins: q75 went from 4 jobs to 3 and q78 from 26 to 11.
   *
   * q307 is the exception to fixed counts: AQE sometimes runs a broadcast
   * build of its component loop that it then cancels, which only ever
@@ -27,10 +32,14 @@ package graft
 class JobBudgetSpec extends SparkSpec {
 
   private val budgets = Seq(
+    "q17_protocol_identification" -> 6,
     "q27_minhash_lsh" -> 17,
+    "q38_insertion_summary" -> 8,
     "q61_archive_ingest" -> 1,
     "q79_dicom_summary" -> 2,
-    "q90_archive_loader" -> 9,
+    "q75_brainvision_ingest" -> 3,
+    "q78_chunk_sink" -> 11,
+    "q90_archive_loader" -> 4,
     "q109_object_store" -> 5,
     "q135_tarchive_validation" -> 25,
     "q144_series_records" -> 3,

@@ -59,17 +59,4 @@ class BmpCodecSpec extends SparkSpec {
       BmpCodec.BmpStatsDecoder.decode(mut)
     }
   }
-
-  test("decodePartitioned runs the REAL codec through the lifecycle harness") {
-    import spark.implicits._
-    val df = Seq(
-      ("a", bmpBytes(grad)),
-      ("b", "junk".getBytes("US-ASCII"))).toDF("id", "content")
-    val r = Multimodal.decodePartitioned(df, "content", BmpCodec.BmpDecoder)
-      .selectExpr("id", "image_meta.magic", "image_meta.width",
-        "image_meta.height", "image_meta.n_frames")
-      .collect().map(x => (x.getString(0), x.getString(1), x.getInt(2),
-        x.getInt(3), x.getInt(4))).sortBy(_._1)
-    assert(r.toSeq == Seq(("a", "BM", 2, 2, 1), ("b", "", 0, 0, 0)))
-  }
 }

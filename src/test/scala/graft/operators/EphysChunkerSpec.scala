@@ -69,25 +69,33 @@ class EphysChunkerSpec extends SparkSpec {
   }
 
   test("channelRanges: per-channel + widened global") {
-    val r = EphysChunker.channelRanges(samples).collect()
+    val r = EphysChunker.channelRanges(samples)
+    assert(r.columns.toSeq == Seq("channel", "channel_min", "channel_max"))
+    // the series range is widened once, where the manifest sides merge
+    def side(ch: String) =
+      r.filter(col("channel") === ch).withColumnRenamed("channel", "index")
+    val m = EphysChunker.mergeManifest(side("A"), side("B")).collect()
       .map(x => x.getString(0) -> x).toMap
-    assert(r("A").getAs[Double]("channel_min") == 0.0)
-    assert(r("A").getAs[Double]("series_max") == 115.0)
-    assert(r("B").getAs[Double]("series_min") == 0.0)
+    assert(m("A").getAs[Double]("channel_min") == 0.0)
+    assert(m("A").getAs[Double]("channel_max") == 69.0)
+    assert(m("A").getAs[Double]("series_max") == 115.0)
+    assert(m("B").getAs[Double]("series_min") == 0.0)
   }
 
   test("mergeManifest: new-side precedence, union by index, widened range") {
     import spark.implicits._
     val old = Seq((0, "chA-old", -5.0, 10.0), (1, "chB", -1.0, 1.0))
-      .toDF("index", "name", "series_min", "series_max")
+      .toDF("index", "name", "channel_min", "channel_max")
     val neu = Seq((0, "chA-new", -2.0, 20.0), (2, "chC", 0.0, 3.0))
-      .toDF("index", "name", "series_min", "series_max")
+      .toDF("index", "name", "channel_min", "channel_max")
     val m = EphysChunker.mergeManifest(old, neu).collect()
       .map(r => r.getInt(0) -> r).toMap
     assert(m.size == 3)
     assert(m(0).getAs[String]("name") == "chA-new")
+    assert(m(0).getAs[Double]("channel_min") == -2.0)
     assert(m(1).getAs[String]("name") == "chB")
-    assert(m(0).getAs[Double]("series_min") == -5.0) // widened from old
-    assert(m(0).getAs[Double]("series_max") == 20.0)
+    // widened over both sides, the shadowed old chA range included
+    assert(m.values.forall(_.getAs[Double]("series_min") == -5.0))
+    assert(m.values.forall(_.getAs[Double]("series_max") == 20.0))
   }
 }

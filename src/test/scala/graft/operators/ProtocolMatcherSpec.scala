@@ -138,6 +138,17 @@ class ProtocolMatcherSpec extends SparkSpec {
   test("NULL value fails a bounded range") {
     assert(result(9L)._2 == "unknown")
   }
+  test("scans sharing a scan_id each keep their row and their own match") {
+    // q90's series_number*100 + floor(TE) key collides across series
+    val out = ProtocolMatcher.identify(df(scanSchema,
+      scan(205L, "T1 MPRAGE", trSec = 2.3, teSec = 0.105),
+      scan(205L, "T2 Weighted axial", teSec = 0.005)), protocols)
+      .select("EchoTime", "MriScanTypeID", "protocol_status")
+      .collect().map(r => r.getDouble(0) -> (Option(r.get(1)), r.getString(2)))
+    assert(out.toMap == Map(
+      0.105 -> (Some(101), "identified"), 0.005 -> (Some(102), "identified")))
+    assert(out.length == 2)
+  }
 
   // ---- extra checks engine ----
 

@@ -82,9 +82,45 @@ class BrainVisionReaderSpec extends SparkSpec {
     val ch = BrainVisionReader.channels(spark, dir).collect()
       .map(c => c.channel -> c).toMap
     assert(ch.keySet == Set("Fp1", "Cz"))
+    assert(ch.values.forall(_.file_path.endsWith("/rec1.vhdr")))
     assert(ch("Fp1").n_samples == 10L && ch("Fp1").sampling_rate_hz == 4.0)
     assert(ch("Fp1").values.toSeq == (1 to 10).map(_.toDouble))
     val mk = BrainVisionReader.markers(spark, dir).collect()
     assert(mk.length == 3)
+  }
+
+  test("a DataFile that names no readable sibling yields no rows, " +
+      "never a failed task") {
+    val dir = SyntheticFixtures.freshDir("bvspec_bad_datafile")
+    def put(name: String, b: Array[Byte]) =
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, name), b)
+    put("good.vhdr", vhdrB)
+    put("rec1.eeg", eegB)
+    put("missing.vhdr",
+      vhdrText.replace("DataFile=rec1.eeg", "DataFile=gone.eeg").getBytes(UTF_8))
+    // "a:b" parses as a scheme with a relative path: no Hadoop Path
+    put("unparsable.vhdr",
+      vhdrText.replace("DataFile=rec1.eeg", "DataFile=a:b").getBytes(UTF_8))
+    val files = BrainVisionReader.channels(spark, dir).collect()
+      .map(c => new java.io.File(c.file_path).getName).toSet
+    assert(files == Set("good.vhdr"))
+  }
+
+  test("a DataFile outside the scanned directory is never read") {
+    val outer = java.nio.file.Paths.get(
+      SyntheticFixtures.freshDir("bvspec_outside"))
+    val dir = java.nio.file.Files.createDirectories(outer.resolve("inner"))
+    java.nio.file.Files.write(outer.resolve("outside.eeg"), eegB)
+    def put(name: String, dataFile: String) =
+      java.nio.file.Files.write(dir.resolve(name), vhdrText
+        .replace("DataFile=rec1.eeg", s"DataFile=$dataFile").getBytes(UTF_8))
+    put("good.vhdr", "rec1.eeg")
+    java.nio.file.Files.write(dir.resolve("rec1.eeg"), eegB)
+    put("up.vhdr", "../outside.eeg")
+    put("absolute.vhdr", outer.resolve("outside.eeg").toString)
+    put("uri.vhdr", outer.resolve("outside.eeg").toUri.toString)
+    val files = BrainVisionReader.channels(spark, dir.toString).collect()
+      .map(c => new java.io.File(c.file_path).getName).toSet
+    assert(files == Set("good.vhdr"))
   }
 }

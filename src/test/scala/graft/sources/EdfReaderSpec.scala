@@ -121,7 +121,7 @@ class EdfReaderSpec extends SparkSpec {
     val rows = ch.collect()
     assert(rows.map(r => (r.channel, r.n_samples, r.sampling_rate_hz)).toSet ===
       Set(("EEG Fpz-Cz", 8L, 2.0), ("ECG", 4L, 1.0)))
-    val long = EdfReader.asLongFormat(ch)
+    val long = EphysSource.channelArraysToLong(ch)
     assert(long.columns.toSeq === Seq("channel", "sample_index", "value"))
     assert(long.count() === 12)
     import org.apache.spark.sql.functions._

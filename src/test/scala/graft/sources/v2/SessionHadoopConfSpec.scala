@@ -8,7 +8,8 @@ import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
-import graft.sources.{SyntheticFixtures, TarSink, WarcIO}
+import graft.sources.{BrainVisionReader, CtfReader, EeglabReader,
+  SyntheticFixtures, TarSink, WarcIO}
 
 /** The local file system under a scheme that only a session conf names.
   * With Hadoop's FileSystem cache off for the scheme, every lookup reads
@@ -24,10 +25,11 @@ object SessionOnlyFileSystem {
   val Scheme = "graftconf"
 }
 
-/** The session's Hadoop conf reaches every DSv2 file connector: the
-  * driver-side listing, the seen-file log and the executor-side readers
-  * and writers all resolve a scheme registered with `spark.conf.set`
-  * alone, and read the same rows as through `file:`. */
+/** The session's Hadoop conf reaches every DSv2 file connector and the
+  * ephys readers' sibling reads: the driver-side listing, the seen-file
+  * log and the executor-side readers and writers all resolve a scheme
+  * registered with `spark.conf.set` alone, and read the same rows as
+  * through `file:`. */
 class SessionHadoopConfSpec extends SparkSpec {
   import SessionOnlyFileSystem.Scheme
 
@@ -95,6 +97,35 @@ class SessionHadoopConfSpec extends SparkSpec {
         rows(spark.read.format("edf").load(edf)
           .select("channel", "n_samples"), "file_path"))
     }
+  }
+
+  test("batch: the ctf, eeglab (.fdt) and brainvision readers read their " +
+      "siblings through the session-only scheme as through file:") {
+    val ctf = SyntheticFixtures.freshDir("hconf_ctf")
+    val (res4, meg4) = SyntheticFixtures.ctfRecordingBytes()
+    write(ctf, "rec1.res4", res4)
+    write(ctf, "rec1.meg4", meg4)
+    val eeglab = SyntheticFixtures.freshDir("hconf_eeglab")
+    val (set, fdt) = SyntheticFixtures.eeglabRecordingBytes(Some("rec1.fdt"))
+    write(eeglab, "rec1.set", set)
+    write(eeglab, "rec1.fdt", fdt)
+    val bv = SyntheticFixtures.freshDir("hconf_bv")
+    val (vhdr, eeg, _) = SyntheticFixtures.brainVisionBytes()
+    write(bv, "rec1.vhdr", vhdr)
+    write(bv, "rec1.eeg", eeg)
+    val cases = Seq[(String, String, String => DataFrame)](
+      ("ctf", ctf, CtfReader.channels(spark, _).toDF()),
+      ("eeglab", eeglab, EeglabReader.channels(spark, _).toDF()),
+      ("brainvision", bv, BrainVisionReader.channels(spark, _).toDF()))
+    val local = cases.map { case (_, dir, read) => rows(read(dir), "file_path") }
+    val differ = withScheme {
+      cases.zip(local).collect {
+        case ((name, dir, read), want)
+            if want.isEmpty || rows(read(viaScheme(dir)), "file_path") != want =>
+          name
+      }
+    }
+    assert(differ.isEmpty, differ.mkString(", "))
   }
 
   test("stream: two arrival waves through the seen-file log, source and " +
