@@ -25,4 +25,14 @@ class HadoopConfGuardSpec extends AnyFunSuite {
       Seq("sparkContext.hadoopConfiguration"), Set.empty)
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  /** `src/main/resources/core-site.xml` is the one binding of `file:`: a
+    * binding set in code reaches only the confs it is set on, after the
+    * JVM-wide `file:` FileSystem is already cached. */
+  test("file: is bound only in core-site.xml") {
+    val hits = SourceScan.hits(Seq("src/main/scala", "src/test/scala"),
+      Seq("fs.file.impl", "fs.AbstractFileSystem.file.impl"),
+      Set("HadoopConfGuardSpec.scala"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }
