@@ -5,15 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.operators.EphysChunker
 import graft.streaming.EventStream
+import graft.queries.Tables.table
 
 /** Time-series chunking (T1-T3) and streaming-analog (T5) queries over the
   * events table: each user's event sequence plays an ephys channel
   * (channel = user_id, sample_index = dense per-user order by event_id).
   */
 object ChunkQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** events with `ts` normalized to int64 naive-UTC nanoseconds, tolerant of
     * the encodings the test-data generator has produced across rounds:
@@ -27,7 +25,7 @@ object ChunkQueries {
     * driver drop the query without an err entry. */
   private[queries] def eventsNs(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val raw = t(s, dir, "events")
+    val raw = table(s, dir, "events")
     val ns = raw.schema("ts").dataType match {
       case LongType => col("ts")
       case TimestampNTZType | TimestampType =>
@@ -79,7 +77,7 @@ object ChunkQueries {
     // ids ≡0 (mod 3) already chunked; a second parameter name exercises
     // the name filter
     "q279_chunking_selection" -> { (s, dir) =>
-      val part = t(s, dir, "part")
+      val part = table(s, dir, "part")
       val files = part.filter(pmod(col("p_partkey"), lit(5)) =!= 4)
         .select(col("p_partkey").as("physio_file_id"),
           when(pmod(col("p_partkey"), lit(4)) === 0, "ctf")

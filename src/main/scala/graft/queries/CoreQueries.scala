@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Predicates._
+import graft.queries.Tables.table
 
 /** Core relational operator coverage (SURVEY.md §2.2-§2.7) expressed over the
   * driver's star-schema testdata. Each query maps 1:1 to an operator family in
@@ -17,15 +18,12 @@ import graft.functions.Predicates._
   */
 object CoreQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** events.parquet carries TIMESTAMP(NANOS); with
     * `spark.sql.legacy.parquet.nanosAsLong` it arrives as LongType nanos.
     * Convert with exact integer division (a double division would round —
     * epoch-nanos exceed 2^53). */
   private[queries] def events(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = table(s, dir, "events")
     if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else raw
@@ -54,7 +52,7 @@ object CoreQueries {
     // column (each pass's ReadSchema is one pruned field; columnar storage
     // makes N pruned scans the scale shape, not one N-way expand)
     "q214_profile_orders" -> { (s, dir) =>
-      graft.operators.Profiler.profile(t(s, dir, "orders"), ProfiledOrderCols)
+      graft.operators.Profiler.profile(table(s, dir, "orders"), ProfiledOrderCols)
     },
 
     // Whole-catalog data card: ONE profile row per catalog table (its key
@@ -64,7 +62,7 @@ object CoreQueries {
     // union is the whole catalog's health summary in one plan.
     "q257_catalog_profile" -> { (s, dir) =>
       CatalogKeyCols.map { case (tn, key) =>
-        graft.operators.Profiler.profile(t(s, dir, tn), Seq(key))
+        graft.operators.Profiler.profile(table(s, dir, tn), Seq(key))
           .select(lit(tn).as("table_name"), col("col_name"), col("n_rows"),
             col("n_null"), col("n_distinct"), col("min_str"),
             col("max_str"))
@@ -75,11 +73,11 @@ object CoreQueries {
     // in integer ppm over exact cents — the contribution-margin reporting
     // shape; the share join runs on the nation-sized aggregate
     "q217_revenue_share" -> { (s, dir) =>
-      val j = t(s, dir, "orders")
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")),
+      val j = table(s, dir, "orders")
+        .join(table(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+        .join(broadcast(table(s, dir, "nation")),
           col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")),
+        .join(broadcast(table(s, dir, "region")),
           col("n_regionkey") === col("r_regionkey"))
       val nat = j.groupBy(col("r_name"), col("n_name"))
         .agg(sum(round(col("o_totalprice") * 100).cast("long"))
@@ -96,7 +94,7 @@ object CoreQueries {
     // the distributed range-sort ordinal + the two-level PrefixSum scan,
     // never a single-partition window
     "q218_pareto_abc" -> { (s, dir) =>
-      val rev = t(s, dir, "lineitem")
+      val rev = table(s, dir, "lineitem")
         .groupBy(col("l_partkey"))
         .agg(sum(round(col("l_extendedprice") * 100).cast("long")).as("cents"))
       val ranked = graft.functions.Ordinals.withGlobalOrdinal(rev,
@@ -120,8 +118,8 @@ object CoreQueries {
     // Fulfillment latency: ship-date minus order-date in whole days,
     // dyadic percentiles per order priority — one join + one agg
     "q219_fulfillment_latency" -> { (s, dir) =>
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      table(s, dir, "lineitem")
+        .join(table(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
         .select(col("o_orderpriority"),
           datediff(col("l_shipdate"), col("o_orderdate")).cast("long")
             .as("lat"))
@@ -139,7 +137,7 @@ object CoreQueries {
     // the q185 domain-table percentile operator, joined back
     "q220_rfm_scores" -> { (s, dir) =>
       import graft.operators.CorpusOps
-      val o = t(s, dir, "orders")
+      val o = table(s, dir, "orders")
       val mx = o.agg(max(col("o_orderdate")).as("__mx"))
       val cust = o.groupBy(col("o_custkey"))
         .agg(max(col("o_orderdate")).as("__last"),
@@ -167,11 +165,11 @@ object CoreQueries {
     // each nation — zero-revenue suppliers included (left join), bounded-
     // heap k-selection, rank window on <= k rows per nation
     "q221_supplier_rank" -> { (s, dir) =>
-      val rev = t(s, dir, "lineitem")
+      val rev = table(s, dir, "lineitem")
         .groupBy(col("l_suppkey"))
         .agg(sum(round(col("l_extendedprice") * 100).cast("long")).as("cents"))
-      val sup = t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation")),
+      val sup = table(s, dir, "supplier")
+        .join(broadcast(table(s, dir, "nation")),
           col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("s_name"), col("n_name"))
       val j = sup.join(rev, col("s_suppkey") === col("l_suppkey"), "left")
@@ -188,8 +186,8 @@ object CoreQueries {
     // revenue shares — integer ppm shares, HHI = Σ share² div 10^6 (exact
     // integers end-to-end); brand tables are dictionary-sized
     "q222_brand_hhi" -> { (s, dir) =>
-      val rev = t(s, dir, "lineitem")
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
+      val rev = table(s, dir, "lineitem")
+        .join(table(s, dir, "part"), col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_type"), col("p_brand"))
         .agg(sum(round(col("l_extendedprice") * 100).cast("long")).as("__c"))
       val tot = rev.groupBy(col("p_type")).agg(sum(col("__c")).as("__t"))
@@ -203,7 +201,7 @@ object CoreQueries {
     // Order-size distribution: lineitems per order -> histogram — the
     // basket-size shape every commerce dashboard opens with
     "q223_order_sizes" -> { (s, dir) =>
-      t(s, dir, "lineitem")
+      table(s, dir, "lineitem")
         .groupBy(col("l_orderkey")).agg(count(lit(1)).as("sz"))
         .groupBy(col("sz")).agg(count(lit(1)).as("n_orders"))
         .select(col("sz").as("order_size"), col("n_orders"))
@@ -213,8 +211,8 @@ object CoreQueries {
     // errorRateCi operator composed onto the relational side (is_err =
     // returned flag), >= 100 lineitems per brand
     "q224_return_rates" -> { (s, dir) =>
-      val d = t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part")
+      val d = table(s, dir, "lineitem")
+        .join(broadcast(table(s, dir, "part")
           .select(col("p_partkey"), col("p_brand"))),
           col("l_partkey") === col("p_partkey"))
         .select(col("p_brand"), (col("l_returnflag") === "R").as("is_ret"))
@@ -226,7 +224,7 @@ object CoreQueries {
     // days between orders (span div (n-1) — integer, no per-gap window),
     // then global dyadic percentiles of that cadence
     "q225_order_cadence" -> { (s, dir) =>
-      val per = t(s, dir, "orders")
+      val per = table(s, dir, "orders")
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n"),
           datediff(max(col("o_orderdate")), min(col("o_orderdate")))
@@ -246,7 +244,7 @@ object CoreQueries {
     // (integer month key year*100+month, ppm shares) — the seasonality-of-
     // mix report; month totals are a co-keyed roll-up
     "q243_priority_mix" -> { (s, dir) =>
-      val m = t(s, dir, "orders")
+      val m = table(s, dir, "orders")
         .select((year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
           .cast("long").as("month_key"), col("o_orderpriority"))
         .groupBy(col("month_key"), col("o_orderpriority"))
@@ -262,14 +260,14 @@ object CoreQueries {
     // every supplier nation and customer nation — two broadcast nation
     // dictionaries, one fact-join chain, one (pair) aggregation
     "q244_trade_matrix" -> { (s, dir) =>
-      val n1 = broadcast(t(s, dir, "nation")
+      val n1 = broadcast(table(s, dir, "nation")
         .select(col("n_nationkey").as("snk"), col("n_name").as("supp_nation")))
-      val n2 = broadcast(t(s, dir, "nation")
+      val n2 = broadcast(table(s, dir, "nation")
         .select(col("n_nationkey").as("cnk"), col("n_name").as("cust_nation")))
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      table(s, dir, "lineitem")
+        .join(table(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+        .join(table(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+        .join(table(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
         .join(n1, col("s_nationkey") === col("snk"))
         .join(n2, col("c_nationkey") === col("cnk"))
         .groupBy(col("supp_nation"), col("cust_nation"))
@@ -285,7 +283,7 @@ object CoreQueries {
     // the finance close report. The monthly frame is one row per month,
     // so the two self-joins are dictionary-sized at any data scale.
     "q245_revenue_growth" -> { (s, dir) =>
-      val monthly = t(s, dir, "orders")
+      val monthly = table(s, dir, "orders")
         .select((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
           .cast("long").as("month_idx"),
           round(col("o_totalprice") * 100).cast("long").as("__c"))
@@ -309,9 +307,9 @@ object CoreQueries {
     // One-and-done rate: customers with exactly one order as a ppm share
     // per market segment — the repeat-purchase health number
     "q246_one_and_done" -> { (s, dir) =>
-      val per = t(s, dir, "orders")
+      val per = table(s, dir, "orders")
         .groupBy(col("o_custkey")).agg(count(lit(1)).as("__n"))
-      t(s, dir, "customer")
+      table(s, dir, "customer")
         .join(per, col("c_custkey") === col("o_custkey"), "left")
         .na.fill(0L, Seq("__n"))
         .groupBy(col("c_mktsegment"))
@@ -327,7 +325,7 @@ object CoreQueries {
     // A1/A2/A9 acquisition-collapse-style grouped aggregation
     // (dicom-archive/DICOM/DCMSUM.pm:651-677; summary counts :540-590)
     "q01_pricing_summary" -> { (s, dir) =>
-      t(s, dir, "lineitem")
+      table(s, dir, "lineitem")
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -342,7 +340,7 @@ object CoreQueries {
     // P5 in_range predicate with NULL-bound semantics
     // (python/lib/imaging.py:1260-1299)
     "q02_range_filter" -> { (s, dir) =>
-      t(s, dir, "lineitem")
+      table(s, dir, "lineitem")
         .filter(
           inRange(col("l_quantity"), Some(5.0), None) &&
             inRange(col("l_discount"), Some(0.02), Some(0.08)) &&
@@ -357,8 +355,8 @@ object CoreQueries {
 
     // J1 equi inner join + aggregation (python/lib/imaging.py:520-524)
     "q03_revenue_by_segment" -> { (s, dir) =>
-      t(s, dir, "orders")
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      table(s, dir, "orders")
+        .join(table(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment"))
         .agg(
           count(lit(1)).as("n_orders"),
@@ -369,9 +367,9 @@ object CoreQueries {
     // J2 multi-way broadcastable dictionary join
     // (python/lib/database_lib/mri_protocol.py:108-129)
     "q04_customers_per_region" -> { (s, dir) =>
-      t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
+      table(s, dir, "customer")
+        .join(broadcast(table(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
+        .join(broadcast(table(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("r_name"), col("n_name"))
         .agg(
           count(lit(1)).as("n_customers"),
@@ -382,8 +380,8 @@ object CoreQueries {
     // J3 left outer join + null-branch detection
     // (uploadNeuroDB/NeuroDB/MRIProcessingUtility.pm:2056-2080)
     "q05_customers_without_orders" -> { (s, dir) =>
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders").filter(col("o_orderstatus") === "P"),
+      table(s, dir, "customer")
+        .join(table(s, dir, "orders").filter(col("o_orderstatus") === "P"),
           col("c_custkey") === col("o_custkey"), "left")
         .groupBy(col("c_custkey"), col("c_mktsegment"))
         .agg(count(col("o_orderkey")).as("n_orders"))
@@ -395,21 +393,21 @@ object CoreQueries {
     // J6 left-semi join (IN-subquery)
     // (python/loris_bids_importer/.../eeg/physiological.py:71-82)
     "q06_active_customers_by_nation" -> { (s, dir) =>
-      t(s, dir, "customer")
+      table(s, dir, "customer")
         .join(
-          t(s, dir, "orders").filter(col("o_orderstatus") === "O"),
+          table(s, dir, "orders").filter(col("o_orderstatus") === "O"),
           col("c_custkey") === col("o_custkey"),
           "left_semi"
         )
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
+        .join(broadcast(table(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("n_customers"))
     },
 
     // J7 anti-join insert guard (python/lib/imaging.py:215-233)
     "q07_parts_never_ordered" -> { (s, dir) =>
-      t(s, dir, "part")
-        .join(t(s, dir, "lineitem").filter(col("l_quantity") >= 40),
+      table(s, dir, "part")
+        .join(table(s, dir, "lineitem").filter(col("l_quantity") >= 40),
           col("p_partkey") === col("l_partkey"), "left_anti")
         .groupBy(col("p_brand"))
         .agg(count(lit(1)).as("n_unsold_parts"))
@@ -417,9 +415,9 @@ object CoreQueries {
 
     // J8 self-join lineage (tools/delete_imaging_upload.pl:1009-1035)
     "q08_nation_pairs_same_region" -> { (s, dir) =>
-      val n1 = t(s, dir, "nation").select(
+      val n1 = table(s, dir, "nation").select(
         col("n_name").as("n1_name"), col("n_regionkey").as("rk1"))
-      val n2 = t(s, dir, "nation").select(
+      val n2 = table(s, dir, "nation").select(
         col("n_name").as("n2_name"), col("n_regionkey").as("rk2"))
       n1.join(n2, col("rk1") === col("rk2") && col("n1_name") < col("n2_name"))
         .select(col("n1_name"), col("n2_name"), col("rk1").as("regionkey"))
@@ -430,7 +428,7 @@ object CoreQueries {
     "q09_latest_order_per_customer" -> { (s, dir) =>
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
-      t(s, dir, "orders")
+      table(s, dir, "orders")
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
@@ -441,7 +439,7 @@ object CoreQueries {
     "q10_line_order_within_order" -> { (s, dir) =>
       val w = Window.partitionBy(col("l_orderkey"))
         .orderBy(col("l_shipdate"), col("l_linenumber"))
-      t(s, dir, "lineitem")
+      table(s, dir, "lineitem")
         .withColumn("acq_order", row_number().over(w))
         .select(col("l_orderkey"), col("l_linenumber"), col("acq_order"))
     },
@@ -468,16 +466,16 @@ object CoreQueries {
 
     // U1 UNION-distinct of two selections (tools/delete_imaging_upload.pl:885-894)
     "q12_union_flagged_customers" -> { (s, dir) =>
-      val c = t(s, dir, "customer")
+      val c = table(s, dir, "customer")
       val a = c.filter(col("c_acctbal") < 0).select(col("c_custkey"))
-      val b = t(s, dir, "orders").filter(col("o_orderstatus") === "F")
+      val b = table(s, dir, "orders").filter(col("o_orderstatus") === "F")
         .select(col("o_custkey").as("c_custkey"))
       a.union(b).distinct()
     },
 
     // U4 set-difference via anti-join (python/lib/utilities.py:42-84)
     "q13_new_buyers_1997" -> { (s, dir) =>
-      val o = t(s, dir, "orders")
+      val o = table(s, dir, "orders")
       val y97 = o.filter(year(col("o_orderdate")) === 1997).select(col("o_custkey")).distinct()
       val before = o.filter(year(col("o_orderdate")) < 1997).select(col("o_custkey")).distinct()
       y97.join(before, Seq("o_custkey"), "left_anti")
@@ -489,8 +487,8 @@ object CoreQueries {
     // matches a substring pattern AND that have at least one lineitem,
     // with the per-part order count
     "q56_like_exists" -> { (s, dir) =>
-      val part = t(s, dir, "part")
-      val li = t(s, dir, "lineitem")
+      val part = table(s, dir, "part")
+      val li = table(s, dir, "lineitem")
       val counts = li.groupBy(col("l_partkey")).agg(count(lit(1)).as("n_lineitems"))
       part.filter(col("p_type").like("%BRASS%"))
         .join(counts, col("p_partkey") === col("l_partkey"), "left_semi")
@@ -503,7 +501,7 @@ object CoreQueries {
     // engines and runs, no rand(); sampling 100 TB this way is a pure
     // map-side filter (no shuffle at all)
     "q57_stratified_sample" -> { (s, dir) =>
-      val d = t(s, dir, "documents")
+      val d = table(s, dir, "documents")
       d.filter(pmod(graft.functions.TextFunctions.portableHash60(
           col("doc_id").cast("string")), lit(100)) < 20)
         .select(col("doc_id"), col("source"))
@@ -515,7 +513,7 @@ object CoreQueries {
     // docs proportionally likelier); selection rides the bounded-heap
     // top-k plan, so the corpus never crosses the exchange
     "q156_weighted_sample" -> { (s, dir) =>
-      val d = t(s, dir, "documents")
+      val d = table(s, dir, "documents")
         .select(col("source"), col("doc_id"),
           least(lit(1) + expr("n_chars div 1500").cast("int"), lit(8))
             .as("wgt"))
@@ -530,7 +528,7 @@ object CoreQueries {
     // oracle is the window-rank formulation, so this row proves the custom
     // plan IS the window semantics.
     "q58_topk_per_group" -> { (s, dir) =>
-      val o = t(s, dir, "orders")
+      val o = table(s, dir, "orders")
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
       graft.plans.TopKPerGroup(o, Seq(col("o_custkey")),
         Seq(col("o_totalprice").desc, col("o_orderkey").asc), k = 3)
@@ -538,14 +536,14 @@ object CoreQueries {
 
     // A5 DISTINCT projection (python/lib/database_lib/files.py:145-163)
     "q14_distinct_status_priority" -> { (s, dir) =>
-      t(s, dir, "orders").select(col("o_orderstatus"), col("o_orderpriority")).distinct()
+      table(s, dir, "orders").select(col("o_orderstatus"), col("o_orderpriority")).distinct()
     },
 
     // A4 next-visit-number: IFNULL(MAX(..),0)+1 per group over a left join
     // (python/lib/database_lib/session_db.py:95-96)
     "q15_next_event_seq" -> { (s, dir) =>
-      t(s, dir, "customer").select(col("c_custkey"))
-        .join(t(s, dir, "orders").filter(col("o_orderstatus") === "P"),
+      table(s, dir, "customer").select(col("c_custkey"))
+        .join(table(s, dir, "orders").filter(col("o_orderstatus") === "P"),
           col("c_custkey") === col("o_custkey"), "left")
         .groupBy(col("c_custkey"))
         .agg((coalesce(max(col("o_orderkey")), lit(0L)) + 1).as("next_no"))
@@ -557,11 +555,11 @@ object CoreQueries {
       import s.implicits._
       val optionalDim = Seq(("Brand#11", "legacy"), ("Brand#22", "preferred"))
         .toDF("p_brand", "brand_class")
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
+      table(s, dir, "lineitem")
+        .join(table(s, dir, "part"), col("l_partkey") === col("p_partkey"))
+        .join(table(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+        .join(broadcast(table(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
+        .join(broadcast(table(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
         .join(broadcast(optionalDim), Seq("p_brand"), "left")
         .groupBy(col("r_name"), col("p_brand"),
           coalesce(col("brand_class"), lit("unclassified")).as("brand_class"))
@@ -573,15 +571,15 @@ object CoreQueries {
     // U2 union chain: three parameter selections unioned then deduped
     // (tools/delete_imaging_upload.pl:1088-1146)
     "q47_union_chain" -> { (s, dir) =>
-      val o = t(s, dir, "orders")
+      val o = table(s, dir, "orders")
       val a = o.filter(col("o_orderstatus") === "P").select(col("o_custkey"))
-      val b = t(s, dir, "lineitem").filter(col("l_quantity") >= 49)
+      val b = table(s, dir, "lineitem").filter(col("l_quantity") >= 49)
         .join(o, col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey"))
-      val c = t(s, dir, "customer").filter(col("c_acctbal") < -900)
+      val c = table(s, dir, "customer").filter(col("c_acctbal") < -900)
         .select(col("c_custkey").as("o_custkey"))
       a.unionByName(b).unionByName(c).distinct()
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+        .join(table(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_flagged"))
     },

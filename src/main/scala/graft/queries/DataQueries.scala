@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Materialize
 import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.queries.Tables.table
 
 /** LLM-data-pipeline operators (BASELINE.json north star) over the
   * `documents` and `embeddings` tables, each with a DuckDB oracle where the
@@ -15,16 +16,13 @@ import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
   */
 object DataQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** documents loader. NOTE: deliberately NOT repartitioned here — a
     * round-robin exchange erases the parquet size statistics, which silently
     * demotes the dedup self-joins from broadcast-hash to sort-merge (25x
     * slower measured at sf0.1). Queries that are purely scalar-bound opt
     * into [[docsParallel]] instead. */
   private def docs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    table(s, dir, "documents")
 
   /** per-core parallelism for CPU-bound scalar stages: size-conditional
     * ([[Tables.spreadIfSmall]]) — the local one-row-group fixture spreads
@@ -401,7 +399,7 @@ object DataQueries {
     // any cosine math trusts the vectors; norms are the same sequential
     // dot + correctly-rounded sqrt as every cosine here
     "q237_norm_audit" -> { (s, dir) =>
-      val v = t(s, dir, "embeddings").select(col("label"),
+      val v = table(s, dir, "embeddings").select(col("label"),
         Similarity.norm(transform(col("embedding"), x => x.cast("double")))
           .as("__n"))
       v.groupBy(col("label"))
@@ -416,7 +414,7 @@ object DataQueries {
     // (doc_id = vec_id) — the missing-modality integrity check every
     // text+vector pipeline runs before training; one left join on ids
     "q233_embedding_coverage" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings").select(col("vec_id"), lit(1L).as("__has"))
+      val e = table(s, dir, "embeddings").select(col("vec_id"), lit(1L).as("__has"))
       docs(s, dir)
         .join(e, col("doc_id") === col("vec_id"), "left")
         .groupBy(col("source"))
@@ -450,7 +448,7 @@ object DataQueries {
     // even-id and odd-id halves — the model-regression / new-crawl
     // admission check; exact integer-sum centroids
     "q209_centroid_drift" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       Similarity.centroidDrift(e, "vec_id", "embedding", "label",
         pmod(col("vec_id"), lit(2)))
     },
@@ -537,7 +535,7 @@ object DataQueries {
     // quasi tuple, exact integer counts; violating combos ARE the
     // remediation worklist
     "q306_k_anonymity" -> { (s, dir) =>
-      val c = t(s, dir, "customer")
+      val c = table(s, dir, "customer")
         .withColumn("bal_sign",
           when(col("c_acctbal") < 0, "neg").otherwise("pos"))
       graft.operators.QaSampling.kAnonymityAudit(c,
@@ -569,8 +567,8 @@ object DataQueries {
     // customers are pure hubs, suppliers pure authorities — one round,
     // integer max-normalization, the complementary centrality to q319
     "q322_hits" -> { (s, dir) =>
-      val e = t(s, dir, "orders")
-        .join(t(s, dir, "lineitem"),
+      val e = table(s, dir, "orders")
+        .join(table(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").cast("long").as("src"),
           (col("l_suppkey").cast("long") + 1000000L).as("dst"))
@@ -590,8 +588,8 @@ object DataQueries {
     // dangling-redistribution path is exercised at table scale. The
     // DuckDB twin unrolls the same two exact-integer iterations
     "q319_pagerank" -> { (s, dir) =>
-      val e = t(s, dir, "orders")
-        .join(t(s, dir, "lineitem"),
+      val e = table(s, dir, "orders")
+        .join(table(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").cast("long").as("src"),
           (col("l_suppkey").cast("long") + 1000000L).as("dst"))
@@ -641,7 +639,7 @@ object DataQueries {
 
     // Brute-force cosine top-10 for the first 5 vectors
     "q29_embedding_knn" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 10)
     },
@@ -653,7 +651,7 @@ object DataQueries {
     // at c=0.9 (documented; soundness is exact — every emitted pair is
     // verified).
     "q51_srp_neardup" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       // corpus-sized bits keep bucket pair-generation linear in n; at the
       // sf0.01 gate (n=500) this resolves to the oracle's pinned 4 bits
       val bits = Similarity.autoBitsPerBand(e.count(), minBits = 4)
@@ -668,7 +666,7 @@ object DataQueries {
     // blocks auto-route through within-block SRP-LSH (block² = 10⁶ pairs
     // is where the exact scan stops being the cheap plan)
     "q30_embedding_neardup" -> { (s, dir) =>
-      Dedup.embeddingNearDupPairs(t(s, dir, "embeddings"),
+      Dedup.embeddingNearDupPairs(table(s, dir, "embeddings"),
         "vec_id", "embedding", "label", threshold = 0.3,
         maxExactBlock = 1000, dim = 64)
     },
@@ -678,7 +676,7 @@ object DataQueries {
     // exact-scan threshold (here pinned to 50 so the gate fixture
     // exercises BOTH outcomes)
     "q260_neardup_block_audit" -> { (s, dir) =>
-      Dedup.embeddingNearDupBlockAudit(t(s, dir, "embeddings"),
+      Dedup.embeddingNearDupBlockAudit(table(s, dir, "embeddings"),
         "label", maxExactBlock = 50)
     },
 
@@ -691,7 +689,7 @@ object DataQueries {
     // this corpus the candidate set provably covers the exact top-3
     // (SimilaritySpec pins it), so the exact all-pairs oracle matches.
     "q161_hard_negatives" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       // corpus-sized bits (linear bucket pair-generation; see
       // autoBitsPerBand), bands capped so the packed-signature dedup
       // stays in one long. At the sf0.01 gate (n=500) this resolves to
@@ -715,7 +713,7 @@ object DataQueries {
     // equal the one-shot mining over the accumulated corpus, so the
     // oracle is q161's exact all-pairs SQL verbatim.
     "q254_incremental_hard_negatives" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       val index = e.filter(col("vec_id") < 400)
       val batch = e.filter(col("vec_id") >= 400)
       // geometry sized by the ACCUMULATED corpus (the q161 discipline —
@@ -744,7 +742,7 @@ object DataQueries {
     // (initial or incremental) reads it. Geometry sized by the corpus
     // (autoBitsPerBand); at the gate it resolves to q161's 32 × 2.
     "q258_index_mining" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       val n = e.count()
       val bits = Similarity.autoBitsPerBand(n, minBits = 2)
       val bands = math.min(32, 64 / bits)
@@ -760,7 +758,7 @@ object DataQueries {
     // positive partner must be able to enter), per-seed annIndex
     // artifacts for both geometries; oracle = q248's exact SQL verbatim
     "q255_incremental_triplets" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       val index = e.filter(col("vec_id") < 400)
       val batch = e.filter(col("vec_id") >= 400)
       val seeds = Seq(42L, 1042L)
@@ -795,7 +793,7 @@ object DataQueries {
     },
 
     "q248_triplet_mining" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       // negative pass: corpus-sized bits (see autoBitsPerBand); positive
       // pass: bits sized by the LARGEST LABEL BLOCK — the same-label
       // banding buckets on (label, band, sig), so its recall geometry
@@ -817,14 +815,14 @@ object DataQueries {
     // per dimension + dead-dimension flag — the ingest audit before
     // vectors enter an index
     "q249_dimension_stats" -> { (s, dir) =>
-      Similarity.dimensionStats(t(s, dir, "embeddings"), "embedding")
+      Similarity.dimensionStats(table(s, dir, "embeddings"), "embedding")
     },
 
     // Retrieval evaluation beyond recall: MRR, hit-rate@10, macro
     // precision@10 of the exact top-10 under same-label relevance — all
     // integer ppm (per-query values integer-divided THEN averaged)
     "q250_retrieval_metrics" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       val results = Similarity.bruteForceTopK(e,
         e.filter(col("vec_id") < 50), "vec_id", "embedding", k = 10)
       val relevance = e.select(col("vec_id").as("query_id"), col("label"))
@@ -851,7 +849,7 @@ object DataQueries {
     // negatives from the pruned index; oracle = exact top-k over the
     // corpus that never contained those rows
     "q271_index_takedown" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       val n = e.count()
       val bits = Similarity.autoBitsPerBand(n, minBits = 2)
       val bands = math.min(32, 64 / bits)
@@ -880,7 +878,7 @@ object DataQueries {
     // integer-sum centroid (scale-invariance stands the sum vector in for
     // the mean — no FP-order hazard, no division)
     "q162_centroid_outliers" -> { (s, dir) =>
-      Similarity.centroidOutliers(t(s, dir, "embeddings"),
+      Similarity.centroidOutliers(table(s, dir, "embeddings"),
         "vec_id", "embedding", "label", threshold = 0.05)
     },
 
@@ -888,7 +886,7 @@ object DataQueries {
     // against exact brute force, per query — the measurement loop every
     // approximate-index configuration decision runs on
     "q172_ann_recall" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 5)
       val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
         k = 10)
@@ -902,7 +900,7 @@ object DataQueries {
     // against SQ8-reconstructed corpus) — the 4x-smaller serving index;
     // codes are engine-portable integers, so the oracle reproduces them
     "q179_sq8_topk" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       Similarity.sq8TopK(e, e.filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 10)
     },
@@ -912,7 +910,7 @@ object DataQueries {
     // every serving configuration's recall@10 measured against it in one
     // plan. One row per config: (config, n_queries, mean_recall_ppm).
     "q256_ann_param_sweep" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 5)
       // ground truth materialized once — at scale the exact scan is the
       // expensive side, and every config reuses the same frame
@@ -968,7 +966,7 @@ object DataQueries {
     // Greedy k-center (Gonzalez) diverse-subset selection: 6 maximally-
     // spread exemplars + the coverage-radius curve; k max-reduction passes
     "q181_kcenter_select" -> { (s, dir) =>
-      Similarity.kCenterSelect(t(s, dir, "embeddings"),
+      Similarity.kCenterSelect(table(s, dir, "embeddings"),
         "vec_id", "embedding", k = 6)
     },
 
@@ -996,14 +994,14 @@ object DataQueries {
     // customer names at Levenshtein distance <= 1 — exact recall by
     // pigeonhole, every candidate verified
     "q91_fuzzy_names" -> { (s, dir) =>
-      Dedup.editNeighborPairs(t(s, dir, "customer"), "c_name")
+      Dedup.editNeighborPairs(table(s, dir, "customer"), "c_name")
     },
 
     // Cluster-bounded semantic dedup (SemDeDup): map-only centroid
     // assignment bounds the pairwise stage to within-cluster; a doc is
     // dropped when a lower-id cluster-mate has cosine >= 0.3
     "q83_semantic_dedup" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       val centroids = Similarity.seedCentroids(e, "vec_id", "embedding", 8)
       Similarity.semanticDedup(e, "vec_id", "embedding", centroids,
         threshold = 0.3)
@@ -1063,7 +1061,7 @@ object DataQueries {
     // nprobe — so it has an exact ANSI oracle below; recall additionally
     // validated against bruteForceTopK in SimilaritySpec
     "q31_ann_ivf" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       val centroids = Similarity.seedCentroids(e, "vec_id", "embedding", 8)
       Similarity.ivfTopK(e, e.filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 10, centroids, nprobe = 2)
@@ -1075,7 +1073,7 @@ object DataQueries {
     // the probed cells. Same oracle as q31 verbatim — serving from the
     // stored index must change nothing.
     "q261_ivf_from_index" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       val centroids = Similarity.seedCentroids(e, "vec_id", "embedding", 8)
       // one scratch dir per JVM, overwritten per invocation — repeated
       // bench reps must not accumulate index copies
@@ -1091,7 +1089,7 @@ object DataQueries {
     // codebooks, asymmetric-distance ranking in integer micro-units).
     // Fully deterministic -> exact ANSI oracle.
     "q60_ann_pq" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       Similarity.pqTopK(e, e.filter(col("vec_id") < 5),
         "vec_id", "embedding", kNeighbors = 10)
     },
@@ -1100,7 +1098,7 @@ object DataQueries {
     // shape) feeding integer-ADC ranking (q60's shape) — the production
     // serving path, fully deterministic
     "q100_ivfpq" -> { (s, dir) =>
-      val e = t(s, dir, "embeddings")
+      val e = table(s, dir, "embeddings")
       val centroids = Similarity.seedCentroids(e, "vec_id", "embedding", 8)
       Similarity.ivfPqTopK(e, e.filter(col("vec_id") < 5),
         "vec_id", "embedding", kNeighbors = 10, centroids, nprobe = 2)

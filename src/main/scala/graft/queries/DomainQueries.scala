@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.operators.{Catalog, DicomSummary, ProtocolMatcher}
+import graft.queries.Tables.table
 
 /** Oracle-checked queries that drive the Loris-domain operators
   * (SURVEY.md §2.2 J4/J5, §2.4 A6/A10) over the driver's testdata: the
@@ -13,15 +14,12 @@ import graft.operators.{Catalog, DicomSummary, ProtocolMatcher}
   */
 object DomainQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** part → scan mapping: p_size plays `time`, p_retailprice/1000 plays
     * RepetitionTime (so the engine's s→ms ×1000 scaling recovers it),
     * p_type plays SeriesDescription. */
   private[queries] def partAsScans(s: SparkSession, dir: String): DataFrame =
     ProtocolMatcher.padScanCols(
-      t(s, dir, "part").select(
+      table(s, dir, "part").select(
         col("p_partkey").as("scan_id"),
         col("p_type").as("SeriesDescription"),
         (col("p_retailprice") / 1000).as("RepetitionTime"),
@@ -53,14 +51,14 @@ object DomainQueries {
     // evaluation with warning/exclude severities (python/lib/imaging.py:706-809)
     "q18_protocol_checks" -> { (s, dir) =>
       import s.implicits._
-      val scansWithType = t(s, dir, "part").select(
+      val scansWithType = table(s, dir, "part").select(
         col("p_partkey").as("scan_id"),
         lit(201).as("MriScanTypeID"),
         lit(null).cast("int").as("ProjectID"),
         lit(null).cast("int").as("CohortID"),
         lit(null).cast("string").as("Visit_label")
       )
-      val params = t(s, dir, "part").select(
+      val params = table(s, dir, "part").select(
         col("p_partkey").as("scan_id"),
         explode(map(
           lit("p_size"), col("p_size").cast("string"),
@@ -86,7 +84,7 @@ object DomainQueries {
     // J10 get-or-create: dictionary extended with unseen natural keys, new
     // ids = max(existing) + dense_rank (python/lib/database.py:210-253)
     "q19_get_or_create" -> { (s, dir) =>
-      val part = t(s, dir, "part")
+      val part = table(s, dir, "part")
       val existing = part.filter(col("p_size") <= 10).select(col("p_brand")).distinct()
       // distinct brands -> global ordinal == dense_rank, assigned without an
       // unpartitioned Window (see Ordinals)
@@ -103,7 +101,7 @@ object DomainQueries {
     // keys ≡5 (mod 13) and perturbs p_size for keys ≡0 (mod 7) — so
     // missing_left / missing_right / field_diff all populate at every sf
     "q278_summary_dbcompare" -> { (s, dir) =>
-      val base = t(s, dir, "part")
+      val base = table(s, dir, "part")
         .select(col("p_partkey"), col("p_type"), col("p_size"), col("p_brand"))
       val dirSum = base.filter(pmod(col("p_partkey"), lit(11)) =!= 3)
       val dbSum = base.filter(pmod(col("p_partkey"), lit(13)) =!= 5)
@@ -117,8 +115,8 @@ object DomainQueries {
     // A11 age-at-scan: reference formula years + months/12 + days/365 with
     // raw component differences (summary_write.py:147-163)
     "q20_age_at_scan" -> { (s, dir) =>
-      t(s, dir, "orders")
-        .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
+      table(s, dir, "orders")
+        .join(table(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .select(
           col("o_orderkey"), col("l_linenumber"),
           DicomSummary.ageAtScan(col("l_shipdate"), col("o_orderdate")).as("age_years")

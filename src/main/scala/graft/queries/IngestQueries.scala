@@ -175,9 +175,9 @@ object IngestQueries {
     // deterministic winner survives, untouched rows/columns pass through
     // (database.py:188-208)
     "q77_update_by_key" -> { (s, dir) =>
-      val customer = s.read.parquet(s"$dir/customer.parquet")
+      val customer = Tables.table(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-      val updates = s.read.parquet(s"$dir/orders.parquet")
+      val updates = Tables.table(s, dir, "orders")
         .filter(col("o_orderdate") >= lit("1995-01-01").cast("timestamp") &&
           col("o_orderdate") < lit("1996-01-01").cast("timestamp"))
         .select(col("o_custkey").as("c_custkey"),
@@ -1479,7 +1479,7 @@ object IngestQueries {
     // status = orderstatus) -> last status + transition count per upload
     "q65_upload_states" -> { (s, dir) =>
       import s.implicits._
-      val events = s.read.parquet(s"$dir/orders.parquet")
+      val events = Tables.table(s, dir, "orders")
         .select(col("o_custkey").as("upload_id"),
           col("o_orderkey").as("seq"), col("o_orderstatus").as("status"))
         .as[graft.streaming.EventStream.UploadEvent]
@@ -1494,7 +1494,7 @@ object IngestQueries {
     // dir, keys ≡0 (mod 3) are already uploaded, requests are keys
     // ≡0 (mod 7) — all four outcomes populated at every sf
     "q277_update_mri_upload" -> { (s, dir) =>
-      val ok = s.read.parquet(s"$dir/orders.parquet")
+      val ok = Tables.table(s, dir, "orders")
         .select(col("o_orderkey").as("k"))
       val tar0 = ok.filter(pmod(col("k"), lit(5)) =!= 4)
         .select(col("k").as("TarchiveID"),

@@ -24,7 +24,7 @@ object MaintQueries {
     // already-relative passthrough, mid-path quirk) are cross-checked
     // rather than pinned
     "q127_relativize_archive" -> { (s, dir) =>
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = Tables.table(s, dir, "orders")
         .filter(col("o_orderkey") < 200)
       val loc = when(col("o_orderkey") % 3 === 0,
           concat(lit("/data/tarchive/"), col("o_custkey").cast("string"),

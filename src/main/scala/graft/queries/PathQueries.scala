@@ -4,15 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{BidsPath, TextFunctions}
 import graft.operators.{Catalog, ProtocolMatcher, SessionResolver}
+import graft.queries.Tables.table
 
 /** Remaining SURVEY §2 coverage: J9 EAV-hash semi-join, A9 insertion
   * summary report, the patient-name decoder hook, and the BIDS filename
   * builder — each oracle-checked.
   */
 object PathQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // J9 EAV hash semi-join (python/lib/db/queries/file.py:59-63): docs
@@ -25,7 +23,7 @@ object PathQueries {
     // part — an identity the whole EAV round-trip must reproduce.
     "q52_eav_pivot" -> { (s, dir) =>
       import s.implicits._
-      val part = t(s, dir, "part")
+      val part = table(s, dir, "part")
       val bidsLong = part.selectExpr("p_partkey AS FileID",
         "stack(4, 'Brand', p_brand, 'Type', p_type, 'Size', CAST(p_size AS STRING), 'PartName', p_name) AS (Name, Value)")
       val pt = Seq(
@@ -50,8 +48,8 @@ object PathQueries {
     // orderkey's upload. Output = the parameter_file rows to delete
     // (exercises seed -> semi fan-out -> J8 lineage -> U1 union-dedup).
     "q53_delete_cascade" -> { (s, dir) =>
-      val orders = t(s, dir, "orders")
-      val li = t(s, dir, "lineitem")
+      val orders = table(s, dir, "orders")
+      val li = table(s, dir, "lineitem")
       val files = li.join(orders, col("l_orderkey") === col("o_orderkey"))
         .select(
           (col("l_orderkey") * 8 + col("l_linenumber")).as("FileID"),
@@ -84,15 +82,15 @@ object PathQueries {
     // IS the branch taken (the audit flags key 0 at ~90% mass), so the
     // correctness row exercises the salt path, not the fallback.
     "q253_skewed_param_join" -> { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-      val orders = t(s, dir, "orders")
+      val li = table(s, dir, "lineitem")
+      val orders = table(s, dir, "orders")
       val params = li.join(orders, col("l_orderkey") === col("o_orderkey"))
         .select(
           (col("l_orderkey") * 8 + col("l_linenumber")).as("ParameterFileID"),
           when(col("o_custkey") % 100 < 90, lit(0L))
             .otherwise(col("o_custkey")).as("TarchiveID"),
           col("l_quantity").cast("long").as("Value"))
-      val archives = t(s, dir, "customer")
+      val archives = table(s, dir, "customer")
         .select(
           when(col("c_custkey") % 100 < 90, lit(0L))
             .otherwise(col("c_custkey")).as("TarchiveID"),
@@ -121,7 +119,7 @@ object PathQueries {
     // A9 insertion summary (dicom_archive_loader_pipeline.py:429-470):
     // per-archive routing counts + ordered joined name list
     "q38_insertion_summary" -> { (s, dir) =>
-      val parts = t(s, dir, "part").select(
+      val parts = table(s, dir, "part").select(
         col("p_partkey").as("scan_id"), col("p_brand"), col("p_name"))
       ProtocolMatcher.identify(
         DomainQueries.partAsScans(s, dir), DomainQueries.protocolFixture(s))
@@ -140,7 +138,7 @@ object PathQueries {
     // get_session_config hook (get_session_info.py:87-105): default
     // PSCID_CandID_Visit patient-name decoder
     "q39_patient_decode" -> { (s, dir) =>
-      val named = t(s, dir, "customer").select(
+      val named = table(s, dir, "customer").select(
         col("c_custkey"),
         concat(col("c_mktsegment"), lit("_"), col("c_custkey"), lit("_V1"))
           .as("patient_name"))
@@ -154,7 +152,7 @@ object PathQueries {
     // BIDS filename builder (nifti_insertion_pipeline.py:464-514): fixed
     // entity order, conditional entities skipped when absent
     "q40_bids_filename" -> { (s, dir) =>
-      val o = t(s, dir, "orders")
+      val o = table(s, dir, "orders")
       val entities = map_filter(
         map(
           lit("sub"), col("o_custkey").cast("string"),
@@ -187,7 +185,7 @@ object PathQueries {
     // W4 run-number assignment continuing above an existing per-entity max
     // (nifti_insertion_pipeline.py:456-461)
     "q42_run_numbers" -> { (s, dir) =>
-      val li = t(s, dir, "lineitem")
+      val li = table(s, dir, "lineitem")
       val existing = li.filter(col("l_linenumber") <= 2)
         .select(col("l_orderkey"), col("l_linenumber").as("run_number"))
       val incoming = li.filter(col("l_linenumber") > 2)
@@ -201,7 +199,7 @@ object PathQueries {
     // - render each order date in a row-dependent format, then recover it
     // through the coalesce-of-parses chain
     "q48_multiformat_dates" -> { (s, dir) =>
-      val o = t(s, dir, "orders")
+      val o = table(s, dir, "orders")
       val rendered = o.withColumn("date_str",
         when(col("o_orderkey") % 3 === 0, date_format(col("o_orderdate"), "yyyy-MM-dd"))
           .when(col("o_orderkey") % 3 === 1, date_format(col("o_orderdate"), "yyyyMMdd"))
@@ -218,7 +216,7 @@ object PathQueries {
     // §3.2 session resolution vertical: decode -> candidate validation ->
     // existing-session lookup / next-visit-number, rolled up per outcome
     "q49_session_resolution" -> { (s, dir) =>
-      val c = t(s, dir, "customer")
+      val c = table(s, dir, "customer")
       val scans = c.select(
         col("c_custkey").as("scan_id"),
         concat(
@@ -227,7 +225,7 @@ object PathQueries {
           .as("patient_name"))
       val candidates = c.filter(col("c_custkey") < 1200)
         .select(col("c_custkey").as("CandID"), col("c_mktsegment").as("PSCID"))
-      val sessions = t(s, dir, "orders")
+      val sessions = table(s, dir, "orders")
         .filter(col("o_orderkey") % 10 === 0)
         .groupBy(col("o_custkey").as("CandID"))
         .agg(max(col("o_orderkey") % 7 + 1).cast("int").as("VisitNo"))
