@@ -80,8 +80,8 @@ object IngestQueries {
     },
 
     // q62's pipeline through the DataSource V2 connector instead of the
-    // binaryFile scan: spark.read.format("edf") with column pruning +
-    // channel-skip at the scan (EdfDataSource). Oracle is q62's VERBATIM,
+    // binaryFile scan: spark.read.format("edf") with column pruning at
+    // the scan (EdfDataSource). Oracle is q62's VERBATIM,
     // so the driver checks connector/binaryFile equivalence end to end.
     "q116_edf_dsv2" -> { (s, _) =>
       val dir = SyntheticFixtures.materialize(

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.US_ASCII
 
+import org.apache.hadoop.fs.PositionedReadable
+
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** S14 EEG raw reader, EDF/EDF+ (SURVEY.md §2.1): replaces the round-1
@@ -121,15 +123,13 @@ object EdfReader {
     * Truncated final records are dropped whole (record granularity), like
     * the reference's reader. */
   def signalTraces(bytes: Array[Byte]): Seq[(String, Double, Array[Double])] = {
-    parseHeader(bytes) match {
+    val parsed = for {
+      h <- parseHeader(bytes)
+      n <- recordCount(h, bytes.length)
+    } yield (h, n.toInt)
+    parsed match {
       case None => Seq.empty
-      case Some(h) =>
-        val bytesPerRecord = h.signals.map(_.samplesPerRecord.toLong * 2).sum
-        if (bytesPerRecord == 0) return Seq.empty
-        val avail = (bytes.length - h.headerBytes).toLong
-        val nRec = math.min(
-          if (h.nRecords >= 0) h.nRecords.toLong else Long.MaxValue,
-          avail / bytesPerRecord).toInt
+      case Some((h, nRec)) =>
         val traces = h.signals.map(s => new Array[Double](nRec * s.samplesPerRecord))
         var rec = 0
         var pos = h.headerBytes.toLong
@@ -157,6 +157,43 @@ object EdfReader {
         }
     }
   }
+
+  /** The whole data records a file of `fileBytes` bytes holds: the
+    * declared count, capped by the bytes present (a truncated final
+    * record is dropped whole); the bytes alone when the count is -1.
+    * None when a record carries no samples. */
+  def recordCount(h: EdfHeader, fileBytes: Long): Option[Long] = {
+    val bytesPerRecord = h.signals.map(_.samplesPerRecord.toLong * 2).sum
+    if (bytesPerRecord == 0) None
+    else Some(math.min(
+      if (h.nRecords >= 0) h.nRecords.toLong else Long.MaxValue,
+      (fileBytes - h.headerBytes) / bytesPerRecord))
+  }
+
+  /** The header bytes of a file of `fileBytes` bytes, read through `in`:
+    * the fixed 256-byte block, then the rest of the length it declares
+    * (offset 184). None when that length is malformed or the read fails. */
+  def readHeader(in: PositionedReadable, fileBytes: Long): Option[Array[Byte]] =
+    try {
+      val head = new Array[Byte](256)
+      in.readFully(0, head)
+      numI(head, 184, 8).filter(n => n >= 256 && n <= fileBytes).map { n =>
+        val full = java.util.Arrays.copyOf(head, n)
+        in.readFully(256, full, 256, n - 256)
+        full
+      }
+    } catch { case _: Exception => None }
+
+  /** (label, sampling rate, sample count) per non-annotation channel, from
+    * the header alone: the trace lengths [[signalTraces]] decodes from the
+    * whole file of `fileBytes` bytes. */
+  def headerChannels(header: Array[Byte], fileBytes: Long)
+      : Seq[(String, Double, Long)] =
+    parseHeader(header).toSeq.flatMap { h =>
+      recordCount(h, fileBytes).toSeq.flatMap(nRec =>
+        h.signals.filterNot(_.isAnnotation).map(s =>
+          (s.label, h.samplingRateHz(s), nRec * s.samplesPerRecord)))
+    }
 
   /** Distributed scan: every `.edf` under `dir` parsed partition-parallel
     * into one [[EphysSource.Channel]] row per channel. */

@@ -5,17 +5,16 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 /** One listed file = one partition, shared by every file-granular
   * connector here (EDF, ECAT, tarshard, WARC). */
 private[v2] case class ListedFile(path: String, length: Long)
     extends InputPartition {
+
+  /** The file name, the last element of `path`. */
+  @transient lazy val name: String = new Path(path).getName
 
   /** Opens the file through `conf`, the executor's copy of the scan's. */
   def open(conf: Configuration): FSDataInputStream = {
@@ -30,52 +29,6 @@ private[v2] case class ListedFile(path: String, length: Long)
     try in.readFully(0, buf) finally in.close()
     buf
   }
-}
-
-/** A one-file-one-partition scan over `options("path")` (glob: the
-  * `glob` option, else the format's default), batch and micro-batch.
-  *
-  * The session's Hadoop conf is taken ONCE, when the scan is built. The
-  * driver lists files and keeps the stream's seen-file log through it;
-  * executors get it as one broadcast [[SerializableConfiguration]], the
-  * pattern of Spark's own `FileScan`, whose deserialization does not
-  * reload Hadoop's XML default resources. So no trigger, listing or file
-  * open re-parses those defaults, and every `fs.*` setting of the
-  * session (object-store credentials, extra schemes) reaches every
-  * reader. */
-private[v2] abstract class ListedFileScan(
-    options: CaseInsensitiveStringMap, defaultGlob: String)
-    extends Scan with Batch {
-
-  private val session = SparkSession.active
-  private val hadoopConf = session.sessionState.newHadoopConf()
-  private lazy val executorConf =
-    session.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
-  private lazy val root = new Path(Option(options.get("path")).getOrElse(
-    throw new IllegalArgumentException("file source requires a path")))
-  private lazy val fs = root.getFileSystem(hadoopConf)
-
-  /** The format's reader factory over the executors' copy of the conf. */
-  protected def readerFactory(conf: Broadcast[SerializableConfiguration])
-      : PartitionReaderFactory
-
-  /** Driver-side glob, path-sorted. */
-  private def listFiles(): Seq[ListedFile] = {
-    val glob = Option(options.get("glob")).getOrElse(defaultGlob)
-    Option(fs.globStatus(new Path(root, glob))).getOrElse(Array.empty)
-      .filter(_.isFile).sortBy(_.getPath.toString)
-      .map(st => ListedFile(st.getPath.toString, st.getLen)).toSeq
-  }
-
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    listFiles().toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    readerFactory(executorConf)
-  override def toMicroBatchStream(checkpointLocation: String)
-      : MicroBatchStream =
-    new SeenFileLogStream(() => listFiles(), hadoopConf, checkpointLocation,
-      createReaderFactory())
 }
 
 private[v2] case class SeenFileOffset(version: Long) extends Offset {

@@ -79,6 +79,20 @@ class EdfReaderSpec extends SparkSpec {
     assert(EdfReader.signalTraces(cut).head._3.length === 4) // 2nd record incomplete
   }
 
+  test("header-only sample counts equal the full decode's trace lengths " +
+      "(nRecords=-1, truncated final record)") {
+    val full = edfOf(Seq(eeg, ecg), Seq(
+      Seq(Array[Short](1, 2, 3, 4), Array[Short](10, 20)),
+      Seq(Array[Short](5, 6, 7, 8), Array[Short](30, 40))), nRecordsField = -1)
+    val cut = java.util.Arrays.copyOfRange(full, 0, full.length - 3)
+    val header = java.util.Arrays.copyOf(cut, 256 + 2 * 256)
+    val fromHeader = EdfReader.headerChannels(header, cut.length.toLong)
+    val decoded = EdfReader.signalTraces(cut)
+    assert(fromHeader.map(c => (c._1, c._3)) ===
+      decoded.map(t => (t._1, t._3.length.toLong)))
+    assert(fromHeader.map(_._3) === Seq(4L, 2L)) // one whole record each
+  }
+
   test("malformed inputs parse to None/empty, never throw") {
     assert(EdfReader.parseHeader(Array.emptyByteArray).isEmpty)
     assert(EdfReader.parseHeader(new Array[Byte](100)).isEmpty)

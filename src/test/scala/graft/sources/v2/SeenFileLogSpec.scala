@@ -17,9 +17,9 @@ class SeenFileLogSpec extends SparkSpec {
     val dir = SyntheticFixtures.freshDir("seenlog_src")
     val ckpt = SyntheticFixtures.freshDir("seenlog_ckpt")
     spark // the scan takes the active session's Hadoop conf
-    val stream = new EdfScan(
+    val stream = new ListedFileScan(EdfDataSource,
       new CaseInsensitiveStringMap(java.util.Map.of("path", dir)),
-      EdfDataSource.schema, None).toMicroBatchStream(ckpt)
+      EdfDataSource.schema).toMicroBatchStream(ckpt)
       .asInstanceOf[SeenFileLogStream]
     def arrive(name: String): Unit =
       Files.write(Paths.get(dir, name), SyntheticFixtures.recordingBytes())
