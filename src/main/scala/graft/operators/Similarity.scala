@@ -124,7 +124,7 @@ object Similarity {
     *
     * 100 TB shape: no broadcast of anything corpus-sized and no O(n²)
     * stage — the candidate join is equi-keyed on (band, sig) buckets whose
-    * size `maxBucketSize` caps, and the verify join is equi-keyed on ids.
+    * size `maxBucketSize` caps, and the verify runs inside that join.
     * Recall per neighbor at cosine c is 1-(1-p^bitsPerBand)^bands with
     * p = 1-acos(c)/π; the wide-band default (32×2) holds worst-pair recall
     * >0.9999 down to c≈0.25 — size bitsPerBand UP as the corpus grows so
@@ -140,18 +140,9 @@ object Similarity {
       seed: Long = 42L, maxBucketSize: Int = 20000
   ): DataFrame =
     Materialize.scoped { pin =>
-      // norm computed ONCE per vector — the per-pair verify is then a
-      // single dot product, and dot/(nrm_a·nrm_b) is the identical double
-      // the pairwise dot/(√(a·a)·√(b·b)) form yields (same expressions,
-      // same order), so rounding matches the exact path bit-for-bit
-      val v = pin(corpus.select(col(idCol).as("id"), col(labelCol).as("lbl"),
-          asDouble(col(vecCol)).as("v"))
-        .withColumn("nrm", norm(col("v"))))
-      val scored = annLabelScored(v, pin, sameLabel = false, dim,
-        bands, bitsPerBand, seed, maxBucketSize)
-      // the (≤ k rows per anchor) result is what the scope materializes
-      ranked(graft.plans.TopKPerGroup(scored, Seq(col("query_id")),
-        Seq(col("cosine").desc, col("neighbor_id").asc), k))
+      val v = pin(vectors(corpus, idCol, vecCol, labelCol))
+      hardNegativesTopK(artSigFrame(signed(v, dim, bands, bitsPerBand, seed),
+        pin), k, bands, bitsPerBand, maxBucketSize)
     }
 
   /** Rank 1..k per anchor over a heap-pruned top-k frame: the window sees
@@ -160,6 +151,15 @@ object Similarity {
     top.withColumn("rank",
       row_number().over(Window.partitionBy(col("query_id"))
         .orderBy(col("cosine").desc, col("neighbor_id").asc)))
+
+  /** Ranked top-k cross-label neighbors per anchor over a signature
+    * frame ([[artSigFrame]]). */
+  private def hardNegativesTopK(s: DataFrame, k: Int, bands: Int,
+      bitsPerBand: Int, maxBucketSize: Int): DataFrame =
+    ranked(graft.plans.TopKPerGroup(
+      bucketJoin(s, Some(false), bands, bitsPerBand, maxBucketSize),
+      Seq(col("query_id")), Seq(col("cosine").desc, col("neighbor_id").asc),
+      k))
 
   /** The first-collision-band column: given the two rows' PACKED band
     * signatures, the lowest band index where they collide — a pair
@@ -170,43 +170,6 @@ object Similarity {
     * ntz = bit_count(~z & (z-1)) identity. The one-shot, incremental and
     * rpLsh paths all MUST share this expression — the incremental ==
     * one-shot merge invariant depends on it being bit-identical. */
-  /** Session-conf switch for the ANN miners' exact-verify placement.
-    * "injoin" (default): both bucket-join sides CARRY their vector and the
-    * cosine is computed inside the join — shuffled volume is n×bands
-    * vector rows, zero pair-keyed exchanges. "fetch": the bucket join
-    * carries only (id, lbl, fullsig); vectors ride band-0 rows once and
-    * the cosine is computed after two id-keyed joins against the vector
-    * frame — shuffled volume is n vectors + 2× the candidate-pair ids.
-    * The crossover is geometry- and dim-dependent (in-join pays
-    * bands×dim doubles per vector; fetch pays pair-keyed vector
-    * traffic): see docs/SCALE.md "miner verify A/B" for the sf1
-    * measurements that set the default. */
-  val VerifyModeKey = "spark.graft.miner.verify"
-
-  private def fetchVerify(df: DataFrame): Boolean =
-    df.sparkSession.conf.get(VerifyModeKey, "injoin") == "fetch"
-
-  /** The "fetch" verify: score narrow candidate pairs by two id-keyed
-    * joins against the one-row-per-id vector frame. Emits the pairs'
-    * columns + the SAME rounded cosine expression as the in-join path. */
-  private def scoreFetched(pairs: DataFrame, vecs: DataFrame): DataFrame = {
-    val q = vecs.select(col("id").as("query_id"), col("v").as("__qv"),
-      col("nrm").as("__qn"))
-    val n = vecs.select(col("id").as("neighbor_id"), col("v").as("__nv"),
-      col("nrm").as("__nn"))
-    pairs.join(q, Seq("query_id")).join(n, Seq("neighbor_id"))
-      .withColumn("cosine", round(
-        nanSafe(dot(col("__qv"), col("__nv")) / (col("__qn") * col("__nn"))),
-        6))
-      .select(pairs.columns.map(col) :+ col("cosine"): _*)
-  }
-
-  /** One vector row per id out of a band-signature frame: band-0 rows
-    * carry (v, nrm) in BOTH verify modes ([[bandSigFrame]] nulls the
-    * vector on bands 1.. under "fetch"). */
-  private def vecsFromSigs(s: DataFrame): DataFrame =
-    s.filter(col("band") === 0).select(col("id"), col("v"), col("nrm"))
-
   private[operators] def firstCollisionBand(
       sigA: Column, sigB: Column, bands: Int, bitsPerBand: Int): Column = {
     val groupLowBits = lit((0 until bands)
@@ -220,291 +183,96 @@ object Similarity {
       bitsPerBand).cast("int")
   }
 
-  /** Banded-LSH scored pairs with a label predicate: (query_id,
-    * neighbor_id, cosine) for every cross-label (`sameLabel=false`) or
-    * same-label-non-self (`sameLabel=true`) pair sharing at least one
-    * (band, sig) bucket, exactly deduplicated locally via the
-    * packed-signature [[firstCollisionBand]] rule and exact-verified
-    * IN the bucket join. Input `v` is the pinned (id, lbl, v, nrm)
-    * frame; the signature frame is pinned to the same scope. */
-  private[operators] def annLabelScored(
-      v: DataFrame, pin: Materialize.Pin, sameLabel: Boolean, dim: Int,
-      bands: Int, bitsPerBand: Int, seed: Long, maxBucketSize: Int
-  ): DataFrame =
-    annLabelScoredFromSigs(bandSigFrame(v, pin, dim, bands, bitsPerBand,
-      seed), sameLabel, bands, bitsPerBand, maxBucketSize)
-
-  /** The pinned (id, lbl, v, nrm, fullsig, band, sig) frame behind
-    * [[annLabelScored]] — label-mode-independent, so one frame per
-    * (geometry, seed) serves BOTH the same-label and cross-label passes
-    * of triplet mining when their geometries coincide. */
-  private[operators] def bandSigFrame(
-      v: DataFrame, pin: Materialize.Pin, dim: Int, bands: Int,
-      bitsPerBand: Int, seed: Long
-  ): DataFrame = {
-    require(bands * bitsPerBand <= 64,
-      "packed-signature dedup needs bands*bitsPerBand <= 64")
-    // all band signatures in ONE fused pass over the cached vectors;
-    // alongside the exploded (band, sig) bucket key, every row carries the
-    // full signature PACKED into one long so pair dedup can be a local
-    // integer filter (below)
-    val sigArr = rpSignatureBands(col("v"), bands, bitsPerBand, dim, seed)
-    val packed = (0 until bands).map(b =>
-      shiftleft(element_at(col("sigs"), b + 1), b * bitsPerBand))
-      .reduce(_ bitwiseOR _)
-    // spread the bucket keys across the cluster: pair generation fans a
-    // row out |bucket| times, so the (band, sig) partitioning — not the
-    // input file layout — must set the parallelism of everything downstream
-    // (broadcast-built joins preserve the probe side's partitioning; without
-    // this a single-file corpus runs the whole candidate pipeline in one
-    // task). The partition count is EXPLICIT: AQE sizes coalescing by the
-    // exchange's bytes, which under-provisions a stage that expands
-    // |bucket|× after it. Also pre-aligns the bucket-size groupBy.
-    // under "fetch" verify the vector/norm ride ONLY the band-0 row (one
-    // per id): the repartition exchange and the cache then hold n vectors
-    // instead of n×bands — the whole point of that mode
-    val vCol = if (fetchVerify(v)) when(col("band") === 0, col("v"))
-      else col("v")
-    val nrmCol = if (fetchVerify(v)) when(col("band") === 0, col("nrm"))
-      else col("nrm")
-    // n×bands rows CARRYING the vector and its norm — the exact verify
-    // runs INSIDE the bucket join (see annLabelScoredFromSigs), so the
-    // shuffled/cached volume is n×bands vector rows, never candidate
-    // pairs × vectors. Pinning holds the (heavy-codegen) signature stage
-    // to ONE evaluation — it feeds both the bucket-size agg and the pair
-    // join (and, in triplet mining, both label modes)
-    pin(v.select(col("id"), col("lbl"), col("v"), col("nrm"),
-        sigArr.as("sigs"))
-      .select(col("id"), col("lbl"), col("v"), col("nrm"),
-        packed.as("fullsig"),
-        posexplode(col("sigs")).as(Seq("band", "sig")))
-      .select(col("id"), col("lbl"), vCol.as("v"), nrmCol.as("nrm"),
-        col("fullsig"), col("band"), col("sig"))
-      .repartition(v.sparkSession.sessionState.conf.numShufflePartitions,
-        col("band"), col("sig")))
-  }
-
-  /** Candidate generation + INLINE exact-cosine verify over a prebuilt
-    * [[bandSigFrame]]: the verify happens inside the bucket join (both
-    * sides carry their vector), so no id-keyed scoring join ever shuffles
-    * candidate-pairs × vectors — the formulation that survives when the
-    * vector frame is too big to broadcast (measured 66 s → 3 s on the
-    * sf1 incremental path). Emits (query_id, neighbor_id, cosine) with
-    * the same dot/(nrm·nrm) rounded double as the exact pairwise form.
+  /** The one candidate-generation + exact-verify step of every ANN miner:
+    * the (band, sig) bucket self-join over a signature frame
+    * ([[artSigFrame]], or the [[batchInvolvedRows]] union), emitting
+    * (query_id, neighbor_id, cosine) for
+    *  - `sameLabel = Some(false)`: cross-label pairs (negatives);
+    *  - `sameLabel = Some(true)`: same-label non-self pairs (positives);
+    *  - `sameLabel = None`: both, tagged `__same` — a pair is same-label
+    *    or cross-label, never both, so the tag partitions the output and
+    *    ONE join serves both triplet sides.
+    * A pair sharing several buckets is kept at its [[firstCollisionBand]]
+    * only. With `requireBatchSide` (the incremental contract) only pairs
+    * with at least one `__isb` side are emitted: index-index pairs are
+    * already in the prior result.
     *
-    * The bucket join is hinted SHUFFLE_HASH: sort-merge buffers the
+    * Cap semantics. A pair is emitted at band b iff
+    *  - neg: the TOTAL population of bucket b is <= maxBucketSize;
+    *  - pos: the pair's LABEL BLOCK within bucket b is <= maxBucketSize
+    *    (so callers may size the positive geometry by the largest label
+    *    instead of the corpus).
+    * Both modes keep exactly these semantics: total <= cap implies every
+    * label block <= cap, so a join group (`__grp`) that is the WHOLE
+    * bucket while its total is under the cap serves both modes; a bucket
+    * over the total cap degrades to per-LABEL groups, which generate
+    * exactly the same-label pairs the positive side still owes, with
+    * fan-out bounded by the labeled cap, never the bucket's n².
+    * SimilaritySpec pins both-modes == per-mode in both regimes.
+    * Populations are WINDOW counts: the frame's (band, sig) hash
+    * partitioning co-locates every bucket and label block, so they cost
+    * one partition-local sort, not an agg + join-back.
+    *
+    * The verify runs IN the join — both sides carry their vector and
+    * norm, so no id-keyed scoring join ever shuffles candidate pairs ×
+    * vectors (measured 66 s → 3 s on the sf1 incremental path; the
+    * narrow "fetch" placement measured 8× slower on q255, docs/SCALE.md).
+    * dot/(nrm·nrm) is the identical double the exact pairwise form
+    * yields. The join is hinted SHUFFLE_HASH: sort-merge buffers the
     * vector-carrying rows per key group and pays per-PAIR wide-row
     * traffic (53 s vs 15 s measured on the sf1 pos pass); the hash build
     * holds one partition's n×bands/partitions rows — the same
     * partition-fits-memory assumption every hash aggregation in the
-    * engine already makes (size shuffle partitions accordingly). */
-  private[operators] def annLabelScoredFromSigs(
-      s: DataFrame, sameLabel: Boolean, bands: Int, bitsPerBand: Int,
-      maxBucketSize: Int
+    * engine already makes. (band, sig) hash partitioning satisfies the
+    * grouped join keys' clustering (subset rule), so the join adds no
+    * exchange over the signature frame. */
+  private[operators] def bucketJoin(
+      rows: DataFrame, sameLabel: Option[Boolean], bands: Int,
+      bitsPerBand: Int, maxBucketSize: Int, requireBatchSide: Boolean = false
   ): DataFrame = {
-    // same-label pairs must agree on lbl anyway, so fold the label into
-    // the bucket key: bucket population (and the maxBucketSize cap) is
-    // then per LABEL BLOCK, which lets callers size bitsPerBand by the
-    // largest label instead of the corpus — the within-block geometry
-    // keeps recall high where corpus-sized bits would collapse it. The
-    // (band, sig) hash partitioning above still co-locates every
-    // (lbl, band, sig) group, so the label-widened join adds no exchange.
-    val bucketKey = if (sameLabel) Seq("lbl", "band", "sig")
-      else Seq("band", "sig")
-    // degenerate-bucket cap: bucket keys whose population exceeds
-    // maxBucketSize are excluded from pair generation (boilerplate-heavy
-    // signature collisions; size bitsPerBand up instead of paying n² in a
-    // hot bucket). The population is a WINDOW count — the frame's
-    // (band, sig) hash partitioning co-locates every bucket key, so the
-    // annotation is one partition-local sort, not an agg + join-back
-    // (which costs extra stages per call at identical semantics).
-    val sOk = s.withColumn("__bsz",
-        count(lit(1)).over(Window.partitionBy(bucketKey.map(col): _*)))
-      .filter(col("__bsz") <= maxBucketSize)
-    val joinKey = if (sameLabel) Seq("__lbl", "band", "sig")
-      else Seq("band", "sig")
-    val fetch = fetchVerify(s)
-    val vq = if (fetch) Nil
-      else Seq(col("v").as("__qv"), col("nrm").as("__qn"))
-    val vn = if (fetch) Nil
-      else Seq(col("v").as("__nv"), col("nrm").as("__nn"))
-    val a = sOk.select(Seq(col("band"), col("sig"),
-      col("id").as("query_id"), col("lbl").as("__ql"),
-      col("lbl").as("__lbl"), col("fullsig").as("__qf")) ++ vq: _*)
-    val b = sOk.select(Seq(col("band"), col("sig"),
-      col("id").as("neighbor_id"), col("lbl").as("__nl"),
-      col("lbl").as("__lbl"), col("fullsig").as("__nf")) ++ vn: _*)
-    val labelPred =
-      if (sameLabel) col("__ql") === col("__nl") &&
-        col("query_id") =!= col("neighbor_id")
-      else col("__ql") =!= col("__nl")
-    val matched = a.hint("SHUFFLE_HASH").join(b, joinKey)
-      .filter(labelPred)
+    def population(keys: String*): Column =
+      count(lit(1)).over(Window.partitionBy(keys.map(col): _*))
+    val (grouped, key) = sameLabel match {
+      case Some(false) =>
+        (rows.withColumn("__bsz", population("band", "sig"))
+          .filter(col("__bsz") <= maxBucketSize), Seq("band", "sig"))
+      case Some(true) =>
+        (rows.withColumn("__lsz", population("band", "sig", "lbl"))
+          .filter(col("__lsz") <= maxBucketSize), Seq("lbl", "band", "sig"))
+      case None =>
+        // rows useless to both modes (over-cap bucket AND over-cap label
+        // block) drop before the join
+        (rows.withColumn("__bsz", population("band", "sig"))
+          .withColumn("__lsz", population("band", "sig", "lbl"))
+          .filter(col("__bsz") <= maxBucketSize ||
+            col("__lsz") <= maxBucketSize)
+          .withColumn("__grp", when(col("__bsz") <= maxBucketSize, lit(""))
+            .otherwise(concat(lit("L"), col("lbl").cast("string")))),
+          Seq("__grp", "band", "sig"))
+    }
+    def side(id: String, p: String, isb: String): DataFrame =
+      grouped.select(key.map(col) ++ Seq(col("id").as(id),
+        col("lbl").as(s"__${p}l"), col("fullsig").as(s"__${p}f")) ++
+        (if (requireBatchSide) Seq(col("__isb").as(isb)) else Nil) ++
+        Seq(col("v").as(s"__${p}v"), col("nrm").as(s"__${p}n")): _*)
+    val joined = side("query_id", "q", "__ab").hint("SHUFFLE_HASH")
+      .join(side("neighbor_id", "n", "__nb"), key)
+    val pairs = if (requireBatchSide) joined.filter(col("__ab") || col("__nb"))
+      else joined
+    val (ql, nl) = (col("__ql"), col("__nl"))
+    val nonSelf = col("query_id") =!= col("neighbor_id")
+    val labelPred = sameLabel match {
+      case Some(true) => ql === nl && nonSelf
+      case Some(false) => ql =!= nl
+      case None => ql =!= nl || nonSelf
+    }
+    pairs.filter(labelPred)
       .filter(col("band") ===
         firstCollisionBand(col("__qf"), col("__nf"), bands, bitsPerBand))
-    if (fetch)
-      scoreFetched(matched.select(col("query_id"), col("neighbor_id")),
-        vecsFromSigs(s))
-    else matched
-      .withColumn("cosine",
-        round(nanSafe(dot(col("__qv"), col("__nv")) / (col("__qn") * col("__nn"))), 6))
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-  }
-
-  /** Both label modes from ONE bucket join, for the case where the
-    * positive geometry equals the negative one (the gate config, and any
-    * corpus whose largest label block and total size land in the same
-    * [[autoBitsPerBand]] tier): the same-label pairs the positive pass
-    * needs are a subset of the pairs the (band, sig)-keyed join already
-    * generates for the cross-label pass, so running the SHUFFLE_HASH
-    * self-join twice — once keyed (lbl, band, sig), once (band, sig) —
-    * doubles the heaviest stage for nothing.
-    *
-    * Per-mode cap semantics are preserved EXACTLY. A pair is emitted at
-    * its global [[firstCollisionBand]] b iff
-    *  - neg: the TOTAL population of bucket b is <= maxBucketSize;
-    *  - pos: the pair's LABEL BLOCK within bucket b is <= maxBucketSize.
-    * Total <= cap implies every label block <= cap, so a join group that
-    * is the WHOLE bucket while its total is under the cap serves both
-    * modes with no extra filter; a bucket over the total cap degrades to
-    * per-LABEL join groups, which generate exactly the same-label pairs
-    * the positive pass still owes (cross-label pairs from such buckets
-    * are shed in the separate path too) with fan-out bounded by the
-    * labeled cap, never the bucket's n². SimilaritySpec pins fused ==
-    * separate with a cap small enough to force both regimes — the
-    * equivalence is by construction, not just at the gate.
-    *
-    * `rows` is a (id, lbl, v, nrm, fullsig, band, sig) frame — a
-    * [[bandSigFrame]], an [[artSigFrame]], or the incremental union —
-    * optionally carrying `__isb` (row comes from the new batch); when
-    * `requireBatchSide` is set only pairs with at least one batch side
-    * are emitted (the incremental contract: index-index pairs are already
-    * in the prior result). Returns ONE tagged scored frame
-    * (query_id, neighbor_id, cosine, __same) — a pair is same-label or
-    * cross-label, never both, so the tag partitions the output; callers
-    * heap by (query_id, __same) so the join executes once for both
-    * modes. */
-  private def fusedBothModesFromRows(
-      rows: DataFrame, bands: Int, bitsPerBand: Int, maxBucketSize: Int,
-      requireBatchSide: Boolean,
-      // "fetch"-verify vector source. None = the rows' own band-0 rows
-      // (valid for whole-corpus signature frames); the INCREMENTAL caller
-      // passes the artifact vectors explicitly — its index side is pruned
-      // to touched buckets, which can drop an id's band-0 row while other
-      // bands still generate pairs.
-      fetchVecs: Option[DataFrame] = None
-  ): DataFrame = {
-    // both cap populations as WINDOW counts: the frame is already hash-
-    // partitioned by (band, sig), which co-locates (lbl, band, sig) too,
-    // so neither window needs an exchange — one partition-local sort
-    // annotates every row with its bucket total and its label-block size.
-    // (The agg-then-join-back formulation costs 4+ extra stages per seed;
-    // measured slower than the fusion saves at the gate.)
-    val wB = Window.partitionBy(col("band"), col("sig"))
-    val wL = Window.partitionBy(col("band"), col("sig"), col("lbl"))
-    // __grp is the join group: a whole bucket while its TOTAL is under the
-    // cap (serves both modes), else one label block (same-label pairs
-    // only — the pos cap is per label block, and keying over-cap buckets
-    // by label bounds their fan-out by the labeled cap instead of n²).
-    // Rows useless to both modes (over-cap bucket AND over-cap label
-    // block) drop before the join.
-    val annotated = rows
-      .withColumn("__bsz", count(lit(1)).over(wB))
-      .withColumn("__lsz", count(lit(1)).over(wL))
-      .filter(col("__bsz") <= maxBucketSize ||
-        col("__lsz") <= maxBucketSize)
-      .withColumn("__grp",
-        when(col("__bsz") <= maxBucketSize, lit(""))
-          .otherwise(concat(lit("L"), col("lbl").cast("string"))))
-    val fetch = fetchVerify(rows)
-    val isb = (suffix: String) =>
-      if (requireBatchSide) Seq(col("__isb").as(s"__$suffix")) else Nil
-    val vq = if (fetch) Nil
-      else Seq(col("v").as("__qv"), col("nrm").as("__qn"))
-    val vn = if (fetch) Nil
-      else Seq(col("v").as("__nv"), col("nrm").as("__nn"))
-    val a = annotated.select(Seq(col("__grp"), col("band"), col("sig"),
-      col("lbl").as("__ql"), col("id").as("query_id"),
-      col("fullsig").as("__qf")) ++ vq ++ isb("ab"): _*)
-    val b = annotated.select(Seq(col("__grp"), col("band"), col("sig"),
-      col("lbl").as("__nl"), col("id").as("neighbor_id"),
-      col("fullsig").as("__nf")) ++ vn ++ isb("nb"): _*)
-    // (band, sig) hash partitioning satisfies the (grp, band, sig) join's
-    // clustering requirement (subset rule), so the ONE bucket join still
-    // runs exchange-free over the cached signature frame
-    val pairs0 = a.hint("SHUFFLE_HASH").join(b, Seq("__grp", "band", "sig"))
-    val pairs = if (requireBatchSide)
-      pairs0.filter(col("__ab") || col("__nb")) else pairs0
-    val matched = pairs
-      // keep cross-label pairs and NON-SELF same-label pairs
-      .filter(col("__ql") =!= col("__nl") ||
-        col("query_id") =!= col("neighbor_id"))
-      .filter(col("band") ===
-        firstCollisionBand(col("__qf"), col("__nf"), bands, bitsPerBand))
-      .withColumn("__same", col("__ql") === col("__nl"))
-    if (fetch)
-      scoreFetched(matched.select(col("query_id"), col("neighbor_id"),
-          col("__same")), fetchVecs.getOrElse(vecsFromSigs(rows)))
-        .select(col("query_id"), col("neighbor_id"), col("cosine"),
-          col("__same"))
-    else matched
-      // the SAME dot/(nrm·nrm) rounded double as the separate paths — the
-      // fused form must stay bit-identical to the one-shot and exact forms
-      .withColumn("cosine",
-        round(nanSafe(dot(col("__qv"), col("__nv")) / (col("__qn") * col("__nn"))), 6))
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("__same"))
-  }
-
-  /** One-shot fused twin of two [[annLabelScoredFromSigs]] calls over the
-    * same signature frame — ONE tagged scored frame from one bucket
-    * join. */
-  private[operators] def annLabelScoredBothFromSigs(
-      s: DataFrame, bands: Int, bitsPerBand: Int, maxBucketSize: Int
-  ): DataFrame =
-    fusedBothModesFromRows(s, bands, bitsPerBand, maxBucketSize,
-      requireBatchSide = false)
-
-  /** Incremental fused twin of two [[annIncrementalScored]] calls over the
-    * same (index artifact, batch artifact) pair: the batch-involved tagged
-    * scored frame, its batch band rows pinned to the caller's scope. The
-    * index side is pruned to the (band, sig) buckets the batch
-    * touches — a superset of the labeled touched set the
-    * separate positive pass prunes to, and the extra rows provably change
-    * neither mode's pair set (a pos pair needs a batch side of its own
-    * label in the bucket, which makes its labeled bucket touched). */
-  private[operators] def annIncrementalScoredBoth(
-      indexArt: DataFrame, batchArt: DataFrame, pin: Materialize.Pin,
-      bands: Int, bitsPerBand: Int, maxBucketSize: Int
-  ): DataFrame = {
-    val spark = batchArt.sparkSession
-    val fetch = fetchVerify(batchArt)
-    // under "fetch" verify the band rows are NARROW (no vector at all —
-    // the artifacts themselves are the vector source, so not even the
-    // band-0 carry is needed)
-    def vBandRows(art: DataFrame): DataFrame =
-      if (fetch)
-        art.select(col("id"), col("lbl"), col("fullsig"),
-          lit(null).cast("array<double>").as("v"),
-          lit(null).cast("double").as("nrm"),
-          posexplode(col("sigs")).as(Seq("band", "sig")))
-      else
-        art.select(col("id"), col("lbl"), col("fullsig"), col("v"),
-          col("nrm"), posexplode(col("sigs")).as(Seq("band", "sig")))
-    val bRows = pin(vBandRows(batchArt)
-      .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("band"), col("sig")))
-    val touched = bRows.select(col("band"), col("sig")).distinct()
-    val iRows = vBandRows(indexArt)
-      .join(touched, Seq("band", "sig"), "left_semi")
-    val allRows = iRows.withColumn("__isb", lit(false))
-      .unionByName(bRows.withColumn("__isb", lit(true)))
-    val vecs =
-      if (fetch) Some(indexArt.select(col("id"), col("v"), col("nrm"))
-        .unionByName(batchArt.select(col("id"), col("v"), col("nrm"))))
-      else None
-    fusedBothModesFromRows(allRows, bands, bitsPerBand,
-      maxBucketSize, requireBatchSide = true, fetchVecs = vecs)
+      .select(Seq(col("query_id"), col("neighbor_id"),
+        round(nanSafe(dot(col("__qv"), col("__nv")) /
+          (col("__qn") * col("__nn"))), 6).as("cosine")) ++
+        (if (sameLabel.isEmpty) Seq((ql === nl).as("__same")) else Nil): _*)
   }
 
   /** Contrastive TRIPLET assembly: for every anchor, its hardest positive
@@ -544,47 +312,31 @@ object Similarity {
     assembleTriplets(pos, neg)
   }
 
-  /** The TAGGED top-1 side plan behind triplet mining over a pinned
-    * (id, lbl, v, nrm) frame: one row per (anchor, side) — `__same` true
-    * for the hardest positive, false for the hardest negative — with its
-    * band-signature frames pinned to the same scope. ONE distinct bounded
-    * heap keyed (query_id, __same) serves both sides: grouping by the tag is
-    * exactly a per-side heap, and feeding both modes through a single
-    * consumer is what lets the fused bucket join below execute ONCE
-    * (split-then-heap would duplicate the join subtree into each side's
-    * plan). A signature frame depends only on (geometry, seed) — NOT on
-    * the label mode — so when the positive geometry coincides with the
-    * negative one (the gate config) both modes share ONE frame per seed
-    * AND one bucket join per seed (see [[fusedBothModesFromRows]]);
-    * differing geometries fall back to per-mode joins, still heaped
-    * together. */
-  private def tripletSidePlans(
-      v: DataFrame, pin: Materialize.Pin, dim: Int, bands: Int,
-      bitsPerBand: Int, seeds: Seq[Long], maxBucketSize: Int,
-      posBands: Int, posBitsPerBand: Int
-  ): DataFrame = {
+  /** The tagged (query_id, neighbor_id, cosine, __same) candidates of
+    * triplet mining over `nSeeds` bandings — the one split-geometry
+    * choice. When the positive geometry equals the negative one (the gate
+    * config, and any corpus whose largest label block and total size land
+    * in the same [[autoBitsPerBand]] tier) each seed runs ONE both-modes
+    * [[bucketJoin]]; otherwise each mode runs its own join at its own
+    * geometry. `join(sameLabel, bands, bitsPerBand, i)` scores seed `i`.
+    * Callers heap by (query_id, __same), which is exactly a per-side
+    * heap, so every join executes once for both sides. */
+  private def tripletCandidates(
+      bands: Int, bitsPerBand: Int, posBands: Int, posBitsPerBand: Int,
+      nSeeds: Int
+  )(join: (Option[Boolean], Int, Int, Int) => DataFrame): DataFrame = {
     val (pBnd, pBits) = (if (posBands > 0) posBands else bands,
       if (posBitsPerBand > 0) posBitsPerBand else bitsPerBand)
-    val sigCache =
-      scala.collection.mutable.Map.empty[(Int, Int, Long), DataFrame]
-    def sigs(bnd: Int, bits: Int, sd: Long): DataFrame =
-      sigCache.getOrElseUpdate((bnd, bits, sd),
-        bandSigFrame(v, pin, dim, bnd, bits, sd))
-    val tagged =
-      if (pBnd == bands && pBits == bitsPerBand)
-        seeds.map(sd => annLabelScoredBothFromSigs(
-            sigs(bands, bitsPerBand, sd), bands, bitsPerBand, maxBucketSize))
-          .reduce(_ unionByName _)
-      else
-        Seq(true, false).map { sameLabel =>
-          val (bnd, bits) = if (sameLabel) (pBnd, pBits)
-            else (bands, bitsPerBand)
-          seeds.map(sd => annLabelScoredFromSigs(
-              sigs(bnd, bits, sd), sameLabel, bnd, bits, maxBucketSize))
-            .reduce(_ unionByName _)
-            .withColumn("__same", lit(sameLabel))
-        }.reduce(_ unionByName _)
-    taggedHeap1(tagged)
+    def overSeeds(sameLabel: Option[Boolean], bnd: Int, bits: Int) =
+      (0 until nSeeds).map(join(sameLabel, bnd, bits, _))
+        .reduce(_ unionByName _)
+    if (pBnd == bands && pBits == bitsPerBand)
+      overSeeds(None, bands, bitsPerBand)
+    else
+      Seq((true, pBnd, pBits), (false, bands, bitsPerBand)).map {
+        case (same, bnd, bits) =>
+          overSeeds(Some(same), bnd, bits).withColumn("__same", lit(same))
+      }.reduce(_ unionByName _)
   }
 
   /** The distinct bounded heap over a tagged scored frame: top-1 per
@@ -604,29 +356,45 @@ object Similarity {
 
   // ---------------- incremental ANN mining ------------------------
 
-  /** Persisted band-signature index artifact for the incremental ANN
-    * miners ([[hardNegativesAnnIncremental]], [[tripletMiningIncremental]])
-    * — ONE row per vector: (id, lbl, v, nrm, sigs, fullsig), i.e. the
-    * cached frame the one-shot miners build internally, exposed so it can
-    * be WRITTEN once and re-read per batch instead of re-scanning and
-    * re-hashing the corpus on every mining run (the
-    * [[Dedup.incrementalLshMatches]] treatment). Store it partitioned/
-    * bucketed however the table layer prefers; band rows are derived
-    * map-side at read time (posexplode), so no banding shuffle is ever
-    * paid for the index side again. */
+  /** Persisted band-signature index artifact for the ANN miners — ONE row
+    * per vector: (id, lbl, v, nrm, sigs, fullsig), i.e. the frame the
+    * one-shot miners build internally, exposed so it can be WRITTEN once
+    * and re-read per batch instead of re-scanning and re-hashing the
+    * corpus on every mining run (the [[Dedup.incrementalLshMatches]]
+    * treatment). Store it partitioned/bucketed however the table layer
+    * prefers; band rows are derived map-side at read time
+    * ([[artSigFrame]]'s posexplode), so no banding shuffle is ever paid
+    * for the index side again. */
   def annIndex(
       corpus: DataFrame, idCol: String, vecCol: String, labelCol: String,
       dim: Int, bands: Int = 32, bitsPerBand: Int = 2, seed: Long = 42L
-  ): DataFrame = {
+  ): DataFrame =
+    signed(vectors(corpus, idCol, vecCol, labelCol), dim, bands,
+      bitsPerBand, seed)
+
+  /** (id, lbl, v, nrm): the norm is computed ONCE per vector — the
+    * per-pair verify is then a single dot product, and dot/(nrm_a·nrm_b)
+    * is the identical double the pairwise dot/(√(a·a)·√(b·b)) form
+    * yields (same expressions, same order), so rounding matches the exact
+    * path bit-for-bit. */
+  private def vectors(corpus: DataFrame, idCol: String, vecCol: String,
+      labelCol: String): DataFrame =
+    corpus.select(col(idCol).as("id"), col(labelCol).as("lbl"),
+        asDouble(col(vecCol)).as("v"))
+      .withColumn("nrm", norm(col("v")))
+
+  /** [[annIndex]]'s signature columns over a [[vectors]] frame: all band
+    * signatures in ONE fused pass, plus the full signature PACKED into one
+    * long so pair dedup ([[firstCollisionBand]]) is a local integer
+    * filter. */
+  private def signed(v: DataFrame, dim: Int, bands: Int, bitsPerBand: Int,
+      seed: Long): DataFrame = {
     require(bands * bitsPerBand <= 64,
       "packed-signature dedup needs bands*bitsPerBand <= 64")
     val packed = (0 until bands).map(b =>
       shiftleft(element_at(col("sigs"), b + 1), b * bitsPerBand))
       .reduce(_ bitwiseOR _)
-    corpus.select(col(idCol).as("id"), col(labelCol).as("lbl"),
-        asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", norm(col("v")))
-      .withColumn("sigs",
+    v.withColumn("sigs",
         rpSignatureBands(col("v"), bands, bitsPerBand, dim, seed))
       .withColumn("fullsig", packed)
   }
@@ -649,22 +417,52 @@ object Similarity {
     indexArt.join(removals.select(col(idCol).as("id")).distinct(),
       Seq("id"), "left_anti")
 
-  /** The from-index twin of [[bandSigFrame]]: the (band, sig)-keyed
-    * signature frame derived from a persisted [[annIndex]] artifact — no
-    * corpus re-scan and no re-hash, just the map-side explode (vector
-    * and norm carried for the in-join verify) re-keyed and pinned. */
-  private def artSigFrame(art: DataFrame, pin: Materialize.Pin): DataFrame = {
-    // same band-0-only vector carry as bandSigFrame under "fetch" verify
-    val vCol = if (fetchVerify(art)) when(col("band") === 0, col("v"))
-      else col("v")
-    val nrmCol = if (fetchVerify(art)) when(col("band") === 0, col("nrm"))
-      else col("nrm")
-    pin(art.select(col("id"), col("lbl"), col("v"), col("nrm"),
-        col("fullsig"), posexplode(col("sigs")).as(Seq("band", "sig")))
-      .select(col("id"), col("lbl"), vCol.as("v"), nrmCol.as("nrm"),
-        col("fullsig"), col("band"), col("sig"))
-      .repartition(art.sparkSession.sessionState.conf.numShufflePartitions,
-        col("band"), col("sig")))
+  /** One (id, lbl, v, nrm, fullsig, band, sig) row per vector and band:
+    * the map-side explode of an [[annIndex]]-shaped frame. */
+  private def bandRows(art: DataFrame): DataFrame =
+    art.select(col("id"), col("lbl"), col("v"), col("nrm"), col("fullsig"),
+      posexplode(col("sigs")).as(Seq("band", "sig")))
+
+  /** The one signature frame of every miner: [[bandRows]] re-keyed by
+    * (band, sig) and pinned. The partition count is EXPLICIT: pair
+    * generation fans a row out |bucket| times, so the (band, sig)
+    * partitioning — not the input file layout — must set the parallelism
+    * of everything downstream (a single-file corpus would otherwise run
+    * the whole candidate pipeline in one task), and AQE sizes coalescing
+    * by the exchange's bytes, which under-provisions a stage that expands
+    * |bucket|× after it. The rows CARRY the vector and its norm for the
+    * in-join verify; pinning holds the explode to ONE evaluation — it
+    * feeds the bucket populations and both join sides. */
+  private[operators] def artSigFrame(art: DataFrame,
+      pin: Materialize.Pin): DataFrame =
+    pin(bandRows(art).repartition(
+      art.sparkSession.sessionState.conf.numShufflePartitions,
+      col("band"), col("sig")))
+
+  /** The incremental miners' signature rows: the batch's [[artSigFrame]]
+    * tagged `__isb`, unioned with the index's [[bandRows]] PRUNED to the
+    * buckets the batch touches — (lbl, band, sig) for the positive mode,
+    * (band, sig) otherwise — before any shuffle, so the incremental cost
+    * scales with the batch, not the corpus. The touched set is
+    * batch-sized, so the prune is a semi-join AQE will usually broadcast.
+    * [[bucketJoin]]'s caps then count the UNION population of each touched
+    * bucket — exactly the one-shot cap restricted to touched buckets;
+    * pairs already mined into the prior result are never retroactively
+    * shed. For both modes the (band, sig) prune keeps a superset of the
+    * labeled touched set, and the extra rows change neither mode's pair
+    * set (a positive pair needs a batch side of its own label in the
+    * bucket, which makes its labeled bucket touched). */
+  private[operators] def batchInvolvedRows(
+      indexArt: DataFrame, batchArt: DataFrame, pin: Materialize.Pin,
+      sameLabel: Option[Boolean]
+  ): DataFrame = {
+    val key = if (sameLabel.contains(true)) Seq("lbl", "band", "sig")
+      else Seq("band", "sig")
+    val batch = artSigFrame(batchArt, pin)
+    bandRows(indexArt)
+      .join(batch.select(key.map(col): _*).distinct(), key, "left_semi")
+      .withColumn("__isb", lit(false))
+      .unionByName(batch.withColumn("__isb", lit(true)))
   }
 
   /** One-shot [[hardNegativesAnn]] FROM a persisted [[annIndex]] artifact:
@@ -678,19 +476,15 @@ object Similarity {
       maxBucketSize: Int = 20000
   ): DataFrame =
     Materialize.scoped { pin =>
-      val scored = annLabelScoredFromSigs(artSigFrame(indexArt, pin),
-        sameLabel = false, bands, bitsPerBand, maxBucketSize)
-      ranked(graft.plans.TopKPerGroup(scored,
-        Seq(col("query_id")),
-        Seq(col("cosine").desc, col("neighbor_id").asc), k))
+      hardNegativesTopK(artSigFrame(indexArt, pin), k, bands, bitsPerBand,
+        maxBucketSize)
     }
 
   /** [[tripletMiningSides]] FROM persisted per-seed [[annIndex]]
     * artifacts — `negIndexes` built with the negative geometry,
     * `posIndexes` with the positive one, each aligned with the seed
-    * order. Pass the SAME sequence for both when the geometries coincide
-    * (the gate config): each seed's signature frame is then shared across
-    * the two label modes. */
+    * order. When the geometries coincide (the gate config) `negIndexes`
+    * serve both label modes and `posIndexes` is not read. */
   def tripletMiningSidesFromIndexes(
       negIndexes: Seq[DataFrame], posIndexes: Seq[DataFrame],
       bands: Int = 32, bitsPerBand: Int = 2, maxBucketSize: Int = 20000,
@@ -698,173 +492,48 @@ object Similarity {
   ): (DataFrame, DataFrame) = {
     require(negIndexes.nonEmpty && posIndexes.size == negIndexes.size,
       "one annIndex artifact per seed per geometry")
-    val (pBnd, pBits) = (if (posBands > 0) posBands else bands,
-      if (posBitsPerBand > 0) posBitsPerBand else bitsPerBand)
-    // ONE heap for both sides (grouping by the tag IS a per-side heap) and
-    // ONE materialization — heaping or checkpointing the sides separately
-    // would duplicate the bucket-join subtree into each side's plan
+    // ONE heap for both sides and ONE materialization — heaping or
+    // checkpointing the sides separately would duplicate the bucket-join
+    // subtree into each side's plan
     splitTagged(Materialize.scoped { pin =>
-      val negSigs = negIndexes.map(artSigFrame(_, pin))
-      val sharedSigs =
-        posIndexes.zip(negIndexes).forall { case (p, n) => p eq n }
-      val posSigs =
-        if (sharedSigs) negSigs else posIndexes.map(artSigFrame(_, pin))
-      val tagged =
-        if (sharedSigs && pBnd == bands && pBits == bitsPerBand)
-          // coinciding geometries over shared artifacts: one bucket join
-          // per seed serves both label modes
-          negSigs.map(s => annLabelScoredBothFromSigs(s,
-              bands, bitsPerBand, maxBucketSize))
-            .reduce(_ unionByName _)
-        else
-          Seq((posSigs, true, pBnd, pBits),
-              (negSigs, false, bands, bitsPerBand)).map {
-            case (sigs, sameLabel, bnd, bits) =>
-              sigs.map(s => annLabelScoredFromSigs(s, sameLabel,
-                  bnd, bits, maxBucketSize))
-                .reduce(_ unionByName _)
-                .withColumn("__same", lit(sameLabel))
-          }.reduce(_ unionByName _)
-      taggedHeap1(tagged)
+      taggedHeap1(tripletCandidates(bands, bitsPerBand, posBands,
+          posBitsPerBand, negIndexes.size) { (sameLabel, bnd, bits, i) =>
+        val art = if (sameLabel.contains(true)) posIndexes(i)
+          else negIndexes(i)
+        bucketJoin(artSigFrame(art, pin), sameLabel, bnd, bits,
+          maxBucketSize)
+      })
     })
-  }
-
-  /** Candidate pairs INVOLVING the batch (batch-batch, batch-index,
-    * index-batch; never index-index — those are already in the prior
-    * result): the banded-LSH machinery with the index side PRUNED to the
-    * buckets the batch actually touches before any shuffle, so the
-    * incremental cost scales with the batch, not the corpus. The
-    * `maxBucketSize` cap is evaluated on the UNION population of each
-    * touched bucket — exactly the one-shot cap restricted to touched
-    * buckets; pairs already mined into the prior result are never
-    * retroactively shed. */
-  private[operators] def annIncrementalScored(
-      indexArt: DataFrame, batchArt: DataFrame, pin: Materialize.Pin,
-      sameLabel: Boolean, bands: Int, bitsPerBand: Int, maxBucketSize: Int
-  ): DataFrame = {
-    val spark = batchArt.sparkSession
-    def keyed(rows: DataFrame): DataFrame =
-      if (sameLabel) rows.withColumn("__lbl", col("lbl")) else rows
-    val keyCols = if (sameLabel) Seq("__lbl", "band", "sig")
-      else Seq("band", "sig")
-    // In-join verify: band rows CARRY the vector and its norm, so the
-    // exact verify happens INSIDE the bucket join and the shuffled volume
-    // is n×bands vector rows — never candidate-pairs × vectors. (The
-    // earlier pairs-carry-vectors formulation shuffled every candidate
-    // pair with a vector attached: measured 27M wide rows / 733 MB / 66 s
-    // at the sf1 rehearsal vs 3 s for this shape.) The NARROW alternative
-    // ("fetch" verify, spark.graft.miner.verify=fetch) keeps the band
-    // rows vector-free and scores pairs by two id-keyed joins against the
-    // artifact vectors — see docs/SCALE.md "miner verify A/B".
-    val fetch = fetchVerify(batchArt)
-    def vBandRows(art: DataFrame): DataFrame =
-      if (fetch)
-        art.select(col("id"), col("lbl"), col("fullsig"),
-          lit(null).cast("array<double>").as("v"),
-          lit(null).cast("double").as("nrm"),
-          posexplode(col("sigs")).as(Seq("band", "sig")))
-      else
-        art.select(col("id"), col("lbl"), col("fullsig"), col("v"),
-          col("nrm"), posexplode(col("sigs")).as(Seq("band", "sig")))
-    val bRows = pin(keyed(vBandRows(batchArt))
-      .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("band"), col("sig")))
-    // touched buckets: the batch's distinct bucket keys — batch-sized,
-    // so the index prune is a semi-join AQE will usually broadcast
-    val touched = bRows.select(keyCols.map(col): _*).distinct()
-    val iRows = keyed(vBandRows(indexArt))
-      .join(touched, keyCols, "left_semi")
-    val allRows = iRows.withColumn("__isb", lit(false))
-      .unionByName(bRows.withColumn("__isb", lit(true)))
-    // bucket-cap population as a WINDOW count over the union (one
-    // exchange + sort vs the agg + join-back's two): same populations —
-    // the cap is the one-shot cap restricted to touched buckets
-    val ok = allRows.withColumn("__bsz",
-        count(lit(1)).over(Window.partitionBy(keyCols.map(col): _*)))
-      .filter(col("__bsz") <= maxBucketSize)
-    val vq = if (fetch) Nil
-      else Seq(col("v").as("__qv"), col("nrm").as("__qn"))
-    val vn = if (fetch) Nil
-      else Seq(col("v").as("__nv"), col("nrm").as("__nn"))
-    val a = ok.select(keyCols.map(col) ++ Seq(col("id").as("query_id"),
-      col("lbl").as("__ql"), col("fullsig").as("__qf"),
-      col("__isb").as("__ab")) ++ vq: _*)
-    val b = ok.select(keyCols.map(col) ++ Seq(col("id").as("neighbor_id"),
-      col("lbl").as("__nl"), col("fullsig").as("__nf"),
-      col("__isb").as("__nb")) ++ vn: _*)
-    val labelPred =
-      if (sameLabel) col("__ql") === col("__nl") &&
-        col("query_id") =!= col("neighbor_id")
-      else col("__ql") =!= col("__nl")
-    // the SAME dot/(nrm·nrm) double expression as the one-shot path —
-    // identical value where both paths emit a pair
-    val matched = a.hint("SHUFFLE_HASH").join(b, keyCols)
-      .filter(col("__ab") || col("__nb"))
-      .filter(labelPred)
-      .filter(col("band") ===
-        firstCollisionBand(col("__qf"), col("__nf"), bands, bitsPerBand))
-    if (fetch)
-      scoreFetched(matched.select(col("query_id"), col("neighbor_id")),
-        indexArt.select(col("id"), col("v"), col("nrm"))
-          .unionByName(batchArt.select(col("id"), col("v"), col("nrm"))))
-    else matched
-      .withColumn("cosine",
-        round(nanSafe(dot(col("__qv"), col("__nv")) / (col("__qn") * col("__nn"))), 6))
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-  }
-
-  /** Incremental banded-LSH hard-negative top-k merge: new-batch-involved
-    * cross-label candidates are exact-verified and merged with the PRIOR
-    * per-anchor top-k under the distinct bounded heap, then ranked.
-    * Exactness of the merge: a pair in the accumulated one-shot top-k is
-    * either index-index (then it survives the index-only top-k — more
-    * candidates only displace — so it is in `prior`) or batch-involved
-    * (then the same banding generates it here). */
-  private def annTopKIncremental(
-      indexArt: DataFrame, prior: DataFrame, batchArt: DataFrame,
-      pin: Materialize.Pin, k: Int, bands: Int, bitsPerBand: Int,
-      maxBucketSize: Int
-  ): DataFrame = {
-    val merged = annIncrementalScored(indexArt, batchArt, pin,
-        sameLabel = false, bands, bitsPerBand, maxBucketSize)
-      .unionByName(prior.select(col("query_id"), col("neighbor_id"),
-        col("cosine")))
-    ranked(graft.plans.TopKPerGroup.distinct(merged, Seq(col("query_id")),
-      Seq(col("cosine").desc, col("neighbor_id").asc), k))
   }
 
   /** Incremental [[hardNegativesAnn]]: fold a NEW BATCH of vectors into a
     * previously-mined result without re-scanning the corpus — `indexArt`
-    * is the persisted [[annIndex]] artifact (same geometry + seed),
-    * `priorTopK` the previous mining output over the index alone. Only
-    * batch-involved buckets shuffle; SimilaritySpec proves incremental ==
-    * one-shot over the accumulated corpus, and the q254 row pins it
-    * against q161's exact oracle. */
+    * is the persisted [[annIndex]] artifact and `batchArt` the batch's
+    * (same geometry + seed; a streaming fold that also appends the batch
+    * to the index builds it once for both), `priorTopK` the previous
+    * mining output over the index alone. Only batch-involved buckets
+    * shuffle. New-batch-involved cross-label candidates are merged with
+    * the prior per-anchor top-k under the distinct bounded heap, then
+    * ranked. Exactness of the merge: a pair in the accumulated one-shot
+    * top-k is either index-index (then it survives the index-only top-k —
+    * more candidates only displace — so it is in `prior`) or
+    * batch-involved (then the same banding generates it here).
+    * SimilaritySpec proves incremental == one-shot over the accumulated
+    * corpus, and the q254 row pins it against q161's exact oracle. */
   def hardNegativesAnnIncremental(
-      indexArt: DataFrame, priorTopK: DataFrame, batch: DataFrame,
-      idCol: String, vecCol: String, labelCol: String,
-      k: Int, dim: Int, bands: Int = 32, bitsPerBand: Int = 2,
-      seed: Long = 42L, maxBucketSize: Int = 20000
-  ): DataFrame =
-    Materialize.scoped { pin =>
-      val batchArt = pin(annIndex(batch, idCol, vecCol, labelCol, dim,
-        bands, bitsPerBand, seed))
-      annTopKIncremental(indexArt, priorTopK, batchArt, pin, k, bands,
-        bitsPerBand, maxBucketSize)
-    }
-
-  /** [[hardNegativesAnnIncremental]] with the batch's [[annIndex]]
-    * artifact PREBUILT by the caller — a streaming fold that also writes
-    * the artifact to the index hashes the batch once instead of three
-    * times (mining, write, and the operator's internal rebuild). */
-  def hardNegativesAnnIncrementalFromArt(
       indexArt: DataFrame, priorTopK: DataFrame, batchArt: DataFrame,
       k: Int, bands: Int = 32, bitsPerBand: Int = 2,
       maxBucketSize: Int = 20000
   ): DataFrame =
     Materialize.scoped { pin =>
-      annTopKIncremental(indexArt, priorTopK, batchArt, pin, k, bands,
-        bitsPerBand, maxBucketSize)
+      val merged = bucketJoin(
+          batchInvolvedRows(indexArt, batchArt, pin, Some(false)),
+          Some(false), bands, bitsPerBand, maxBucketSize,
+          requireBatchSide = true)
+        .unionByName(priorTopK.select(col("query_id"), col("neighbor_id"),
+          col("cosine")))
+      ranked(graft.plans.TopKPerGroup.distinct(merged, Seq(col("query_id")),
+        Seq(col("cosine").desc, col("neighbor_id").asc), k))
     }
 
   /** The per-anchor top-1 positive/negative frames behind
@@ -881,11 +550,12 @@ object Similarity {
     require(seeds.nonEmpty, "need at least one banding seed")
     // one heap + one materialization for both sides
     splitTagged(Materialize.scoped { pin =>
-      val v = pin(corpus.select(col(idCol).as("id"), col(labelCol).as("lbl"),
-          asDouble(col(vecCol)).as("v"))
-        .withColumn("nrm", norm(col("v"))))
-      tripletSidePlans(v, pin, dim, bands, bitsPerBand, seeds,
-        maxBucketSize, posBands, posBitsPerBand)
+      val v = pin(vectors(corpus, idCol, vecCol, labelCol))
+      taggedHeap1(tripletCandidates(bands, bitsPerBand, posBands,
+          posBitsPerBand, seeds.size) { (sameLabel, bnd, bits, i) =>
+        bucketJoin(artSigFrame(signed(v, dim, bnd, bits, seeds(i)), pin),
+          sameLabel, bnd, bits, maxBucketSize)
+      })
     })
   }
 
@@ -921,8 +591,6 @@ object Similarity {
   ): DataFrame = {
     require(negIndexes.size == seeds.size && posIndexes.size == seeds.size,
       "one annIndex artifact per seed per geometry")
-    val (pBnd, pBits) = (if (posBands > 0) posBands else bands,
-      if (posBitsPerBand > 0) posBitsPerBand else bitsPerBand)
     val taggedPrior = priorPos
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
       .withColumn("__same", lit(true))
@@ -933,35 +601,16 @@ object Similarity {
     // assemble — per-side heaps/checkpoints would duplicate or serialize
     // the generation subtrees
     val (pos, neg) = splitTagged(Materialize.scoped { pin =>
-      // Batch band-signature artifacts are per (seed, geometry); when the
-      // positive geometry coincides with the negative one (the gate
-      // config) the two sides share ONE artifact set instead of hashing
-      // the batch twice.
-      val negBatchArts = seeds.map(sd => pin(
-        annIndex(batch, idCol, vecCol, labelCol, dim, bands, bitsPerBand,
-          sd)))
-      val posBatchArts =
-        if (pBnd == bands && pBits == bitsPerBand) negBatchArts
-        else seeds.map(sd => pin(
-          annIndex(batch, idCol, vecCol, labelCol, dim, pBnd, pBits, sd)))
-      val tagged =
-        if (pBnd == bands && pBits == bitsPerBand)
-          // coinciding geometries: one batch-involved bucket join per seed
-          // serves both label modes (fusedBothModesFromRows proof)
-          negIndexes.zip(negBatchArts).map { case (ix, ba) =>
-            annIncrementalScoredBoth(ix, ba, pin, bands, bitsPerBand,
-              maxBucketSize)
-          }.reduce(_ unionByName _)
-        else
-          Seq((posIndexes, posBatchArts, true, pBnd, pBits),
-              (negIndexes, negBatchArts, false, bands, bitsPerBand)).map {
-            case (idxs, batchArts, sameLabel, bnd, bits) =>
-              idxs.zip(batchArts).map { case (ix, ba) =>
-                annIncrementalScored(ix, ba, pin, sameLabel, bnd, bits,
-                  maxBucketSize)
-              }.reduce(_ unionByName _)
-                .withColumn("__same", lit(sameLabel))
-          }.reduce(_ unionByName _)
+      // the batch is hashed once per join: the batch artifact's only
+      // consumer is its pinned signature frame
+      val tagged = tripletCandidates(bands, bitsPerBand, posBands,
+          posBitsPerBand, seeds.size) { (sameLabel, bnd, bits, i) =>
+        val ix = if (sameLabel.contains(true)) posIndexes(i) else negIndexes(i)
+        val batchArt = annIndex(batch, idCol, vecCol, labelCol, dim, bnd, bits,
+          seeds(i))
+        bucketJoin(batchInvolvedRows(ix, batchArt, pin, sameLabel), sameLabel,
+          bnd, bits, maxBucketSize, requireBatchSide = true)
+      }
       taggedHeap1(tagged.unionByName(taggedPrior))
     })
     assembleTriplets(pos, neg)
@@ -1091,38 +740,6 @@ object Similarity {
       .select(col(idCol), posexplode(projs).as(Seq("out_dim", "proj_s20")))
       .select(col(idCol), col("out_dim").cast("long").as("out_dim"),
         col("proj_s20"))
-  }
-
-  /** Anisotropy read-out of an [[embeddingGram]] result: the share of
-    * total second-moment energy on the top eigenvector, via power
-    * iteration on the COLLECTED d×d matrix — the one place driver-side
-    * math is the right call (the matrix is dim²-bounded regardless of
-    * corpus size; a 64-dim Gram is 32 KB). Returns (topEigenvalue /
-    * trace) in [1/d, 1]: ≈1/d for isotropic embeddings, →1 when the
-    * space collapses onto one direction (the "anisotropic embedding"
-    * failure mode that makes cosine similarity saturate). Driver-side FP
-    * — a diagnostic number, deliberately NOT an oracle surface. */
-  def gramTopEigenShare(gram: DataFrame, iters: Int = 100): Double = {
-    val rows = gram.select(col("d1").cast("int"), col("d2").cast("int"),
-      col("sum_prod").cast("double"), col("n_vecs").cast("double")).collect()
-    require(rows.nonEmpty, "empty gram")
-    val d = rows.iterator.map(_.getInt(1)).max + 1
-    val m = Array.ofDim[Double](d, d)
-    rows.foreach { r =>
-      val v = r.getDouble(2) / r.getDouble(3)
-      m(r.getInt(0))(r.getInt(1)) = v
-      m(r.getInt(1))(r.getInt(0)) = v
-    }
-    var v = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
-    var lambda = 0.0
-    for (_ <- 0 until iters) {
-      val w = Array.tabulate(d)(i =>
-        (0 until d).map(j => m(i)(j) * v(j)).sum)
-      val n = math.sqrt(w.map(x => x * x).sum)
-      if (n > 0) { v = w.map(_ / n); lambda = n }
-    }
-    val trace = (0 until d).map(i => m(i)(i)).sum
-    if (trace <= 0) 0.0 else lambda / trace
   }
 
   /** Embedding-space outlier gate (the centroid-distance quality filter of
@@ -1259,27 +876,6 @@ object Similarity {
       .withColumn("centroid_id", best.getField("centroid_id"))
       .drop("__cents")
   }
-
-  /** Deterministic Lloyd refinement: `iterations` assign/mean steps over a
-    * fixed centroid seed (each step: map-only assignment + one groupBy per
-    * dimension mean). A k-means stand-in good enough to shape IVF buckets;
-    * plug a trained model in production. Per-dimension means are computed
-    * as integer-scaled sums (floor(x·2^20)) divided ONCE — a raw double
-    * avg() merges partials in shuffle-fetch order, so centroid low bits
-    * (and boundary vectors' cluster assignment) would vary run to run. */
-  def refineCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, iterations: Int): DataFrame =
-    (1 to iterations).foldLeft(centroids) { (cents, _) =>
-      assignClusters(corpus, idCol, vecCol, cents)
-        .select(col("centroid_id"), posexplode(col(vecCol)).as(Seq("pos", "x")))
-        .groupBy(col("centroid_id"), col("pos"))
-        .agg((sum(floor(col("x") * lit(1048576.0)).cast("long"))
-          .cast("double") / (count(lit(1)) * lit(1048576.0))).as("m"))
-        .groupBy(col("centroid_id"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("m")))),
-          e => e.getField("m").cast("float")).as("vec"))
-    }
 
   /** Deterministic random hyperplanes for cosine LSH (signs of Gaussian
     * projections; seeded). */

@@ -730,9 +730,10 @@ object DataQueries {
         .localCheckpoint(true)
       val prior = Similarity.hardNegativesAnnFromIndex(idxArt, k = 3,
         bands = bands, bitsPerBand = bits)
-      Similarity.hardNegativesAnnIncremental(idxArt, prior, batch,
-        "vec_id", "embedding", "label", k = 3, dim = 64,
-        bands = bands, bitsPerBand = bits)
+      Similarity.hardNegativesAnnIncremental(idxArt, prior,
+        Similarity.annIndex(batch, "vec_id", "embedding", "label", dim = 64,
+          bands = bands, bitsPerBand = bits),
+        k = 3, bands = bands, bitsPerBand = bits)
     },
 
     // From-index one-shot mining: the SAME exact all-pairs oracle as

@@ -27,10 +27,17 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   */
 object TarArchive {
 
-  /** One archive member: `path` inside the tar, raw `data` (empty for
-    * directories), `typeflag` ('0' file, '5' dir, 'L'-resolved long names
-    * never surface). */
-  final case class Entry(path: String, data: Array[Byte], typeflag: Char)
+  /** One archive member: `path` inside the tar, `typeflag` ('0' file,
+    * '5' dir, 'L'-resolved long names never surface), and its payload as
+    * `size` bytes at `offset` in the walked tar `image` (0 for
+    * directories). The payload is copied out only when [[data]] is read,
+    * so a metadata-only walk holds the image and no per-member copies. */
+  final class Entry(val path: String, val typeflag: Char,
+      image: Array[Byte], offset: Int, val size: Int) {
+    /** The member's bytes, copied out of the image on every call. */
+    def data: Array[Byte] =
+      java.util.Arrays.copyOfRange(image, offset, offset + size)
+  }
 
   private final val Block = 512
 
@@ -132,11 +139,8 @@ object TarArchive {
             while (end > start && tar(end - 1) == 0) end -= 1
             new String(tar, start, end - start, java.nio.charset.StandardCharsets.UTF_8)
           }
-        case '0' | 0 | '5' =>
-          val data =
-            if (typeflag == '5') Array.emptyByteArray
-            else java.util.Arrays.copyOfRange(tar, off + Block, dataEnd.toInt)
-          out += Entry(name, data, if (typeflag == '5') '5' else '0')
+        case '5' => out += new Entry(name, '5', tar, off + Block, 0)
+        case '0' | 0 => out += new Entry(name, '0', tar, off + Block, size.toInt)
         case _ => () // links, pax headers: skip payload, keep walking
       }
       off += Block + (((size + Block - 1) / Block) * Block).toInt
@@ -254,13 +258,14 @@ object TarGzSource {
       maxInflateBytes: Long = 1L << 30): Seq[ArchiveMember] = {
     val tar = if (TarArchive.isGzip(bytes)) TarArchive.gunzip(bytes, maxInflateBytes) else bytes
     TarArchive.listEntries(tar).flatMap { e =>
-      val top = ArchiveMember(path, null, e.path, e.data.length.toLong,
-        e.typeflag == '5', e.data)
+      val data = e.data
+      val top = ArchiveMember(path, null, e.path, e.size.toLong,
+        e.typeflag == '5', data)
       if (extractNested && e.typeflag == '0' && looksLikeTarGz(e.path)) {
-        val innerTar = if (TarArchive.isGzip(e.data))
-          TarArchive.gunzip(e.data, maxInflateBytes) else e.data
+        val innerTar = if (TarArchive.isGzip(data))
+          TarArchive.gunzip(data, maxInflateBytes) else data
         top +: TarArchive.listEntries(innerTar).map { ie =>
-          ArchiveMember(path, e.path, ie.path, ie.data.length.toLong,
+          ArchiveMember(path, e.path, ie.path, ie.size.toLong,
             ie.typeflag == '5', ie.data)
         }
       } else Seq(top)

@@ -20,10 +20,10 @@ import graft.sources.TarArchive
   * I/O posture: one shard = one InputPartition (the natural WebDataset
   * parallel unit — shards are sized for exactly this). The `content`
   * column is pruned: a metadata-only projection (member listing, size
-  * audit, pairing checks) never puts payload byte arrays into rows —
-  * the shard buffer is read once per partition and released, instead
-  * of every member payload living on through the query. Gzip-wrapped
-  * shards are detected by magic, not extension.
+  * audit, pairing checks) never copies a payload — `size` comes from the
+  * member header and only the `content` getter copies the bytes out of
+  * the shard image, which is read once per partition and released.
+  * Gzip-wrapped shards are detected by magic, not extension.
   */
 class TarShardDataSource extends ListedFileSource(TarShardDataSource)
 
@@ -37,7 +37,7 @@ object TarShardDataSource extends ListedFileFormat[TarArchive.Entry] {
     column("member_path", StringType)((_, e) => utf8(e.path)),
     column("sample_id", StringType)((_, e) => utf8(stem(e.path))),
     column("ext", StringType)((_, e) => utf8(ext(e.path))),
-    column("size", LongType)((_, e) => e.data.length.toLong),
+    column("size", LongType)((_, e) => e.size.toLong),
     column("content", BinaryType, nullable = true)((_, e) => e.data))
 
   def records(file: ListedFile, conf: Configuration, required: Set[String])

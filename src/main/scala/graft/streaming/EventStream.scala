@@ -583,7 +583,7 @@ object EventStream {
                 else Similarity.hardNegativesAnnFromIndex(
                   idxArt.localCheckpoint(true), k, bands, bitsPerBand,
                   maxBucketSize)
-              Similarity.hardNegativesAnnIncrementalFromArt(idxArt, prior,
+              Similarity.hardNegativesAnnIncremental(idxArt, prior,
                 batchArt, k, bands, bitsPerBand, maxBucketSize)
             }
           topk.write.mode("overwrite").parquet(s"$topkDir/batch=$id")

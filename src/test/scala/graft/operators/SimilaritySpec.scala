@@ -58,22 +58,6 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.2, s"recall $recall")
   }
 
-  test("refineCentroids: Lloyd steps keep k centroids and improve inertia") {
-    def inertia(cents: org.apache.spark.sql.DataFrame): Double =
-      Similarity.assignClusters(emb, "vec_id", "embedding", cents)
-        .join(cents.select(col("centroid_id").cast("long").as("centroid_id"),
-          transform(col("vec"), _.cast("double")).as("cv")), Seq("centroid_id"))
-        .select(aggregate(
-          zip_with(transform(col("embedding"), _.cast("double")), col("cv"),
-            (x, y) => (x - y) * (x - y)),
-          lit(0.0), (a, x) => a + x).as("d"))
-        .agg(sum(col("d"))).first().getDouble(0)
-    val seed = Similarity.seedCentroids(emb, "vec_id", "embedding", 8)
-    val refined = Similarity.refineCentroids(emb, "vec_id", "embedding", seed, 2)
-    assert(refined.count() <= 8 && refined.count() >= 1)
-    assert(inertia(refined) < inertia(seed))
-  }
-
   test("rpLshNearDupPairs: sound (every pair verified >= threshold, subset of brute)") {
     val brute = Dedup.embeddingNearDupPairs(
       emb.withColumn("all", lit(1)), "vec_id", "embedding", "all", 0.3)
@@ -289,7 +273,8 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .toSet
     val inc = key(Similarity.hardNegativesAnnIncremental(idxArt, prior,
-      batch, "vec_id", "embedding", "label", k = 3, dim = 64))
+      Similarity.annIndex(batch, "vec_id", "embedding", "label", dim = 64),
+      k = 3))
     val oneShot = key(Similarity.hardNegativesAnn(emb, "vec_id",
       "embedding", "label", k = 3, dim = 64))
     assert(inc == oneShot)
@@ -300,19 +285,31 @@ class SimilaritySpec extends SparkSpec {
     val index = emb.filter(col("vec_id") < 350)
     val batch = emb.filter(col("vec_id") >= 350)
     val seeds = Seq(42L, 1042L)
-    val idxArts = seeds.map(sd => Similarity.annIndex(index, "vec_id",
-      "embedding", "label", dim = 64, seed = sd))
-    val (pp, pn) = Similarity.tripletMiningSides(index, "vec_id",
-      "embedding", "label", dim = 64, seeds = seeds)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSet
-    val inc = key(Similarity.tripletMiningIncremental(idxArts, idxArts,
-      pp, pn, batch, "vec_id", "embedding", "label", dim = 64,
-      seeds = seeds))
-    val oneShot = key(Similarity.tripletMining(emb, "vec_id", "embedding",
-      "label", dim = 64, seeds = seeds))
-    assert(inc == oneShot)
+    // (bands, bitsPerBand, posBands, posBitsPerBand): the shared geometry
+    // (one both-modes join per seed) and a split one (16×4 negative, 32×2
+    // positive: one join per mode, each at its own geometry)
+    for ((bands, bits, posBands, posBits) <- Seq((32, 2, 0, 0),
+        (16, 4, 32, 2))) {
+      def arts(bnd: Int, bts: Int) = seeds.map(sd => Similarity.annIndex(
+        index, "vec_id", "embedding", "label", dim = 64, bands = bnd,
+        bitsPerBand = bts, seed = sd))
+      val negArts = arts(bands, bits)
+      val posArts = if (posBands == 0) negArts else arts(posBands, posBits)
+      val (pp, pn) = Similarity.tripletMiningSides(index, "vec_id",
+        "embedding", "label", dim = 64, bands = bands, bitsPerBand = bits,
+        seeds = seeds, posBands = posBands, posBitsPerBand = posBits)
+      val inc = key(Similarity.tripletMiningIncremental(negArts, posArts,
+        pp, pn, batch, "vec_id", "embedding", "label", dim = 64,
+        bands = bands, bitsPerBand = bits, seeds = seeds,
+        posBands = posBands, posBitsPerBand = posBits))
+      val oneShot = key(Similarity.tripletMining(emb, "vec_id", "embedding",
+        "label", dim = 64, bands = bands, bitsPerBand = bits, seeds = seeds,
+        posBands = posBands, posBitsPerBand = posBits))
+      assert(inc == oneShot, s"geometry ($bands, $bits, $posBands, $posBits)")
+    }
   }
 
   test("recall guard at the sf1-tier geometry: with the corpus at " +
@@ -372,78 +369,42 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("\"fetch\" verify == \"injoin\" verify (pair set AND cosines), " +
-      "one-shot and incremental, fused and per-mode geometries") {
-    // the two verify placements differ ONLY in where the exact cosine is
-    // computed (inside the bucket join vs after an id-keyed vector
-    // fetch); the pair sets and rounded cosines must be identical
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSet
-    def mine() = key(Similarity.tripletMining(emb, "vec_id", "embedding",
-      "label", dim = 64))
-    def mineSplit() = key(Similarity.tripletMining(emb, "vec_id",
-      "embedding", "label", dim = 64, bands = 16, bitsPerBand = 4,
-      posBands = 32, posBitsPerBand = 2))
-    def mineInc() = {
-      val index = emb.filter(col("vec_id") < 350)
-      val batch = emb.filter(col("vec_id") >= 350)
-      val seeds = Seq(42L, 1042L)
-      val idxArts = seeds.map(sd => Similarity.annIndex(index, "vec_id",
-        "embedding", "label", dim = 64, seed = sd))
-      val (pp, pn) = Similarity.tripletMiningSides(index, "vec_id",
-        "embedding", "label", dim = 64, seeds = seeds)
-      key(Similarity.tripletMiningIncremental(idxArts, idxArts,
-        pp, pn, batch, "vec_id", "embedding", "label", dim = 64,
-        seeds = seeds))
-    }
-    val (inj, injSplit, injInc) = (mine(), mineSplit(), mineInc())
-    spark.conf.set(Similarity.VerifyModeKey, "fetch")
-    try {
-      assert(mine() == inj)
-      assert(mineSplit() == injSplit)
-      assert(mineInc() == injInc)
-    } finally spark.conf.unset(Similarity.VerifyModeKey)
-  }
-
   test("fused both-modes scored == separate per-mode scored, with caps " +
       "forcing both join-group regimes") {
     val (bands, bits) = (4, 3)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // the one bucket join's both-modes call == its per-mode calls
+    def modesAgree(rows: org.apache.spark.sql.DataFrame,
+        pin: Materialize.Pin, batchSide: Boolean, perMode: Boolean =>
+          org.apache.spark.sql.DataFrame): Unit =
+      for (cap <- Seq(80, 20000)) {
+        val both = pin(Similarity.bucketJoin(rows, None, bands, bits, cap,
+          batchSide))
+        for (same <- Seq(true, false)) {
+          val sep = Similarity.bucketJoin(perMode(same), Some(same), bands,
+            bits, cap, batchSide)
+          assert(key(both.filter(col("__same") === same).drop("__same")) ==
+            key(sep), s"sameLabel=$same, batchSide=$batchSide, cap=$cap")
+        }
+      }
     Materialize.run { pin =>
-      val v = pin(emb.select(col("vec_id").as("id"), col("label").as("lbl"),
-          col("embedding").cast("array<double>").as("v"))
-        .withColumn("nrm", Similarity.norm(col("v"))))
       // 4 bands × 3 bits over 500 vectors → buckets average ~62 rows,
       // label blocks ~6: cap 80 leaves some buckets under the TOTAL cap
       // and some over it with every label block under — both regimes of
-      // the fused group key are live (asserted below, so the spec can't
-      // rot silently)
-      val s = Similarity.bandSigFrame(v, pin, dim = 64, bands, bits,
-        seed = 7L)
-      val sizes = s.groupBy(col("band"), col("sig"))
-        .agg(count(lit(1)).as("b"),
-          max(col("lbl")).as("ignore")) // keep shape simple
-        .select(col("b")).collect().map(_.getLong(0))
+      // the both-modes group key are live (asserted below, so the spec
+      // can't rot silently)
+      val s = Similarity.artSigFrame(Similarity.annIndex(emb, "vec_id",
+        "embedding", "label", dim = 64, bands, bits, seed = 7L), pin)
+      val sizes = s.groupBy(col("band"), col("sig")).count()
+        .select(col("count")).collect().map(_.getLong(0))
       assert(sizes.exists(_ <= 80) && sizes.exists(_ > 80),
         s"cap 80 must split the bucket population: ${sizes.sorted.toSeq}")
-      for (cap <- Seq(80, 20000)) {
-        val fused = pin(Similarity.annLabelScoredBothFromSigs(s, bands, bits,
-          cap))
-        val posSep = key(Similarity.annLabelScoredFromSigs(s,
-          sameLabel = true, bands, bits, cap))
-        val negSep = key(Similarity.annLabelScoredFromSigs(s,
-          sameLabel = false, bands, bits, cap))
-        assert(key(fused.filter(col("__same")).drop("__same")) == posSep,
-          s"pos mode diverges at cap=$cap")
-        assert(key(fused.filter(!col("__same")).drop("__same")) == negSep,
-          s"neg mode diverges at cap=$cap")
-      }
+      modesAgree(s, pin, batchSide = false, _ => s)
     }
-    // the incremental twin under the same mixed-cap regime: window-count
-    // populations over the pruned union must match the separate paths'
-    // agg-over-touched-buckets populations in both cap regimes
+    // the incremental form under the same mixed-cap regime: window-count
+    // populations over the pruned union must match the per-mode prunes'
+    // populations in both cap regimes
     val index = emb.filter(col("vec_id") < 350)
     val batch = emb.filter(col("vec_id") >= 350)
     val ia = Similarity.annIndex(index, "vec_id", "embedding", "label",
@@ -451,18 +412,9 @@ class SimilaritySpec extends SparkSpec {
     Materialize.run { pin =>
       val ba = pin(Similarity.annIndex(batch, "vec_id", "embedding", "label",
         dim = 64, bands, bits, seed = 7L))
-      for (cap <- Seq(80, 20000)) {
-        val t = pin(
-          Similarity.annIncrementalScoredBoth(ia, ba, pin, bands, bits, cap))
-        val posSep = Similarity.annIncrementalScored(ia, ba, pin,
-          sameLabel = true, bands, bits, cap)
-        val negSep = Similarity.annIncrementalScored(ia, ba, pin,
-          sameLabel = false, bands, bits, cap)
-        assert(key(t.filter(col("__same")).drop("__same")) == key(posSep),
-          s"incremental pos mode diverges at cap=$cap")
-        assert(key(t.filter(!col("__same")).drop("__same")) == key(negSep),
-          s"incremental neg mode diverges at cap=$cap")
-      }
+      def rows(sameLabel: Option[Boolean]) =
+        Similarity.batchInvolvedRows(ia, ba, pin, sameLabel)
+      modesAgree(rows(None), pin, batchSide = true, same => rows(Some(same)))
     }
   }
 
@@ -597,25 +549,6 @@ class SimilaritySpec extends SparkSpec {
         .map { case (x, y) => (x - y) * (x - y) }.sum / 32.0
       assert(p2 > 0.1 * d2 && p2 < 1.9 * d2, s"pair($a,$b): $p2 vs $d2")
     }
-  }
-
-  test("gramTopEigenShare: isotropic ~ 1/d, collapsed -> 1") {
-    import spark.implicits._
-    // collapsed: every vector is a multiple of (1, 1) — all energy on one
-    // eigenvector, share = 1 (within power-iteration tolerance)
-    val collapsed = (1 to 8).map(i => (i.toLong, Seq(i * 0.1f, i * 0.1f)))
-      .toDF("vec_id", "embedding")
-    val cShare = Similarity.gramTopEigenShare(
-      Similarity.embeddingGram(collapsed, "embedding"))
-    assert(cShare > 0.999, s"collapsed share=$cShare")
-    // isotropic-ish: axis-aligned unit vectors in alternation — equal
-    // diagonal, zero cross terms, share = 1/2 exactly for d=2
-    val iso = (1 to 8).map(i => (i.toLong,
-      if (i % 2 == 0) Seq(1.0f, 0.0f) else Seq(0.0f, 1.0f)))
-      .toDF("vec_id", "embedding")
-    val iShare = Similarity.gramTopEigenShare(
-      Similarity.embeddingGram(iso, "embedding"))
-    assert(math.abs(iShare - 0.5) < 1e-6, s"isotropic share=$iShare")
   }
 
   test("annIndexRemove: takedown == an index that never held the rows") {

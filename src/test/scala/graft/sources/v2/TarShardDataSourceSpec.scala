@@ -71,6 +71,25 @@ class TarShardDataSourceSpec extends SparkSpec {
     assert(df.count() == 4)
   }
 
+  test("metadata-only size equals the full read's content length for " +
+      "every member") {
+    val dir = SyntheticFixtures.freshDir("tarshard_size")
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, "shard-000.tar"), shard0)
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, "shard-001.tar.gz"),
+      TarSink.gzipBytes(shard1))
+    val df = spark.read.format("tarshard").load(dir)
+    def sizes(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val meta = sizes(df.select(col("shard_name"), col("member_path"),
+      col("size")))
+    val full = sizes(df.select(col("shard_name"), col("member_path"),
+      length(col("content")).cast("long")))
+    assert(meta.size == 6 && meta.values.forall(_ > 0))
+    assert(meta == full)
+  }
+
   test("streaming: each arrival wave is exactly the new shards; drained " +
       "rows equal the batch read of the final directory") {
     val dir = SyntheticFixtures.freshDir("tarshard_stream")
