@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Materialize
 import graft.functions.TextFunctions._
 
@@ -19,6 +20,11 @@ import graft.functions.TextFunctions._
   *    (e.g. empty-text clusters) the way production dedup pipelines do.
   *  - [[simhashDocs]]: 32-bit SimHash fingerprint per doc; near-dup pairs =
   *    equal fingerprints or banded hamming probes.
+  *
+  * Every MinHash and hamming entry point runs on one private banding core
+  * (after [[incrementalHammingMatches]]): one band-row builder, one
+  * count-first capped bucket, one self-pair expansion, one probe join,
+  * one size-prune + exact-Jaccard verify, and one bucket-size audit.
   */
 object Dedup {
 
@@ -112,67 +118,16 @@ object Dedup {
       rowsPerBand: Int,
       threshold: Double,
       maxBucketSize: Int = 1000
-  ): DataFrame = {
-    val params = minhashParams(bands * rowsPerBand)
+  ): DataFrame =
     // the (pair-sized, small) result is what the scope materializes
     Materialize.scoped { pin =>
-      // pinned: the shingle+signature subtree feeds four consumers (band
-      // explode, the size-prune, both sides of the verification join) —
-      // without it Spark recomputes the per-shingle hashing each time
-      val docs = pin(df.select(
-        col(idCol).as("id"),
-        shingleHashes60(col(textCol), n).as("sh"))
-        .filter(size(col("sh")) > 0)
-        .withColumn("sig", minhashSignature(col("sh"), params)))
-
-      val banded = docs.select(
-        col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          i => slice(col("sig"), i * rowsPerBand + 1, lit(rowsPerBand)))))
-        .withColumnRenamed("pos", "band_idx")
-        .withColumnRenamed("col", "band_sig")
-
-      // count-first shed (see shedOvercapBuckets): the size guard must
-      // bound the AGGREGATION BUFFER, not just downstream fan-out — a
-      // boilerplate signature at corpus scale would otherwise concentrate
-      // the population in one collect_list before the filter ever runs
-      val buckets = shedOvercapBuckets(banded,
-          Seq("band_idx", "band_sig"), 2L, maxBucketSize.toLong)
-        .groupBy(col("band_idx"), col("band_sig"))
-        .agg(collect_list(col("id")).as("ids"))
-
-      val candidates = buckets
-        .select(explode(col("ids")).as("id_1"), col("ids"))
-        .select(col("id_1"), explode(col("ids")).as("id_2"))
-        .filter(col("id_1") < col("id_2"))
-        .distinct()
-
-      // size prune BEFORE the shingle arrays move: jaccard <= min/max sizes,
-      // so a pair whose size ratio is already below threshold never joins the
-      // (wide) array columns — only a 2-int-column projection shuffles here.
-      val sizes = docs.select(col("id"), size(col("sh")).as("n"))
-      val pruned = candidates
-        .join(sizes.select(col("id").as("id_1"), col("n").as("n_1")), "id_1")
-        .join(sizes.select(col("id").as("id_2"), col("n").as("n_2")), "id_2")
-        .filter(least(col("n_1"), col("n_2")).cast("double") >=
-          lit(threshold) * greatest(col("n_1"), col("n_2")))
-        .select(col("id_1"), col("id_2"))
-
-      val sh1 = docs.select(col("id").as("id_1"), col("sh").as("sh_1"))
-      val sh2 = docs.select(col("id").as("id_2"), col("sh").as("sh_2"))
-      pruned
-        .join(sh1, "id_1").join(sh2, "id_2")
-        .withColumn("inter", size(array_intersect(col("sh_1"), col("sh_2"))).cast("double"))
-        // |A∪B| = |A|+|B|-|A∩B| for distinct arrays: skips materializing the
-        // union array (the second-most-expensive op of the verify stage)
-        .withColumn("uni",
-          (size(col("sh_1")) + size(col("sh_2"))).cast("double") - col("inter"))
-        .filter(col("uni") > 0)
-        .withColumn("jaccard", round(col("inter") / col("uni"), 6))
-        .filter(col("jaccard") >= threshold)
-        .select(col("id_1"), col("id_2"), col("jaccard"))
+      // pinned: the artifact feeds four consumers (band explode, the
+      // size-prune, both sides of the verification join) — without it
+      // Spark recomputes the per-shingle hashing each time
+      val docs = pin(lshIndex(df, idCol, textCol, n, bands, rowsPerBand))
+      verifiedJaccard(minhashSelfPairs(docs, bands, rowsPerBand,
+        maxBucketSize), docs, docs, threshold)
     }
-  }
 
   /** Incremental cross-batch near-dup matching: flag documents of a NEW
     * `batch` that are near-duplicates (Jaccard >= `threshold`) of any
@@ -189,11 +144,11 @@ object Dedup {
     * RECALL TRADE-OFF: a shed bucket silently loses every true match it
     * alone would have surfaced — on boilerplate-heavy corpora (one
     * signature shared by >maxBucketSize index docs) a batch twin of that
-    * boilerplate can go unflagged. Audit with
-    * [[incrementalLshBucketSizes]] (same banding, run alongside): 0 rows
-    * at the cap = nothing shed; oversized buckets mean either raise the
-    * cap or treat those signatures as a stop-list handled upstream.
-    * DedupSpec pins that the q180 corpus never hits the default cap.
+    * boilerplate can go unflagged. Audit with [[bucketSizes]] over the
+    * index's [[minhashRows]] (same banding, run alongside): 0 rows at the
+    * cap = nothing shed; oversized buckets mean either raise the cap or
+    * treat those signatures as a stop-list handled upstream. DedupSpec
+    * pins that the q180 corpus never hits the default cap.
     * Output: (batch_id, index_id, jaccard). */
   def incrementalLshMatches(
       index: DataFrame, batch: DataFrame,
@@ -240,72 +195,19 @@ object Dedup {
       indexArt: DataFrame, batchArt: DataFrame,
       bands: Int, rowsPerBand: Int, threshold: Double,
       maxBucketSize: Int = 1000
-  ): DataFrame = {
-    def bandRows(docs: DataFrame): DataFrame = docs.select(
-      col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        i => slice(col("sig"), i * rowsPerBand + 1, lit(rowsPerBand)))))
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_sig")
-
+  ): DataFrame =
     Materialize.scoped { pin =>
       val idx = pin(indexArt.select(col("id"), col("sh"), col("sig")))
       val bat = pin(batchArt.select(col("id"), col("sh"), col("sig")))
-      // the production artifact: index buckets keyed by (band, signature) —
-      // capped count-first (shedOvercapBuckets), so one boilerplate
-      // signature can neither quadratic-blow the probe NOR concentrate the
-      // index in a single collect_list buffer before the cap applies
-      val idxBuckets = shedOvercapBuckets(bandRows(idx),
-          Seq("band_idx", "band_sig"), 1L, maxBucketSize.toLong)
-        .groupBy(col("band_idx"), col("band_sig"))
-        .agg(collect_list(col("id")).as("ids"))
-      val candidates = bandRows(bat)
-        .join(idxBuckets, Seq("band_idx", "band_sig"))
-        .select(col("id").as("batch_id"), explode(col("ids")).as("index_id"))
+      val cand = probe(minhashRows(bat, bands, rowsPerBand),
+          cappedBuckets(minhashRows(idx, bands, rowsPerBand), 1L,
+            maxBucketSize)())
+        .select(col("a.id").as("id_1"), col("b.id").as("id_2"))
         .distinct()
-
-      // size prune, then exact verify — only flagged candidates carry arrays
-      val bSizes = bat.select(col("id").as("batch_id"), size(col("sh")).as("n_b"))
-      val iSizes = idx.select(col("id").as("index_id"), size(col("sh")).as("n_i"))
-      val pruned = candidates.join(bSizes, "batch_id").join(iSizes, "index_id")
-        .filter(least(col("n_b"), col("n_i")).cast("double") >=
-          lit(threshold) * greatest(col("n_b"), col("n_i")))
-        .select(col("batch_id"), col("index_id"))
-      pruned
-        .join(bat.select(col("id").as("batch_id"), col("sh").as("sh_b")), "batch_id")
-        .join(idx.select(col("id").as("index_id"), col("sh").as("sh_i")), "index_id")
-        .withColumn("inter", size(array_intersect(col("sh_b"), col("sh_i"))).cast("double"))
-        .withColumn("uni",
-          (size(col("sh_b")) + size(col("sh_i"))).cast("double") - col("inter"))
-        .filter(col("uni") > 0)
-        .withColumn("jaccard", round(col("inter") / col("uni"), 6))
-        .filter(col("jaccard") >= threshold)
-        .select(col("batch_id"), col("index_id"), col("jaccard"))
+      verifiedJaccard(cand, bat, idx, threshold)
+        .select(col("id_1").as("batch_id"), col("id_2").as("index_id"),
+          col("jaccard"))
     }
-  }
-
-  /** Audit surface for [[incrementalLshMatches]]'s `maxBucketSize` shed:
-    * the index side's (band_idx, band_sig) bucket populations under the
-    * SAME shingling/banding. Run it alongside an incremental dedup — any
-    * bucket at or over the cap is a signature whose matches the main pass
-    * silently drops (no silent caps: the shed must be visible). */
-  def incrementalLshBucketSizes(
-      index: DataFrame, idCol: String, textCol: String,
-      n: Int, bands: Int, rowsPerBand: Int
-  ): DataFrame = {
-    val params = minhashParams(bands * rowsPerBand)
-    index.select(col(idCol).as("id"),
-        shingleHashes60(col(textCol), n).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig", minhashSignature(col("sh"), params))
-      .select(col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          i => slice(col("sig"), i * rowsPerBand + 1, lit(rowsPerBand)))))
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_sig")
-      .groupBy(col("band_idx"), col("band_sig"))
-      .agg(count(lit(1)).as("bucket_size"))
-  }
 
   /** MinHash estimator calibration: for every band-colliding pair, the
     * signature-agreement Jaccard estimate (integer ppm: agreeing positions
@@ -317,106 +219,31 @@ object Dedup {
   def minhashCalibration(
       df: DataFrame, idCol: String, textCol: String,
       n: Int, bands: Int, rowsPerBand: Int
-  ): DataFrame = {
-    val params = minhashParams(bands * rowsPerBand)
+  ): DataFrame =
     Materialize.scoped { pin =>
-      val docs = pin(df.select(
-        col(idCol).as("id"),
-        shingleHashes60(col(textCol), n).as("sh"))
-        .filter(size(col("sh")) > 0)
-        .withColumn("sig", minhashSignature(col("sh"), params)))
-      val banded = docs.select(
-        col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          i => slice(col("sig"), i * rowsPerBand + 1, lit(rowsPerBand)))))
-        .withColumnRenamed("pos", "band_idx")
-        .withColumnRenamed("col", "band_sig")
+      val docs = pin(lshIndex(df, idCol, textCol, n, bands, rowsPerBand))
       // calibration is deliberately UNCAPPED (it measures every colliding
       // pair the config would surface), but the >=2 gate still goes
       // count-first so singleton buckets never buffer
-      val candidates = shedOvercapBuckets(banded,
-          Seq("band_idx", "band_sig"), 2L, Long.MaxValue)
-        .groupBy(col("band_idx"), col("band_sig"))
-        .agg(collect_list(col("id")).as("ids"))
-        .select(col("ids"))
-        .select(explode(col("ids")).as("id_1"), col("ids"))
-        .select(col("id_1"), explode(col("ids")).as("id_2"))
-        .filter(col("id_1") < col("id_2"))
-        .distinct()
-      val both = candidates
-        .join(docs.select(col("id").as("id_1"), col("sh").as("sh_1"),
-          col("sig").as("sig_1")), "id_1")
-        .join(docs.select(col("id").as("id_2"), col("sh").as("sh_2"),
-          col("sig").as("sig_2")), "id_2")
+      val both = minhashSelfPairs(docs, bands, rowsPerBand, Long.MaxValue)
+        .join(side(docs, 1, "sh", "sig"), "id_1")
+        .join(side(docs, 2, "sh", "sig"), "id_2")
       val agree = aggregate(
         zip_with(col("sig_1"), col("sig_2"), (x, y) => (x === y).cast("long")),
         lit(0L), (acc, x) => acc + x)
-      both
-        .withColumn("__agree", agree)
-        .withColumn("est_ppm",
-          expr(s"(1000000 * __agree) div ${bands * rowsPerBand}"))
-        .withColumn("inter", size(array_intersect(col("sh_1"), col("sh_2"))).cast("double"))
-        .withColumn("uni",
-          (size(col("sh_1")) + size(col("sh_2"))).cast("double") - col("inter"))
-        .filter(col("uni") > 0)
-        .withColumn("jaccard", round(col("inter") / col("uni"), 6))
+      withJaccard(both
+          .withColumn("__agree", agree)
+          .withColumn("est_ppm",
+            expr(s"(1000000 * __agree) div ${bands * rowsPerBand}")))
         .select(col("id_1"), col("id_2"), col("est_ppm"), col("jaccard"))
     }
-  }
 
   /** Near-duplicate CLUSTERS from pairwise matches: connected components
-    * via iterative min-label propagation (the step that turns LSH pair
-    * output into canonical dedup groups — keep min id per cluster, drop the
-    * rest). Converges in graph-diameter iterations; near-dup components are
-    * shallow in practice, and `maxIter` bounds the loop. The per-iteration
-    * convergence check is the one intentional driver-side action (standard
-    * for iterative graph algorithms; each iteration is a bounded self-join
-    * on the pair set, not the corpus). */
-  def clusterPairs(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // localCheckpoint (not persist): each iteration's plan would otherwise
-    // embed the whole prior lineage and planning time grows exponentially —
-    // the standard lineage-truncation requirement of iterative algorithms.
-    val edges = pairs.select(col("id_1").as("u"), col("id_2").as("v"))
-      .union(pairs.select(col("id_2").as("u"), col("id_1").as("v")))
-      .distinct()
-      .localCheckpoint(true)
-    var labels = edges.select(col("u").as("id")).distinct()
-      .withColumn("cluster_id", col("id"))
-      .localCheckpoint(true)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "v")
-          .withColumnRenamed("cluster_id", "n_label"), Seq("v"))
-        .groupBy(col("u").as("id"))
-        .agg(min(col("n_label")).as("n_min"))
-      // carry the old label THROUGH the round frame: the convergence
-      // count is then a filter over the (lazily) checkpointed round —
-      // one job per round, no join-back against the prior labels (which
-      // cost a second join + a second action every round).
-      // INVARIANT (lazy localCheckpoint): the action immediately below
-      // (the changes count) must scan EVERY partition of this frame —
-      // a partial action (isEmpty/limit) would leave it un-materialized
-      // and later consumers would recompute nondeterministic lineage
-      val updated = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("cluster_id"), coalesce(col("n_min"), col("cluster_id")))
-            .as("cluster_id"),
-          col("cluster_id").as("__old"))
-        .localCheckpoint(false)
-      val changes = updated.filter(col("cluster_id") =!= col("__old")).count()
-      labels = updated.select(col("id"), col("cluster_id"))
-      converged = changes == 0
-      i += 1
-    }
-    labels
-  }
-
-  /** [[clusterPairs]]' 100 TB formulation: alternating large-star /
-    * small-star connected components (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC 2014). Each round
-    * rewrites the EDGE SET toward star graphs rooted at component minima:
+    * by alternating large-star / small-star rounds (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC 2014) — the
+    * step that turns LSH pair output into canonical dedup groups (keep
+    * min id per cluster, drop the rest). Each round rewrites the EDGE SET
+    * toward star graphs rooted at component minima:
     *
     *  - large-star: per node u with symmetric neighborhood N(u), connect
     *    every strictly larger neighbor to m = min(N(u) ∪ {u});
@@ -428,10 +255,11 @@ object Dedup {
     * rounds shrink the edge set itself (edges attach to ever-smaller
     * minima), so round state is bounded by the current edge count and
     * drops geometrically; convergence is O(log²) rounds vs graph
-    * diameter. Same lineage-truncation discipline (localCheckpoint per
-    * round, one driver-side fixpoint count). Output schema matches
-    * [[clusterPairs]]; q114 reuses q50's oracle VERBATIM so the
-    * equivalence is driver-checked, not just spec-checked. */
+    * diameter. Lineage is truncated by a localCheckpoint per round, with
+    * one driver-side fixpoint count (standard for iterative graph
+    * algorithms; each round is bounded by the pair set, not the corpus).
+    * Output: (id, cluster_id) with cluster_id = min id of the component
+    * (q50 and q114 share one oracle). */
   def clusterPairsStar(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     // large→small orientation DIRECTLY (greatest/least per input pair ==
     // the old symmetrize-then-filter(u > v), row for row): ONE distinct
@@ -610,16 +438,17 @@ object Dedup {
     * bands), so bucket population grows ∝n once the corpus outruns
     * ~targetBucket·2^(32/bands) docs: quadratic by contract. Past that
     * point use [[simhashNearDupPairs64]] — same recall contract, 2^16
-    * signatures per band at bands=4.
+    * signatures per band at bands=4. The one-key case of
+    * [[fusedHammingNearDupPairs]]'s banding, over a 32-bit key.
     */
   def simhashNearDupPairs(
       df: DataFrame, idCol: String, textCol: String,
       bands: Int = 4, maxHamming: Int = 3, maxBucketSize: Int = 10000
   ): DataFrame = {
     require(32 % bands == 0, "bands must divide 32")
-    bandedHammingPairs(simhashDocs(df, idCol, textCol)
-        .select(col(idCol).as("id"), col("simhash")),
-      32 / bands, bands, maxHamming, maxBucketSize)
+    hammingSelfPairs(df, col(idCol), Seq(HammingKey(
+      simhash32Fused(col(textCol)), bands, 32 / bands, maxHamming)),
+      maxBucketSize)
   }
 
   /** 64-bit SimHash near-dup pairs — the scale path the 32-bit form
@@ -637,9 +466,9 @@ object Dedup {
       bands: Int = 4, maxHamming: Int = 3, maxBucketSize: Int = 10000
   ): DataFrame = {
     require(64 % bands == 0, "bands must divide 64")
-    bandedHammingPairs(simhashDocs64(df, idCol, textCol)
-        .select(col(idCol).as("id"), col("simhash")),
-      64 / bands, bands, maxHamming, maxBucketSize)
+    hammingSelfPairs(df, col(idCol), Seq(HammingKey(
+      simhash64Fused(col(textCol)), bands, 64 / bands, maxHamming)),
+      maxBucketSize)
   }
 
   /** Geometry rule for [[simhashNearDupPairs64]]: the FEWEST bands that
@@ -662,25 +491,21 @@ object Dedup {
     * envelope prints) ride the exact SimHash machinery: pigeonhole
     * banding (`bands` must divide 64 and exceed `maxHamming` —
     * [[simhash64BandsFor]] gives the optimum), one (band, sig) shuffle,
-    * popcount-XOR verify. Emits (id_1, id_2, hamming). */
+    * popcount-XOR verify. The one-key case of
+    * [[fusedHammingNearDupPairs]]. Emits (id_1, id_2, hamming). */
   def hammingNearDupPairs(
       df: DataFrame, idCol: String, hashCol: String,
       bands: Int = 4, maxHamming: Int = 3, maxBucketSize: Int = 10000
-  ): DataFrame = {
-    require(64 % bands == 0 && bands > maxHamming,
-      "pigeonhole needs bands | 64 and bands > maxHamming")
-    bandedHammingPairs(
-      df.select(col(idCol).as("id"), col(hashCol).cast("long")
-        .as("simhash")),
-      64 / bands, bands, maxHamming, maxBucketSize)
-  }
+  ): DataFrame =
+    fusedHammingNearDupPairs(df, idCol, Seq((hashCol, bands, maxHamming)),
+      maxBucketSize)
 
   /** Multi-key banded-hamming pairs in ONE pass — the fused form of
     * `union`-ing one [[hammingNearDupPairs]] per fingerprint column
     * (r12: the dual-key multimodal admission ran the whole
     * explode→shed→bucket→pair pipeline twice per refresh). Each key
-    * brings its own (bands, maxHamming) geometry; the key ordinal rides
-    * the bucket key, so buckets, the over-cap shed, and the pigeonhole
+    * brings its own (bands, maxHamming) geometry and its own range of
+    * band ordinals, so buckets, the over-cap shed, and the pigeonhole
     * radius are all evaluated PER KEY exactly as the separate pipelines
     * did, while the exchange/collect_list/pair machinery is shared.
     * Result-identical to
@@ -689,70 +514,22 @@ object Dedup {
   private[graft] def fusedHammingNearDupPairs(
       df: DataFrame, idCol: String,
       keys: Seq[(String, Int, Int)], // (hashCol, bands, maxHamming)
-      maxBucketSize: Int = 10000): DataFrame = {
-    val entries = fusedBandEntries(keys)
-    val banded = df
-      .select(col(idCol).as("id"), explode(array(entries: _*)).as("e"))
-      .select(col("id"), col("e.ht").as("ht"), col("e.band").as("band"),
-        col("e.sig").as("sig"), col("e.hash").as("hash"))
-    val buckets = shedOvercapBuckets(banded,
-        Seq("ht", "band", "sig"), 2L, maxBucketSize.toLong)
-      .groupBy(col("ht"), col("band"), col("sig"))
-      .agg(collect_list(struct(col("id"), col("hash"))).as("ds"))
-    val radii = array(keys.map(k => lit(k._3)): _*)
-    buckets
-      .select(col("ht"), explode(col("ds")).as("d1"), col("ds"))
-      .select(col("ht"), col("d1.id").as("id_1"),
-        col("d1.hash").as("h1"), explode(col("ds")).as("d2"))
-      .filter(col("id_1") < col("d2.id"))
-      .select(col("ht"), col("id_1"), col("d2.id").as("id_2"),
-        col("h1"), col("d2.hash").as("h2"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("h1").bitwiseXOR(col("h2"))))
-      .filter(col("hamming") <= element_at(radii, col("ht") + 1))
-      .select(col("id_1"), col("id_2"), col("hamming"))
-      .distinct()
-  }
+      maxBucketSize: Int = 10000): DataFrame =
+    hammingSelfPairs(df, col(idCol), keys64(keys), maxBucketSize)
 
-  /** Shared struct builder of the fused multi-key banding: one
-    * (ht, band, sig, hash) struct per key per band. The bucket keys of
-    * [[fusedHammingNearDupPairs]] and [[fusedBandRows]] are bit-identical
-    * BECAUSE they are built here, once — the streaming probe's soundness
-    * rests on that. */
-  private def fusedBandEntries(
-      keys: Seq[(String, Int, Int)]): Seq[org.apache.spark.sql.Column] = {
-    require(keys.nonEmpty, "need at least one fingerprint key")
-    keys.foreach { case (_, bands, maxHamming) =>
-      require(64 % bands == 0 && bands > maxHamming,
-        "pigeonhole needs bands | 64 and bands > maxHamming") }
-    keys.zipWithIndex.flatMap { case ((hc, bands, _), ht) =>
-      val bpb = 64 / bands
-      val mask = if (bpb == 64) -1L else (1L << bpb) - 1
-      (0 until bands).map { b =>
-        struct(lit(ht).as("ht"), lit(b).as("band"),
-          shiftrightunsigned(col(hc).cast("long"), b * bpb)
-            .bitwiseAND(lit(mask)).as("sig"),
-          col(hc).cast("long").as("hash"))
-      }
-    }
-  }
-
-  /** One (ht, band, sig, id, hash) row per key per band per item — the
-    * multi-key fused sibling of [[hammingIndex]] (plus `carryCols`
-    * passed through untouched). The streaming assembly derives these
-    * rows from its staged metadata to probe whether a batch changes the
-    * near-dup pair set ([[fusedBatchPairDelta]]) without re-running the
-    * admission over the accumulated corpus — the banding is a handful
-    * of shift/mask ops per row, so re-deriving beats persisting a
-    * bands×-larger index artifact. */
+  /** One (band, sig, id, carryCols..., hash) row per key per band per
+    * item — the multi-key [[hammingIndex]]. The streaming assembly
+    * derives these rows from its staged metadata to probe whether a
+    * batch changes the near-dup pair set ([[fusedBatchPairDelta]])
+    * without re-running the admission over the accumulated corpus — the
+    * banding is a handful of shift/mask ops per row, so re-deriving
+    * beats persisting a bands×-larger index artifact. The bucket keys equal [[fusedHammingNearDupPairs]]'
+    * bit for bit BECAUSE both come from [[hammingRows]] — the streaming
+    * probe's soundness rests on that. */
   private[graft] def fusedBandRows(df: DataFrame, idCol: String,
       keys: Seq[(String, Int, Int)],
       carryCols: Seq[String] = Nil): DataFrame =
-    df.select((col(idCol).as("id") +: carryCols.map(col)) :+
-        explode(array(fusedBandEntries(keys): _*)).as("e"): _*)
-      .select((Seq(col("e.ht").as("ht"), col("e.band").as("band"),
-        col("e.sig").as("sig"), col("id"), col("e.hash").as("hash")) ++
-        carryCols.map(col)): _*)
+    hammingRows(df, col(idCol), keys64(keys), carryCols)
 
   /** Does a new batch CHANGE the fused near-dup pair set over the
     * accumulated corpus? `idx` is the [[fusedBandRows]] union of
@@ -783,29 +560,19 @@ object Dedup {
       maxBucketSize: Int = 10000): Boolean = {
     val cap = maxBucketSize.toLong
     // tiny by construction: only buckets holding a batch row survive
-    val stats = idx.groupBy(col("ht"), col("band"), col("sig"))
-      .agg(count(lit(1)).as("n"),
+    val stats = idx.groupBy(col("band"), col("sig"))
+      .agg(count(lit(1)).as("bucket_size"),
         count(when(col("is_batch"), lit(1))).as("nb"))
       .filter(col("nb") >= 1)
+    val prior = col("bucket_size") - col("nb")
     val flips = stats
-      .filter(col("n") > cap &&
-        col("n") - col("nb") >= 2 && col("n") - col("nb") <= cap)
+      .filter(col("bucket_size") > cap && prior >= 2 && prior <= cap)
       .select(lit(1).as("__hit"))
-    val cand = stats.filter(col("n") >= 2 && col("n") <= cap)
-      .select(col("ht"), col("band"), col("sig"))
-    val radii = array(keys.map(k => lit(k._3)): _*)
-    // collect_list is safe: cand keeps only buckets within the cap
-    val pairHits = idx.join(cand, Seq("ht", "band", "sig"))
-      .groupBy(col("ht"), col("band"), col("sig"))
-      .agg(collect_list(struct(col("id"), col("hash"), col("is_batch")))
-        .as("ds"))
-      .select(col("ht"), explode(col("ds")).as("a"), col("ds"))
-      .filter(col("a.is_batch"))
-      .select(col("ht"), col("a.id").as("id_a"), col("a.hash").as("h_a"),
-        explode(col("ds")).as("b"))
-      .filter(col("id_a") =!= col("b.id") &&
-        bit_count(col("h_a").bitwiseXOR(col("b.hash")))
-          <= element_at(radii, col("ht") + 1))
+    // the shed keeps only batch-touched buckets within the cap
+    val pairHits = hammingVerified(selfPairs(cappedBuckets(
+        idx.select(col("band"), col("sig"), col("id"), col("hash"),
+          col("is_batch")), 2L, cap)(stats))
+        .filter(col("a.is_batch") || col("b.is_batch")), keys64(keys))
       .select(lit(1).as("__hit"))
     // AQE off for THIS 0/1-row decision action only: its aggregates are
     // batch-adjacent-tiny at any corpus size, and AQE's per-exchange
@@ -826,8 +593,9 @@ object Dedup {
   def hammingIndex(df: DataFrame, idCol: String, hashCol: String,
       bands: Int = 4): DataFrame = {
     require(64 % bands == 0, "bands must divide 64")
-    hammingBandRows(df.select(col(idCol).as("id"),
-      col(hashCol).cast("long").as("hash")), bands)
+    // the radius plays no part in the rows
+    hammingRows(df, col(idCol), Seq(HammingKey(col(hashCol), bands,
+      64 / bands, 0)))
   }
 
   /** Continuous-admission near-dup gate over a persisted
@@ -841,112 +609,190 @@ object Dedup {
   def incrementalHammingMatches(index: DataFrame, batch: DataFrame,
       idCol: String, hashCol: String, bands: Int = 4, maxHamming: Int = 3,
       maxBucketSize: Int = 10000): DataFrame = {
-    require(64 % bands == 0 && bands > maxHamming,
-      "pigeonhole needs bands | 64 and bands > maxHamming")
-    val idxBuckets = shedOvercapBuckets(index,
-        Seq("band", "sig"), 1L, maxBucketSize.toLong)
-      .groupBy(col("band"), col("sig"))
-      .agg(collect_list(struct(col("id"), col("hash"))).as("ds"))
-    hammingBandRows(batch.select(col(idCol).as("id"),
-        col(hashCol).cast("long").as("hash")), bands)
-      .join(idxBuckets, Seq("band", "sig"))
-      .select(col("id").as("id_batch"), col("hash").as("h_batch"),
-        explode(col("ds")).as("d"))
-      .select(col("id_batch"), col("h_batch"),
-        col("d.id").as("id_index"), col("d.hash").as("h_index"))
-      .filter(col("id_batch") =!= col("id_index"))
+    val key = keys64(Seq((hashCol, bands, maxHamming)))
+    hammingVerified(probe(hammingRows(batch, col(idCol), key),
+        cappedBuckets(index.select(col("band"), col("sig"), col("id"),
+          col("hash")), 1L, maxBucketSize)())
+        .filter(col("a.id") =!= col("b.id")), key)
       .distinct()
-      .withColumn("hamming",
-        bit_count(col("h_batch").bitwiseXOR(col("h_index"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_batch"), col("id_index"), col("hamming"))
+      .select(col("id_1").as("id_batch"), col("id_2").as("id_index"),
+        col("hamming"))
   }
 
-  /** Count-first bucket shed shared by every banded family: aggregate
-    * `count(*)` per bucket key (partial-aggregatable — a mega-bucket
-    * contributes ONE count row per map partition, never its members),
-    * keep keys whose population lies in [minSize, maxSize], and
-    * semi-join the banded rows back. The subsequent `collect_list`
-    * groupBy therefore only ever buffers buckets already known to be
-    * within bounds — a degenerate signature (blank image, empty doc,
-    * boilerplate page) holding 10⁹ members costs a handful of count
-    * rows instead of a single-task OOM. Result-identical to filtering
-    * on `size(collect_list)` after the fact (same surviving bucket
-    * set); the count shuffle is tiny and the semi-join + final groupBy
-    * share one hash partitioning on the bucket keys. */
-  private def shedOvercapBuckets(banded: DataFrame, keys: Seq[String],
-      minSize: Long, maxSize: Long): DataFrame = {
-    val kept = banded.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__bucket_n"))
-      .filter(col("__bucket_n").between(minSize, maxSize))
-      .select(keys.map(col): _*)
-    banded.join(kept, keys, "left_semi")
+  // The banding core shared by every MinHash and hamming entry point.
+  // Band rows are (band, sig, id, carry..., payload...): `band` is the
+  // band ordinal (for several hamming keys, each key owns its own range
+  // of ordinals), `sig` the band signature; everything but (band, sig)
+  // is the bucket member.
+
+  /** One fingerprint key of the hamming banding: a 64-bit (or narrower)
+    * hash column, its band count and width, and its verify radius. */
+  private case class HammingKey(hash: Column, bands: Int, bitsPerBand: Int,
+      maxHamming: Int)
+
+  /** (hashCol, bands, maxHamming) keys over 64-bit fingerprints, with the
+    * pigeonhole contract checked per key. */
+  private def keys64(keys: Seq[(String, Int, Int)]): Seq[HammingKey] = {
+    require(keys.nonEmpty, "need at least one fingerprint key")
+    keys.map { case (hc, bands, maxHamming) =>
+      require(64 % bands == 0 && bands > maxHamming,
+        "pigeonhole needs bands | 64 and bands > maxHamming")
+      HammingKey(col(hc), bands, 64 / bands, maxHamming)
+    }
   }
 
-  /** Audit surface for the hamming family's `maxBucketSize` shed — the
-    * [[incrementalLshBucketSizes]] twin for
-    * [[hammingNearDupPairs]]/[[incrementalHammingMatches]]: the
-    * (band, sig) bucket populations under the SAME banding. Any bucket
-    * at or over the cap is a fingerprint whose matches the main pass
-    * silently drops (no silent caps: the shed must be visible — run it
-    * alongside a media-dedup pass and alert on the over-cap rows). */
-  def hammingBucketSizes(df: DataFrame, idCol: String, hashCol: String,
-      bands: Int = 4): DataFrame = {
-    require(64 % bands == 0, "bands must divide 64")
-    hammingBandRows(df.select(col(idCol).as("id"),
-        col(hashCol).cast("long").as("hash")), bands)
-      .groupBy(col("band"), col("sig"))
+  /** The one band-row builder: one row per struct of `bands` (fields
+    * `band`, `sig`, then any per-band payload), emitted as (band, sig,
+    * carry..., payload...). Carried columns stay outside the structs, so
+    * a consumer of the keys alone (the shed's count) prunes them. */
+  private def bandRows(df: DataFrame, bands: Seq[Column],
+      carry: Seq[String]): DataFrame = {
+    val ex = df.select(carry.map(col) :+ explode(array(bands: _*)).as("b"): _*)
+    val fields = ex.schema("b").dataType.asInstanceOf[StructType].fieldNames
+    ex.select(fields.take(2).map(f => col(s"b.$f")) ++ carry.map(col) ++
+      fields.drop(2).map(f => col(s"b.$f")): _*)
+  }
+
+  /** MinHash band rows of an (id, sh, sig) [[lshIndex]] artifact: the
+    * band signature is a `rowsPerBand` slice of `sig`. */
+  private[graft] def minhashRows(art: DataFrame, bands: Int,
+      rowsPerBand: Int): DataFrame =
+    bandRows(art, (0 until bands).map(b => struct(lit(b).as("band"),
+      slice(col("sig"), b * rowsPerBand + 1, rowsPerBand).as("sig"))),
+      Seq("id"))
+
+  /** Hamming band rows: each key's hash is cast to long once, then split
+    * into bit-bands by logical shifts (bit 63 must not smear) and masks;
+    * the key's hash rides each row as the verify payload. */
+  private def hammingRows(df: DataFrame, id: Column, keys: Seq[HammingKey],
+      carry: Seq[String] = Nil): DataFrame = {
+    val hashed = df.select((id.as("id") +: keys.indices.map(i =>
+      keys(i).hash.cast("long").as(s"__h$i"))) ++ carry.map(col): _*)
+    val first = keys.scanLeft(0)(_ + _.bands)
+    bandRows(hashed, keys.indices.flatMap { i =>
+      val (k, h) = (keys(i), col(s"__h$i"))
+      val mask = if (k.bitsPerBand == 64) -1L else (1L << k.bitsPerBand) - 1
+      (0 until k.bands).map(b => struct(lit(first(i) + b).as("band"),
+        shiftrightunsigned(h, b * k.bitsPerBand).bitwiseAND(lit(mask))
+          .as("sig"), h.as("hash")))
+    }, "id" +: carry)
+  }
+
+  /** The one bucket-size audit: (band, sig, bucket_size) over band rows
+    * ([[hammingIndex]], [[fusedBandRows]] or [[minhashRows]]). Any
+    * bucket over a pass's `maxBucketSize` is a signature whose matches
+    * that pass silently drops (no silent caps: the shed must be visible —
+    * run it alongside a dedup pass and alert on the over-cap rows). The
+    * count-first shed of [[cappedBuckets]] reads the same counts. */
+  private[graft] def bucketSizes(rows: DataFrame): DataFrame =
+    rows.groupBy(col("band"), col("sig"))
       .agg(count(lit(1)).as("bucket_size"))
+
+  /** The one capped bucket: members of the (band, sig) buckets whose
+    * population lies in [minSize, maxSize] — 2 for self-pairs, 1 for
+    * probes — collected per bucket. The shed goes COUNT-FIRST: `sizes`
+    * (default: [[bucketSizes]], partial-aggregatable — a mega-bucket
+    * contributes ONE count row per map partition, never its members)
+    * picks the keys and the rows semi-join back, so the `collect_list`
+    * only ever buffers buckets already known to be within bounds. A
+    * degenerate signature (blank image, empty doc, boilerplate page)
+    * holding 10⁹ members costs a handful of count rows instead of a
+    * single-task OOM, with the same surviving bucket set as filtering
+    * on `size(collect_list)` after the fact; the semi-join and the
+    * collecting groupBy share one hash partitioning on (band, sig). */
+  private def cappedBuckets(rows: DataFrame, minSize: Long, maxSize: Long)(
+      sizes: DataFrame = bucketSizes(rows)): DataFrame = {
+    val kept = sizes.filter(col("bucket_size").between(minSize, maxSize))
+      .select(col("band"), col("sig"))
+    rows.join(kept, Seq("band", "sig"), "left_semi")
+      .groupBy(col("band"), col("sig"))
+      .agg(collect_list(member(rows)).as("ds"))
   }
 
-  /** (id, hash) → one (band, sig, id, hash) row per band (logical
-    * shifts; bit 63 must not smear). */
-  private def hammingBandRows(h: DataFrame, bands: Int): DataFrame = {
-    val bitsPerBand = 64 / bands
-    val mask = if (bitsPerBand == 64) -1L else (1L << bitsPerBand) - 1
-    h.select(col("id"), col("hash"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          shiftrightunsigned(col("hash"), b * bitsPerBand)
-            .bitwiseAND(lit(mask)).as("sig"))): _*)).as("bs"))
-      .select(col("bs.band"), col("bs.sig"), col("id"), col("hash"))
+  private def member(rows: DataFrame): Column =
+    struct(rows.columns.filterNot(Set("band", "sig")).map(col): _*)
+
+  /** The one self-pair expansion: (band, a, b) for every member pair
+    * a.id < b.id of a [[cappedBuckets]] bucket. */
+  private def selfPairs(buckets: DataFrame): DataFrame =
+    buckets.select(col("band"), explode(col("ds")).as("a"), col("ds"))
+      .select(col("band"), col("a"), explode(col("ds")).as("b"))
+      .filter(col("a.id") < col("b.id"))
+
+  /** The one probe join: (band, a, b) for every batch band row `a` and
+    * every member `b` of the index bucket it lands in — a batch shuffles
+    * only its own band keys into the index's [[cappedBuckets]]. */
+  private def probe(rows: DataFrame, buckets: DataFrame): DataFrame =
+    rows.join(buckets, Seq("band", "sig"))
+      .select(col("band"), member(rows).as("a"), explode(col("ds")).as("b"))
+
+  /** Exact popcount-XOR verify of (band, a, b) hamming candidates at
+    * their band's key radius: (id_1, id_2, hamming), not deduplicated. */
+  private def hammingVerified(pairs: DataFrame,
+      keys: Seq[HammingKey]): DataFrame = {
+    val radii = keys.flatMap(k => Seq.fill(k.bands)(k.maxHamming))
+    val radius = if (radii.distinct.size == 1) lit(radii.head)
+      else element_at(array(radii.map(lit): _*), col("band") + 1)
+    pairs.withColumn("hamming",
+        bit_count(col("a.hash").bitwiseXOR(col("b.hash"))))
+      .filter(col("hamming") <= radius)
+      .select(col("a.id").as("id_1"), col("b.id").as("id_2"), col("hamming"))
   }
 
-  /** Shared banded-hamming candidate machinery of the SimHash family:
-    * explode each fingerprint into `bands` (band, sig) bucket keys
-    * (logical shifts — bit 63 of the 64-bit form must not smear), pair
-    * docs within buckets sized [2, maxBucketSize], verify with exact
-    * popcount-XOR hamming. ONE shuffle keyed by (band, sig). */
-  private def bandedHammingPairs(
-      h: DataFrame, bitsPerBand: Int, bands: Int,
-      maxHamming: Int, maxBucketSize: Int
-  ): DataFrame = {
-    val mask = if (bitsPerBand == 64) -1L else (1L << bitsPerBand) - 1
-    val banded = h.select(col("id"), col("simhash"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          shiftrightunsigned(col("simhash"), b * bitsPerBand)
-            .bitwiseAND(lit(mask)).as("sig"))): _*)).as("bs"))
-      .select(col("id"), col("simhash"), col("bs.band"), col("bs.sig"))
+  /** Banded hamming self-pairs: band rows, capped buckets, pairs, verify.
+    * Verified before the pair dedup, so its one shuffle carries matches
+    * only. Emits distinct (id_1, id_2, hamming). */
+  private def hammingSelfPairs(df: DataFrame, id: Column,
+      keys: Seq[HammingKey], maxBucketSize: Int): DataFrame =
     // count-first shed: a constant fingerprint (blank/black images all
     // hashing dHash=0, empty docs) must never concentrate the corpus in
     // one collect_list buffer — exactly the inputs media dedup exists for
-    val buckets = shedOvercapBuckets(banded,
-        Seq("band", "sig"), 2L, maxBucketSize.toLong)
-      .groupBy(col("band"), col("sig"))
-      .agg(collect_list(struct(col("id"), col("simhash"))).as("ds"))
-    buckets
-      .select(explode(col("ds")).as("d1"), col("ds"))
-      .select(col("d1.id").as("id_1"), col("d1.simhash").as("h1"),
-        explode(col("ds")).as("d2"))
-      .filter(col("id_1") < col("d2.id"))
-      .select(col("id_1"), col("d2.id").as("id_2"),
-        col("h1"), col("d2.simhash").as("h2"))
+    hammingVerified(selfPairs(cappedBuckets(hammingRows(df, id, keys), 2L,
+      maxBucketSize)()), keys).distinct()
+
+  /** Distinct MinHash candidate pairs (id_1 < id_2) of an [[lshIndex]]
+    * artifact: docs sharing any (band, sig) bucket of [2, maxBucketSize]. */
+  private def minhashSelfPairs(docs: DataFrame, bands: Int, rowsPerBand: Int,
+      maxBucketSize: Long): DataFrame =
+    selfPairs(cappedBuckets(minhashRows(docs, bands, rowsPerBand), 2L,
+        maxBucketSize)())
+      .select(col("a.id").as("id_1"), col("b.id").as("id_2"))
       .distinct()
-      .withColumn("hamming", bit_count(col("h1").bitwiseXOR(col("h2"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_1"), col("id_2"), col("hamming"))
+
+  /** `d`'s id and columns `cs`, suffixed `_i`: one side of a pair join. */
+  private def side(d: DataFrame, i: Int, cs: String*): DataFrame =
+    d.select(col("id").as(s"id_$i") +: cs.map(c => col(c).as(s"${c}_$i")): _*)
+
+  /** The one size-prune plus exact-Jaccard verify of candidate pairs
+    * (id_1, id_2) between artifacts `a` and `b`: jaccard <= min/max set
+    * sizes, so a pair whose size ratio is already below threshold never
+    * joins the (wide) shingle arrays — only a 2-int-column projection
+    * shuffles for the prune. Emits (id_1, id_2, jaccard) >= threshold. */
+  private def verifiedJaccard(cand: DataFrame, a: DataFrame, b: DataFrame,
+      threshold: Double): DataFrame = {
+    def sizes(d: DataFrame) = d.select(col("id"), size(col("sh")).as("n"))
+    val pruned = cand
+      .join(side(sizes(a), 1, "n"), "id_1")
+      .join(side(sizes(b), 2, "n"), "id_2")
+      .filter(least(col("n_1"), col("n_2")).cast("double") >=
+        lit(threshold) * greatest(col("n_1"), col("n_2")))
+      .select(col("id_1"), col("id_2"))
+    withJaccard(pruned.join(side(a, 1, "sh"), "id_1")
+        .join(side(b, 2, "sh"), "id_2"))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_1"), col("id_2"), col("jaccard"))
   }
+
+  /** Exact Jaccard of the shingle sets sh_1, sh_2: |A∪B| = |A|+|B|-|A∩B|
+    * for distinct arrays skips materializing the union array (the
+    * second-most-expensive op of the verify stage). */
+  private def withJaccard(df: DataFrame): DataFrame =
+    df.withColumn("inter",
+        size(array_intersect(col("sh_1"), col("sh_2"))).cast("double"))
+      .withColumn("uni",
+        (size(col("sh_1")) + size(col("sh_2"))).cast("double") - col("inter"))
+      .filter(col("uni") > 0)
+      .withColumn("jaccard", round(col("inter") / col("uni"), 6))
 
   /** Embedding-cosine near-duplicate pairs within a blocking key — exact
     * brute force inside each block, with blocks larger than

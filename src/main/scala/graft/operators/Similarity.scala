@@ -140,9 +140,10 @@ object Similarity {
       seed: Long = 42L, maxBucketSize: Int = 20000
   ): DataFrame =
     Materialize.scoped { pin =>
-      val v = pin(vectors(corpus, idCol, vecCol, labelCol))
-      hardNegativesTopK(artSigFrame(signed(v, dim, bands, bitsPerBand, seed),
-        pin), k, bands, bitsPerBand, maxBucketSize)
+      // one consumer: the signature frame, which artSigFrame pins
+      hardNegativesTopK(artSigFrame(signed(vectors(corpus, idCol, vecCol,
+        labelCol), dim, bands, bitsPerBand, seed), pin), k, bands,
+        bitsPerBand, maxBucketSize)
     }
 
   /** Rank 1..k per anchor over a heap-pruned top-k frame: the window sees
@@ -1083,30 +1084,22 @@ object Similarity {
       .agg(count(lit(1)).as("cluster_size"))
       .filter(col("cluster_size") > maxClusterSize)
 
-  /** Product-quantization codes: the vector splits into `m` subspaces;
-    * each subspace gets a `k`-entry codebook (deterministic seed: the first
-    * `k` corpus vectors' sub-vectors, same stand-in policy as
-    * [[seedCentroids]]) and every vector stores its nearest code per
+  /** Product-quantization codes against a built codebook: the vector
+    * splits into `m` subspaces; each subspace has a `k`-entry codebook
+    * ([[pqCodebook]]) and every vector stores its nearest code per
     * subspace — 100 TB posture: vectors compress dim×4 bytes → m bytes,
-    * codebooks broadcast, assignment is map-only + one tiny window over
-    * n×m rows partitioned by (id, subspace).
-    *
-    * Returns (id, s, code, __qd_micro-free) rows: one code per subspace.
-    * Distances are integer-scaled micro-units (floor(d*1e6+0.5)) so every
-    * downstream sum is order-independent and cross-engine exact. */
-  def pqAssign(corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int = 8, k: Int = 16): DataFrame =
-    pqAssignWith(pqSubVectors(corpus, idCol, vecCol, m),
-      pqCodebook(corpus, idCol, vecCol, m, k))
-
-  /** [[pqAssign]] body against an already-built codebook, so
-    * [[pqTopK]]/[[ivfPqTopK]] derive the codebook ONCE for both the code
-    * assignment and the query ADC table. Nearest code per (id, s) rides
-    * a partial-aggregated struct-min (the house argmin) instead of a
-    * row_number window: the n×m×k candidate rows combine map-side to
-    * n×m before any exchange and the window sort disappears (r13, guide
-    * §2.3 aggregate-before-shuffle); (d_micro, code) struct-min ==
-    * the former window's (d_micro asc, code asc) first row. */
+    * codebooks broadcast, assignment is map-only plus one partial-
+    * aggregated argmin. [[pqTopK]]/[[ivfPqTopK]] derive the codebook ONCE
+    * for both this code assignment and the query ADC table. Returns
+    * (id, s, code) rows: one code per subspace. Distances are
+    * integer-scaled micro-units (floor(d*1e6+0.5)) so every downstream
+    * sum is order-independent and cross-engine exact. Nearest code per
+    * (id, s) rides a partial-aggregated struct-min (the house argmin)
+    * instead of a row_number window: the n×m×k candidate rows combine
+    * map-side to n×m before any exchange and the window sort disappears
+    * (r13, guide §2.3 aggregate-before-shuffle); (d_micro, code)
+    * struct-min == the former window's (d_micro asc, code asc) first
+    * row. */
   private def pqAssignWith(sub: DataFrame, cb0: DataFrame): DataFrame =
     sub.join(broadcast(cb0), Seq("s"))
       .withColumn("d_micro", sqDistMicro(col("sv"), col("cv")))
@@ -1114,7 +1107,7 @@ object Similarity {
       .agg(min(struct(col("d_micro"), col("code"))).as("__best"))
       .select(col("id"), col("s"), col("__best.code").as("code"))
 
-  /** The (s, code, cv) PQ codebook shared by [[pqAssign]]/[[pqTopK]]/
+  /** The (s, code, cv) PQ codebook shared by [[pqAssignWith]]/[[pqTopK]]/
     * [[ivfPqTopK]]: sub-vectors of the first `k` corpus vectors IN ID
     * ORDER, codes 0..k−1 by that order (== the id for dense 0-based id
     * spaces, which the former `id < k` filter silently required — UUID or
@@ -1160,7 +1153,7 @@ object Similarity {
 
   /** IVF + PQ composed serving path — the production ANN shape at 100 TB:
     * the corpus is bucketed ONCE by nearest centroid ([[assignClusters]],
-    * map-only) and compressed ONCE to m-byte PQ codes ([[pqAssign]]);
+    * map-only) and compressed ONCE to m-byte PQ codes ([[pqAssignWith]]);
     * a query probes its `nprobe` closest buckets and ranks ONLY those
     * candidates by the integer ADC sum — per query the work is
     * |probed buckets| code lookups, never a corpus scan. Candidates are

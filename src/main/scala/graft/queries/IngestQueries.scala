@@ -204,7 +204,8 @@ object IngestQueries {
       val manifest = EphysChunker.mergeManifest(
         EphysChunker.channelRanges(long0).withColumnRenamed("channel", "index"),
         EphysChunker.channelRanges(ds).withColumnRenamed("channel", "index"))
-      s.read.parquet(outDir)
+      s.read.schema(graft.sources.Sinks.writtenSchema(chunks,
+          "downsampling", "channel")).parquet(outDir)
         .join(manifest, col("channel") === col("index"))
         .select(col("downsampling"), col("channel"), col("chunk_index"),
           array_join(transform(col("values"), _.cast("string")), ",").as("vals"),

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 
 /** Catalog sinks (SURVEY.md §2.1 S9/S10/S13): the reference's INSERT /
   * UPDATE / chunk-file writes re-expressed as set-oriented parquet
@@ -120,6 +121,14 @@ object Sinks {
       .partitionBy("downsampling", "channel")
       .mode("overwrite")
       .parquet(outDir)
+
+  /** The schema a parquet dir written from `df` with `partitionBy(parts)`
+    * reads back with: the data columns, then the partition columns.
+    * Reading with it skips the footer-inference job of a schema-less read. */
+  private[graft] def writtenSchema(df: DataFrame,
+      parts: String*): StructType =
+    StructType(df.schema.filterNot(f => parts.contains(f.name)) ++
+      parts.map(df.schema(_)))
 
   /** Small-file compaction: rewrite a parquet directory into
     * ~`targetBytes`-sized files. Incremental sinks (chunk writers,

@@ -841,11 +841,11 @@ object EventStream {
                 // O(batch-adjacent) rows at any corpus size
                 val batchKeys = graft.operators.Dedup
                   .fusedBandRows(gatedBatch, "id", keys)
-                  .select(col("ht"), col("band"), col("sig")).distinct()
+                  .select(col("band"), col("sig")).distinct()
                 val idx = graft.operators.Dedup.fusedBandRows(
                   stagedAll.where(col("width") >= minWidth), "id", keys,
                   carryCols = Seq("batch_id"))
-                  .join(broadcast(batchKeys), Seq("ht", "band", "sig"))
+                  .join(broadcast(batchKeys), Seq("band", "sig"))
                   .withColumn("is_batch", col("batch_id") === id)
                 graft.operators.Dedup.fusedBatchPairDelta(idx, keys)
               })

@@ -18,7 +18,8 @@ import graft.{GraftSession, QueryProfile}
   *   1. hammingNearDupPairs over the full set (the q294/q300 shape),
   *   2. incrementalHammingMatches of a 10% batch against the 90% index
   *      (the continuous-admission shape), and
-  *   3. hammingBucketSizes (the audit twin: over-cap buckets visible).
+  *   3. Dedup.bucketSizes over the prints' hammingIndex rows (the
+  *      shed audit: over-cap buckets visible).
   *
   * Usage: tools/run.sh graft.tools.HammingScale [n] [degPct]
   */
@@ -68,8 +69,8 @@ object HammingScale {
         "id", "print", bands = 4, maxHamming = 3).count()
     }
     timed("bucket_sizes_audit") {
-      val sizes = graft.operators.Dedup.hammingBucketSizes(
-        prints, "id", "print", bands = 4)
+      val sizes = graft.operators.Dedup.bucketSizes(
+        graft.operators.Dedup.hammingIndex(prints, "id", "print", 4))
       val over = sizes.where(col("bucket_size") > 10000).count()
       println(s"[hamming-scale] over-cap buckets (>10000): $over")
       sizes.count()

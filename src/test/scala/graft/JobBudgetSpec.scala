@@ -24,7 +24,12 @@ package graft
   * cross-joins: q75 went from 4 jobs to 3 and q78 from 26 to 11.
   * q248 and q271, the two miner queries pinned last, carry the counts
   * `tools.Profile` measured from rep 2 on (20 and 11) before the miners
-  * were rebuilt around one bucket join.
+  * were rebuilt around one bucket join. q54, q180, q183, q252, q259 and
+  * q294, pinned with the near-dup banding core, carry the counts
+  * `tools.Profile` measured from rep 2 on before that rewrite. q161 went
+  * from 9 jobs to 8 when its one-consumer vector pin went, and q78 from
+  * 11 to 10 when its chunk read-back took the written frame's schema
+  * instead of inferring one; both bounds are those measured counts.
   *
   * q307 is the exception to fixed counts: AQE sometimes runs a broadcast
   * build of its component loop that it then cancels, which only ever
@@ -37,11 +42,12 @@ class JobBudgetSpec extends SparkSpec {
   private val budgets = Seq(
     "q17_protocol_identification" -> 6,
     "q27_minhash_lsh" -> 17,
+    "q54_simhash_neardup" -> 5,
     "q38_insertion_summary" -> 8,
     "q61_archive_ingest" -> 1,
     "q79_dicom_summary" -> 2,
     "q75_brainvision_ingest" -> 3,
-    "q78_chunk_sink" -> 11,
+    "q78_chunk_sink" -> 10,
     "q90_archive_loader" -> 4,
     "q109_object_store" -> 5,
     "q135_tarchive_validation" -> 25,
@@ -49,14 +55,19 @@ class JobBudgetSpec extends SparkSpec {
     "q145_file_records" -> 3,
     "q152_minc_insertion" -> 49,
     "q153_dcmconv_plan" -> 2,
-    "q161_hard_negatives" -> 10,
+    "q161_hard_negatives" -> 8,
+    "q180_incremental_dedup" -> 18,
+    "q183_minhash_calibration" -> 12,
     "q184_collocations" -> 15,
     "q234_skew_audit" -> 12,
     "q248_triplet_mining" -> 20,
+    "q252_simhash64_neardup" -> 5,
     "q254_incremental_hard_negatives" -> 22,
     "q255_incremental_triplets" -> 48,
     "q258_index_mining" -> 10,
+    "q259_incremental_dedup_from_index" -> 19,
     "q271_index_takedown" -> 11,
+    "q294_image_neardup" -> 5,
     "q307_multimodal_assembly" -> 38,
     "q317_assembly_incremental" -> 94,
     "q318_assembly_incremental_attrition" -> 94)

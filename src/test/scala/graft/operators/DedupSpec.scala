@@ -151,11 +151,11 @@ class DedupSpec extends SparkSpec {
     assert(routed.exists { case (a, b, _) => a == 200L && b == 300L })
   }
 
-  test("clusterPairsStar == clusterPairs on adversarial graph shapes") {
+  test("clusterPairsStar == union-find on adversarial graph shapes") {
     import spark.implicits._
     // long chain (diameter stress), star, two triangles bridged, isolated
-    // pair, and a random graph — label propagation and the alternating
-    // star rounds must agree everywhere
+    // pair, and a random graph — the alternating star rounds must agree
+    // everywhere with a plain union-find over the collected pairs
     val chain = (1L until 30L).map(i => (i, i + 1))
     val star = (101L to 110L).map(i => (100L, i))
     val tri = Seq((200L, 201L), (201L, 202L), (202L, 200L),
@@ -169,9 +169,18 @@ class DedupSpec extends SparkSpec {
       .toDF("id_1", "id_2")
     def collect(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaProp = collect(Dedup.clusterPairs(pairs, maxIter = 100))
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    collect(pairs).foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val viaUnionFind = parent.keys.map(x => x -> find(x)).toSet
     val viaStar = collect(Dedup.clusterPairsStar(pairs))
-    assert(viaStar == viaProp)
+    assert(viaStar == viaUnionFind)
     // sanity: the chain collapses to a single root
     assert(viaStar.filter(_._1 <= 30L).forall(_._2 == 1L))
   }
@@ -280,9 +289,9 @@ class DedupSpec extends SparkSpec {
 
   test("q180 corpus never hits the incremental-LSH bucket cap (no silent shed)") {
     val d = spark.read.parquet(s"$sf001/documents.parquet")
-    val sizes = Dedup.incrementalLshBucketSizes(
-      d.filter(col("doc_id") % 5 =!= 0), "doc_id", "text",
-      n = 5, bands = 16, rowsPerBand = 4)
+    val sizes = Dedup.bucketSizes(Dedup.minhashRows(
+      Dedup.lshIndex(d.filter(col("doc_id") % 5 =!= 0), "doc_id", "text",
+        n = 5, bands = 16, rowsPerBand = 4), bands = 16, rowsPerBand = 4))
     val maxBucket = sizes.agg(max(col("bucket_size"))).first().getLong(0)
     // the q180 oracle is an exact all-pairs join that does not model the
     // cap: this pins that nothing is shed on the gate corpus, so the cap
@@ -438,14 +447,13 @@ class DedupSpec extends SparkSpec {
     assert(uncapped == brute)
   }
 
-  test("hammingBucketSizes audit twin makes the mega-bucket shed " +
-      "visible: the zero-signature buckets report exactly the planted " +
-      "population in every band") {
+  test("bucketSizes shows the mega-bucket shed in every hamming band") {
     import spark.implicits._
+    // the zero-signature buckets report exactly the planted population
     val rows = (1L to 500L).map(i => (i, 0L)) ++
       Seq((1001L, 0x123456789abcdef0L))
-    val sizes = Dedup.hammingBucketSizes(rows.toDF("id", "h"), "id", "h",
-        bands = 4)
+    val sizes = Dedup.bucketSizes(Dedup.hammingIndex(rows.toDF("id", "h"),
+        "id", "h", bands = 4))
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     (0 until 4).foreach { b => assert(sizes((b, 0L)) == 500L) }
     // over-cap alert surface: exactly the buckets a maxBucketSize=100
