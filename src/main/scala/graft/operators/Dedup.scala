@@ -144,9 +144,10 @@ object Dedup {
     * RECALL TRADE-OFF: a shed bucket silently loses every true match it
     * alone would have surfaced — on boilerplate-heavy corpora (one
     * signature shared by >maxBucketSize index docs) a batch twin of that
-    * boilerplate can go unflagged. Audit with [[bucketSizes]] over the
-    * index's [[minhashRows]] (same banding, run alongside): 0 rows at the
-    * cap = nothing shed; oversized buckets mean either raise the cap or
+    * boilerplate can go unflagged. Audit alongside by counting the index
+    * docs of each bucket — band b's bucket key is the `rowsPerBand` slice
+    * of `sig` starting at b × rowsPerBand: no bucket over the cap =
+    * nothing shed; oversized buckets mean either raise the cap or
     * treat those signatures as a stop-list handled upstream. DedupSpec
     * pins that the q180 corpus never hits the default cap.
     * Output: (batch_id, index_id, jaccard). */
@@ -239,11 +240,58 @@ object Dedup {
     }
 
   /** Near-duplicate CLUSTERS from pairwise matches: connected components
-    * by alternating large-star / small-star rounds (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC 2014) — the
-    * step that turns LSH pair output into canonical dedup groups (keep
-    * min id per cluster, drop the rest). Each round rewrites the EDGE SET
-    * toward star graphs rooted at component minima:
+    * via iterative min-label propagation (the step that turns LSH pair
+    * output into canonical dedup groups — keep min id per cluster, drop the
+    * rest). Converges in graph-diameter iterations; near-dup components are
+    * shallow in practice, and `maxIter` bounds the loop. The per-iteration
+    * convergence check is the one intentional driver-side action (standard
+    * for iterative graph algorithms; each iteration is a bounded self-join
+    * on the pair set, not the corpus). */
+  def clusterPairs(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+    // localCheckpoint (not persist): each iteration's plan would otherwise
+    // embed the whole prior lineage and planning time grows exponentially —
+    // the standard lineage-truncation requirement of iterative algorithms.
+    val edges = pairs.select(col("id_1").as("u"), col("id_2").as("v"))
+      .union(pairs.select(col("id_2").as("u"), col("id_1").as("v")))
+      .distinct()
+      .localCheckpoint(true)
+    var labels = edges.select(col("u").as("id")).distinct()
+      .withColumn("cluster_id", col("id"))
+      .localCheckpoint(true)
+    var converged = false
+    var i = 0
+    while (!converged && i < maxIter) {
+      val neighborMin = edges
+        .join(labels.withColumnRenamed("id", "v")
+          .withColumnRenamed("cluster_id", "n_label"), Seq("v"))
+        .groupBy(col("u").as("id"))
+        .agg(min(col("n_label")).as("n_min"))
+      // carry the old label THROUGH the round frame: the convergence
+      // count is then a filter over the (lazily) checkpointed round —
+      // one job per round, no join-back against the prior labels (which
+      // cost a second join + a second action every round).
+      // INVARIANT (lazy localCheckpoint): the action immediately below
+      // (the changes count) must scan EVERY partition of this frame —
+      // a partial action (isEmpty/limit) would leave it un-materialized
+      // and later consumers would recompute nondeterministic lineage
+      val updated = labels.join(neighborMin, Seq("id"), "left")
+        .select(col("id"),
+          least(col("cluster_id"), coalesce(col("n_min"), col("cluster_id")))
+            .as("cluster_id"),
+          col("cluster_id").as("__old"))
+        .localCheckpoint(false)
+      val changes = updated.filter(col("cluster_id") =!= col("__old")).count()
+      labels = updated.select(col("id"), col("cluster_id"))
+      converged = changes == 0
+      i += 1
+    }
+    labels
+  }
+
+  /** [[clusterPairs]]' 100 TB formulation: alternating large-star /
+    * small-star connected components (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC 2014). Each round
+    * rewrites the EDGE SET toward star graphs rooted at component minima:
     *
     *  - large-star: per node u with symmetric neighborhood N(u), connect
     *    every strictly larger neighbor to m = min(N(u) ∪ {u});
@@ -255,11 +303,10 @@ object Dedup {
     * rounds shrink the edge set itself (edges attach to ever-smaller
     * minima), so round state is bounded by the current edge count and
     * drops geometrically; convergence is O(log²) rounds vs graph
-    * diameter. Lineage is truncated by a localCheckpoint per round, with
-    * one driver-side fixpoint count (standard for iterative graph
-    * algorithms; each round is bounded by the pair set, not the corpus).
-    * Output: (id, cluster_id) with cluster_id = min id of the component
-    * (q50 and q114 share one oracle). */
+    * diameter. Same lineage-truncation discipline (localCheckpoint per
+    * round, one driver-side fixpoint count). Output schema matches
+    * [[clusterPairs]]; q114 reuses q50's oracle VERBATIM so the
+    * equivalence is driver-checked, not just spec-checked. */
   def clusterPairsStar(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     // large→small orientation DIRECTLY (greatest/least per input pair ==
     // the old symmetrize-then-filter(u > v), row for row): ONE distinct

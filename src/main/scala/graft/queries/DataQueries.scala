@@ -355,7 +355,7 @@ object DataQueries {
     // Near-dup clusters: connected components over the LSH pair output
     // (canonical dedup groups; min id = cluster id)
     "q50_neardup_clusters" -> { (s, dir) =>
-      Dedup.clusterPairsStar(
+      Dedup.clusterPairs(
         Dedup.minhashLshPairs(docs(s, dir), "doc_id", "text",
           n = 5, bands = 16, rowsPerBand = 4, threshold = 0.5))
     },
@@ -470,7 +470,7 @@ object DataQueries {
     // of the corpus sits in 2-clusters vs giant boilerplate blobs) — two
     // tiny count shuffles after the q50 clustering
     "q205_cluster_sizes" -> { (s, dir) =>
-      Dedup.clusterPairsStar(
+      Dedup.clusterPairs(
         Dedup.minhashLshPairs(docs(s, dir), "doc_id", "text",
           n = 5, bands = 16, rowsPerBand = 4, threshold = 0.5))
         .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
@@ -478,8 +478,10 @@ object DataQueries {
         .select(col("sz").as("cluster_size"), col("n_clusters"))
     },
 
-    // q50's clusters under a second name, kept for its own oracle entry
-    // (q50's VERBATIM) and bench history
+    // Same clusters via the alternating large-star/small-star rounds —
+    // the 100 TB formulation (round state shrinks with the edge set,
+    // O(log²) rounds vs diameter). Oracle is q50's VERBATIM, so the
+    // driver gate machine-checks the equivalence (the q107/q68 pattern)
     "q114_neardup_clusters_star" -> { (s, dir) =>
       Dedup.clusterPairsStar(
         Dedup.minhashLshPairs(docs(s, dir), "doc_id", "text",
@@ -1077,11 +1079,10 @@ object DataQueries {
       // one scratch dir per JVM, overwritten per invocation — repeated
       // bench reps must not accumulate index copies
       val idxDir = graft.sources.SyntheticFixtures.freshDir("q261_ivf_idx")
-      val idx = Similarity.ivfIndex(e, "vec_id", "embedding", centroids)
-      idx.write.mode("overwrite").partitionBy("cell").parquet(idxDir)
-      Similarity.ivfTopKFromIndex(
-        s.read.schema(graft.sources.Sinks.writtenSchema(idx, "cell"))
-          .parquet(idxDir),
+      val written = graft.sources.Sinks.writePartitioned(
+        Similarity.ivfIndex(e, "vec_id", "embedding", centroids), idxDir,
+        "cell")
+      Similarity.ivfTopKFromIndex(s.read.schema(written).parquet(idxDir),
         e.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10,
         centroids, nprobe = 2)
     },

@@ -200,12 +200,11 @@ object IngestQueries {
         .unionByName(EphysChunker.chunkArrays(ds, 4)
           .withColumn("downsampling", lit(1)))
       val outDir = s"$dir/chunks_out"
-      graft.sources.Sinks.writeChunks(chunks, outDir)
+      val written = graft.sources.Sinks.writeChunks(chunks, outDir)
       val manifest = EphysChunker.mergeManifest(
         EphysChunker.channelRanges(long0).withColumnRenamed("channel", "index"),
         EphysChunker.channelRanges(ds).withColumnRenamed("channel", "index"))
-      s.read.schema(graft.sources.Sinks.writtenSchema(chunks,
-          "downsampling", "channel")).parquet(outDir)
+      s.read.schema(written).parquet(outDir)
         .join(manifest, col("channel") === col("index"))
         .select(col("downsampling"), col("channel"), col("chunk_index"),
           array_join(transform(col("values"), _.cast("string")), ",").as("vals"),

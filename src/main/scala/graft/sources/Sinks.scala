@@ -115,20 +115,21 @@ object Sinks {
 
   /** S13 chunk sink: partitioned parquet layout
     * (`downsampling`/`channel` directories — the reference's per-chunk
-    * protobuf tree becomes partition pruning keys). */
-  def writeChunks(chunks: DataFrame, outDir: String): Unit =
-    chunks.write
-      .partitionBy("downsampling", "channel")
-      .mode("overwrite")
-      .parquet(outDir)
+    * protobuf tree becomes partition pruning keys). Returns the layout's
+    * read-back schema ([[writePartitioned]]). */
+  def writeChunks(chunks: DataFrame, outDir: String): StructType =
+    writePartitioned(chunks, outDir, "downsampling", "channel")
 
-  /** The schema a parquet dir written from `df` with `partitionBy(parts)`
-    * reads back with: the data columns, then the partition columns.
-    * Reading with it skips the footer-inference job of a schema-less read. */
-  private[graft] def writtenSchema(df: DataFrame,
-      parts: String*): StructType =
+  /** Overwrite `outDir` with `df` as parquet partitioned by `parts`, and
+    * return the schema the dir reads back with: the data columns, then
+    * the partition columns. Reading with it skips the footer-inference
+    * job of a schema-less read, and the layout is stated once, here. */
+  private[graft] def writePartitioned(df: DataFrame, outDir: String,
+      parts: String*): StructType = {
+    df.write.partitionBy(parts: _*).mode("overwrite").parquet(outDir)
     StructType(df.schema.filterNot(f => parts.contains(f.name)) ++
       parts.map(df.schema(_)))
+  }
 
   /** Small-file compaction: rewrite a parquet directory into
     * ~`targetBytes`-sized files. Incremental sinks (chunk writers,

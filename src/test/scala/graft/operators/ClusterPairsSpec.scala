@@ -12,7 +12,7 @@ class ClusterPairsSpec extends SparkSpec {
       (10L, 11L), (11L, 12L), (10L, 12L),
       (20L, 21L)
     ).toDF("id_1", "id_2")
-    val out = Dedup.clusterPairsStar(pairs)
+    val out = Dedup.clusterPairs(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(
       1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
@@ -23,7 +23,7 @@ class ClusterPairsSpec extends SparkSpec {
   test("long chain needs multiple propagation rounds") {
     import spark.implicits._
     val chain = (1L until 15L).map(i => (i, i + 1)).toDF("id_1", "id_2")
-    val out = Dedup.clusterPairsStar(chain)
+    val out = Dedup.clusterPairs(chain)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out.size == 15)
     assert(out.values.forall(_ == 1L))

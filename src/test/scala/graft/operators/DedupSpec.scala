@@ -151,11 +151,11 @@ class DedupSpec extends SparkSpec {
     assert(routed.exists { case (a, b, _) => a == 200L && b == 300L })
   }
 
-  test("clusterPairsStar == union-find on adversarial graph shapes") {
+  test("clusterPairsStar == clusterPairs on adversarial graph shapes") {
     import spark.implicits._
     // long chain (diameter stress), star, two triangles bridged, isolated
-    // pair, and a random graph — the alternating star rounds must agree
-    // everywhere with a plain union-find over the collected pairs
+    // pair, and a random graph — label propagation and the alternating
+    // star rounds must agree everywhere
     val chain = (1L until 30L).map(i => (i, i + 1))
     val star = (101L to 110L).map(i => (100L, i))
     val tri = Seq((200L, 201L), (201L, 202L), (202L, 200L),
@@ -169,18 +169,9 @@ class DedupSpec extends SparkSpec {
       .toDF("id_1", "id_2")
     def collect(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    collect(pairs).foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val viaUnionFind = parent.keys.map(x => x -> find(x)).toSet
+    val viaProp = collect(Dedup.clusterPairs(pairs, maxIter = 100))
     val viaStar = collect(Dedup.clusterPairsStar(pairs))
-    assert(viaStar == viaUnionFind)
+    assert(viaStar == viaProp)
     // sanity: the chain collapses to a single root
     assert(viaStar.filter(_._1 <= 30L).forall(_._2 == 1L))
   }

@@ -71,12 +71,16 @@ class SinksSpec extends SparkSpec {
     val chunks = Seq((0, "ch1", 0L, Seq(1.0, 2.0)), (1, "ch1", 0L, Seq(1.5)),
       (0, "ch2", 0L, Seq(3.0, 4.0)))
       .toDF("downsampling", "channel", "chunk_index", "values")
-    Sinks.writeChunks(chunks, dir)
+    val written = Sinks.writeChunks(chunks, dir)
     // partition directories exist -> partition pruning works on read
     val pruned = spark.read.parquet(dir)
       .filter(col("downsampling") === 0 && col("channel") === "ch1")
     assert(pruned.count() == 1)
     assert(new java.io.File(s"$dir/downsampling=0/channel=ch1").exists())
+    // the returned schema is the one inference finds, so a read-back
+    // with it skips the inference job and plans the same
+    assert(spark.read.schema(written).parquet(dir).schema ==
+      spark.read.parquet(dir).schema)
   }
 
   test("compactParquet: many small files -> byte-sized output, data intact") {
