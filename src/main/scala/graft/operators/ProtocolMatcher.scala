@@ -1,18 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 import graft.functions.Predicates._
 
 /** Acquisition-protocol identification engine.
   *
-  * Re-expresses the reference's per-scan Python loop as one distributed
-  * dataflow: scans ⋈ broadcast(protocols) under the eligibility predicate,
-  * then per-scan aggregation implementing the group-ambiguity and
-  * scan-type-ambiguity rules.
+  * Re-expresses the reference's per-scan Python loop as one projection:
+  * every scan row evaluates the eligibility and match predicates against
+  * the collected protocol table, then applies the group-ambiguity and
+  * scan-type-ambiguity rules to the distinct groups and types it found.
   *
   * Reference semantics (cited file:line):
-  *  - eligibility join: `python/lib/database_lib/mri_protocol.py:56-69` —
+  *  - eligibility: `python/lib/database_lib/mri_protocol.py:56-69` —
   *    `(CenterID = c AND ScannerID = s) OR (CenterID IS NULL AND ScannerID IS
   *    NULL)`, and per target dimension: scan value present → `(tgt IS NULL OR
   *    tgt = v)`, scan value absent → `tgt IS NULL`.
@@ -29,9 +31,11 @@ import graft.functions.Predicates._
   *    types; 0 → unknown, >1 → ambiguous, 1 → identified (the Python
   *    pipeline's collect-all semantics, not Perl's first-match).
   *
-  * Scale posture: protocol tables are O(10²) rows → always broadcast; the
-  * scan side stays partition-parallel with no shuffle before the per-scan
-  * aggregation (which reuses the scan-id hash partitioning).
+  * Scale posture: protocol tables are O(10²) rows, so [[identify]]
+  * collects them on the driver into one typed array literal and filters
+  * it per scan row. The scan side stays a narrow, partition-parallel
+  * projection: no join, no aggregation and no exchange of its own, and
+  * its analysis does not grow with the protocol count.
   */
 object ProtocolMatcher {
 
@@ -58,13 +62,11 @@ object ProtocolMatcher {
     "ProjectID", "CohortID", "Visit_label"
   ) ++ rangeDims.flatMap { case (_, mn, mx, _) => Seq(mn, mx) }
 
-  private def p(name: String): Column = col(s"p_$name")
-
   /** String "unset" test mirroring Python falsiness (`not db_prot[x]`). */
   private def unsetStr(c: Column): Column = c.isNull || c === ""
 
-  /** The eligibility predicate (J4), protocol side prefixed `p_`. */
-  def eligibility: Column = {
+  /** The eligibility predicate (J4); `p` reads a protocol column. */
+  def eligibility(p: String => Column): Column = {
     val centerScanner =
       (p("CenterID") === col("CenterID") && p("ScannerID") === col("ScannerID")) ||
         (p("CenterID").isNull && p("ScannerID").isNull)
@@ -74,8 +76,8 @@ object ProtocolMatcher {
     centerScanner && target("ProjectID") && target("CohortID") && target("Visit_label")
   }
 
-  /** The per-protocol match predicate (J5), protocol side prefixed `p_`. */
-  def paramMatch: Column = {
+  /** The per-protocol match predicate (J5); `p` reads a protocol column. */
+  def paramMatch(p: String => Column): Column = {
     val ranges = rangeDims.map { case (scanCol, mn, mx, scale) =>
       val v = if (scale == 1.0) col(scanCol) else col(scanCol) * scale
       inRange(v, p(mn), p(mx))
@@ -106,10 +108,12 @@ object ProtocolMatcher {
     "CohortID" -> "int", "Visit_label" -> "string"
   ) ++ rangeDims.map { case (c, _, _, _) => c -> "double" }
 
-  private def pad(df: DataFrame, types: Map[String, String]): DataFrame =
-    types.foldLeft(df) { case (d, (c, tpe)) =>
-      if (d.columns.contains(c)) d else d.withColumn(c, lit(null).cast(tpe))
-    }
+  private def pad(df: DataFrame, types: Map[String, String]): DataFrame = {
+    val missing = types.filterNot { case (c, _) => df.columns.contains(c) }
+    if (missing.isEmpty) df
+    else df.select(col("*") +: missing.map { case (c, tpe) =>
+      lit(null).cast(tpe).as(c) }.toSeq: _*)
+  }
 
   /** Add any missing protocol columns as typed NULLs (a sparse fixture or
     * catalog dump only needs the columns it actually constrains). */
@@ -126,43 +130,40 @@ object ProtocolMatcher {
     *                  PhaseEncodingDirection, EchoNumber (int), and session
     *                  columns CenterID, ScannerID, ProjectID, CohortID,
     *                  Visit_label (all nullable)
-    * @param protocols `mri_protocol ⋈ mri_protocol_group_target` rows
-    * @return one row per distinct scan row with a non-null `scan_id`: its
-    *         scan columns, carried through the per-scan aggregation rather
-    *         than joined back (a join back would plan the scan input
-    *         twice), + (`MriScanTypeID` nullable int, `MriProtocolGroupID`
-    *         nullable int, `protocol_status` in {identified, unknown,
-    *         ambiguous, ambiguous_group, no_group})
+    * @param protocols `mri_protocol ⋈ mri_protocol_group_target` rows,
+    *                  collected on the driver
+    * @return one row per input scan row with a non-null `scan_id`, as the
+    *         reference returns one result per file: its scan columns +
+    *         (`MriScanTypeID` nullable int, `MriProtocolGroupID` nullable
+    *         int, `protocol_status` in {identified, unknown, ambiguous,
+    *         ambiguous_group, no_group})
     */
   def identify(scans: DataFrame, protocols: DataFrame): DataFrame = {
-    val prot = protocols.select(protocolCols.map(c => col(c).as(s"p_$c")): _*)
-    val carried = scans.columns.filterNot(_ == "scan_id")
-    val joined = scans.filter(col("scan_id").isNotNull)
-      .join(broadcast(prot), eligibility, "left")
-      .withColumn("m_type", when(paramMatch, p("MriScanTypeID")))
-
-    // grouping by the scan columns too keeps every distinct scan row of a
-    // shared scan_id, and each joined copy of a row lands in its group
-    joined
-      .groupBy((col("scan_id") +: carried.map(col)): _*)
-      .agg(
-        countDistinct(p("MriProtocolGroupID")).as("n_groups"),
-        min(p("MriProtocolGroupID")).as("g_id"),
-        collect_set(col("m_type")).as("m_types")
-      )
-      .withColumn(
-        "protocol_status",
-        when(col("n_groups") === 0, "no_group")
-          .when(col("n_groups") > 1, "ambiguous_group")
-          .when(size(col("m_types")) === 0, "unknown")
-          .when(size(col("m_types")) > 1, "ambiguous")
-          .otherwise("identified")
-      )
-      .select((col("scan_id") +: carried.map(col)) :+
-        when(col("protocol_status") === "identified", element_at(col("m_types"), 1))
+    val prot = protocols.select(protocolCols.map(col): _*)
+    val rows = GraftColumnBridge.column(
+      Literal.create(prot.collect().toSeq, ArrayType(prot.schema)))
+    def distinctNonNull(a: Column, f: Column => Column): Column =
+      array_distinct(filter(transform(a, f), _.isNotNull))
+    val carried = scans.columns.toSeq.filterNot(_ == "scan_id").map(col)
+    val groups = size(col("_groups"))
+    val types = size(col("_types"))
+    scans.filter(col("scan_id").isNotNull)
+      .select(col("*"), filter(rows, r => eligibility(r.getField)).as("_eligible"))
+      .select(col("*"),
+        distinctNonNull(col("_eligible"), _.getField("MriProtocolGroupID"))
+          .as("_groups"),
+        distinctNonNull(col("_eligible"),
+          r => when(paramMatch(r.getField), r.getField("MriScanTypeID")))
+          .as("_types"))
+      .select((col("scan_id") +: carried) :+
+        when(groups === 1 && types === 1, element_at(col("_types"), 1))
           .as("MriScanTypeID") :+
-        when(col("n_groups") === 1, col("g_id")).as("MriProtocolGroupID") :+
-        col("protocol_status"): _*)
+        when(groups === 1, element_at(col("_groups"), 1)).as("MriProtocolGroupID") :+
+        when(groups === 0, "no_group")
+          .when(groups > 1, "ambiguous_group")
+          .when(types === 0, "unknown")
+          .when(types > 1, "ambiguous")
+          .otherwise("identified").as("protocol_status"): _*)
   }
 
   /** Extra QC checks (`python/lib/imaging.py:706-809`).

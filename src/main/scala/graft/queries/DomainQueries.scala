@@ -16,15 +16,17 @@ object DomainQueries {
 
   /** part → scan mapping: p_size plays `time`, p_retailprice/1000 plays
     * RepetitionTime (so the engine's s→ms ×1000 scaling recovers it),
-    * p_type plays SeriesDescription. */
-  private[queries] def partAsScans(s: SparkSession, dir: String): DataFrame =
+    * p_type plays SeriesDescription; the `carry` columns of part ride
+    * along unchanged. */
+  private[queries] def partAsScans(s: SparkSession, dir: String,
+      carry: String*): DataFrame =
     ProtocolMatcher.padScanCols(
-      table(s, dir, "part").select(
+      table(s, dir, "part").select(Seq(
         col("p_partkey").as("scan_id"),
         col("p_type").as("SeriesDescription"),
         (col("p_retailprice") / 1000).as("RepetitionTime"),
         col("p_size").cast("double").as("time")
-      ))
+      ) ++ carry.map(col): _*))
 
   private[queries] def protocolFixture(s: SparkSession): DataFrame = {
     import s.implicits._

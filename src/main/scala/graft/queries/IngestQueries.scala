@@ -924,15 +924,15 @@ object IngestQueries {
     // (canonical selection is non-monotonic: wave-2's PNG re-encode
     // merges into wave-1's component). Final manifest == q307's oracle
     "q317_assembly_incremental" -> { (s, _) =>
-      val out = assemblyIncrementalRun(s, "q317")
-      s.read.parquet(s"$out/manifest")
+      val (out, pairs) = assemblyIncrementalRun(s, "q317")
+      graft.streaming.EventStream.assemblyManifest(s, out, pairs)
     },
 
     // ... and the accumulated attrition row == q308's oracle (per-batch
     // pre-decode counts staged alongside, summed at refresh)
     "q318_assembly_incremental_attrition" -> { (s, _) =>
-      val out = assemblyIncrementalRun(s, "q318")
-      s.read.parquet(s"$out/attrition")
+      val (out, _) = assemblyIncrementalRun(s, "q318")
+      graft.streaming.EventStream.assemblyAttrition(s, out)
     },
 
     // Audio feature extraction THROUGH the relational engine: decoded
@@ -1938,16 +1938,13 @@ object IngestQueries {
 
   // q122/q123 shared fixture: two uploads — 80 fully deletable with every
   // footprint table populated, 81 blocked by QC + comments
-  /** Two WebDataset shards exercising every assembly gate, read back
-    * through the tarshard connector and stem-paired into the
-    * (id, sample_id, shard_name, content, caption) frame
-    * [[graft.operators.MultimodalAssembly]] consumes. */
   /** Drives [[graft.streaming.EventStream.assembleMultimodalIncremental]]
     * over the q307 fixture split into two arrival waves (ids 1-3, then
     * 4-7: the PNG re-encode and the caption-less dup arrive AFTER the
     * component they belong to); returns the output root holding
-    * `manifest/` and `attrition/`. */
-  private def assemblyIncrementalRun(s: SparkSession, tag: String): String = {
+    * `manifest/` and `attrition/`, and the pair stream's schema. */
+  private def assemblyIncrementalRun(s: SparkSession,
+      tag: String): (String, org.apache.spark.sql.types.StructType) = {
     import s.implicits._
     implicit val sq = s.sqlContext
     val out = SyntheticFixtures.freshDir(tag + "_out")
@@ -1960,16 +1957,20 @@ object IngestQueries {
         r.getAs[Array[Byte]](3), Option(r.getString(4))))
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, String, Array[Byte], Option[String])]
+    val pairs = mem.toDF().toDF("id", "sample_id", "shard_name", "content",
+      "caption")
     val q = graft.streaming.EventStream.assembleMultimodalIncremental(
-      mem.toDF().toDF("id", "sample_id", "shard_name", "content",
-        "caption"),
-      out, ckpt, minWidth = 10)
+      pairs, out, ckpt, minWidth = 10)
     try Seq(rows.filter(_._1 <= 3L), rows.filter(_._1 > 3L)).foreach { w =>
       mem.addData(w.toIndexedSeq); q.processAllAvailable()
     } finally q.stop()
-    out
+    (out, pairs.schema)
   }
 
+  /** Two WebDataset shards exercising every assembly gate, read back
+    * through the tarshard connector and stem-paired into the
+    * (id, sample_id, shard_name, content, caption) frame
+    * [[graft.operators.MultimodalAssembly]] consumes. */
   private def assemblyPairs(s: SparkSession, tag: String): DataFrame = {
     val dir = SyntheticFixtures.freshDir(tag)
     java.nio.file.Files.write(

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{BidsPath, TextFunctions}
-import graft.operators.{Catalog, ProtocolMatcher, SessionResolver}
+import graft.operators.{Catalog, Eav, ProtocolMatcher, SessionResolver}
 import graft.queries.Tables.table
 
 /** Remaining SURVEY §2 coverage: J9 EAV-hash semi-join, A9 insertion
@@ -18,7 +18,8 @@ object PathQueries {
     // the "find file by hash value" lookup, set-oriented
     // EAV vertical end-to-end (SURVEY hard-part 5): BIDS-named long params
     // -> Alias->Name remap (imaging.py:531-553) -> typed store rows ->
-    // read-all-params join (File.pm:113) -> declared-set pivot. The oracle
+    // read-all-params (File.pm:113) -> declared-set pivot, each lookup
+    // against the one collected dictionary. The oracle
     // is the pipeline's algebraic collapse: SELECT key, brand, size FROM
     // part — an identity the whole EAV round-trip must reproduce.
     "q52_eav_pivot" -> { (s, dir) =>
@@ -26,19 +27,16 @@ object PathQueries {
       val part = table(s, dir, "part")
       val bidsLong = part.selectExpr("p_partkey AS FileID",
         "stack(4, 'Brand', p_brand, 'Type', p_type, 'Size', CAST(p_size AS STRING), 'PartName', p_name) AS (Name, Value)")
-      val pt = Seq(
+      val pt = Eav.parameterTypes(Seq(
         (101L, "acq:brand", Some("Brand")),
         (102L, "acq:type", Option.empty[String]),
         (103L, "acq:size", Some("Size")),
         (104L, "acq:container", Option.empty[String])
-      ).toDF("ParameterTypeID", "Name", "Alias")
-      val withLoris = graft.operators.Eav.bidsToLorisRemap(bidsLong, pt)
+      ).toDF("ParameterTypeID", "Name", "Alias"))
+      val withLoris = Eav.bidsToLorisRemap(bidsLong, pt)
       // only dictionary-known names land in the store (insert-known-params)
-      val store = withLoris
-        .join(broadcast(pt.select(col("ParameterTypeID"), col("Name"))), Seq("Name"))
-        .select(col("FileID"), col("ParameterTypeID"), col("Value"))
-      val params = graft.operators.Eav.readParams(store, pt)
-      graft.operators.Eav.pivotParams(params, Seq("acq:brand", "acq:size"))
+      val store = Eav.insertKnownParams(withLoris, pt)
+      Eav.pivotParams(Eav.readParams(store, pt), Seq("acq:brand", "acq:size"))
     },
 
     // Delete-cascade vertical (delete_imaging_upload.pl:885-1146): a
@@ -119,11 +117,9 @@ object PathQueries {
     // A9 insertion summary (dicom_archive_loader_pipeline.py:429-470):
     // per-archive routing counts + ordered joined name list
     "q38_insertion_summary" -> { (s, dir) =>
-      val parts = table(s, dir, "part").select(
-        col("p_partkey").as("scan_id"), col("p_brand"), col("p_name"))
       ProtocolMatcher.identify(
-        DomainQueries.partAsScans(s, dir), DomainQueries.protocolFixture(s))
-        .join(parts, "scan_id")
+        DomainQueries.partAsScans(s, dir, "p_brand", "p_name"),
+        DomainQueries.protocolFixture(s))
         .groupBy(col("p_brand"))
         .agg(
           count(when(col("protocol_status") === "identified", 1)).as("n_inserted"),

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Structured-Streaming facade (SURVEY.md §2.9 T5/T6).
   *
@@ -694,6 +695,34 @@ object EventStream {
       }
       .start()
 
+  /** The columns of [[assembleMultimodalIncremental]]'s `manifest`, in
+    * the order they are written. */
+  private val assemblyManifestCols = Seq("id", "sample_id", "shard_name",
+    "width", "height", "dhash", "phash", "caption")
+
+  /** The manifest columns of a decoded frame's schema. */
+  private def manifestSchema(decoded: StructType): StructType =
+    StructType(assemblyManifestCols.map(decoded(_)))
+
+  /** [[assembleMultimodalIncremental]]'s `outDir/manifest`, read with the
+    * schema it is written with (no footer-inference job): the kept pair
+    * columns, typed as in `pairs` (the pair stream's schema), and the
+    * perceptual decoder's. */
+  def assemblyManifest(spark: SparkSession, outDir: String,
+      pairs: StructType): DataFrame =
+    spark.read
+      .schema(manifestSchema(StructType(
+        pairs ++ graft.operators.ImageHash.PerceptualDecoder.schema)))
+      .parquet(s"$outDir/manifest")
+
+  /** [[assembleMultimodalIncremental]]'s `outDir/attrition` row, read with
+    * the schema it is written with: five long counts. */
+  def assemblyAttrition(spark: SparkSession, outDir: String): DataFrame =
+    spark.read
+      .schema(StructType(Seq("n_images", "n_paired", "n_decoded",
+        "n_geometry_ok", "n_kept").map(StructField(_, LongType))))
+      .parquet(s"$outDir/attrition")
+
   /** The q307/q308 multimodal assembly on a STREAM of arriving
     * image-text pairs — the image-side twin of
     * [[assembleCorpusIncremental]] (R52's text discipline), with one
@@ -771,7 +800,7 @@ object EventStream {
           // no broadcast build; the refresh's null-skipping sums see the
           // same totals
           val nullL = lit(null).cast("long")
-          images.agg(count(lit(1)).as("n_images"),
+          val counts = images.agg(count(lit(1)).as("n_images"),
               count(col("caption")).as("n_paired"))
             .select(col("n_images"), col("n_paired"),
               nullL.as("n_decoded"), nullL.as("n_geometry_ok"))
@@ -780,13 +809,19 @@ object EventStream {
                   .as("n_geometry_ok"))
               .select(nullL.as("n_images"), nullL.as("n_paired"),
                 col("n_decoded"), col("n_geometry_ok")))
-            .write.mode("overwrite")
+          counts.write.mode("overwrite")
             .parquet(s"$outDir/staged_counts/batch_id=$id")
+          // the staged dirs and the manifest read back with the schemas
+          // they are written with (batch_id is the stream's Long batch
+          // id), so no read runs a footer-inference job
+          def staged(written: StructType, dir: String): DataFrame =
+            spark.read.schema(written.add("batch_id", LongType))
+              .parquet(s"$outDir/$dir")
+          def manifest(): DataFrame = spark.read
+            .schema(manifestSchema(decoded.schema)).parquet(s"$outDir/manifest")
           val keys = Seq(("dhash", bands, maxHamming),
             ("phash", phashBands, phashMaxHamming))
-          val manifestColNames = Seq("id", "sample_id", "shard_name",
-            "width", "height", "dhash", "phash", "caption")
-          val manifestCols = manifestColNames.map(col)
+          val manifestCols = assemblyManifestCols.map(col)
           val batchEmpty = decoded.isEmpty
           val gatedBatch = decoded.where(col("width") >= minWidth)
           // empty decoded batches write no staged partition (a data-less
@@ -801,7 +836,7 @@ object EventStream {
           // above — but sum() relaxes nullability and the artifact
           // schema must not drift batch to batch)
           def writeAttrition(nKept: DataFrame): Unit =
-            spark.read.parquet(s"$outDir/staged_counts")
+            staged(counts.schema, "staged_counts")
               .select(col("n_images"), col("n_paired"), col("n_decoded"),
                 col("n_geometry_ok"), nullL.as("n_kept"))
               // the kept count rides the SAME null-skipping sum as the
@@ -825,7 +860,7 @@ object EventStream {
             // so a failed write cannot leak it in a long-running
             // streaming JVM
             graft.Materialize.run { pin =>
-              val stagedAll = pin(spark.read.parquet(s"$outDir/staged"))
+              val stagedAll = pin(staged(decoded.schema, "staged"))
               // does this batch CHANGE the global near-dup pair set?
               // (no gated docs cannot; otherwise probe the staged
               // metadata's band keys — re-derived map-side, bit-identical
@@ -883,8 +918,8 @@ object EventStream {
                       // (kept rows are non-null in every column) removes
                       // them before re-adding, so the committed result
                       // is the same either way
-                      spark.read.parquet(s"$outDir/manifest")
-                        .join(broadcast(newRows), manifestColNames,
+                      manifest()
+                        .join(broadcast(newRows), assemblyManifestCols,
                           "left_anti")
                         .select(manifestCols: _*)
                         .union(newRows)
@@ -902,8 +937,7 @@ object EventStream {
                   // arrived
                   val nKept =
                     if (manifestExists)
-                      spark.read.parquet(s"$outDir/manifest")
-                        .agg(count(lit(1)).as("n_kept"))
+                      manifest().agg(count(lit(1)).as("n_kept"))
                     else spark.range(1).select(lit(0L).as("n_kept"))
                   writeAttrition(nKept)
                 }

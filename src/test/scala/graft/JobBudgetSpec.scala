@@ -30,6 +30,13 @@ package graft
   * from 9 jobs to 8 when its one-consumer vector pin went, and q78 from
   * 11 to 10 when its chunk read-back took the written frame's schema
   * instead of inferring one; both bounds are those measured counts.
+  * `ProtocolMatcher.identify` and the `Eav` lookups evaluate their
+  * collected dictionary in one projection instead of joining it: q17 went
+  * from 5 jobs to 2, q38 from 6 to 2, q90 from 4 to 3 and q52 (pinned
+  * with them) from 5 to 2. q317 and q318 read their result, and their
+  * stream its staged, count and manifest dirs, with the schema each is
+  * written with instead of inferring one: they measure 89 jobs, and
+  * their bound is still the 94 measured before.
   *
   * q307 is the exception to fixed counts: AQE sometimes runs a broadcast
   * build of its component loop that it then cancels, which only ever
@@ -40,15 +47,16 @@ package graft
 class JobBudgetSpec extends SparkSpec {
 
   private val budgets = Seq(
-    "q17_protocol_identification" -> 6,
+    "q17_protocol_identification" -> 2,
     "q27_minhash_lsh" -> 17,
     "q54_simhash_neardup" -> 5,
-    "q38_insertion_summary" -> 8,
+    "q38_insertion_summary" -> 2,
+    "q52_eav_pivot" -> 2,
     "q61_archive_ingest" -> 1,
     "q79_dicom_summary" -> 2,
     "q75_brainvision_ingest" -> 3,
     "q78_chunk_sink" -> 10,
-    "q90_archive_loader" -> 4,
+    "q90_archive_loader" -> 3,
     "q109_object_store" -> 5,
     "q135_tarchive_validation" -> 25,
     "q144_series_records" -> 3,

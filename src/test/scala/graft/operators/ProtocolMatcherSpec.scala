@@ -150,6 +150,109 @@ class ProtocolMatcherSpec extends SparkSpec {
     assert(out.length == 2)
   }
 
+  test("an empty protocol table gives every scan no_group") {
+    val out = ProtocolMatcher.identify(scans, df(protSchema))
+      .select("MriScanTypeID", "MriProtocolGroupID", "protocol_status")
+      .collect().map(r => (Option(r.get(0)), Option(r.get(1)), r.getString(2)))
+    assert(out.length == 9)
+    assert(out.toSet == Set((None, None, "no_group")))
+  }
+
+  test("two identical scan rows give one result each") {
+    val out = ProtocolMatcher.identify(df(scanSchema,
+      scan(1L, "T1 MPRAGE", trSec = 2.3), scan(1L, "T1 MPRAGE", trSec = 2.3)),
+      protocols)
+      .select("scan_id", "MriScanTypeID", "protocol_status")
+      .collect().map(r => (r.getLong(0), Option(r.get(1)), r.getString(2)))
+    assert(out.toSeq == Seq.fill(2)((1L, Some(101), "identified")))
+  }
+
+  test("identify plans no join, broadcast or exchange") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.functions._
+    // a Range input: a local scan table would be folded away at planning
+    val rangeScans = ProtocolMatcher.padScanCols(spark.range(0, 40).select(
+      col("id").as("scan_id"), lit("T2 weighted").as("SeriesDescription"),
+      (col("id") / 10).as("RepetitionTime")))
+    val out = ProtocolMatcher.identify(rangeScans, protocols)
+    assert(out.collect().length == 40)
+    def flatten(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p.children.flatMap(flatten) ++ (p match {
+        case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+        case q: QueryStageExec => flatten(q.plan)
+        case _ => Seq.empty[SparkPlan]
+      }))
+    val plan = flatten(out.queryExecution.executedPlan)
+    assert(!plan.exists {
+      case _: BaseJoinExec | _: Exchange => true
+      case _ => false
+    }, out.queryExecution.executedPlan.toString)
+  }
+
+  test("a seeded 300-row protocol table matches the join+aggregate semantics") {
+    import ProtocolMatcherSpec._
+    val rnd = new scala.util.Random(20261020L)
+    def opt[A](p: Double)(a: => A): Option[A] =
+      if (rnd.nextDouble() < p) Some(a) else None
+    def pick[A](xs: A*): A = xs(rnd.nextInt(xs.length))
+    // a protocol targets its group's visit label, or else one site (any
+    // visit): scans at such a site see a second group
+    val prots = (1 to 300).map { id =>
+      val group = rnd.nextInt(3) + 1
+      val site = opt(0.05)(rnd.nextInt(10) + 1)
+      val regex = opt(0.02)(pick("t1", "t2.*w", "flair", ""))
+      val tr = if (regex.isEmpty || rnd.nextBoolean()) {
+        val lo = rnd.nextInt(5000).toDouble
+        Map("TR_min" -> lo, "TR_max" -> (lo + 30 + rnd.nextInt(60)))
+      } else Map.empty[String, Double]
+      val extra = opt(0.2)(pick("time_min", "TE_max"))
+        .map(k => Map(k -> (rnd.nextInt(200) + 1).toDouble)).getOrElse(Map.empty)
+      Prot(id, opt(0.97)(group), site, site.map(_ * 10),
+        opt(0.97)(100 + rnd.nextInt(40)), regex, opt(0.15)(pick("j", "j-", "")),
+        opt(0.15)(pick("1", "2", "")), opt(0.05)(pick("ORIGINAL", "")),
+        opt(0.1)(7), if (site.isEmpty) Some(s"V$group") else None, tr ++ extra)
+    }
+    val scanRows = (1 to 400).map { id =>
+      val center = rnd.nextInt(10) + 1
+      Scan(id.toLong, opt(0.9)(pick("T1 MPRAGE", "t2 Weighted", "FLAIR ax", "dwi")),
+        opt(0.95)(rnd.nextInt(5200) / 1000.0), opt(0.7)(rnd.nextInt(220) / 1000.0),
+        opt(0.7)(rnd.nextInt(220).toDouble), opt(0.5)(pick("j", "j-")),
+        opt(0.5)(pick(1, 2)), opt(0.5)("ORIGINAL"), center,
+        if (rnd.nextDouble() < 0.1) 99 else center * 10,
+        opt(0.15)(7), opt(0.9)(pick("V1", "V2", "V3")))
+    }
+    def boxI(o: Option[Int]) = o.map(Int.box).orNull
+    def boxD(m: Map[String, Double], k: String) = m.get(k).map(Double.box).orNull
+    val protDf = df(protSchema, prots.map { p =>
+      Row.fromSeq(Seq[Any](p.id, boxI(p.group), boxI(p.center), boxI(p.scanner),
+        boxI(p.scanType), p.regex.orNull, p.ped.orNull, p.echoN.orNull,
+        p.imageType.orNull, boxI(p.project), null, p.visit.orNull) ++
+        ProtocolMatcher.rangeDims.flatMap { case (_, mn, mx, _) =>
+          Seq(boxD(p.bounds, mn), boxD(p.bounds, mx)) })
+    }: _*)
+    val scanDf = df(scanSchema, scanRows.map { c =>
+      def d(o: Option[Double]) = o.map(Double.box).orNull
+      Row(c.id, c.desc.orNull, d(c.trSec), d(c.teSec), null, null, d(c.time),
+        null, null, null, null, null, null, c.imageType.orNull, c.ped.orNull,
+        boxI(c.echoN), c.center, c.scanner, boxI(c.project), null,
+        c.visit.orNull)
+    }: _*)
+    val got = ProtocolMatcher.identify(scanDf, protDf)
+      .select("scan_id", "MriScanTypeID", "MriProtocolGroupID", "protocol_status")
+      .collect().map(r => r.getLong(0) ->
+        (Option(r.get(1)), Option(r.get(2)), r.getString(3))).toMap
+    val want = scanRows.map(c => c.id -> joinAggregate(c, prots)).toMap
+    assert(got == want)
+    // the seed reaches every rung of the status ladder
+    val statuses = want.values.groupBy(_._3).map { case (k, v) => k -> v.size }
+    assert(statuses.keySet ==
+      Set("identified", "unknown", "ambiguous", "ambiguous_group", "no_group"),
+      statuses)
+  }
+
   // ---- extra checks engine ----
 
   private val checksSchema = StructType(Seq(
@@ -224,5 +327,59 @@ class ProtocolMatcherSpec extends SparkSpec {
     assert(routed.excluded.select("scan_id").collect().map(_.getLong(0)).toSet == Set(1L))
     assert(routed.violatedScans.select("scan_id").collect().map(_.getLong(0)).toSet ==
       Set(4L, 5L, 7L, 8L, 9L))
+  }
+}
+
+object ProtocolMatcherSpec {
+  case class Prot(id: Int, group: Option[Int], center: Option[Int],
+      scanner: Option[Int], scanType: Option[Int], regex: Option[String],
+      ped: Option[String], echoN: Option[String], imageType: Option[String],
+      project: Option[Int], visit: Option[String], bounds: Map[String, Double])
+  case class Scan(id: Long, desc: Option[String], trSec: Option[Double],
+      teSec: Option[Double], time: Option[Double], ped: Option[String],
+      echoN: Option[Int], imageType: Option[String], center: Int, scanner: Int,
+      project: Option[Int], visit: Option[String])
+
+  /** The join+aggregate form written out: the eligible protocol rows of a
+    * scan (the J4 join), their distinct groups, the distinct scan types of
+    * the eligible rows it matches (J5), then the status ladder. SQL NULL
+    * comparisons read as not-true, as a join or filter condition does. */
+  def joinAggregate(s: Scan, prots: Seq[Prot]): (Option[Int], Option[Int], String) = {
+    def target[A](scan: Option[A], prot: Option[A]) =
+      if (scan.isEmpty) prot.isEmpty else prot.isEmpty || prot == scan
+    def eligible(p: Prot) =
+      ((p.center.contains(s.center) && p.scanner.contains(s.scanner)) ||
+        (p.center.isEmpty && p.scanner.isEmpty)) &&
+        target(s.project, p.project) && target(s.visit, p.visit)
+    def inRange(v: Option[Double], mn: Option[Double], mx: Option[Double]) =
+      (mn.isEmpty && mx.isEmpty) ||
+        v.exists(x => mn.forall(x >= _) && mx.forall(x <= _))
+    def scanValue(dim: String): Option[Double] = dim match {
+      case "time" => s.time
+      case "RepetitionTime" => s.trSec
+      case "EchoTime" => s.teSec
+      case _ => None
+    }
+    def unset(v: Option[String]) = v.forall(_.isEmpty)
+    def matches(p: Prot) =
+      if (!unset(p.regex))
+        s.desc.exists(d => java.util.regex.Pattern.compile("(?i)" + p.regex.get)
+          .matcher(d).find())
+      else ProtocolMatcher.rangeDims.forall { case (dim, mn, mx, scale) =>
+        inRange(scanValue(dim).map(_ * scale), p.bounds.get(mn), p.bounds.get(mx))
+      } && (unset(p.ped) || (s.ped.isDefined && s.ped == p.ped)) &&
+        (unset(p.echoN) || s.echoN.exists(n => p.echoN.get.toInt == n)) &&
+        (unset(p.imageType) || (s.imageType.isDefined && s.imageType == p.imageType))
+    val joined = prots.filter(eligible)
+    val groups = joined.flatMap(_.group).distinct
+    val types = joined.filter(matches).flatMap(_.scanType).distinct
+    val status =
+      if (groups.isEmpty) "no_group"
+      else if (groups.size > 1) "ambiguous_group"
+      else if (types.isEmpty) "unknown"
+      else if (types.size > 1) "ambiguous"
+      else "identified"
+    (if (status == "identified") types.headOption else None,
+      if (groups.size == 1) groups.headOption else None, status)
   }
 }
