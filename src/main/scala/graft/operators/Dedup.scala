@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.Materialize
 import graft.functions.TextFunctions._
+import graft.functions.expressions.CappedCollect.capped
 
 /** Deduplication operators for large-scale text pipelines (BASELINE.json
   * north star). Each variant trades exactness for scale differently:
@@ -23,8 +24,9 @@ import graft.functions.TextFunctions._
   *
   * Every MinHash and hamming entry point runs on one private banding core
   * (after [[incrementalHammingMatches]]): one band-row builder, one
-  * count-first capped bucket, one self-pair expansion, one probe join,
-  * one size-prune + exact-Jaccard verify, and one bucket-size audit.
+  * capped bucket (one aggregate whose buffer never holds more than the
+  * cap), one self-pair expansion, one probe join, one size-prune +
+  * exact-Jaccard verify, and one bucket-size audit.
   */
 object Dedup {
 
@@ -202,7 +204,7 @@ object Dedup {
       val bat = pin(batchArt.select(col("id"), col("sh"), col("sig")))
       val cand = probe(minhashRows(bat, bands, rowsPerBand),
           cappedBuckets(minhashRows(idx, bands, rowsPerBand), 1L,
-            maxBucketSize)())
+            maxBucketSize))
         .select(col("a.id").as("id_1"), col("b.id").as("id_2"))
         .distinct()
       verifiedJaccard(cand, bat, idx, threshold)
@@ -224,8 +226,8 @@ object Dedup {
     Materialize.scoped { pin =>
       val docs = pin(lshIndex(df, idCol, textCol, n, bands, rowsPerBand))
       // calibration is deliberately UNCAPPED (it measures every colliding
-      // pair the config would surface), but the >=2 gate still goes
-      // count-first so singleton buckets never buffer
+      // pair the config would surface); singleton buckets collect one
+      // member and are dropped by the bucket's >=2 gate
       val both = minhashSelfPairs(docs, bands, rowsPerBand, Long.MaxValue)
         .join(side(docs, 1, "sh", "sig"), "id_1")
         .join(side(docs, 2, "sh", "sig"), "id_2")
@@ -554,7 +556,7 @@ object Dedup {
     * brings its own (bands, maxHamming) geometry and its own range of
     * band ordinals, so buckets, the over-cap shed, and the pigeonhole
     * radius are all evaluated PER KEY exactly as the separate pipelines
-    * did, while the exchange/collect_list/pair machinery is shared.
+    * did, while the exchange/bucket/pair machinery is shared.
     * Result-identical to
     * `keys.map(hammingNearDupPairs(...)).reduce(union).distinct()`
     * (DedupSpec pins it). Emits distinct (id_1, id_2, hamming). */
@@ -597,28 +599,28 @@ object Dedup {
     * untouched; already-shed buckets only grow and stay shed; in-cap
     * buckets keep their old pairs, and every candidate pair touching a
     * batch row was verified out by the radius check. Cost: ONE action —
-    * a count aggregate over the index (partial-aggregated, mega-buckets
-    * cost count rows; the identical stats subtree under both union
-    * branches is deduplicated by exchange reuse) plus pair verification
-    * confined to buckets holding a batch row — O(batch-adjacent), never
-    * O(corpus²). */
+    * ONE aggregate per (band, sig) over the index giving the bucket's
+    * size, its batch rows and its capped members (a mega-bucket's
+    * partial buffers hold counts, never members; the aggregate subtree
+    * under both union branches is deduplicated by exchange reuse), then
+    * pair verification confined to buckets holding a batch row —
+    * O(batch-adjacent) pairs, never O(corpus²). */
   private[graft] def fusedBatchPairDelta(idx: DataFrame,
       keys: Seq[(String, Int, Int)],
       maxBucketSize: Int = 10000): Boolean = {
     val cap = maxBucketSize.toLong
+    val rows = idx.select(col("band"), col("sig"), col("id"), col("hash"),
+      col("is_batch"))
     // tiny by construction: only buckets holding a batch row survive
-    val stats = idx.groupBy(col("band"), col("sig"))
+    val stats = rows.groupBy(col("band"), col("sig"))
       .agg(count(lit(1)).as("bucket_size"),
-        count(when(col("is_batch"), lit(1))).as("nb"))
+        count(when(col("is_batch"), lit(1))).as("nb"), bucket(rows, cap))
       .filter(col("nb") >= 1)
     val prior = col("bucket_size") - col("nb")
     val flips = stats
       .filter(col("bucket_size") > cap && prior >= 2 && prior <= cap)
       .select(lit(1).as("__hit"))
-    // the shed keeps only batch-touched buckets within the cap
-    val pairHits = hammingVerified(selfPairs(cappedBuckets(
-        idx.select(col("band"), col("sig"), col("id"), col("hash"),
-          col("is_batch")), 2L, cap)(stats))
+    val pairHits = hammingVerified(selfPairs(stats.filter(withinCap(2L)))
         .filter(col("a.is_batch") || col("b.is_batch")), keys64(keys))
       .select(lit(1).as("__hit"))
     // AQE off for THIS 0/1-row decision action only: its aggregates are
@@ -659,7 +661,7 @@ object Dedup {
     val key = keys64(Seq((hashCol, bands, maxHamming)))
     hammingVerified(probe(hammingRows(batch, col(idCol), key),
         cappedBuckets(index.select(col("band"), col("sig"), col("id"),
-          col("hash")), 1L, maxBucketSize)())
+          col("hash")), 1L, maxBucketSize))
         .filter(col("a.id") =!= col("b.id")), key)
       .distinct()
       .select(col("id_1").as("id_batch"), col("id_2").as("id_index"),
@@ -691,7 +693,7 @@ object Dedup {
   /** The one band-row builder: one row per struct of `bands` (fields
     * `band`, `sig`, then any per-band payload), emitted as (band, sig,
     * carry..., payload...). Carried columns stay outside the structs, so
-    * a consumer of the keys alone (the shed's count) prunes them. */
+    * a consumer of the keys alone ([[bucketSizes]]) prunes them. */
   private def bandRows(df: DataFrame, bands: Seq[Column],
       carry: Seq[String]): DataFrame = {
     val ex = df.select(carry.map(col) :+ explode(array(bands: _*)).as("b"): _*)
@@ -730,31 +732,34 @@ object Dedup {
     * bucket over a pass's `maxBucketSize` is a signature whose matches
     * that pass silently drops (no silent caps: the shed must be visible —
     * run it alongside a dedup pass and alert on the over-cap rows). The
-    * count-first shed of [[cappedBuckets]] reads the same counts. */
+    * shed itself ([[cappedBuckets]]) does not read it. */
   private[graft] def bucketSizes(rows: DataFrame): DataFrame =
     rows.groupBy(col("band"), col("sig"))
       .agg(count(lit(1)).as("bucket_size"))
 
   /** The one capped bucket: members of the (band, sig) buckets whose
     * population lies in [minSize, maxSize] — 2 for self-pairs, 1 for
-    * probes — collected per bucket. The shed goes COUNT-FIRST: `sizes`
-    * (default: [[bucketSizes]], partial-aggregatable — a mega-bucket
-    * contributes ONE count row per map partition, never its members)
-    * picks the keys and the rows semi-join back, so the `collect_list`
-    * only ever buffers buckets already known to be within bounds. A
-    * degenerate signature (blank image, empty doc, boilerplate page)
-    * holding 10⁹ members costs a handful of count rows instead of a
-    * single-task OOM, with the same surviving bucket set as filtering
-    * on `size(collect_list)` after the fact; the semi-join and the
-    * collecting groupBy share one hash partitioning on (band, sig). */
-  private def cappedBuckets(rows: DataFrame, minSize: Long, maxSize: Long)(
-      sizes: DataFrame = bucketSizes(rows)): DataFrame = {
-    val kept = sizes.filter(col("bucket_size").between(minSize, maxSize))
-      .select(col("band"), col("sig"))
-    rows.join(kept, Seq("band", "sig"), "left_semi")
-      .groupBy(col("band"), col("sig"))
-      .agg(collect_list(member(rows)).as("ds"))
-  }
+    * probes — collected per bucket in ONE aggregate whose buffer never
+    * holds more than `maxSize` members
+    * ([[graft.functions.expressions.CappedCollect]]): past the cap
+    * a buffer keeps only its count, so a degenerate signature (blank
+    * image, empty doc, boilerplate page) holding 10⁹ members crosses the
+    * exchange as one count per map partition instead of concentrating
+    * the corpus in one task's buffer. The surviving bucket set is exactly
+    * the one a `size(collect_list)` filter would keep. */
+  private def cappedBuckets(rows: DataFrame, minSize: Long,
+      maxSize: Long): DataFrame =
+    rows.groupBy(col("band"), col("sig"))
+      .agg(bucket(rows, maxSize))
+      .filter(withinCap(minSize))
+
+  /** The capped member list `ds` of a band-row group. */
+  private def bucket(rows: DataFrame, maxSize: Long): Column =
+    capped(member(rows), maxSize).as("ds")
+
+  /** A [[bucket]] within the cap holding at least `minSize` members. */
+  private def withinCap(minSize: Long): Column =
+    col("ds").isNotNull && size(col("ds")) >= minSize
 
   private def member(rows: DataFrame): Column =
     struct(rows.columns.filterNot(Set("band", "sig")).map(col): _*)
@@ -791,18 +796,18 @@ object Dedup {
     * only. Emits distinct (id_1, id_2, hamming). */
   private def hammingSelfPairs(df: DataFrame, id: Column,
       keys: Seq[HammingKey], maxBucketSize: Int): DataFrame =
-    // count-first shed: a constant fingerprint (blank/black images all
+    // capped buckets: a constant fingerprint (blank/black images all
     // hashing dHash=0, empty docs) must never concentrate the corpus in
-    // one collect_list buffer — exactly the inputs media dedup exists for
+    // one bucket buffer — exactly the inputs media dedup exists for
     hammingVerified(selfPairs(cappedBuckets(hammingRows(df, id, keys), 2L,
-      maxBucketSize)()), keys).distinct()
+      maxBucketSize)), keys).distinct()
 
   /** Distinct MinHash candidate pairs (id_1 < id_2) of an [[lshIndex]]
     * artifact: docs sharing any (band, sig) bucket of [2, maxBucketSize]. */
   private def minhashSelfPairs(docs: DataFrame, bands: Int, rowsPerBand: Int,
       maxBucketSize: Long): DataFrame =
     selfPairs(cappedBuckets(minhashRows(docs, bands, rowsPerBand), 2L,
-        maxBucketSize)())
+        maxBucketSize))
       .select(col("a.id").as("id_1"), col("b.id").as("id_2"))
       .distinct()
 

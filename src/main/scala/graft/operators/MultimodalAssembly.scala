@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   *
   * 100 TB shape: stages 1-3 are row-local map work inside the shard
   * scan; the only exchanges are the two 8-byte-key banded-hamming
-  * shuffles (each bucketed + count-first shed, never all-pairs) and the
+  * shuffles (each one capped bucket aggregate, never all-pairs) and the
   * component roll-up — payload bytes never survive past stage 2 (the
   * decode emits fixed-width metadata and the content column is dropped
   * immediately; BOTH hashes come out of that single decode, so the

@@ -12,14 +12,15 @@ import graft.{GraftSession, QueryProfile}
   *   - unique base prints (xxhash of the id: uniform over 2^64),
   *   - a near-dup tail (1 in 20 rows is a ≤3-bit tweak of a base print),
   *   - a DEGENERATE constant-print block (`degFrac` of rows print 0L:
-  *     the blank-thumbnail population that motivated the count-first
-  *     bucket shed) —
+  *     the blank-thumbnail population that motivated the capped bucket
+  *     shed) —
   * then measures wall + shuffle for
   *   1. hammingNearDupPairs over the full set (the q294/q300 shape),
   *   2. incrementalHammingMatches of a 10% batch against the 90% index
   *      (the continuous-admission shape), and
   *   3. Dedup.bucketSizes over the prints' hammingIndex rows (the
-  *      shed audit: over-cap buckets visible).
+  *      shed audit: over-cap buckets visible; the shed itself does not
+  *      read it).
   *
   * Usage: tools/run.sh graft.tools.HammingScale [n] [degPct]
   */

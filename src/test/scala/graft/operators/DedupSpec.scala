@@ -388,9 +388,9 @@ class DedupSpec extends SparkSpec {
   }
 
   test("planted mega-bucket: a constant fingerprint population is shed " +
-      "COUNT-FIRST — the collect_list aggregate sits above a left-semi " +
-      "guard, so the degenerate bucket never buffers, and under-cap " +
-      "pairs are unaffected") {
+      "inside the capped bucket aggregate — no collect_list, every bucket " +
+      "aggregate a CappedCollect at the pass's cap, so the degenerate " +
+      "bucket never buffers, and under-cap pairs are unaffected") {
     import spark.implicits._
     // 500 blank-image prints (dHash = 0: every band sig collides) + one
     // genuine near-dup pair in its own bucket
@@ -405,25 +405,18 @@ class DedupSpec extends SparkSpec {
     val got = out.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got == Set((1001L, 1002L, 1)))
-    // structural: EVERY collect_list aggregate in the plan is fed by a
-    // left-semi join (the count-first shed) — the property that bounds
+    // structural: no collect_list anywhere in the plan, and EVERY bucket
+    // aggregate is a CappedCollect at the pass's cap — the aggregate whose
+    // buffer keeps only a count past the cap, the property that bounds
     // the aggregation buffer itself, not just downstream fan-out
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
-    import org.apache.spark.sql.catalyst.plans.LeftSemi
     import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectList}
-    val aggs = out.queryExecution.optimizedPlan.collect {
-      case a: Aggregate if a.aggregateExpressions.exists(_.exists {
-        case ae: AggregateExpression =>
-          ae.aggregateFunction.isInstanceOf[CollectList]
-        case _ => false
-      }) => a
-    }
-    assert(aggs.nonEmpty)
-    aggs.foreach { a =>
-      assert(a.child.collect {
-        case j: Join if j.joinType == LeftSemi => j
-      }.nonEmpty, "collect_list aggregate lacks the count-first semi-join guard")
-    }
+    import graft.functions.expressions.CappedCollect
+    val fns = out.queryExecution.optimizedPlan.flatMap(_.expressions
+      .flatMap(_.collect { case ae: AggregateExpression => ae.aggregateFunction }))
+    assert(!fns.exists(_.isInstanceOf[CollectList]),
+      "a collect_list buffers a bucket without the cap")
+    val caps = fns.collect { case c: CappedCollect => c.maxSize }
+    assert(caps.nonEmpty && caps.forall(_ == 100L), s"bucket caps $caps")
     // and the same shed set stays result-identical to the historical
     // post-collect filter on a NON-degenerate input: cap high enough to
     // keep everything == brute force over all prints
